@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run a graft main class against the compiled sbt output without sbt
 # overhead. Usage: scripts/run.sh graft.Verify <args...>
+# Classes come from the checkout this script lives in (build it first
+# with `sbt compile`); Spark's jars from SPARK_HOME (default /opt/spark).
 set -e
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 CLS="$1"; shift
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -15,5 +18,5 @@ exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*" \
   "$CLS" "$@"

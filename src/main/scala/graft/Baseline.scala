@@ -9,14 +9,10 @@ import org.apache.spark.sql.functions._
   * operators, UDAFs, or extensions), so BENCH numbers have a measured
   * denominator.
   *
-  * Two control classes:
-  *  - `stockTwins`: queries whose graft implementation is already pure
-  *    declarative Spark — the control is the identical plan (ratio 1.0
-  *    by construction; re-measured to capture run-to-run variance).
-  *  - `controls`: queries backed by graft custom code, re-expressed with
-  *    the closest stock construct (higher-order functions, Spark ML
-  *    MinHashLSH, explode+groupBy) — this is where a regression vs
-  *    plain Spark would show.
+  * Each control re-expresses a query backed by graft custom code with
+  * the closest stock construct (higher-order functions, Spark ML
+  * MinHashLSH, explode+groupBy) — this is where a regression vs plain
+  * Spark would show.
   *
   * Prints one JSON line: {"baseline":{name:sec,...},"graft":{name:sec,...}}
   * where each value is the median of 3 warm runs at the target sf.
@@ -2137,7 +2133,7 @@ object Baseline {
     "q_stream_chained_agg" -> ((s, dir) => {
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions",
-        s.conf.getOption("spark.graft.streaming.shufflePartitions").getOrElse(prevParts))
+        graft.streaming.StreamOps.StatePartitions.toString)
       val sink = s"baseline_chained_${System.nanoTime()}"
       try {
         val rawSchema = s.read.parquet(Tables.path(dir, "events")).schema
@@ -2188,7 +2184,7 @@ object Baseline {
       // leak the streaming-sized conf into later batch controls
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions",
-        s.conf.getOption("spark.graft.streaming.shufflePartitions").getOrElse(prevParts))
+        graft.streaming.StreamOps.StatePartitions.toString)
       val sink = s"baseline_paced_${System.nanoTime()}"
       try {
         val raw = s.read.parquet(Tables.path(dir, "events"))
@@ -2554,107 +2550,9 @@ object Baseline {
     })
   )
 
-  /** Pure-stock graft queries re-run as their own control (variance
-    * measurement; plans are identical by construction).
-    */
-  val stockTwins: Seq[String] = Seq(
-    "q1_agg", "q_sql_tpch_q3", "q_sql_tpch_q5", "q_window_rank",
-    "q_window_running", "q_sort_multi", "q_limit_topk", "q_distinct",
-    "q_explode_tokens", "q_agg_percentile", "q_str_funcs", "q_math_funcs",
-    "q_filter_predicates", "q_text_quality", "q_array_higher_order",
-    "q_dedup_exact",
-    // round 4-6 additions that are pure declarative Spark (HOF text
-    // pipelines, SQL-surface TPC-H): control = identical plan
-    "q_sql_tpch_q2", "q_sql_tpch_q4", "q_sql_tpch_q7", "q_sql_tpch_q10",
-    "q_sql_tpch_q14", "q_sql_tpch_q17", "q_sql_tpch_q18", "q_sql_tpch_q20",
-    "q_text_repetition", "q_text_top_ngrams", "q_text_chunk",
-    "q_text_decontaminate", "q_try_funcs",
-    // round-7 additions that are pure declarative Spark — stock window
-    // functions, stock SQL DDL, stock hash/HOF pipelines (the PPJoin
-    // and substring-dedup shapes are built entirely of stock operators)
-    "q_window_session_batch", "q_window_islands", "q_sql_ddl",
-    "q_train_shuffle", "q_text_perplexity", "q_text_tfidf_pairs",
-    "q_dedup_substring", "q_dedup_editdist",
-    // round-9 TPC-H completion (all pure SQL surface: control =
-    // identical ANSI text on a stock session)
-    "q_sql_tpch_q1", "q_sql_tpch_q6", "q_sql_tpch_q8", "q_sql_tpch_q9",
-    "q_sql_tpch_q11", "q_sql_tpch_q12", "q_sql_tpch_q15",
-    "q_sql_tpch_q16", "q_sql_tpch_q19",
-    // round-12 additions: the sharded pack is stock windows/joins end
-    // to end, the image-resize codec is plain mapPartitions +
-    // java.awt ImageIO, and the vocab encode is a TakeOrdered + one
-    // HOF transform — formulations a stock user writes verbatim, so
-    // the control IS the identical plan (variance pair)
-    "q_text_pack_sharded", "q_multimodal_image_resize",
-    "q_text_vocab_encode", "q_text_dataset_card",
-    // retention cohorts: two keyed aggregates + a user-keyed join —
-    // stock end to end (variance pair)
-    "q_events_retention",
-    // round-13 additions that are pure declarative Spark: two-level
-    // count reaggs + broadcast scalars (keyphrase, bigram LM) and a
-    // single regexp_count projection pass (PII scan) — the control is
-    // the identical plan (variance pairs)
-    "q_text_keyphrase", "q_text_bigram_lm", "q_pii_scan",
-    // temperature mix (two tiny aggs + broadcast map join + scan) and
-    // the split manifest (one CASE projection + small agg) are stock
-    // end to end — controls would be the identical plans
-    "q_train_temperature_mix", "q_train_split",
-    // late round-13 audit verbs that are stock declarative Spark end
-    // to end: gram-keyed shuffle joins + small aggs (overlap report),
-    // two broadcast joins around keyed aggregates (embedding outliers,
-    // language mix) — the control is the identical plan (variance
-    // pairs). q_dedup_cross_source rides the measured q_dedup_minhash
-    // machinery (sibling-adjudicated, like q_dedup_canonicalize).
-    "q_decontaminate_overlap", "q_embed_outliers", "q_text_lang_mix",
-    // gram novelty (two gram-keyed shuffles + keyed agg) and the
-    // repeat-epochs planner (one small agg + broadcast scalars) are
-    // stock end to end (variance pairs). q_dedup_threshold_sweep rides
-    // the measured q_dedup_minhash machinery (sibling-adjudicated).
-    "q_text_gram_novelty", "q_train_repeat_epochs",
-    // chat-SFT prep: one conversation-keyed aggregate each (flatten's
-    // collect is bounded by a single conversation) — stock end to end
-    // (variance pairs)
-    "q_chat_flatten", "q_chat_loss_mask",
-    // co-occurrence (array-kernel pair streams + groupBy + TakeOrdered
-    // + 100-row PMI joins) and the pack-efficiency rollup (the
-    // q_text_pack windows + one keyed agg) are stock end to end
-    // (variance pairs)
-    "q_text_cooccur_pmi", "q_train_pack_efficiency",
-    "q_train_pack_efficiency_sharded", "q_train_dsir",
-    // BPE merge training is stock end to end (groupBy word-freq, zip-
-    // explode pair counts, TakeOrdered argmax, aggregate-HOF fold,
-    // localCheckpoint) — a stock user writes the identical plan, so
-    // the control is that plan (variance pair); encode adds one stock
-    // explode + vocab hash join + keyed agg on top of the same run
-    "q_text_bpe_train", "q_text_bpe_encode",
-    // the in-engine logistic filter is stock end to end too (map
-    // literals, exp, keyed aggs, parameter-sized collects) — a stock
-    // user writes the identical training loop (variance pair)
-    // the persisted-model scoring verb is a parquet write/read + one
-    // broadcast join on top of the same training loop (variance pair)
-    "q_text_classifier_filter", "q_text_classifier_score",
-    // round-17: the persisted-tokenizer apply is the same stock train
-    // loop + a parquet round-trip + one stock LEFT vocab join; the
-    // mini-batch classifier is the same stock GD loop with an md5
-    // filter per step — a stock user writes the identical plans
-    // (variance pairs)
-    "q_text_bpe_apply", "q_text_classifier_minibatch")
-
-  /** Same leaked-block hygiene as Bench.releaseLeakedBlocks: queries
-    * that localCheckpoint (dedup/clustering/snapshot proofs) leave
-    * storage blocks behind; across 76 pairs × 6 timed runs in one JVM
-    * they evict later queries' working set and skew ONLY the sides
-    * that follow them — measured ~2× inflation on the graft loop,
-    * which runs after every control has already churned the heap.
-    */
-  private def releaseLeakedBlocks(s: SparkSession): Unit = {
-    val leaked = s.sparkContext.getPersistentRDDs.values
-    if (leaked.nonEmpty) leaked.foreach(_.unpersist(blocking = true))
-  }
-
   private def timeMedian3(s: SparkSession)(run: () => Unit): Double = {
     val ts = (0 until 3).map { _ =>
-      releaseLeakedBlocks(s)
+      GraftSession.releaseLeakedBlocks(s)
       val t0 = System.nanoTime()
       run()
       (System.nanoTime() - t0) / 1e9
@@ -2665,27 +2563,8 @@ object Baseline {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", Tables.scratch("warehouse"))
-      // NO GraftExtensions: the control session is stock Spark
-      .config("spark.sql.adaptive.enabled", "true")
-      // same state-store sizing as Bench (8 state partitions per
-      // streaming operator) so the paced-stream pair is apples-to-
-      // apples: per-micro-batch commit cost is per state partition,
-      // and the graft side reads this conf in StreamOps.runToMemory
-      .config("spark.graft.streaming.shufflePartitions", "8")
-      // same state-store provider as the graft side (RocksDB, session-
-      // wide) so the streaming pairs measure the plan, not the provider
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NO GraftExtensions: the control session is stock Spark
+    val spark = GraftSession.local(extensions = false)
     // the ONLY graft artifact in this session: the graft_snapshot name
     // binding for the q_sql_timetravel pair's graft side — no optimizer
     // rules or expression functions, so every control plan stays stock
@@ -2699,7 +2578,7 @@ object Baseline {
     // 36 pairs' heap/cache pressure in the same JVM)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val pairs: Seq[(String, (SparkSession, String) => DataFrame)] =
-      (stockTwins.map(n => n -> SparkEntry.queries(n)) ++ controls.toSeq)
+      controls.toSeq
         .filter { case (n, _) => only.forall(_.contains(n)) }
         .sortBy(_._1)
 

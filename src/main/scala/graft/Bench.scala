@@ -1,159 +1,47 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * forcing full materialization via the noop sink (count() alone would
-  * let Catalyst prune most of the work), and prints one JSON line.
+  * let Catalyst prune most of the work), and prints two JSON lines: the
+  * full record (per-query seconds and failures), then a compact totals
+  * line small enough for any stdout tail capture. Redirect stdout to
+  * keep the record.
   */
 object Bench {
 
-  // ── anchor-binary box gauge ───────────────────────────────────────
-  // Absolute seconds are only cross-round comparable if the BOX hasn't
-  // drifted — the round-18 forensic burned a session proving a +15%
-  // sweep was environmental (the r16 binary no longer achieved its own
-  // recorded numbers). Institutionalized: a FROZEN jar built from the
-  // round-16 tree (anchor/graft-anchor-r16.jar, commit e072fc0) runs 5
-  // fixed queries at sf0.1 in its own JVM before every full sweep;
-  // box_factor = median(now / freeze-time reference) against
-  // anchor/ANCHOR.json. Mover tables key off factor-normalized ratios
-  // instead of re-litigating drift per round. The 5 queries span the
-  // subsystems (hash-shuffle dedup, tokenize CPU, BM25 index
-  // build+search, IVF build+search, editdist CPU) and were the most
-  // stable non-streaming rows across the five r16 closing sweeps.
-  private val AnchorQueries = Seq("q_dedup_exact", "q_text_quality",
-    "q_text_bm25", "q_sim_ivf", "q_dedup_editdist")
-
-  private def parseQueryTimes(json: String): Map[String, Double] =
-    "\"(q_[a-z0-9_]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(json)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-
-  /** Run the frozen jar's own Bench main restricted to the anchor
-    * queries; returns its per-query seconds. None when the jar or the
-    * reference file is absent (targeted/debug checkouts), the
-    * subprocess fails, or it exceeds the 20-minute hard cap — a sweep
-    * must degrade to factor-less rather than hang.
+  /** One sweep's outcome: seconds per query that ran, and the error
+    * message of each query that threw. A failed query is never timed.
     */
-  private def measureAnchor(): Option[Map[String, Double]] = {
-    val root = Seq(".", "/root/repo").map(new java.io.File(_)).find(d =>
-      new java.io.File(d, "anchor/graft-anchor-r16.jar").isFile &&
-        new java.io.File(d, "anchor/ANCHOR.json").isFile)
-    root.flatMap { d =>
-      val jar = new java.io.File(d, "anchor/graft-anchor-r16.jar").getAbsolutePath
-      val opens = (Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-        "java.io", "java.net", "java.nio", "java.util",
-        "java.util.concurrent", "java.util.concurrent.atomic",
-        "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-        "sun.util.calendar"))
-        .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-      val cmd = (Seq("java") ++ opens ++ Seq(
-        "-Xmx" + sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"),
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", jar + ":/opt/spark/jars/*", "graft.Bench") ++ AnchorQueries)
-      try {
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.environment().put("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        pb.environment().put("SPARK_GRAFT_CPUS",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        pb.redirectErrorStream(false)
-        val proc = pb.start()
-        val stdout = new java.io.BufferedReader(
-          new java.io.InputStreamReader(proc.getInputStream))
-        // drain stderr on a daemon thread so the subprocess can't
-        // block on a full pipe
-        val errDrain = new Thread(() => {
-          val b = new Array[Byte](8192)
-          val in = proc.getErrorStream
-          while (in.read(b) >= 0) {}
-        })
-        errDrain.setDaemon(true); errDrain.start()
-        val lines = Iterator.continually(stdout.readLine())
-          .takeWhile(_ != null).toSeq
-        val done = proc.waitFor(20, java.util.concurrent.TimeUnit.MINUTES)
-        if (!done) { proc.destroyForcibly(); None }
-        else lines.reverseIterator.find(_.contains("\"queries\""))
-          .map(parseQueryTimes)
-          .filter(m => AnchorQueries.forall(m.contains))
-      } catch { case _: Exception => None }
+  private[graft] final case class Sweep(
+      times: Seq[(String, Double)], failed: Seq[(String, String)]) {
+    def total: Double = times.map(_._2).sum
+
+    def json(sfDir: String): String = {
+      val qs = times.map { case (k, v) => Verify.json(k) + ":" + v }.mkString("{", ",", "}")
+      val fs = failed.map { case (k, m) => Verify.json(k) + ":" + Verify.json(m) }
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"sf":${Verify.json(sfDir)}}"""
     }
+
+    def compactJson(sfDir: String): String =
+      s"""{"metric":"total_compact","value":$total,"unit":"sec","sf":${Verify.json(sfDir)},"n_queries":${times.size},"n_failed":${failed.size}}"""
   }
 
-  /** (box_factor, anchor readings) — median of per-query now/reference
-    * ratios vs the freeze-time readings in anchor/ANCHOR.json.
-    */
-  private def boxFactor(): Option[(Double, Map[String, Double])] = {
-    val refFile = Seq(".", "/root/repo")
-      .map(d => new java.io.File(d, "anchor/ANCHOR.json")).find(_.isFile)
-    for {
-      f <- refFile
-      txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      // scope the parse to the "queries" object — the file also holds
-      // an r16_recorded context block whose keys must NOT win
-      qStart = txt.indexOf("\"queries\"") if qStart >= 0
-      ref = parseQueryTimes(txt.substring(qStart, txt.indexOf('}', qStart) + 1))
-      now <- measureAnchor()
-      ratios = AnchorQueries.flatMap(q =>
-        for { r <- ref.get(q); n <- now.get(q) if r > 0 } yield n / r)
-      if ratios.nonEmpty
-    } yield {
-      val s = ratios.sorted
-      val med = if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-      (med, now)
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // box gauge BEFORE the sweep (full sweeps only — targeted runs and
-    // SPARK_GRAFT_NO_ANCHOR=1 skip it): the frozen r16 jar in its own
-    // JVM, so the reading is independent of this tree's code
-    val gauge =
-      if (sys.env.get("SPARK_GRAFT_FORCE_ANCHOR").contains("1")) boxFactor()
-      else if (args.nonEmpty ||
-        sys.env.get("SPARK_GRAFT_NO_ANCHOR").contains("1")) None
-      else boxFactor()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", graft.Tables.scratch("warehouse"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.adaptive.enabled", "true")
-      // streaming state partitions sized to bench data volume (see
-      // StreamOps.runToMemory) — 8 state stores instead of 32 cuts
-      // per-micro-batch commit overhead without changing results
-      .config("spark.graft.streaming.shufflePartitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional args: restrict to the named queries (debug/targeted runs)
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val names = if (args.nonEmpty) names0.filter(args.contains) else names0
+  /** Warm-up pass over `warmDir`, then the timed pass over `sfDir`. */
+  private[graft] def sweep(spark: SparkSession,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      sfDir: String, warmDir: String): Sweep = {
+    def run(q: (SparkSession, String) => DataFrame, dir: String): Unit =
+      q(spark, dir).write.format("noop").mode("overwrite").save()
     // warm-up pass at the smallest sf (JIT + codegen caches) so the
     // timed pass at the target sf measures steady-state execution
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+    queries.foreach { case (_, q) =>
+      try run(q, warmDir) catch { case _: Throwable => () }
     }
-    // drop storage blocks a finished query leaves behind (localCheckpoint
-    // blocks from the dedup/clustering operators persist until the GC +
-    // ContextCleaner cycle notices them) — across ~120 sequential queries
-    // on one heap the accumulation evicts later queries' working set and
-    // skews their timings. Blocking removal, and only when blocks exist:
-    // an async unpersist would overlap the next timed query, and an
-    // unconditional sweep costs every query for the few that checkpoint.
-    def releaseLeakedBlocks(): Unit = {
-      val leaked = spark.sparkContext.getPersistentRDDs.values
-      if (leaked.nonEmpty) leaked.foreach(_.unpersist(blocking = true))
-    }
-    def timeOne(name: String): Double = {
-      releaseLeakedBlocks()
+    def timeOne(name: String, q: (SparkSession, String) => DataFrame): Either[String, Double] = {
+      GraftSession.releaseLeakedBlocks(spark)
       // settle the heap OUTSIDE the timed region: the heavy index /
       // streaming queries leave enough garbage that the collector
       // otherwise pauses INSIDE whichever query runs next — the
@@ -162,13 +50,14 @@ object Bench {
       // Baseline pair protocol applies before every timed leg)
       System.gc()
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try { run(q, sfDir); Right((System.nanoTime() - t0) / 1e9) }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Left(String.valueOf(e.getMessage))
       }
-      (System.nanoTime() - t0) / 1e9
     }
-    val firstPass = names.map(name => name -> timeOne(name))
+    val firstPass = queries.map { case (name, q) => (name, q, timeOne(name, q)) }
+    val ok = firstPass.collect { case (name, _, Right(t)) => name -> t }
     // single-shot timings are exposed to one-off JIT/GC stalls (the
     // round-5 record showed two queries 2-4x their steady-state with
     // zero source change, unreproducible afterwards) — re-measure and
@@ -180,8 +69,8 @@ object Bench {
     // queries are excluded: their cost is micro-batch/state machinery,
     // stable across runs and expensive to double. Reported times only
     // move DOWN vs the single-shot protocol, so totals stay comparable
-    // with earlier rounds.
-    val nonStream = firstPass.filterNot(_._1.startsWith("q_stream"))
+    // with earlier rounds. Only queries that succeeded are retimed.
+    val nonStream = ok.filterNot(_._1.startsWith("q_stream"))
     val retimed =
       if (nonStream.isEmpty) Set.empty[String]
       else {
@@ -190,35 +79,24 @@ object Bench {
           nonStream.filter(_._2 > math.max(0.75, 2.5 * med)))
           .map(_._1).toSet
       }
-    val results = firstPass.map { case (name, t1) =>
-      name -> (if (retimed(name)) math.min(t1, timeOne(name)) else t1)
+    val results = firstPass.map { case (name, q, first) =>
+      name -> (if (retimed(name)) first.flatMap(t1 => timeOne(name, q).map(math.min(t1, _)))
+        else first)
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val anchorJson = gauge.map { case (f, now) =>
-      val aq = AnchorQueries.map(q => "\"" + q + "\":" + now(q))
-        .mkString("{", ",", "}")
-      s""","box_factor":$f,"anchor":$aq"""
-    }.getOrElse("")
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$anchorJson}"""
-    println(fullLine)
-    // The full per-query JSON (~10 KB at 302 queries) has NEVER
-    // survived the driver's ~3.6 KB stdout tail capture — `parsed:
-    // null` in every BENCH_r*.json since r01, so PERF per-query
-    // comparisons never populated. Two additive mitigations (VERDICT
-    // r19 item 2; the full line above is unchanged): persist the
-    // identical JSON as a file artifact, and end stdout with a compact
-    // totals-only JSON line small enough that any tail capture keeps
-    // it intact.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-      (fullLine + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}")
-    }
-    val boxOnly = gauge.map { case (f, _) => s""","box_factor":$f""" }.getOrElse("")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size}$boxOnly,"queries_file":"bench_out.json"}""")
+    Sweep(results.collect { case (name, Right(t)) => name -> t },
+      results.collect { case (name, Left(msg)) => name -> msg })
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    val spark = GraftSession.local()
+    // optional args: restrict to the named queries (debug/targeted runs)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => args.isEmpty || args.contains(n))
+    val result = sweep(spark, names.map(n => n -> SparkEntry.queries(n)), sfDir, warmDir)
+    println(result.json(sfDir))
+    println(result.compactJson(sfDir))
     spark.stop()
   }
 }

@@ -8,9 +8,8 @@ import org.apache.spark.sql.types.StringType
 
 /** Engine extension point (SURVEY §4.3): registers the custom
   * expressions as SQL functions so `spark.sql("... cosine_sim(a,b)")`
-  * works. Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * works. `GraftSession.local()` activates it; elsewhere, set
+  * `spark.sql.extensions=graft.GraftExtensions` on the session builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,25 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc plan inspector: prints the formatted physical plan of the
-  * named queries (same session config as Verify). Usage:
+  * named queries (the GraftSession config Verify checks). Usage:
   *   scripts/run.sh graft.PlanDump <sfDir> <query> [query ...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", graft.Tables.scratch("warehouse"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { name =>
       println(s"\n========== $name ==========")

@@ -79,31 +79,15 @@ object ScaleUp {
   }
 
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local()
     if (args.headOption.contains("widen")) {
       val Array(_, baseDir, outDir, dS) = args.take(4)
       val factor = args.lift(4).map(_.toInt).getOrElse(1)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
       widen(spark, baseDir, outDir, dS.toInt, factor)
       spark.stop(); sys.exit(0)
     }
     val Array(baseDir, outDir, factorS) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def raw(name: String): DataFrame =
       spark.read.parquet(Tables.path(baseDir, name))

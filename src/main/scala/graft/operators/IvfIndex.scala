@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorExpressions._
+import graft.InFlight.{await, inFlight}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
@@ -160,27 +161,6 @@ object IvfIndex {
 
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
-  // ── concurrent maintenance jobs ───────────────────────────────────
-  // The TextIndex discipline (TextIndex.scala "concurrent maintenance
-  // jobs"): a maintenance verb composed of SMALL independent Spark
-  // jobs pays sum-of-job-latencies run sequentially while most of the
-  // cluster idles; submitted from separate threads the scheduler
-  // interleaves their stages and the verb's wall-clock is max(), not
-  // sum(). Correctness is untouched because every visibility point
-  // (seq-marker commit / function return) still AWAITS all of its
-  // inputs — the crash windows are exactly the sequential protocol's.
-  private def inFlight[T](f: => T): java.util.concurrent.Future[T] = {
-    val task = new java.util.concurrent.FutureTask[T](() => f)
-    val th = new Thread(task, s"graft-ivfindex-${java.util.UUID.randomUUID}")
-    th.setDaemon(true)
-    th.start()
-    task
-  }
-
-  private def await[T](f: java.util.concurrent.Future[T]): T =
-    try f.get()
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
 
   private def centroidsGenPath(path: String, gen: Int): String =
     if (gen == 0) s"$path/centroids" else s"$path/centroids_g$gen"
@@ -758,7 +738,7 @@ object IvfIndex {
     MaintenanceLock.assertHeld(spark, path, token)
     // dynamic mode scoped to THIS write via the per-writer option —
     // never the session conf: maintenance verbs now run on concurrent
-    // threads of one session (LlmPipeline.inFlight chains), and a
+    // threads of one session (InFlight chains in LlmPipeline), and a
     // session-global set/restore racing a sibling compaction could
     // flip ITS in-flight overwrite back to STATIC, whose whole-dir
     // truncate forfeits the crash-safety this rewrite was chosen for

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.InFlight.{await, inFlight}
 
 /** Persisted inverted text index: term-bucketed posting lists, so a
   * search touches O(query terms) partitions instead of scanning the
@@ -251,28 +252,6 @@ object TextIndex {
 
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  // ── concurrent maintenance jobs ───────────────────────────────────
-  // The maintenance verbs are compositions of SMALL independent Spark
-  // jobs (a tombstone append next to a sidecar recount; a df refresh
-  // next to a sidecar rewrite). Run sequentially, each pays full job
-  // latency while most of the cluster idles; submitted from separate
-  // threads, the scheduler interleaves their stages — the standard
-  // Spark concurrent-jobs pattern — and the verb's wall-clock is
-  // max(), not sum(). Correctness is untouched because every commit
-  // point (`commitState`) still AWAITS all of its inputs: the crash
-  // windows are exactly the sequential protocol's.
-  private def inFlight[T](f: => T): java.util.concurrent.Future[T] = {
-    val task = new java.util.concurrent.FutureTask[T](() => f)
-    val th = new Thread(task, s"graft-textindex-${java.util.UUID.randomUUID}")
-    th.setDaemon(true)
-    th.start()
-    task
-  }
-
-  private def await[T](f: java.util.concurrent.Future[T]): T =
-    try f.get()
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
 
   /** Best-effort sweep of superseded generation dirs, keeping
     * `keepFloor` and everything newer (the previous generation stays

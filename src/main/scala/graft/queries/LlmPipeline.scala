@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.InFlight.{await, inFlight}
 import graft.Tables
 import graft.functions.{Aggregators, TextFunctions, VectorExpressions}
 import graft.operators.{Bpe, Dedup, HybridSearch, IndexEpoch, IvfIndex, Multimodal, SimilaritySearch, TextIndex}
@@ -13,28 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmPipeline {
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
-
-  // ── concurrent verb chains ──────────────────────────────────────────
-  // The TextIndex/IvfIndex "concurrent maintenance jobs" discipline at
-  // the QUERY level: a verb composed of INDEPENDENT layer pipelines
-  // (q_forget's table / text-index / vector-index erasures share no
-  // state) pays sum-of-chain latencies run sequentially while most of
-  // the cluster idles; submitted from separate threads the scheduler
-  // interleaves their stages and wall-clock is max(), not sum(). Each
-  // chain is internally sequential (its own build → tombstone →
-  // compact order is a real dependency), and every cross-chain
-  // dependency is an explicit await.
-  private def inFlight[T](f: => T): java.util.concurrent.Future[T] = {
-    val task = new java.util.concurrent.FutureTask[T](() => f)
-    val th = new Thread(task, s"graft-llm-chain-${java.util.UUID.randomUUID}")
-    th.setDaemon(true)
-    th.start()
-    task
-  }
-
-  private def await[T](f: java.util.concurrent.Future[T]): T =
-    try f.get()
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
 
   /** DuckDB twin of GraftHash.cosine: double accumulation (the builtin
     * list_cosine_similarity runs in float32 — off by ~1e-8).

@@ -19,6 +19,26 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamOps {
   private val counter = new AtomicInteger(0)
 
+  /** Shuffle (= state-store) partitions of every streaming drain. A
+    * streaming query creates one state-store instance per shuffle
+    * partition, and at fixture scale the per-batch commit machinery of
+    * one store per core dominates wall-clock; 8 stores size the state
+    * to the data volume, exactly what you'd tune on a cluster. Results
+    * are partition-count-independent, up to the summation order of
+    * floating-point aggregates (last-ulp differences).
+    */
+  val StatePartitions: Int = 8
+
+  /** Run `body` with `spark.sql.shuffle.partitions` at
+    * [[StatePartitions]], restoring the caller's value afterwards.
+    */
+  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+    try body
+    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** All stateful streaming runs on the RocksDB state store. The
     * default HDFS-backed provider keeps every key's state on the
     * executor HEAP — at a 100 TB keyspace (billions of session/dedup/
@@ -175,16 +195,11 @@ object StreamOps {
         .trigger(Trigger.AvailableNow())
         .start()
     }
-    // same state-store sizing override as runToMemory: the per-batch
-    // commit cost is per state partition PER MICRO-BATCH, and this
-    // drill runs nSplits+ batches — the checkpoint pins the partition
-    // count at first start, and both runs share one checkpoint, so the
-    // conf is consistent across the kill/restart
+    // state partitions pinned as in runToMemory: the checkpoint pins
+    // the partition count at first start, and both runs share one
+    // checkpoint, so the count is consistent across the kill/restart
     ensureRocksDbStateStore(spark)
-    val partsOverride = spark.conf.getOption("spark.graft.streaming.shufflePartitions")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    partsOverride.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
-    try {
+    withStatePartitions(spark) {
       val q1 = start()
       try {
         while (q1.recentProgress.isEmpty && q1.isActive) Thread.sleep(25)
@@ -195,8 +210,6 @@ object StreamOps {
       q2.awaitTermination()
       val b2 = q2.recentProgress.length.toLong
       (spark.read.parquet(sink), b1, b2)
-    } finally {
-      partsOverride.foreach(_ => spark.conf.set("spark.sql.shuffle.partitions", prev))
     }
   }
 
@@ -209,16 +222,7 @@ object StreamOps {
     val name = s"graft_sink_${counter.incrementAndGet()}"
     val spark = df.sparkSession
     ensureRocksDbStateStore(spark)
-    // a streaming query creates one state-store instance per shuffle
-    // partition; at small scale 32 stores of per-batch commit machinery
-    // dominate wall-clock. The override lets callers (Bench) size state
-    // partitions to the data volume — exactly what you'd tune on a
-    // cluster — without touching correctness (results are partition-
-    // count-independent).
-    val partsOverride = spark.conf.getOption("spark.graft.streaming.shufflePartitions")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    partsOverride.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
-    try {
+    withStatePartitions(spark) {
       val writer = df.writeStream
         .format("memory")
         .queryName(name)
@@ -227,8 +231,6 @@ object StreamOps {
       checkpoint.foreach(writer.option("checkpointLocation", _))
       val q = writer.start()
       q.awaitTermination()
-    } finally {
-      partsOverride.foreach(_ => spark.conf.set("spark.sql.shuffle.partitions", prev))
     }
     spark.table(name)
   }
