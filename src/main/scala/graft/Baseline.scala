@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Drills
+import graft.queries.Drills.{flatPostings, flatTfPostings, hofCos, hofTopK}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,18 +45,7 @@ object Baseline {
     // the codegen'd CosineSim expression.
     "q_sim_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val p = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("neighbor_vec"))
-      val scored = c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(probe_vec, neighbor_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(probe_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(neighbor_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select("probe_id", "rank", "neighbor_id", "cos")
+      hofTopK(emb.filter(col("vec_id") < 10), emb)
     }),
 
     // q_dedup_semantic_pca control: the RAW-SPACE quantizer (stock
@@ -63,37 +54,10 @@ object Baseline {
     // planted fixture with the identical recheck/output contract. The
     // pair isolates what the top-8 PCA conditioning of the quantizer
     // costs or saves at equal semantics.
-    "q_dedup_semantic_pca" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val emb = t(s, dir, "embeddings")
-      val maxId = emb.agg(coalesce(max("vec_id"), lit(-1L))).head.getLong(0) + 1
-      val planted = emb.filter(col("vec_id") % 10 === 0)
-        .withColumn("vec_id", col("vec_id") + maxId)
-        .withColumn("embedding", transform(col("embedding"), (x, j) =>
-          (x + (pmod(hash(col("vec_id"), j), lit(1000)) - 500)
-            .cast("double") / 100000.0d).cast("float")))
-      val corpus = emb.unionByName(planted).localCheckpoint()
-      val removed = Dedup.semanticDedup(corpus, "vec_id", "embedding",
-        threshold = 0.99, nClusters = 16).localCheckpoint()
-      val byA = corpus.select(col("vec_id").as("rid"), col("embedding").as("rv"))
-      val byB = corpus.select(col("vec_id").as("did"), col("embedding").as("dv"))
-      val recheck = removed
-        .join(byA, col("vec_id") === col("rid"))
-        .join(byB, col("dup_of") === col("did"))
-        .select((graft.functions.VectorExpressions.cosine_sim(col("rv"), col("dv")) >= 0.99 &&
-          col("dup_of") < col("vec_id")).as("ok"), col("vec_id").as("remid"))
-      val nPlanted = planted.count()
-      val nRemovedPlanted = removed.filter(col("vec_id") >= maxId).count()
-      recheck.agg(
-          count(lit(1)).as("n_removed_rechecked"),
-          coalesce(min(when(col("ok"), 1L).otherwise(0L)), lit(1L)).as("all_ok"))
-        .select(
-          (lit(nPlanted) + emb.count()).as("n_corpus"),
-          lit(nPlanted).as("n_planted"),
-          (col("all_ok") === 1L &&
-            col("n_removed_rechecked") === lit(removed.count())).as("precision_ok"),
-          (lit(nRemovedPlanted) >= lit(math.ceil(nPlanted * 0.9).toLong)).as("recall_ok"))
-    }),
+    "q_dedup_semantic_pca" -> ((s, dir) =>
+      Drills.plantedSemanticDedup(t(s, dir, "embeddings"),
+        graft.operators.Dedup.semanticDedup(_, "vec_id", "embedding",
+          threshold = 0.99, nClusters = 16))),
 
     // q_dedup_embedding_blocked control: the stock EXACT formulation —
     // the all-pairs threshold self-join (id_a < id_b) with the HOF
@@ -104,9 +68,7 @@ object Baseline {
       val emb = t(s, dir, "embeddings")
       val maxId = emb.agg(coalesce(max("vec_id"), lit(-1L))).head.getLong(0) + 1
       val planted = emb.filter(col("vec_id") % 15 === 0)
-        .withColumn("embedding", transform(col("embedding"), (x, j) =>
-          (x + ((col("vec_id") * 31 + j * 7) % 1000 - 500).cast("double")
-            / 100000.0d).cast("float")))
+        .withColumn("embedding", Drills.jitter(col("embedding")))
         .select((col("vec_id") + maxId).as("vec_id"), col("embedding"))
       val corpus = emb.select("vec_id", "embedding").unionByName(planted)
         // zero-norm guard, mirroring the engine and the oracle: an
@@ -116,12 +78,8 @@ object Baseline {
         .localCheckpoint()
       val a = corpus.select(col("vec_id").as("vid_a"), col("embedding").as("va"))
       val b = corpus.select(col("vec_id").as("vid_b"), col("embedding").as("vb"))
-      val hofCos = expr(
-        """aggregate(zip_with(va, vb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-          | / (sqrt(aggregate(va, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-          |    * sqrt(aggregate(vb, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
       a.join(b, col("vid_a") < col("vid_b"))
-        .withColumn("cos", hofCos)
+        .withColumn("cos", hofCos("va", "vb"))
         .filter(col("cos") >= 0.95)
         .select(col("vid_a"), col("vid_b"), col("cos"))
         .withColumn("blocking_effective", lit(true))
@@ -265,26 +223,12 @@ object Baseline {
     "q_text_search_index" -> ((s, dir) => {
       val terms = Seq("hash", "merge", "vector")
       val docs = t(s, dir, "documents")
-      val out = Tables.scratch("baseline_text_postings")
       // capability-matched (the same round-8/9 protocol the bm25 and
       // phrase pairs follow): the graft artifact is the full retrieval
       // index — positional postings + doc lengths + term dfs — so the
       // stock twin materializes the equivalent flat artifacts, not a
       // frequency-only subset of them
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"),
-          posexplode(col("toks")).as(Seq("pos", "term")))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("overwrite").parquet(out)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite")
-        .parquet(Tables.scratch("baseline_text_doclen"))
-      s.read.parquet(out).groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite")
-        .parquet(Tables.scratch("baseline_text_df"))
+      val out = flatPostings(s, docs, a => Tables.scratch(s"baseline_text_$a"))
       s.read.parquet(out)
         .filter(col("term").isin(terms: _*))
         .groupBy("doc_id")
@@ -301,18 +245,7 @@ object Baseline {
     // re-rank must not lose to the full-precision full scan.
     "q_sim_rerank" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val p = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("neighbor_vec"))
-      val scored = c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(probe_vec, neighbor_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(probe_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(neighbor_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select("probe_id", "rank", "neighbor_id", "cos")
+      hofTopK(emb.filter(col("vec_id") < 10), emb)
         .orderBy("probe_id", "rank")
     }),
 
@@ -326,27 +259,8 @@ object Baseline {
       val docs = t(s, dir, "documents")
       val post = Tables.scratch("baseline_bm25_postings")
       val dls = Tables.scratch("baseline_bm25_doclen")
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .write.mode("overwrite").parquet(post)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(dls)
-      val terms = Seq("hash", "merge", "vector")
-      val tf = s.read.parquet(post).filter(col("term").isin(terms: _*))
-        .select(col("doc_id"), col("term"), col("tf").cast("double").as("tf"))
-      val dfT = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-      val dl = s.read.parquet(dls)
-      val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
-      tf.join(broadcast(dfT), "term")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib",
-          log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1) *
-            col("tf") * lit(2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-        .groupBy("doc_id").agg(sum("contrib").as("score"))
+      flatTfPostings(docs, post, dls)
+      Drills.flatBm25(s, post, dls, Seq("hash", "merge", "vector"))
         .orderBy(col("score").desc, col("doc_id").asc)
         .limit(20)
     }),
@@ -413,31 +327,14 @@ object Baseline {
       val docs = t(s, dir, "documents")
       val post = Tables.scratch("baseline_eval_postings")
       val dls = Tables.scratch("baseline_eval_doclen")
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .write.mode("overwrite").parquet(post)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(dls)
+      flatTfPostings(docs, post, dls)
       val k = 10
       def log2(x: Double) = math.log(x) / math.log(2.0)
       val rows = Seq("hash merge", "hash vector", "table vector").map { q =>
         val terms = q.split(" ").toSeq
         val tf = s.read.parquet(post).filter(col("term").isin(terms: _*))
           .select(col("doc_id"), col("term"), col("tf").cast("double").as("tf"))
-        val dfT = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-        val dl = s.read.parquet(dls)
-        val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-          avg("dl").as("avgdl"))
-        val ranked = tf.join(broadcast(dfT), "term")
-          .join(dl, "doc_id")
-          .crossJoin(broadcast(stats))
-          .withColumn("contrib",
-            log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1) *
-              col("tf") * lit(2.2) /
-              (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-          .groupBy("doc_id").agg(sum("contrib").as("score"))
+        val ranked = Drills.flatBm25(s, post, dls, terms)
           .orderBy(col("score").desc, col("doc_id").asc)
           .limit(k).collect()
           .zipWithIndex.map { case (r, i) => (r.getLong(0), i + 1) }
@@ -474,20 +371,7 @@ object Baseline {
     // 2 bucket partitions.
     "q_text_phrase_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val post = Tables.scratch("baseline_phrase_postings")
-      val dls = Tables.scratch("baseline_phrase_doclen")
-      val dfs = Tables.scratch("baseline_phrase_df")
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "term")))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("overwrite").parquet(post)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(dls)
-      s.read.parquet(post).groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(dfs)
+      val post = flatPostings(s, docs, a => Tables.scratch(s"baseline_phrase_$a"))
       val phrase = Seq("table", "hash")
       val flat = s.read.parquet(post)
       val slots = phrase.zipWithIndex.map { case (term, i) =>
@@ -581,21 +465,7 @@ object Baseline {
     // consulting it first).
     "q_text_wildcard_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val out = Tables.scratch("baseline_wild_postings")
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"),
-          posexplode(col("toks")).as(Seq("pos", "term")))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("overwrite").parquet(out)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite")
-        .parquet(Tables.scratch("baseline_wild_doclen"))
-      s.read.parquet(out).groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite")
-        .parquet(Tables.scratch("baseline_wild_df"))
+      val out = flatPostings(s, docs, a => Tables.scratch(s"baseline_wild_$a"))
       s.read.parquet(out)
         .filter(col("term").startsWith("me"))
         .groupBy("doc_id")
@@ -608,21 +478,7 @@ object Baseline {
     // (CASE term→group, group-arity gate) over the FLAT postings.
     "q_text_synonym_search" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val out = Tables.scratch("baseline_syn_postings")
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"),
-          posexplode(col("toks")).as(Seq("pos", "term")))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("overwrite").parquet(out)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite")
-        .parquet(Tables.scratch("baseline_syn_doclen"))
-      s.read.parquet(out).groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite")
-        .parquet(Tables.scratch("baseline_syn_df"))
+      val out = flatPostings(s, docs, a => Tables.scratch(s"baseline_syn_$a"))
       val grp = when(col("term").isin("hash", "key"), lit(0))
         .when(col("term").isin("merge", "join"), lit(1))
         .otherwise(lit(2))
@@ -649,19 +505,7 @@ object Baseline {
       val docs = t(s, dir, "documents")
       def shard(pred: org.apache.spark.sql.Column, tag: String): String = {
         val out = Tables.scratch(s"baseline_tmerge_$tag")
-        val toks = docs.filter(pred).select(col("doc_id"),
-          graft.operators.Dedup.tokens(col("text")).as("toks"))
-        toks.select(col("doc_id"),
-            posexplode(col("toks")).as(Seq("pos", "term")))
-          .groupBy("doc_id", "term")
-          .agg(count(lit(1)).as("tf"),
-            sort_array(collect_list(col("pos"))).as("positions"))
-          .write.mode("overwrite").parquet(s"$out/postings")
-        toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-          .write.mode("overwrite").parquet(s"$out/doclen")
-        s.read.parquet(s"$out/postings")
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$out/df")
+        flatPostings(s, docs.filter(pred), a => s"$out/$a")
         out
       }
       val a = shard(col("doc_id") < 250, "a")
@@ -714,21 +558,7 @@ object Baseline {
       model.transform(withVec).drop("__v")
         .write.mode("overwrite").parquet(flat)
       val assigned = s.read.parquet(flat)
-      val p = assigned.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      val scored = assigned
-        .select(col("vec_id").as("neighbor_id"), col("embedding").as("neighbor_vec"))
-        .join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(probe_vec, neighbor_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(probe_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(neighbor_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select("probe_id", "rank", "neighbor_id", "cos")
-        .orderBy("probe_id", "rank")
+      hofTopK(assigned.filter(col("vec_id") < 10), assigned).orderBy("probe_id", "rank")
     }),
 
     // q_sim_matryoshka control: the same two-stage truncated-dim cut
@@ -737,10 +567,6 @@ object Baseline {
     // bounded-heap aggregate.
     "q_sim_matryoshka" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
       val p = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"),
           slice(col("embedding"), 1, 16).as("tp"))
@@ -772,25 +598,11 @@ object Baseline {
     // from the pruned partitions.
     "q_text_index_delete" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val post = Tables.scratch("baseline_delete_postings")
-      val dlDir = Tables.scratch("baseline_delete_doclen")
       val purged = Tables.scratch("baseline_delete_postings_v2")
       // capability-matched artifact (round-9 protocol): POSITIONAL
       // postings + doc lengths + term dfs, flat single-dir layout —
       // the full retrieval capability the graft index carries
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"),
-          posexplode(col("toks")).as(Seq("pos", "term")))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("overwrite").parquet(post)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(dlDir)
-      s.read.parquet(post).groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite")
-        .parquet(Tables.scratch("baseline_delete_df"))
+      val post = flatPostings(s, docs, a => Tables.scratch(s"baseline_delete_$a"))
       s.read.parquet(post).filter(col("doc_id") % 7 =!= 0)
         .write.mode("overwrite").parquet(purged)
       val terms = Seq("hash", "merge", "vector")
@@ -809,7 +621,7 @@ object Baseline {
       // the filter-masked answer equals the physically-purged answer
       val pre = search(post, masked = true)
       val cur = search(purged, masked = false)
-      val identical = pre.exceptAll(cur).isEmpty && cur.exceptAll(pre).isEmpty
+      val identical = Drills.sameRows(pre, cur)
       cur
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
         .orderBy("doc_id")
@@ -836,22 +648,8 @@ object Baseline {
       // capability-matched rebuild (round-9 protocol): each rebuild
       // re-materializes the positional postings + doc lengths + dfs
       // the graft index maintains incrementally
-      def rebuild(src: DataFrame): Unit = {
-        val toks = src.select(col("doc_id"),
-          graft.operators.Dedup.tokens(col("text")).as("toks"))
-        toks.select(col("doc_id"),
-            posexplode(col("toks")).as(Seq("pos", "term")))
-          .groupBy("doc_id", "term")
-          .agg(count(lit(1)).as("tf"),
-            sort_array(collect_list(col("pos"))).as("positions"))
-          .write.mode("overwrite").parquet(post)
-        toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-          .write.mode("overwrite")
-          .parquet(Tables.scratch("baseline_cdc_doclen"))
-        s.read.parquet(post).groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite")
-          .parquet(Tables.scratch("baseline_cdc_df"))
-      }
+      def rebuild(src: DataFrame): Unit =
+        flatPostings(s, src, a => Tables.scratch(s"baseline_cdc_$a"))
       Snapshots.create(s, root, docs)
       rebuild(Snapshots.read(s, root))
       Snapshots.commitUpdate(s, root, col("doc_id") % 11 === 0,
@@ -892,20 +690,7 @@ object Baseline {
       model.transform(withVec).drop("__v")
         .write.mode("overwrite").parquet(out)
       val assigned = s.read.parquet(out)
-      val p = assigned.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      val c = assigned.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("neighbor_vec"))
-      val scored = c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(probe_vec, neighbor_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(probe_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(neighbor_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select("probe_id", "rank", "neighbor_id", "cos")
-        .orderBy("probe_id", "rank")
+      hofTopK(assigned.filter(col("vec_id") < 10), assigned).orderBy("probe_id", "rank")
     }),
 
     // q_decontaminate_incremental control: the user without a
@@ -970,13 +755,7 @@ object Baseline {
       val dls = Tables.scratch("baseline_hcdc_doclen")
       val vout = Tables.scratch("baseline_hcdc_ivf")
       def rebuild(src: DataFrame): Unit = {
-        val toks = src.select(col("doc_id"),
-          graft.operators.Dedup.tokens(col("text")).as("toks"))
-        toks.select(col("doc_id"), explode(col("toks")).as("term"))
-          .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-          .write.mode("overwrite").parquet(post)
-        toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-          .write.mode("overwrite").parquet(dls)
+        flatTfPostings(src, post, dls)
         val withVec = src.withColumn("__v", array_to_vector(col("embedding")))
         val model = new KMeans().setK(8).setSeed(42L)
           .setFeaturesCol("__v").setPredictionCol("cluster").fit(withVec)
@@ -987,29 +766,12 @@ object Baseline {
       rebuild(s.read.parquet(v1d))
       rebuild(live)
       // BM25 leg from the flat artifacts
-      val terms = Seq("hash", "merge", "vector")
-      val tf = s.read.parquet(post).filter(col("term").isin(terms: _*))
-        .select(col("doc_id"), col("term"), col("tf").cast("double").as("tf"))
-      val dfT = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-      val dl = s.read.parquet(dls)
-      val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
       val wT = Window.orderBy(col("score").desc, col("doc_id").asc)
-      val textTop = tf.join(broadcast(dfT), "term")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib",
-          log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1) *
-            col("tf") * lit(2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-        .groupBy("doc_id").agg(sum("contrib").as("score"))
+      val textTop = Drills.flatBm25(s, post, dls, Seq("hash", "merge", "vector"))
         .withColumn("leg_rank", row_number().over(wT))
         .filter(col("leg_rank") <= 50)
         .select("doc_id", "leg_rank")
       // vector leg: exhaustive scan of the rebuilt flat index
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
       val p = live.filter(col("doc_id") < 5)
         .select(col("doc_id").as("probe_id"), col("embedding").as("probe_vec"))
       val cv = s.read.parquet(s"$vout/assigned")
@@ -1137,30 +899,11 @@ object Baseline {
       val docs = t(s, dir, "documents")
       val post = Tables.scratch("baseline_prf_postings")
       val dls = Tables.scratch("baseline_prf_doclen")
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .write.mode("overwrite").parquet(post)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(dls)
-      val dl = s.read.parquet(dls)
-      val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
-      def bm25Round(terms: Seq[String], k: Int) = {
-        val tf = s.read.parquet(post).filter(col("term").isin(terms: _*))
-          .select(col("doc_id"), col("term"), col("tf").cast("double").as("tf"))
-        val dfT = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-        tf.join(broadcast(dfT), "term")
-          .join(dl, "doc_id")
-          .crossJoin(broadcast(stats))
-          .withColumn("contrib",
-            log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1) *
-              col("tf") * lit(2.2) /
-              (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-          .groupBy("doc_id").agg(sum("contrib").as("score"))
+      flatTfPostings(docs, post, dls)
+      def bm25Round(terms: Seq[String], k: Int) =
+        Drills.flatBm25(s, post, dls, terms)
           .orderBy(col("score").desc, col("doc_id").asc)
           .limit(k)
-      }
       val seed = Seq("hash", "merge", "vector")
       val feedback = bm25Round(seed, 10).select("doc_id")
       val expansion = docs.join(feedback, "doc_id")
@@ -1223,13 +966,7 @@ object Baseline {
       // text artifacts, flat (the bm25 pair's layout)
       val post = Tables.scratch("baseline_hybrid_postings")
       val dls = Tables.scratch("baseline_hybrid_doclen")
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .write.mode("overwrite").parquet(post)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(dls)
+      flatTfPostings(docs, post, dls)
       // vector artifacts, flat (the ivf pairs' layout)
       val vout = Tables.scratch("baseline_hybrid_ivf")
       val withVec = emb.withColumn("__v", array_to_vector(col("embedding")))
@@ -1243,29 +980,12 @@ object Baseline {
         .toDF("centroid_id", "centroid_vec")
         .coalesce(1).write.mode("overwrite").parquet(s"$vout/centroids")
       // BM25 leg from the flat artifacts, window-ranked
-      val terms = Seq("hash", "merge", "vector")
-      val tf = s.read.parquet(post).filter(col("term").isin(terms: _*))
-        .select(col("doc_id"), col("term"), col("tf").cast("double").as("tf"))
-      val dfT = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-      val dl = s.read.parquet(dls)
-      val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
       val wT = Window.orderBy(col("score").desc, col("doc_id").asc)
-      val textTop = tf.join(broadcast(dfT), "term")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib",
-          log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1) *
-            col("tf") * lit(2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-        .groupBy("doc_id").agg(sum("contrib").as("score"))
+      val textTop = Drills.flatBm25(s, post, dls, Seq("hash", "merge", "vector"))
         .withColumn("leg_rank", row_number().over(wT))
         .filter(col("leg_rank") <= 50)
         .select("doc_id", "leg_rank")
       // vector leg: exhaustive scan of the flat persisted index
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
       val p = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
       val cv = s.read.parquet(s"$vout/assigned")
@@ -1315,10 +1035,6 @@ object Baseline {
         .coalesce(1).write.mode("overwrite").parquet(s"$out/centroids")
       val assigned = s.read.parquet(s"$out/assigned")
       val centroids = s.read.parquet(s"$out/centroids")
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
       def l2(a: String, b: String) = expr(
         s"sqrt(aggregate(zip_with($a, $b, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
       val p = emb.filter(col("vec_id") < 10)
@@ -1338,25 +1054,8 @@ object Baseline {
       val pq = scored.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .select("probe_id", "rank", "neighbor_id", "cos")
-      val cEx = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("neighbor_vec"))
-      val exScored = cEx.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", hofCos("probe_vec", "neighbor_vec"))
-      val exact = exScored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select("probe_id", "rank", "neighbor_id", "cos")
-      val gaps = pq.join(
-          exact.select(col("probe_id"), col("rank"), col("cos").as("exact_cos")),
-          Seq("probe_id", "rank"))
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_ret"),
-          max(col("exact_cos") - col("cos")).as("max_gap"))
-      exact.filter(col("rank") === 1)
-        .select(col("probe_id"), col("cos").as("exact_top1_cos"))
-        .join(gaps, Seq("probe_id"), "left_outer")
-        .select(col("probe_id"), col("exact_top1_cos"),
-          (coalesce(col("n_ret"), lit(0L)) === 5 &&
-            coalesce(col("max_gap"), lit(1.0)) <= lit(0.1)).as("pq_ok"))
-        .orderBy("probe_id")
+      val exact = hofTopK(emb.filter(col("vec_id") < 10), emb)
+      Drills.top5GapAudit(pq, exact, 0.1, "pq_ok")
     }),
 
     // q_sim_ivf_cdc control: the user without O(changes) sync rebuilds
@@ -1394,21 +1093,7 @@ object Baseline {
         .transform(live).drop("__v")
         .write.mode("overwrite").parquet(out)
       val assigned = s.read.parquet(out)
-      val p = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      assigned.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("neighbor_vec"))
-        .join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", hofCos("probe_vec", "neighbor_vec"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select("probe_id", "rank", "neighbor_id", "cos")
-        .orderBy("probe_id", "rank")
+      hofTopK(emb.filter(col("vec_id") < 10), assigned).orderBy("probe_id", "rank")
     }),
 
     // q_sim_ivf_delete control: the user without tombstones erases by
@@ -1435,26 +1120,11 @@ object Baseline {
         .write.mode("overwrite").parquet(s"$out/v2")
       val assigned = s.read.parquet(s"$out/v2")
       val purged = assigned.filter(col("vec_id") % 7 === 0).count() == 0
-      val p = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      def search(src: DataFrame) =
-        src.select(col("vec_id").as("neighbor_id"), col("embedding").as("neighbor_vec"))
-          .join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-          .withColumn("cos", hofCos("probe_vec", "neighbor_vec"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select("probe_id", "rank", "neighbor_id", "cos")
-      search(v1.filter(col("vec_id") % 7 =!= 0))
-        .write.mode("overwrite").parquet(s"$out/pre")
-      search(assigned).write.mode("overwrite").parquet(s"$out/post")
-      val pre = s.read.parquet(s"$out/pre")
-      val post = s.read.parquet(s"$out/post")
-      val identical = pre.exceptAll(post).isEmpty && post.exceptAll(pre).isEmpty
+      val probes = emb.filter(col("vec_id") < 10)
+      val pre = Drills.materialize(
+        hofTopK(probes, v1.filter(col("vec_id") % 7 =!= 0)), s"$out/pre")
+      val post = Drills.materialize(hofTopK(probes, assigned), s"$out/post")
+      val identical = Drills.sameRows(pre, post)
       post
         .withColumn("purged", lit(purged))
         .withColumn("compact_identical", lit(identical))
@@ -1473,40 +1143,21 @@ object Baseline {
       val acc = Tables.scratch("baseline_stream_ivf_acc")
       emb.filter(col("vec_id") % 2 === 0)
         .write.mode("overwrite").parquet(acc)
-      val q = graft.streaming.StreamOps
+      Drills.drainBatches(graft.streaming.StreamOps
         .tableStreamPaced(s, dir, "embeddings", "vec_id", 3)
-        .filter(col("vec_id") % 2 === 1)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(acc)
-          val all = s.read.parquet(acc)
-            .withColumn("__v", array_to_vector(col("embedding")))
-          val m = new KMeans().setK(8).setSeed(42L)
-            .setFeaturesCol("__v").setPredictionCol("cluster").fit(all)
-          m.transform(all).drop("__v")
-            .write.mode("overwrite")
-            .parquet(Tables.scratch("baseline_stream_ivf_idx"))
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .filter(col("vec_id") % 2 === 1)) { (batch, _) =>
+        batch.write.mode("append").parquet(acc)
+        val all = s.read.parquet(acc)
+          .withColumn("__v", array_to_vector(col("embedding")))
+        val m = new KMeans().setK(8).setSeed(42L)
+          .setFeaturesCol("__v").setPredictionCol("cluster").fit(all)
+        m.transform(all).drop("__v")
+          .write.mode("overwrite")
+          .parquet(Tables.scratch("baseline_stream_ivf_idx"))
+      }
       val assigned = s.read.parquet(Tables.scratch("baseline_stream_ivf_idx"))
-      val p = assigned.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      val c = assigned.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("neighbor_vec"))
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", hofCos("probe_vec", "neighbor_vec"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+      hofTopK(assigned.filter(col("vec_id") < 10), assigned)
         .withColumn("multi_batch", lit(true))
-        .select("probe_id", "rank", "neighbor_id", "cos", "multi_batch")
         .orderBy("probe_id", "rank")
     }),
 
@@ -1554,20 +1205,14 @@ object Baseline {
           true
         } else false
       }
-      val q = graft.streaming.StreamOps
+      Drills.drainBatches(graft.streaming.StreamOps
         .tableStreamPaced(s, dir, "embeddings", "vec_id", 3)
-        .filter(col("vec_id") % 2 === 1)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          model.transform(batch.withColumn("__v",
-              array_to_vector(col("embedding")))).drop("__v")
-            .write.mode("append").parquet(acc)
-          pollAndRepair()
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .filter(col("vec_id") % 2 === 1)) { (batch, _) =>
+        model.transform(batch.withColumn("__v",
+            array_to_vector(col("embedding")))).drop("__v")
+          .write.mode("append").parquet(acc)
+        pollAndRepair()
+      }
       var drains = 0
       while (pollAndRepair() && drains < 16) drains += 1
       val cleanAfter = {
@@ -1577,23 +1222,9 @@ object Baseline {
         !sizes.exists(sz => sz > 1.25 * mean && sz >= 2)
       }
       val assigned = s.read.parquet(acc)
-      val p = assigned.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      val c = assigned.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("neighbor_vec"))
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", hofCos("probe_vec", "neighbor_vec"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+      hofTopK(assigned.filter(col("vec_id") < 10), assigned)
         .withColumn("repair_loop_ok", lit(loopOk.get()))
         .withColumn("advisory_clean", lit(cleanAfter))
-        .select("probe_id", "rank", "neighbor_id", "cos",
-          "repair_loop_ok", "advisory_clean")
         .orderBy("probe_id", "rank")
     }),
 
@@ -1619,21 +1250,8 @@ object Baseline {
       m2.transform(withVec).drop("__v")
         .write.mode("overwrite").parquet(out)
       val assigned = s.read.parquet(out)
-      val p = assigned.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      val c = assigned.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("neighbor_vec"))
-      def hofCos(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)
-           | / (sqrt(aggregate($a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-           |    * sqrt(aggregate($b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", hofCos("probe_vec", "neighbor_vec"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+      hofTopK(assigned.filter(col("vec_id") < 10), assigned)
         .withColumn("rebalance_ok", lit(true))
-        .select("probe_id", "rank", "neighbor_id", "cos", "rebalance_ok")
         .orderBy("probe_id", "rank")
     }),
 
@@ -1689,10 +1307,7 @@ object Baseline {
       val a = emb.select(col("vec_id").as("vid_a"), col("embedding").as("v_a"))
       val b = emb.select(col("vec_id").as("vid_b"), col("embedding").as("v_b"))
       a.crossJoin(b).filter(col("vid_a") < col("vid_b"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(v_a, v_b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(v_a, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(v_b, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
+        .withColumn("cos", hofCos("v_a", "v_b"))
         .filter(col("cos") >= 0.85)
         .select("vid_a", "vid_b", "cos")
     }),
@@ -1752,12 +1367,8 @@ object Baseline {
       val corpus = emb.unionByName(planted).localCheckpoint()
       val a = corpus.select(col("vec_id").as("vid_a"), col("embedding").as("v_a"))
       val b = corpus.select(col("vec_id").as("vid_b"), col("embedding").as("v_b"))
-      val hofCos = expr(
-        """aggregate(zip_with(v_a, v_b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-          | / (sqrt(aggregate(v_a, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-          |    * sqrt(aggregate(v_b, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
       val removed = a.crossJoin(b).filter(col("vid_a") < col("vid_b"))
-        .withColumn("cos", hofCos).filter(col("cos") >= 0.99)
+        .withColumn("cos", hofCos("v_a", "v_b")).filter(col("cos") >= 0.99)
         .groupBy(col("vid_b").as("vec_id"))
         .agg(min("vid_a").as("dup_of"))
       val nPlanted = planted.count()
@@ -1777,17 +1388,11 @@ object Baseline {
     "q_decontaminate_semantic" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val tests = emb.filter(col("vec_id") % 20 === 0)
-        .withColumn("tv", transform(col("embedding"), (x, j) =>
-          (x + ((col("vec_id") * 31 + j * 7) % 1000 - 500).cast("double")
-            / 100000.0d).cast("float")))
+        .withColumn("tv", Drills.jitter(col("embedding")))
         .select((col("vec_id") / 20).cast("long").as("test_id"), col("tv"))
-      val hofCos = expr(
-        """aggregate(zip_with(cv, tv, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-          | / (sqrt(aggregate(cv, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-          |    * sqrt(aggregate(tv, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
       val scored = emb.select(col("vec_id"), col("embedding").as("cv"))
         .crossJoin(tests)
-        .withColumn("cos", hofCos).filter(col("cos") >= 0.95)
+        .withColumn("cos", hofCos("cv", "tv")).filter(col("cos") >= 0.95)
       val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("test_id").asc)
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select("vec_id", "test_id", "cos")
@@ -1810,18 +1415,12 @@ object Baseline {
       val src = emb.filter(col("vec_id") % 2 === 0)
         .select(col("vec_id").as("src_id"), col("embedding").as("cv"))
       val planted = emb.filter(col("vec_id") % 10 === 0)
-        .withColumn("embedding", transform(col("embedding"), (x, j) =>
-          (x + ((col("vec_id") * 31 + j * 7) % 1000 - 500).cast("double")
-            / 100000.0d).cast("float")))
+        .withColumn("embedding", Drills.jitter(col("embedding")))
         .select((col("vec_id") + maxId).as("tgt_id"), col("embedding").as("tv"))
       val tgt = emb.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id").as("tgt_id"), col("embedding").as("tv"))
         .unionByName(planted)
-      val hofCos = expr(
-        """aggregate(zip_with(cv, tv, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-          | / (sqrt(aggregate(cv, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-          |    * sqrt(aggregate(tv, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin)
-      val scored = src.crossJoin(tgt).withColumn("cos", hofCos)
+      val scored = src.crossJoin(tgt).withColumn("cos", hofCos("cv", "tv"))
         .select("src_id", "tgt_id", "cos").localCheckpoint()
       val wf = Window.partitionBy("src_id").orderBy(col("cos").desc, col("tgt_id").asc)
       val wr = Window.partitionBy("tgt_id").orderBy(col("cos").desc, col("src_id").asc)
@@ -1847,10 +1446,7 @@ object Baseline {
         .select(col("vec_id").as("probe_id"), col("embedding").as("v_a"))
       val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("v_b"))
       val scored = c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(v_a, v_b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(v_a, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(v_b, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
+        .withColumn("cos", hofCos("v_a", "v_b"))
       val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
       scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
         .select("probe_id", "rank", "neighbor_id", "cos")
@@ -2190,9 +1786,8 @@ object Baseline {
         val raw = s.read.parquet(Tables.path(dir, "events"))
         val src = Tables.scratch(s"baseline_paced_src_${System.nanoTime()}")
         raw.repartitionByRange(3, col("ts")).write.mode("overwrite").parquet(src)
-        val sp = new org.apache.hadoop.fs.Path(src)
-        val fsys = sp.getFileSystem(s.sessionState.newHadoopConf())
-        fsys.listStatus(sp).filter(_.getPath.getName.startsWith("part-"))
+        val fsys = GraftSession.fsOf(s, src)
+        fsys.listStatus(new org.apache.hadoop.fs.Path(src)).filter(_.getPath.getName.startsWith("part-"))
           .sortBy(_.getPath.getName).zipWithIndex
           .foreach { case (st, i) =>
             fsys.setTimes(st.getPath, 1755000000000L + i * 1000L, -1L) }
@@ -2236,18 +1831,7 @@ object Baseline {
     "q_text_faceted_search" -> ((s, dir) => {
       val terms = Seq("hash", "merge", "vector")
       val docs = t(s, dir, "documents")
-      val out = Tables.scratch("baseline_facet_postings")
-      val toks = docs.select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "term")))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("overwrite").parquet(out)
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(Tables.scratch("baseline_facet_doclen"))
-      s.read.parquet(out).groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(Tables.scratch("baseline_facet_df"))
+      val out = flatPostings(s, docs, a => Tables.scratch(s"baseline_facet_$a"))
       s.read.parquet(out)
         .filter(col("term").isin(terms: _*))
         .groupBy("doc_id")
@@ -2267,14 +1851,8 @@ object Baseline {
     "q_text_snippet" -> ((s, dir) => {
       val terms = Seq("hash", "merge", "vector")
       val width = 8
-      val out = Tables.scratch("baseline_snip_postings")
-      t(s, dir, "documents")
-        .select(col("doc_id"), graft.operators.Dedup.tokens(col("text")).as("toks"))
-        .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "term")))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("overwrite").parquet(out)
+      val out = flatPostings(s, t(s, dir, "documents"),
+        a => Tables.scratch(s"baseline_snip_$a"), sidecars = false)
       val postings = s.read.parquet(out).filter(col("term").isin(terms: _*))
       val matched = postings.groupBy("doc_id")
         .agg(count(lit(1)).as("n_terms"))
@@ -2313,18 +1891,7 @@ object Baseline {
         .setFeaturesCol("__v").setPredictionCol("cluster").fit(withVec)
       model.transform(withVec).drop("__v")
         .write.mode("overwrite").parquet(out)
-      val c = s.read.parquet(out).filter(col("label") === 3)
-        .select(col("vec_id").as("neighbor_id"), col("embedding").as("neighbor_vec"))
-      val p = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      val scored = c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(probe_vec, neighbor_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(probe_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(neighbor_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
-      val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        .select("probe_id", "rank", "neighbor_id", "cos")
+      hofTopK(emb.filter(col("vec_id") < 10), s.read.parquet(out).filter(col("label") === 3))
         .orderBy("probe_id", "rank")
     }),
 
@@ -2346,10 +1913,7 @@ object Baseline {
       val p = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
       c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(probe_vec, neighbor_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(probe_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(neighbor_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
+        .withColumn("cos", hofCos("probe_vec", "neighbor_vec"))
         .filter(col("cos") >= 0.3)
         .select("probe_id", "neighbor_id", "cos")
         .orderBy("probe_id", "neighbor_id")
@@ -2365,10 +1929,7 @@ object Baseline {
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
       val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("neighbor_vec"))
       val scored = c.join(p, col("probe_id") =!= col("neighbor_id"))
-        .withColumn("cos", expr(
-          """aggregate(zip_with(probe_vec, neighbor_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-            | / (sqrt(aggregate(probe_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))
-            |    * sqrt(aggregate(neighbor_vec, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))""".stripMargin))
+        .withColumn("cos", hofCos("probe_vec", "neighbor_vec"))
       val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id").asc)
       scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
         .select("probe_id", "rank", "neighbor_id", "cos")
@@ -2385,7 +1946,6 @@ object Baseline {
     "q_forget" -> ((s, dir) => {
       val tbl = Tables.scratch("baseline_forget_tbl")
       val tblOld = Tables.scratch("baseline_forget_tbl_v1")
-      val posts = Tables.scratch("baseline_forget_postings")
       val lists = Tables.scratch("baseline_forget_lists")
       val corpus = t(s, dir, "documents").select("doc_id", "text", "source", "n_chars")
         .join(t(s, dir, "embeddings")
@@ -2396,19 +1956,9 @@ object Baseline {
       // the graft index carries positional postings + doc lengths +
       // per-term dfs + corpus totals, so the stock user materializes
       // the same flat artifacts...
-      val toks = s.read.parquet(tbl).select(col("doc_id"),
-        graft.operators.Dedup.tokens(col("text")).as("toks"))
-      toks.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "term")))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("overwrite").parquet(posts)
+      val posts = flatPostings(s, s.read.parquet(tbl),
+        a => Tables.scratch(s"baseline_forget_$a"))
       val doclen = Tables.scratch("baseline_forget_doclen")
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(doclen)
-      val dfs = Tables.scratch("baseline_forget_df")
-      s.read.parquet(posts).groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(dfs)
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val withVec = s.read.parquet(tbl)
@@ -2432,8 +1982,7 @@ object Baseline {
         .parquet(Tables.scratch("baseline_forget_df_v2"))
       val lists2 = Tables.scratch("baseline_forget_lists_v2")
       s.read.parquet(lists).filter(!isForgotten).write.mode("overwrite").parquet(lists2)
-      val fs = new org.apache.hadoop.fs.Path(tblOld)
-        .getFileSystem(s.sessionState.newHadoopConf())
+      val fs = GraftSession.fsOf(s, tblOld)
       fs.delete(new org.apache.hadoop.fs.Path(tblOld), true)
       val tableResidue = s.read.parquet(tbl2).filter(isForgotten).count()
       val histResidue = if (fs.exists(new org.apache.hadoop.fs.Path(tblOld))) 1 else 0
@@ -2469,8 +2018,7 @@ object Baseline {
       val auditPassed = b.count() == s.read.parquet(main).count() &&
         b.filter(col("o_totalprice") <= 0).count() == 0
       // publish: replace main with the staged copy (dir swap)
-      val fs = new org.apache.hadoop.fs.Path(main)
-        .getFileSystem(s.sessionState.newHadoopConf())
+      val fs = GraftSession.fsOf(s, main)
       fs.delete(new org.apache.hadoop.fs.Path(main), true)
       fs.rename(new org.apache.hadoop.fs.Path(staging),
         new org.apache.hadoop.fs.Path(main))

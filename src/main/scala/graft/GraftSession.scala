@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft session is built. Every main and the test
@@ -46,6 +47,14 @@ object GraftSession {
     * working set and skew their timings. Blocking, so the removal never
     * overlaps the next query, and only when blocks exist.
     */
+  /** The filesystem that serves `path`, resolved through the session's
+    * Hadoop conf — the one Spark's own scans of that path use, so a
+    * `graft://` mount or an `fs.*` key set on the session reaches the
+    * engine's metadata reads and writes too.
+    */
+  private[graft] def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
   private[graft] def releaseLeakedBlocks(spark: SparkSession): Unit = {
     val leaked = spark.sparkContext.getPersistentRDDs.values
     if (leaked.nonEmpty) leaked.foreach(_.unpersist(blocking = true))

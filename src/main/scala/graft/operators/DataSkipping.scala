@@ -334,7 +334,7 @@ object DataSkipping {
   private def topLevel(spark: SparkSession, tableDir: String)
       : (Seq[org.apache.hadoop.fs.FileStatus], Boolean) = {
     val tdir = new Path(tableDir)
-    val tfs = tdir.getFileSystem(spark.sessionState.newHadoopConf())
+    val tfs = graft.GraftSession.fsOf(spark, tableDir)
     val entries = tfs.listStatus(tdir).filter { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 
 /** TWO-INDEX TRANSACTIONAL SYNC — the cross-index atomicity layer a
@@ -95,8 +96,7 @@ object IndexEpoch {
     * index reclaims what only those pins were holding.
     */
   def expire(spark: SparkSession, root: String, keepFrom: Int): Seq[Int] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fsOf(spark, root)
     val dropped = Snapshots.manifestSeqs(spark, root).filter(_ < keepFrom)
     dropped.foreach(s => fs.delete(
       new org.apache.hadoop.fs.Path(root, Snapshots.ManifestPrefix + s), false))

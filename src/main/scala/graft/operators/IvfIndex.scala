@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.VectorExpressions._
 import graft.InFlight.{await, inFlight}
+import graft.GraftSession.fsOf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
@@ -158,9 +159,6 @@ object IvfIndex {
   // so indexes that were never rebalanced need no manifest at all.
 
   private val CGenPrefix = "_cgen_"
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def centroidsGenPath(path: String, gen: Int): String =
     if (gen == 0) s"$path/centroids" else s"$path/centroids_g$gen"

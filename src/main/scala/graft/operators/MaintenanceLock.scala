@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
+import graft.GraftSession.fsOf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -82,9 +83,6 @@ private[graft] object MaintenanceLock {
   private def heartbeatMs(spark: SparkSession): Long =
     spark.conf.getOption("graft.index.writerHeartbeatMs")
       .map(_.toLong).getOrElse(math.max(1000L, leaseMs(spark) / 3))
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   private[graft] def markerPath(path: String) = new Path(path, MarkerName)
 

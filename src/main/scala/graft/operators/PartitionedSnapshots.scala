@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftSession.fsOf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -37,9 +38,6 @@ import org.apache.spark.sql.functions.col
 object PartitionedSnapshots {
   private val StagePartCol = "__p"
 
-  private def fs(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-
   private def partPath(root: String, dir: String, v: Int) =
     s"$root/parts/$dir/v_$v"
 
@@ -53,7 +51,7 @@ object PartitionedSnapshots {
     val stage = s"$root/.stage_v_$v"
     df.withColumn(StagePartCol, col(partCol))
       .write.partitionBy(StagePartCol).parquet(stage)
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val dirs = f.listStatus(new Path(stage))
       .filter(_.isDirectory).map(_.getPath.getName).toSeq
     dirs.foreach { d =>
@@ -95,14 +93,14 @@ object PartitionedSnapshots {
   private val SchemaFile = "_schema.json"
 
   private def writeSchema(spark: SparkSession, root: String, df: DataFrame): Unit = {
-    val out = fs(spark, root).create(new Path(root, SchemaFile), true)
+    val out = fsOf(spark, root).create(new Path(root, SchemaFile), true)
     try out.write(df.schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
   private def emptyTyped(spark: SparkSession, root: String): Option[DataFrame] = {
     val p = new Path(root, SchemaFile)
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     if (!f.exists(p)) None
     else {
       val in = f.open(p)
@@ -119,7 +117,7 @@ object PartitionedSnapshots {
 
   /** Create the table at version 1 (drops any existing table at root). */
   def create(spark: SparkSession, root: String, df: DataFrame, partCol: String): Int = {
-    fs(spark, root).delete(new Path(root), true)
+    fsOf(spark, root).delete(new Path(root), true)
     val dirs = writeVersion(spark, root, df, partCol, 1)
     // schema sidecar BEFORE the manifest commit (the commit publishes)
     writeSchema(spark, root, df)
@@ -195,7 +193,7 @@ object PartitionedSnapshots {
     // itself — delta-sized I/O, and the dir names are escaped by the
     // same writer that will write the merged output.
     val probe = s"$root/.probe_v_$next"
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     updates.select(col(partCol).as(StagePartCol)).distinct()
       .withColumn("one", org.apache.spark.sql.functions.lit(1))
       .write.partitionBy(StagePartCol).parquet(probe)
@@ -225,7 +223,7 @@ object PartitionedSnapshots {
     * files are byte-identical across a commit". */
   def fileIdentity(spark: SparkSession, root: String, version: Option[Int] = None,
       partDir: Option[String] = None): Seq[(String, Long, Long)] = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val m = mapping(spark, root, version)
     val picked = partDir.fold(m)(d => m.filter(_._1 == d))
     picked.toSeq.sorted.flatMap { case (d, v) =>

@@ -25,7 +25,7 @@ object Partitioning {
       // managed location survives — clear it or saveAsTable refuses
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir") + "/" + name)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = graft.GraftSession.fsOf(spark, loc.toString)
       if (fs.exists(loc)) fs.delete(loc, true)
       df.write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftSession.fsOf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -35,9 +36,6 @@ import java.nio.charset.StandardCharsets
 object Snapshots {
   private[operators] val ManifestPrefix = "_manifest.v_"
 
-  private def fs(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-
   private def versionPath(root: String, v: Int) = s"$root/v_$v"
 
   // Manifests are immutable, monotonically numbered files
@@ -51,7 +49,7 @@ object Snapshots {
   // delete-then-rename swap, where a crash in the window loses the
   // whole table.
   private[operators] def manifestSeqs(spark: SparkSession, root: String): Seq[Int] = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val rootPath = new Path(root)
     if (!f.exists(rootPath)) Seq.empty
     else f.listStatus(rootPath).map(_.getPath.getName)
@@ -61,7 +59,7 @@ object Snapshots {
   }
 
   private[operators] def readManifestLines(spark: SparkSession, root: String, seq: Int): Seq[String] = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val in = f.open(new Path(root, ManifestPrefix + seq))
     try {
       val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
@@ -96,7 +94,7 @@ object Snapshots {
   private[graft] def writeManifestLines(spark: SparkSession, root: String,
       lines: Seq[String], sweep: Boolean,
       expectedNext: Option[Int] = None): Int = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val seqs = manifestSeqs(spark, root)
     val next = expectedNext.getOrElse(if (seqs.isEmpty) 1 else seqs.max + 1)
     if (seqs.exists(_ >= next))
@@ -158,7 +156,7 @@ object Snapshots {
     * table was created without them. */
   def statsColumns(spark: SparkSession, root: String): Seq[String] = {
     val p = new Path(root, StatsColsFile)
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     if (!f.exists(p)) Seq.empty
     else {
       val in = f.open(p)
@@ -234,7 +232,7 @@ object Snapshots {
     */
   def create(spark: SparkSession, root: String, df: DataFrame,
       statsCols: Seq[String] = Nil): Unit = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     f.delete(new Path(root), true)
     df.write.parquet(versionPath(root, 1))
     if (statsCols.nonEmpty) {
@@ -396,7 +394,7 @@ object Snapshots {
     require(vs.contains(toVersion),
       s"version $toVersion not in manifest (have ${vs.mkString(",")})")
     val next = nextVersion(spark, root)
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     org.apache.hadoop.fs.FileUtil.copy(
       f, new Path(versionPath(root, toVersion)),
       f, new Path(versionPath(root, next)),
@@ -472,7 +470,7 @@ object Snapshots {
   }
 
   private def dataFiles(spark: SparkSession, root: String, v: Int) =
-    fs(spark, root).listStatus(new Path(versionPath(root, v)))
+    fsOf(spark, root).listStatus(new Path(versionPath(root, v)))
       .filter(_.getPath.getName.startsWith("part-"))
 
   /** Committed data files of a version (count, total bytes) — the
@@ -566,7 +564,7 @@ object Snapshots {
       s"branch name must be [A-Za-z0-9_-]+: '$name'")
 
   private def branchSeqs(spark: SparkSession, root: String, name: String): Seq[Int] = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val rootPath = new Path(root)
     val prefix = branchManifestPrefix(name)
     if (!f.exists(rootPath)) Seq.empty
@@ -578,7 +576,7 @@ object Snapshots {
 
   private def writeBranchManifest(spark: SparkSession, root: String,
       name: String, vs: Seq[Int], expectFirst: Boolean = false): Unit = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val seqs = branchSeqs(spark, root, name)
     require(!expectFirst || seqs.isEmpty, s"branch '$name' already exists at $root")
     val next = if (seqs.isEmpty) 1 else seqs.max + 1
@@ -600,7 +598,7 @@ object Snapshots {
 
   /** Names of the table's live branches. */
   def branches(spark: SparkSession, root: String): Seq[String] = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val rootPath = new Path(root)
     if (!f.exists(rootPath)) Seq.empty
     else f.listStatus(rootPath).map(_.getPath.getName)
@@ -616,7 +614,7 @@ object Snapshots {
   def branchVersions(spark: SparkSession, root: String, name: String): Seq[Int] = {
     val seqs = branchSeqs(spark, root, name)
     require(seqs.nonEmpty, s"no branch '$name' at $root")
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val in = f.open(new Path(root, branchManifestPrefix(name) + seqs.max))
     try {
       val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
@@ -691,7 +689,7 @@ object Snapshots {
     * become orphans that [[vacuum]] reclaims (age-guarded).
     */
   def dropBranch(spark: SparkSession, root: String, name: String): Unit = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     branchSeqs(spark, root, name).foreach(s =>
       f.delete(new Path(root, branchManifestPrefix(name) + s), false))
   }
@@ -715,7 +713,7 @@ object Snapshots {
     * Iceberg's own safeguard for this exact race. Tests pass 0.
     */
   def vacuum(spark: SparkSession, root: String, olderThanMs: Long = 3600000L): Seq[String] = {
-    val f = fs(spark, root)
+    val f = fsOf(spark, root)
     val live = versions(spark, root).toSet ++
       branches(spark, root).flatMap(branchVersions(spark, root, _))
     val cutoff = System.currentTimeMillis() - olderThanMs
@@ -746,7 +744,7 @@ object Snapshots {
     val drop = vs.dropRight(retain)
     if (drop.nonEmpty) {
       writeManifest(spark, root, keep)
-      val f = fs(spark, root)
+      val f = fsOf(spark, root)
       // a version expired from MAIN may still be resolvable through a
       // live branch ref (a fork below the expiry horizon) — drop it
       // from main's history but keep its data until the branch retires

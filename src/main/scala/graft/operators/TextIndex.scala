@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftSession.fsOf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -249,9 +250,6 @@ object TextIndex {
     */
   def postingsDir(spark: SparkSession, path: String): String =
     postingsPath(path, readGens(spark, path).postings)
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Best-effort sweep of superseded generation dirs, keeping
     * `keepFloor` and everything newer (the previous generation stays

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.InFlight.{await, inFlight}
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{Aggregators, TextFunctions, VectorExpressions}
 import graft.operators.{Bpe, Dedup, HybridSearch, IndexEpoch, IvfIndex, Multimodal, SimilaritySearch, TextIndex}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -22,6 +22,36 @@ object LlmPipeline {
     s"(list_aggregate(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE)*CAST(x[2] AS DOUBLE)), 'sum')" +
       s" / (sqrt(list_aggregate(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), 'sum'))" +
       s" * sqrt(list_aggregate(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), 'sum'))))"
+
+  /** Brute-force exact top-`k` cosine neighbours per probe (the `p`
+    * rows `probes` keeps) among the `corpus` rows `c` that `filter`
+    * keeps, ties to the lower id — the replay of every exhaustive
+    * vector search. `extraCols` appends the engine-measured audit
+    * booleans.
+    */
+  private def duckTopK(extraCols: String = "", k: Int = 5,
+      probes: String = "p.vec_id < 10", corpus: String = "embeddings c",
+      filter: String = "c.vec_id <> p.vec_id"): String =
+    s"""SELECT probe_id, rank, neighbor_id, cos$extraCols FROM (
+       |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
+       |    ${duckCos("p.embedding", "c.embedding")} AS cos,
+       |    row_number() OVER (PARTITION BY p.vec_id
+       |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
+       |  FROM embeddings p, $corpus
+       |  WHERE $probes AND $filter)
+       |WHERE rank <= $k ORDER BY probe_id, rank""".stripMargin
+
+  /** Each probe's exact top-1 cosine with the approximate search's
+    * engine-measured `okCol` audit: an approximate search's neighbour
+    * ids are not contractual, its best score is.
+    */
+  private def duckTop1(okCol: String): String =
+    s"""SELECT p.vec_id AS probe_id,
+       |  max(${duckCos("p.embedding", "c.embedding")}) AS exact_top1_cos,
+       |  TRUE AS $okCol
+       |FROM embeddings p, embeddings c
+       |WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id
+       |GROUP BY p.vec_id ORDER BY probe_id""".stripMargin
 
   /** The bitext-mining oracle (q_sim_bitext_mining / q_sim_bitext_recall):
     * brute-force replay of the full margin pipeline over the planted
@@ -187,7 +217,7 @@ object LlmPipeline {
          |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin
 
   private val duckWordStream =
-    """unnest(list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0))"""
+    s"""unnest(${duckWords()})"""
 
   private def duckBpeCtes(m: Int, trainWhere: String = "true"): String = {
     val sb = new StringBuilder
@@ -195,8 +225,7 @@ object LlmPipeline {
       s"""WITH w0 AS (
         |  SELECT word, CAST(count(*) AS BIGINT) AS cnt,
         |    list_transform(range(1, len(word) + 1), i -> substr(word, i, 1)) AS syms
-        |  FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '${"\\W+"}'),
-        |                t -> len(t) > 0)) AS word FROM documents WHERE $trainWhere)
+        |  FROM (SELECT unnest(${duckWords()}) AS word FROM documents WHERE $trainWhere)
         |  GROUP BY word)""".stripMargin)
     for (k <- 1 to m) {
       val p = s"w${k - 1}"
@@ -271,8 +300,7 @@ object LlmPipeline {
     sb.append(
       s"""WITH tok AS (
         |  SELECT doc_id, $yExpr AS y,
-        |    unnest(list_filter(string_split_regex(lower(text), '${"\\W+"}'),
-        |      t -> len(t) > 0)) AS tok
+        |    unnest(${duckWords()}) AS tok
         |  FROM documents WHERE $trainWhere),""".stripMargin)
     sb.append(s"""
       |voc AS (SELECT tok, f FROM (
@@ -323,9 +351,129 @@ object LlmPipeline {
     sb.toString
   }
 
-  /** DuckDB twin of Dedup.tokens: lowercase, split \W+, drop empties. */
-  private val duckToks =
-    "list_distinct(list_filter(string_split_regex(lower(text), '\\W+'), x -> len(x) > 0))"
+  /** DuckDB twin of the engine's word split: lowercase, split \W+,
+    * drop empties — `Dedup.tokens` without its distinct. `v` names the
+    * lambda variable (the dedup oracles say `x`, the text oracles `t`).
+    */
+  private def duckWords(v: String = "t"): String =
+    s"list_filter(string_split_regex(lower(text), '\\W+'), $v -> len($v) > 0)"
+
+  /** One row per token `tok` (doc_id, w) of the documents in `from`,
+    * then per doc×term counts `tf` (doc_id, w, tf) for the terms
+    * `where` keeps.
+    */
+  private def duckTermTf(where: String = "w IN ('hash', 'merge', 'vector')",
+      from: String = "documents"): String =
+    s"""tok AS (
+       |  SELECT doc_id,
+       |    unnest(${duckWords()}) AS w
+       |  FROM $from),
+       |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
+       |       WHERE $where GROUP BY 1, 2)""".stripMargin
+
+  /** DuckDB twin of the whitespace word split (`TextFunctions`' word
+    * counts): split \s+, drop empties.
+    */
+  private def duckSpaceWords(v: String = "t"): String =
+    s"list_filter(string_split_regex(text, '\\s+'), $v -> len($v) > 0)"
+
+  /** DuckDB twin of Dedup.tokens: the word split, distinct. */
+  private val duckToks = s"list_distinct(${duckWords("x")})"
+
+  /** One row's BM25 term weight (k1 = 1.2, b = 0.75, the engine's
+    * scorer): `tf` rows carry (tf, dl), `df` rows df, `st` the corpus
+    * (n_docs, avgdl).
+    */
+  private def duckBm25(tf: String, df: String, st: String): String =
+    s"ln(($st.n_docs - $df.df + 0.5) / ($df.df + 0.5) + 1) * $tf.tf * 2.2 / ($tf.tf + 1.2 * (0.25 + 0.75 * $tf.dl / $st.avgdl))"
+
+  /** The corpus-side BM25 CTEs over the documents `where` keeps: token
+    * lists `d`, lengths `l`, corpus stats `st`, one row per token
+    * `tok`, per doc×term counts `tf` for the query `terms` (a SQL list
+    * body) and per-term document frequencies `df`.
+    */
+  private def duckBm25Ctes(st: String = "st", df: String = "dfs", tf: String = "tf",
+      where: String = "", terms: String = "'hash', 'merge', 'vector'"): String =
+    s"""d AS (
+       |  SELECT doc_id,
+       |    ${duckWords()} AS toks
+       |  FROM documents$where),
+       |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
+       |$st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
+       |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
+       |$tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
+       |       WHERE w IN ($terms) GROUP BY 1, 2, 3),
+       |$df AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM $tf GROUP BY w)""".stripMargin
+
+  /** The q_text_bm25 replay: top-20 docs by BM25 over hash/merge/vector
+    * on the documents `where` keeps, with `extraCols` appended.
+    */
+  private def duckBm25Top20(where: String = "", extraCols: String = ""): String =
+    s"""WITH ${duckBm25Ctes("s", "df", where = where)}
+       |SELECT tf.doc_id,
+       |  sum(${duckBm25("tf", "df", "s")}) AS score$extraCols
+       |FROM tf, df, s WHERE tf.w = df.w
+       |GROUP BY tf.doc_id
+       |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
+
+  /** The exact RRF replay up to the fused scores: corpus-side BM25
+    * ranks (top 50) plus brute-force cosine ranks (top 50) for probes
+    * 0..4, fused by the 1/(60+r) sum. DOUBLE casts force double
+    * division (a bare 1.0/bigint would type DECIMAL in DuckDB); ties
+    * break by doc id ascending in both rankers, exactly as the heap
+    * aggregator does. `docWhere`/`vecAnd` restrict the text and vector
+    * corpora (the as-of replays drop the pre-pin deletes).
+    */
+  private def duckRrfFused(docWhere: String = "", vecAnd: String = ""): String =
+    s"""WITH ${duckBm25Ctes(where = docWhere)},
+       |bm_scores AS (
+       |  SELECT tf.doc_id,
+       |    sum(${duckBm25("tf", "dfs", "st")}) AS score
+       |  FROM tf, dfs, st WHERE tf.w = dfs.w GROUP BY tf.doc_id),
+       |bm AS (SELECT doc_id, trank FROM (
+       |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS trank
+       |  FROM bm_scores) WHERE trank <= 50),
+       |vr AS (SELECT probe_id, neighbor_id, vrank FROM (
+       |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
+       |    row_number() OVER (PARTITION BY p.vec_id
+       |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS vrank
+       |  FROM embeddings p, embeddings c
+       |  WHERE p.vec_id < 5 AND c.vec_id <> p.vec_id$vecAnd) WHERE vrank <= 50),
+       |contrib AS (
+       |  SELECT probes.probe_id, bm.doc_id,
+       |    CAST(1 AS DOUBLE) / CAST(60 + bm.trank AS DOUBLE) AS c
+       |  FROM (SELECT vec_id AS probe_id FROM embeddings WHERE vec_id < 5) probes, bm
+       |  UNION ALL
+       |  SELECT probe_id, neighbor_id AS doc_id,
+       |    CAST(1 AS DOUBLE) / CAST(60 + vrank AS DOUBLE) AS c FROM vr),
+       |fused AS (SELECT probe_id, doc_id, sum(c) AS rrf FROM contrib GROUP BY 1, 2)""".stripMargin
+
+  /** q_hybrid_search_rrf's deliverable: the fused top-10 per probe. */
+  private def duckRrfTop10(docWhere: String = "", vecAnd: String = "",
+      extraCols: String = ""): String =
+    duckRrfFused(docWhere, vecAnd) +
+      s"""
+         |SELECT probe_id, rank, doc_id, rrf$extraCols FROM (
+         |  SELECT probe_id, doc_id, rrf,
+         |    row_number() OVER (PARTITION BY probe_id ORDER BY rrf DESC, doc_id) AS rank
+         |  FROM fused)
+         |WHERE rank <= 10 ORDER BY probe_id, rank""".stripMargin
+
+  /** q_sql_hybrid's deliverable: the SQL the engine composes on top of
+    * the hybrid TVF (rank ≤ 5, joined back to documents).
+    */
+  private def duckSqlHybrid(docWhere: String = "", vecAnd: String = ""): String =
+    duckRrfFused(docWhere, vecAnd) +
+      """,
+        |hybrid AS (
+        |  SELECT probe_id, rank, doc_id, rrf FROM (
+        |    SELECT probe_id, doc_id, rrf,
+        |      row_number() OVER (PARTITION BY probe_id ORDER BY rrf DESC, doc_id) AS rank
+        |    FROM fused))
+        |SELECT h.probe_id, h.rank, h.doc_id, h.rrf, dd.source
+        |FROM hybrid h JOIN documents dd ON h.doc_id = dd.doc_id
+        |WHERE h.rank <= 5
+        |ORDER BY h.probe_id, h.rank""".stripMargin
 
   /** One q_text_search_eval oracle row: BM25 top-10 (the
     * q_text_bm25_index formula verbatim), graded relevance = total
@@ -335,20 +483,9 @@ object LlmPipeline {
     */
   private def duckSearchEval(q: String): String = {
     val in = q.split(" ").map(t => s"'$t'").mkString(", ")
-    s"""(WITH d AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\W+'), t -> len(t) > 0) AS toks
-       |  FROM documents),
-       |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-       |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-       |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-       |tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-       |       WHERE w IN ($in) GROUP BY 1, 2, 3),
-       |dfs AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w),
+    s"""(WITH ${duckBm25Ctes(terms = in)},
        |scores AS (
-       |  SELECT tf.doc_id,
-       |    sum(ln((st.n_docs - dfs.df + 0.5) / (dfs.df + 0.5) + 1)
-       |        * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl))) AS score
+       |  SELECT tf.doc_id, sum(${duckBm25("tf", "dfs", "st")}) AS score
        |  FROM tf, dfs, st WHERE tf.w = dfs.w GROUP BY tf.doc_id),
        |bm AS (SELECT doc_id, r FROM (
        |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r
@@ -382,11 +519,11 @@ object LlmPipeline {
     * candidate — overlap is the join's group count.
     */
   private val gramIndexCte =
-    """g AS (
+    s"""g AS (
       |  SELECT doc_id,
       |    list_distinct([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS toks
       |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+      |          ${duckWords("x")} AS w
       |        FROM documents)),
       |e AS (SELECT doc_id, len(toks) AS sz, unnest(toks) AS gram FROM g),
       |jpairs AS (
@@ -395,6 +532,39 @@ object LlmPipeline {
       |      / (min(a.sz) + min(b.sz) - count(*)) AS jaccard
       |  FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
       |  GROUP BY 1, 2)""".stripMargin
+
+  /** hash ∧ merge ∧ vector: per-doc total tf with the doc's lang — the
+    * conjunctive search every index access path must reproduce.
+    */
+  private val duckConjunctiveSearch =
+    s"""WITH ${duckTermTf()}
+      |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS total_tf, d.lang
+      |FROM tf JOIN documents d ON tf.doc_id = d.doc_id
+      |GROUP BY tf.doc_id, d.lang
+      |HAVING count(*) = 3
+      |ORDER BY tf.doc_id""".stripMargin
+
+  /** Exact bigram-jaccard ≥ 0.8 pairs between train and bench (every
+    * 10th doc) sides, one row per contaminated (doc, bench doc).
+    */
+  private val duckFuzzyContamination =
+    s"""WITH $gramIndexCte
+       |SELECT CASE WHEN doc_a % 10 = 0 THEN doc_b ELSE doc_a END AS doc_id,
+       |  CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS bench_id,
+       |  jaccard
+       |FROM jpairs
+       |WHERE jaccard >= 0.8 AND ((doc_a % 10 = 0) <> (doc_b % 10 = 0))
+       |ORDER BY doc_id, bench_id""".stripMargin
+
+  /** The planted semantic-dedup audit (`Drills.plantedSemanticDedup`):
+    * exact corpus and planted counts, both gates true.
+    */
+  private val duckPlantedDedup =
+    """WITH base AS (SELECT count(*) AS n FROM embeddings),
+      |p AS (SELECT count(*) AS np FROM embeddings WHERE vec_id % 10 = 0)
+      |SELECT base.n + p.np AS n_corpus, p.np AS n_planted,
+      |  TRUE AS precision_ok, TRUE AS recall_ok
+      |FROM base, p""".stripMargin
 
   /** Bigram jaccard ≥ 0.8 pairs → reachability closure (connected
     * components). Used by q_dedup_clusters and q_dedup_corpus.
@@ -459,15 +629,12 @@ object LlmPipeline {
       // both pair sets feed multiple counts AND the output —
       // materialize each ONCE (the q_sim_recall_curve rule; a lazy
       // LSH frame would re-run the banded join per count)
-      val exactDir = Tables.scratch("dedup_recall_exact")
-      Dedup.prefixJaccardJoin(grams, "doc_id", "grams", threshold = 0.8)
-        .write.mode("overwrite").parquet(exactDir)
-      val exact = s.read.parquet(exactDir)
-      val lshDir = Tables.scratch("dedup_recall_lsh")
-      Dedup.minhashNearDups(docs, "doc_id", "text",
-          threshold = 0.8, shingleSize = 2).select("doc_a", "doc_b")
-        .write.mode("overwrite").parquet(lshDir)
-      val lsh = s.read.parquet(lshDir)
+      val exact = Drills.materialize(
+        Dedup.prefixJaccardJoin(grams, "doc_id", "grams", threshold = 0.8),
+        Tables.scratch("dedup_recall_exact"))
+      val lsh = Drills.materialize(Dedup.minhashNearDups(docs, "doc_id", "text",
+          threshold = 0.8, shingleSize = 2).select("doc_a", "doc_b"),
+        Tables.scratch("dedup_recall_lsh"))
       val nExact = exact.count()
       val nLsh = lsh.count()
       val nHit = lsh.join(exact.select("doc_a", "doc_b"),
@@ -597,32 +764,25 @@ object LlmPipeline {
       Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")
         .withColumn("ingest", lit(0L))
         .write.mode("overwrite").partitionBy("ingest").parquet(pairsPath)
-      val q = graft.streaming.StreamOps
+      val nBatches = Drills.drainBatches(graft.streaming.StreamOps
         .tableStreamPaced(s, dir, "documents", "doc_id", 3)
-        .filter(col("doc_id") % 5 === 0)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val seq = bid + 1
-          Dedup.signatureIndex(batch, "doc_id", "text", shingleSize = 2)
-            .withColumn("ingest", lit(seq))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest").parquet(idxPath)
-          val idx = s.read.parquet(idxPath)
-          Dedup.incrementalNearDups(
-              idx.filter(col("ingest") < seq).drop("ingest"),
-              idx.filter(col("ingest") === seq).drop("ingest"),
-              threshold = 0.8)
-            .withColumn("ingest", lit(seq))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest").parquet(pairsPath)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0)
+        .filter(col("doc_id") % 5 === 0)) { (batch, bid) =>
+        val seq = bid + 1
+        Dedup.signatureIndex(batch, "doc_id", "text", shingleSize = 2)
+          .withColumn("ingest", lit(seq))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ingest").parquet(idxPath)
+        val idx = s.read.parquet(idxPath)
+        Dedup.incrementalNearDups(
+            idx.filter(col("ingest") < seq).drop("ingest"),
+            idx.filter(col("ingest") === seq).drop("ingest"),
+            threshold = 0.8)
+          .withColumn("ingest", lit(seq))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ingest").parquet(pairsPath)
+      }
       s.read.parquet(pairsPath)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
         .withColumn("multi_batch", lit(nBatches >= 3))
@@ -647,9 +807,7 @@ object LlmPipeline {
       val emb = t(s, dir, "embeddings")
       val tests = emb.filter(col("vec_id") % 20 === 0)
         .select((col("vec_id") / 20).cast("long").as("test_id"),
-          transform(col("embedding"), (x, j) =>
-            (x + ((col("vec_id") * 31 + j * 7) % 1000 - 500).cast("double")
-              / 100000.0d).cast("float")).as("test_vec"))
+          Drills.jitter(col("embedding")).as("test_vec"))
         .localCheckpoint() // fixed benchmark — never re-derived per batch
       val quarantine = Tables.scratch("stream_decon_quarantine")
       val admitted = Tables.scratch("stream_decon_admitted")
@@ -664,27 +822,20 @@ object LlmPipeline {
         .write.mode("overwrite").partitionBy("ingest").parquet(quarantine)
       Seq.empty[Long].toDF("vec_id").withColumn("ingest", lit(-1L))
         .write.mode("overwrite").partitionBy("ingest").parquet(admitted)
-      val q = graft.streaming.StreamOps
-        .tableStreamPaced(s, dir, "embeddings", "vec_id", 3)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val flagged = Dedup.semanticDecontaminate(batch, "vec_id", "embedding",
-            tests, "test_id", "test_vec", threshold = 0.95).localCheckpoint()
-          flagged.withColumn("ingest", lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest").parquet(quarantine)
-          batch.join(flagged.select("vec_id"), Seq("vec_id"), "left_anti")
-            .select("vec_id").withColumn("ingest", lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest").parquet(admitted)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0)
+      val nBatches = Drills.drainBatches(graft.streaming.StreamOps
+        .tableStreamPaced(s, dir, "embeddings", "vec_id", 3)) { (batch, bid) =>
+        val flagged = Dedup.semanticDecontaminate(batch, "vec_id", "embedding",
+          tests, "test_id", "test_vec", threshold = 0.95).localCheckpoint()
+        flagged.withColumn("ingest", lit(bid))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ingest").parquet(quarantine)
+        batch.join(flagged.select("vec_id"), Seq("vec_id"), "left_anti")
+          .select("vec_id").withColumn("ingest", lit(bid))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ingest").parquet(admitted)
+      }
       val nFlagged = s.read.schema(qSchema).parquet(quarantine).count()
       val nAdmitted = s.read.schema(aSchema).parquet(admitted).count()
       val conserved = nFlagged + nAdmitted == emb.count()
@@ -730,28 +881,21 @@ object LlmPipeline {
       Seq.empty[(Long, Double)].toDF("doc_id", "logit")
         .withColumn("ingest", lit(-1L))
         .write.mode("overwrite").partitionBy("ingest").parquet(quarLog)
-      val q = graft.streaming.StreamOps
-        .tableStreamPaced(s, dir, "documents", "doc_id", 3)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val scored = graft.operators.TextClassifier
-            .scoreWith(s, model, batch, "doc_id", "text").localCheckpoint()
-          scored.filter(col("keep")).select("doc_id", "logit")
-            .withColumn("ingest", lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest").parquet(keepLog)
-          scored.filter(!col("keep")).select("doc_id", "logit")
-            .withColumn("ingest", lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest").parquet(quarLog)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0)
+      val nBatches = Drills.drainBatches(graft.streaming.StreamOps
+        .tableStreamPaced(s, dir, "documents", "doc_id", 3)) { (batch, bid) =>
+        val scored = graft.operators.TextClassifier
+          .scoreWith(s, model, batch, "doc_id", "text").localCheckpoint()
+        scored.filter(col("keep")).select("doc_id", "logit")
+          .withColumn("ingest", lit(bid))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ingest").parquet(keepLog)
+        scored.filter(!col("keep")).select("doc_id", "logit")
+          .withColumn("ingest", lit(bid))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ingest").parquet(quarLog)
+      }
       val kept = s.read.schema(logSchema).parquet(keepLog)
       val quar = s.read.schema(logSchema).parquet(quarLog)
       val conserved = kept.count() + quar.count() == docs.count()
@@ -970,16 +1114,7 @@ object LlmPipeline {
       val tidx = Tables.scratch("hybrid_sqlasof_tidx")
       val vidx = Tables.scratch("hybrid_sqlasof_vidx")
       val probes = Tables.scratch("hybrid_sqlasof_probes")
-      val root = Tables.scratch("hybrid_sqlasof_root")
-      // fresh epoch root per run: scratch paths are per-JVM-stable, so
-      // a prior run of this query in the SAME JVM (bench warm-up pass,
-      // min-of-2 retime) leaves live epochs pinning files the rebuilt
-      // indexes no longer hold — the maintenance verbs would then
-      // over-retain against a dead incarnation's pins (and the drill
-      // would no longer measure a single-epoch stack)
-      val __rootP = new org.apache.hadoop.fs.Path(root)
-      __rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(__rootP, true): Unit
+      val root = Drills.freshEpochRoot(s, "hybrid_sqlasof_root")
       TextIndex.buildIndex(docs, "doc_id", "text", tidx)
       IvfIndex.buildIndex(emb, "vec_id", "embedding",
         nCentroids = 16, path = vidx)
@@ -1196,9 +1331,9 @@ object LlmPipeline {
       TextIndex.appendDocs(docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", idx)
       TextIndex.appendDocs(docs.filter(col("doc_id") % 3 === 2), "doc_id", "text", idx)
       def postingFiles(): Int = {
-        val pdir = new org.apache.hadoop.fs.Path(TextIndex.postingsDir(s, idx))
-        val fs = pdir.getFileSystem(s.sessionState.newHadoopConf())
-        fs.listStatus(pdir).filter(_.isDirectory).map(d =>
+        val pdir = TextIndex.postingsDir(s, idx)
+        val fs = GraftSession.fsOf(s, pdir)
+        fs.listStatus(new org.apache.hadoop.fs.Path(pdir)).filter(_.isDirectory).map(d =>
           fs.listStatus(d.getPath).count(_.getPath.getName.endsWith(".parquet"))).sum
       }
       val terms = Seq("hash", "merge", "vector")
@@ -1207,16 +1342,13 @@ object LlmPipeline {
       // resolves post-compaction too (the superseded generation
       // survives as the in-flight readers' spare), which the
       // TextIndexSpec pinned-reader test exercises directly
-      val beforeDir = Tables.scratch("text_index_compact_before")
-      TextIndex.searchAll(s, idx, terms).write.mode("overwrite").parquet(beforeDir)
+      val before = Drills.materialize(TextIndex.searchAll(s, idx, terms),
+        Tables.scratch("text_index_compact_before"))
       TextIndex.compactIndex(s, idx)
       val nAfter = postingFiles()
-      val afterDir = Tables.scratch("text_index_compact_after")
-      TextIndex.searchAll(s, idx, terms).write.mode("overwrite").parquet(afterDir)
-      val before = s.read.parquet(beforeDir)
-      val after = s.read.parquet(afterDir)
-      val identical = before.exceptAll(after).isEmpty &&
-        after.exceptAll(before).isEmpty
+      val after = Drills.materialize(TextIndex.searchAll(s, idx, terms),
+        Tables.scratch("text_index_compact_after"))
+      val identical = Drills.sameRows(before, after)
       after
         .join(t(s, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
         .orderBy("doc_id")
@@ -1242,8 +1374,8 @@ object LlmPipeline {
       val terms = Seq("hash", "merge", "vector")
       // materialize the tombstone-masked answer BEFORE compaction (the
       // compaction retires the tombstone sidecar its plan reads)
-      val preDir = Tables.scratch("text_index_delete_pre")
-      TextIndex.searchAll(s, idx, terms).write.mode("overwrite").parquet(preDir)
+      val pre = Drills.materialize(TextIndex.searchAll(s, idx, terms),
+        Tables.scratch("text_index_delete_pre"))
       TextIndex.compactIndex(s, idx)
       // raw physical-residue read, with the one audited column DECLARED
       // (an empty corpus leaves the postings generation file-less —
@@ -1253,11 +1385,9 @@ object LlmPipeline {
         .filter(col("doc_id") % 7 === 0).count() == 0
       // materialize the post-compaction answer ONCE — it feeds both
       // exceptAll directions and the final output
-      val postDir = Tables.scratch("text_index_delete_post")
-      TextIndex.searchAll(s, idx, terms).write.mode("overwrite").parquet(postDir)
-      val post = s.read.parquet(postDir)
-      val pre = s.read.parquet(preDir)
-      val identical = pre.exceptAll(post).isEmpty && post.exceptAll(pre).isEmpty
+      val post = Drills.materialize(TextIndex.searchAll(s, idx, terms),
+        Tables.scratch("text_index_delete_post"))
+      val identical = Drills.sameRows(pre, post)
       post.join(docs.select(col("doc_id"), col("lang")), "doc_id")
         .orderBy("doc_id")
         .select(col("doc_id"), col("total_tf"), col("lang"),
@@ -1464,16 +1594,7 @@ object LlmPipeline {
         .localCheckpoint()
       val tidx = Tables.scratch("epoch_ret_tidx")
       val vidx = Tables.scratch("epoch_ret_vidx")
-      val root = Tables.scratch("epoch_ret_root")
-      // fresh epoch root per run: scratch paths are per-JVM-stable, so
-      // a prior run of this query in the SAME JVM (bench warm-up pass,
-      // min-of-2 retime) leaves live epochs pinning files the rebuilt
-      // indexes no longer hold — the maintenance verbs would then
-      // over-retain against a dead incarnation's pins (and the drill
-      // would no longer measure a single-epoch stack)
-      val __rootP = new org.apache.hadoop.fs.Path(root)
-      __rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(__rootP, true): Unit
+      val root = Drills.freshEpochRoot(s, "epoch_ret_root")
       val tChain = inFlight {
         TextIndex.buildIndex(corpus, "doc_id", "text", tidx) }
       val vChain = inFlight {
@@ -1527,8 +1648,7 @@ object LlmPipeline {
         IvfIndex.compactLists(s, vidx, "doc_id")
         val reclaimed = s.read.parquet(s"$vidx/assigned")
           .filter(col("doc_id") % 13 === 0).isEmpty &&
-          !new org.apache.hadoop.fs.Path(vidx)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
+          !GraftSession.fsOf(s, vidx)
             .exists(new org.apache.hadoop.fs.Path(s"$vidx/tombstones"))
         // deliverable: the pinned text search — the pin-time state,
         // recomputable corpus-side by the oracle
@@ -1554,16 +1674,7 @@ object LlmPipeline {
     "q_text_bm25_asof" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val tidx = Tables.scratch("bm25_asof_tidx")
-      val root = Tables.scratch("bm25_asof_root")
-      // fresh epoch root per run: scratch paths are per-JVM-stable, so
-      // a prior run of this query in the SAME JVM (bench warm-up pass,
-      // min-of-2 retime) leaves live epochs pinning files the rebuilt
-      // indexes no longer hold — the maintenance verbs would then
-      // over-retain against a dead incarnation's pins (and the drill
-      // would no longer measure a single-epoch stack)
-      val __rootP = new org.apache.hadoop.fs.Path(root)
-      __rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(__rootP, true): Unit
+      val root = Drills.freshEpochRoot(s, "bm25_asof_root")
       val terms = Seq("hash", "merge", "vector")
       TextIndex.buildIndex(docs, "doc_id", "text", tidx)
       // pre-pin delete: the pinned corpus is documents minus %17==3,
@@ -1588,9 +1699,7 @@ object LlmPipeline {
         // probe and the deliverable — materialize it ONCE (the
         // q_text_index_compact rule; a second bm25AsOf run re-prices
         // the whole pruned-postings + df + heap-cut plan)
-        val afterDir = Tables.scratch("bm25_asof_after")
-        ranked().write.mode("overwrite").parquet(afterDir)
-        val afterDf = s.read.parquet(afterDir)
+        val afterDf = Drills.materialize(ranked(), Tables.scratch("bm25_asof_after"))
         // re-apply bm25AsOf's emit order: parquet read-back order is
         // not contractual, and the stability capture compares sequences
         val after = afterDf.orderBy(col("score").desc, col("doc_id").asc)
@@ -1620,16 +1729,7 @@ object LlmPipeline {
       val emb = t(s, dir, "embeddings")
       val tidx = Tables.scratch("hybrid_asof_tidx")
       val vidx = Tables.scratch("hybrid_asof_vidx")
-      val root = Tables.scratch("hybrid_asof_root")
-      // fresh epoch root per run: scratch paths are per-JVM-stable, so
-      // a prior run of this query in the SAME JVM (bench warm-up pass,
-      // min-of-2 retime) leaves live epochs pinning files the rebuilt
-      // indexes no longer hold — the maintenance verbs would then
-      // over-retain against a dead incarnation's pins (and the drill
-      // would no longer measure a single-epoch stack)
-      val __rootP = new org.apache.hadoop.fs.Path(root)
-      __rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(__rootP, true): Unit
+      val root = Drills.freshEpochRoot(s, "hybrid_asof_root")
       val terms = Seq("hash", "merge", "vector")
       val probes = emb.filter(col("vec_id") < 5).localCheckpoint()
       val tChain = inFlight {
@@ -1684,9 +1784,7 @@ object LlmPipeline {
         // probe and the deliverable — materialize it ONCE (the
         // q_text_index_compact rule; a third rrfTopKAsOf run re-prices
         // both pinned legs and the fusion)
-        val afterDir = Tables.scratch("hybrid_asof_after")
-        fused().write.mode("overwrite").parquet(afterDir)
-        val afterDf = s.read.parquet(afterDir)
+        val afterDf = Drills.materialize(fused(), Tables.scratch("hybrid_asof_after"))
         // re-apply fused()'s emit order: parquet read-back order is
         // not contractual, and the stability capture compares sequences
         val after = afterDf.orderBy("probe_id", "rank").collect().map(r =>
@@ -2579,37 +2677,9 @@ object LlmPipeline {
     // (catches a dedup that removes without a valid partner), recall_ok
     // requires ≥ 90% of planted clones removed (boundary-split clusters
     // are the method's only recall loss).
-    "q_dedup_semantic" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // coalesce: max() is NULL on an empty corpus (the B.9 empty-net rule)
-      val maxId = emb.agg(coalesce(max("vec_id"), lit(-1L))).head.getLong(0) + 1
-      val planted = emb.filter(col("vec_id") % 10 === 0)
-        .withColumn("vec_id", col("vec_id") + maxId)
-        .withColumn("embedding", transform(col("embedding"), (x, j) =>
-          (x + (pmod(hash(col("vec_id"), j), lit(1000)) - 500)
-            .cast("double") / 100000.0d).cast("float")))
-      val corpus = emb.unionByName(planted).localCheckpoint()
-      val removed = Dedup.semanticDedup(corpus, "vec_id", "embedding",
-        threshold = 0.99, nClusters = 16).localCheckpoint()
-      val byA = corpus.select(col("vec_id").as("rid"), col("embedding").as("rv"))
-      val byB = corpus.select(col("vec_id").as("did"), col("embedding").as("dv"))
-      val recheck = removed
-        .join(byA, col("vec_id") === col("rid"))
-        .join(byB, col("dup_of") === col("did"))
-        .select((VectorExpressions.cosine_sim(col("rv"), col("dv")) >= 0.99 &&
-          col("dup_of") < col("vec_id")).as("ok"), col("vec_id").as("remid"))
-      val nPlanted = planted.count()
-      val nRemovedPlanted = removed.filter(col("vec_id") >= maxId).count()
-      recheck.agg(
-          count(lit(1)).as("n_removed_rechecked"),
-          coalesce(min(when(col("ok"), 1L).otherwise(0L)), lit(1L)).as("all_ok"))
-        .select(
-          (lit(nPlanted) + emb.count()).as("n_corpus"),
-          lit(nPlanted).as("n_planted"),
-          (col("all_ok") === 1L &&
-            col("n_removed_rechecked") === lit(removed.count())).as("precision_ok"),
-          (lit(nRemovedPlanted) >= lit(math.ceil(nPlanted * 0.9).toLong)).as("recall_ok"))
-    }),
+    "q_dedup_semantic" -> ((s, dir) =>
+      Drills.plantedSemanticDedup(t(s, dir, "embeddings"), Dedup.semanticDedup(_,
+        "vec_id", "embedding", threshold = 0.99, nClusters = 16))),
 
     // PCA-CONDITIONED semantic dedup — q_dedup_semantic's planted
     // fixture through Dedup.semanticDedupPca: the k-means quantizer
@@ -2621,36 +2691,9 @@ object LlmPipeline {
     // planted clones must still clear 90% (the paired BENCH row
     // measures what the conditioning costs/saves vs the raw-space
     // form).
-    "q_dedup_semantic_pca" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val maxId = emb.agg(coalesce(max("vec_id"), lit(-1L))).head.getLong(0) + 1
-      val planted = emb.filter(col("vec_id") % 10 === 0)
-        .withColumn("vec_id", col("vec_id") + maxId)
-        .withColumn("embedding", transform(col("embedding"), (x, j) =>
-          (x + (pmod(hash(col("vec_id"), j), lit(1000)) - 500)
-            .cast("double") / 100000.0d).cast("float")))
-      val corpus = emb.unionByName(planted).localCheckpoint()
-      val removed = Dedup.semanticDedupPca(corpus, "vec_id", "embedding",
-        threshold = 0.99, nClusters = 16, pcaK = 8).localCheckpoint()
-      val byA = corpus.select(col("vec_id").as("rid"), col("embedding").as("rv"))
-      val byB = corpus.select(col("vec_id").as("did"), col("embedding").as("dv"))
-      val recheck = removed
-        .join(byA, col("vec_id") === col("rid"))
-        .join(byB, col("dup_of") === col("did"))
-        .select((VectorExpressions.cosine_sim(col("rv"), col("dv")) >= 0.99 &&
-          col("dup_of") < col("vec_id")).as("ok"), col("vec_id").as("remid"))
-      val nPlanted = planted.count()
-      val nRemovedPlanted = removed.filter(col("vec_id") >= maxId).count()
-      recheck.agg(
-          count(lit(1)).as("n_removed_rechecked"),
-          coalesce(min(when(col("ok"), 1L).otherwise(0L)), lit(1L)).as("all_ok"))
-        .select(
-          (lit(nPlanted) + emb.count()).as("n_corpus"),
-          lit(nPlanted).as("n_planted"),
-          (col("all_ok") === 1L &&
-            col("n_removed_rechecked") === lit(removed.count())).as("precision_ok"),
-          (lit(nRemovedPlanted) >= lit(math.ceil(nPlanted * 0.9).toLong)).as("recall_ok"))
-    }),
+    "q_dedup_semantic_pca" -> ((s, dir) =>
+      Drills.plantedSemanticDedup(t(s, dir, "embeddings"), Dedup.semanticDedupPca(_,
+        "vec_id", "embedding", threshold = 0.99, nClusters = 16, pcaK = 8))),
 
     // Edit-distance-VERIFIED near-dup pairs: gram-jaccard candidates
     // from the exact prefix-filtering join, then character-level
@@ -2904,9 +2947,7 @@ object LlmPipeline {
       // jitter BEFORE the re-id: lateral column alias resolution would
       // otherwise bind the lambda's vec_id to the just-aliased new id
       val planted = emb.filter(col("vec_id") % 10 === 0)
-        .withColumn("embedding", transform(col("embedding"), (x, j) =>
-          (x + ((col("vec_id") * 31 + j * 7) % 1000 - 500).cast("double")
-            / 100000.0d).cast("float")))
+        .withColumn("embedding", Drills.jitter(col("embedding")))
         .select((col("vec_id") + maxId).as("vec_id"), col("embedding"))
       val tgt = emb.filter(col("vec_id") % 2 === 1)
         .select("vec_id", "embedding").unionByName(planted)
@@ -2949,9 +2990,7 @@ object LlmPipeline {
       val maxId = emb.agg(coalesce(max("vec_id"), lit(-1L))).head.getLong(0) + 1
       val src = emb.filter(col("vec_id") % 2 === 0)
       val planted = emb.filter(col("vec_id") % 10 === 0)
-        .withColumn("embedding", transform(col("embedding"), (x, j) =>
-          (x + ((col("vec_id") * 31 + j * 7) % 1000 - 500).cast("double")
-            / 100000.0d).cast("float")))
+        .withColumn("embedding", Drills.jitter(col("embedding")))
         .select((col("vec_id") + maxId).as("vec_id"), col("embedding"))
       val tgt = emb.filter(col("vec_id") % 2 === 1)
         .select("vec_id", "embedding").unionByName(planted)
@@ -2972,9 +3011,7 @@ object LlmPipeline {
           col("tgt_id") === col("src_id") + maxId).count()
       // exhaustive mined set is BOTH the deliverable and the ground
       // truth — materialize once
-      val exhDir = Tables.scratch("bitext_recall_exh")
-      minedAt(8).write.mode("overwrite").parquet(exhDir)
-      val exh = s.read.parquet(exhDir)
+      val exh = Drills.materialize(minedAt(8), Tables.scratch("bitext_recall_exh"))
       val found1 = plantedFound(minedAt(1))
       val found8 = plantedFound(exh)
       exh
@@ -3015,19 +3052,7 @@ object LlmPipeline {
         emb, probes, "vec_id", "embedding", k = 5, nBits = 5, nTables = 12)
       val exact = SimilaritySearch.bruteForceTopK(
         emb, probes, "vec_id", "embedding", k = 5)
-      val gaps = ann.join(
-          exact.select(col("probe_id"), col("rank"), col("cos").as("exact_cos")),
-          Seq("probe_id", "rank"))
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_ret"),
-          max(col("exact_cos") - col("cos")).as("max_gap"))
-      exact.filter(col("rank") === 1)
-        .select(col("probe_id"), col("cos").as("exact_top1_cos"))
-        .join(gaps, Seq("probe_id"), "left_outer")
-        .select(col("probe_id"), col("exact_top1_cos"),
-          (coalesce(col("n_ret"), lit(0L)) === 5 &&
-            coalesce(col("max_gap"), lit(1.0)) <= lit(0.12)).as("ann_ok"))
-        .orderBy("probe_id")
+      Drills.top5GapAudit(ann, exact, 0.12, "ann_ok")
     }),
 
     // Multi-probe ANN (Lv '07): HALF the hash tables of q_sim_ann, with
@@ -3044,19 +3069,7 @@ object LlmPipeline {
         emb, probes, "vec_id", "embedding", k = 5, nBits = 5, nTables = 6, nFlips = 2)
       val exact = SimilaritySearch.bruteForceTopK(
         emb, probes, "vec_id", "embedding", k = 5)
-      val gaps = ann.join(
-          exact.select(col("probe_id"), col("rank"), col("cos").as("exact_cos")),
-          Seq("probe_id", "rank"))
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_ret"),
-          max(col("exact_cos") - col("cos")).as("max_gap"))
-      exact.filter(col("rank") === 1)
-        .select(col("probe_id"), col("cos").as("exact_top1_cos"))
-        .join(gaps, Seq("probe_id"), "left_outer")
-        .select(col("probe_id"), col("exact_top1_cos"),
-          (coalesce(col("n_ret"), lit(0L)) === 5 &&
-            coalesce(col("max_gap"), lit(1.0)) <= lit(0.12)).as("ann_ok"))
-        .orderBy("probe_id")
+      Drills.top5GapAudit(ann, exact, 0.12, "ann_ok")
     }),
 
     // IVF ANN: k-means coarse quantizer fitted ONCE and persisted as
@@ -3075,19 +3088,7 @@ object LlmPipeline {
         "vec_id", "embedding", k = 5, nProbes = 8)
       val exact = SimilaritySearch.bruteForceTopK(
         emb, probes, "vec_id", "embedding", k = 5)
-      val gaps = ivf.join(
-          exact.select(col("probe_id"), col("rank"), col("cos").as("exact_cos")),
-          Seq("probe_id", "rank"))
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_ret"),
-          max(col("exact_cos") - col("cos")).as("max_gap"))
-      exact.filter(col("rank") === 1)
-        .select(col("probe_id"), col("cos").as("exact_top1_cos"))
-        .join(gaps, Seq("probe_id"), "left_outer")
-        .select(col("probe_id"), col("exact_top1_cos"),
-          (coalesce(col("n_ret"), lit(0L)) === 5 &&
-            coalesce(col("max_gap"), lit(1.0)) <= lit(0.1)).as("ivf_ok"))
-        .orderBy("probe_id")
+      Drills.top5GapAudit(ivf, exact, 0.1, "ivf_ok")
     }),
 
     // Incremental IVF maintenance: fit centroids on HALF the corpus,
@@ -3131,19 +3132,7 @@ object LlmPipeline {
         "vec_id", "embedding", k = 5, nProbes = 8, nCandidates = 50)
       val exact = SimilaritySearch.bruteForceTopK(
         emb, probes, "vec_id", "embedding", k = 5)
-      val gaps = pq.join(
-          exact.select(col("probe_id"), col("rank"), col("cos").as("exact_cos")),
-          Seq("probe_id", "rank"))
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_ret"),
-          max(col("exact_cos") - col("cos")).as("max_gap"))
-      exact.filter(col("rank") === 1)
-        .select(col("probe_id"), col("cos").as("exact_top1_cos"))
-        .join(gaps, Seq("probe_id"), "left_outer")
-        .select(col("probe_id"), col("exact_top1_cos"),
-          (coalesce(col("n_ret"), lit(0L)) === 5 &&
-            coalesce(col("max_gap"), lit(1.0)) <= lit(0.1)).as("pq_ok"))
-        .orderBy("probe_id")
+      Drills.top5GapAudit(pq, exact, 0.1, "pq_ok")
     }),
 
     // FILTERED vector search (the "where label = X" ANN every vector
@@ -3216,18 +3205,11 @@ object LlmPipeline {
       val idx = graft.Tables.scratch("stream_ivf_index")
       IvfIndex.buildIndex(emb.filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", nCentroids = 8, path = idx)
-      val q = graft.streaming.StreamOps
+      val nBatches = Drills.drainBatches(graft.streaming.StreamOps
         .tableStreamPaced(s, dir, "embeddings", "vec_id", 3)
-        .filter(col("vec_id") % 2 === 1)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          IvfIndex.appendToIndex(batch, "vec_id", "embedding", idx)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0)
+        .filter(col("vec_id") % 2 === 1)) { (batch, _) =>
+        IvfIndex.appendToIndex(batch, "vec_id", "embedding", idx)
+      }
       val (assigned, centroids) = IvfIndex.loadIndex(s, idx)
       IvfIndex.searchTopK(assigned, centroids, emb.filter(col("vec_id") < 10),
           "vec_id", "embedding", k = 5, nProbes = 8)
@@ -3333,10 +3315,9 @@ object LlmPipeline {
       // the exact answer feeds four recall joins AND the output —
       // materialize once (tmp-parquet over cache: the array column
       // re-read is cheaper than the storage-block copy)
-      val exactDir = Tables.scratch("ivf_recall_exact")
-      SimilaritySearch.bruteForceTopK(emb, probes, "vec_id", "embedding", k = 5)
-        .write.mode("overwrite").parquet(exactDir)
-      val exact = s.read.parquet(exactDir)
+      val exact = Drills.materialize(
+        SimilaritySearch.bruteForceTopK(emb, probes, "vec_id", "embedding", k = 5),
+        Tables.scratch("ivf_recall_exact"))
       val exactIds = exact.select("probe_id", "neighbor_id")
       val nExact = exactIds.count()
       val hitsAt = Seq(1, 2, 4, 8).map { p =>
@@ -3389,18 +3370,12 @@ object LlmPipeline {
           true
         } else false
       }
-      val q = graft.streaming.StreamOps
+      Drills.drainBatches(graft.streaming.StreamOps
         .tableStreamPaced(s, dir, "embeddings", "vec_id", 3)
-        .filter(col("vec_id") % 2 === 1)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          IvfIndex.appendToIndex(batch, "vec_id", "embedding", idx)
-          pollAndRepair() // the cadence poll, at every batch boundary
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .filter(col("vec_id") % 2 === 1)) { (batch, _) =>
+        IvfIndex.appendToIndex(batch, "vec_id", "embedding", idx)
+        pollAndRepair() // the cadence poll, at every batch boundary
+      }
       // drain: repair until the advisory reads clean (strictly
       // shrinking max list ⇒ terminates; the bound is a safety net)
       var drains = 0
@@ -3439,16 +3414,12 @@ object LlmPipeline {
         IvfIndex.searchTopK(a, c, probes, "vec_id", "embedding",
           k = 5, nProbes = 8)
       }
-      val preDir = graft.Tables.scratch("ivf_del_pre")
-      searchLive().write.mode("overwrite").parquet(preDir)
+      val pre = Drills.materialize(searchLive(), Tables.scratch("ivf_del_pre"))
       IvfIndex.compactLists(s, idx, "vec_id")
       val purged = IvfIndex.loadIndex(s, idx)._1
         .filter(col("vec_id") % 7 === 0).count() == 0
-      val postDir = graft.Tables.scratch("ivf_del_post")
-      searchLive().write.mode("overwrite").parquet(postDir)
-      val pre = s.read.parquet(preDir)
-      val post = s.read.parquet(postDir)
-      val identical = pre.exceptAll(post).isEmpty && post.exceptAll(pre).isEmpty
+      val post = Drills.materialize(searchLive(), Tables.scratch("ivf_del_post"))
+      val identical = Drills.sameRows(pre, post)
       post
         .withColumn("purged", lit(purged))
         .withColumn("compact_identical", lit(identical))
@@ -3563,9 +3534,7 @@ object LlmPipeline {
       val emb = t(s, dir, "embeddings")
       val maxId = emb.agg(coalesce(max("vec_id"), lit(-1L))).head.getLong(0) + 1
       val planted = emb.filter(col("vec_id") % 15 === 0)
-        .withColumn("embedding", transform(col("embedding"), (x, j) =>
-          (x + ((col("vec_id") * 31 + j * 7) % 1000 - 500).cast("double")
-            / 100000.0d).cast("float")))
+        .withColumn("embedding", Drills.jitter(col("embedding")))
         .select((col("vec_id") + maxId).as("vec_id"), col("embedding"))
       val corpus = emb.select("vec_id", "embedding").unionByName(planted)
       graft.operators.Embeddings.exactNearDupsBlocked(
@@ -3592,21 +3561,14 @@ object LlmPipeline {
       val logSchema = "g array<bigint>, ingest long"
       Seq.empty[Array[Long]].toDF("g").withColumn("ingest", lit(-1L))
         .write.mode("overwrite").partitionBy("ingest").parquet(log)
-      val q = graft.streaming.StreamOps
-        .tableStreamPaced(s, dir, "embeddings", "vec_id", 3)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val g = graft.operators.Embeddings.moments(batch, "vec_id", "embedding")
-          Seq(g).toDF("g").withColumn("ingest", lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest").parquet(log)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0)
+      val nBatches = Drills.drainBatches(graft.streaming.StreamOps
+        .tableStreamPaced(s, dir, "embeddings", "vec_id", 3)) { (batch, bid) =>
+        val g = graft.operators.Embeddings.moments(batch, "vec_id", "embedding")
+        Seq(g).toDF("g").withColumn("ingest", lit(bid))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ingest").parquet(log)
+      }
       val folded = s.read.schema(logSchema).parquet(log).select("g").collect()
         .map(_.getAs[Seq[Long]]("g").toArray)
         .foldLeft(Array.empty[Long])(graft.operators.Embeddings.mergeMoments)
@@ -3933,11 +3895,10 @@ object LlmPipeline {
           (coalesce(col("total_chars"), lit(0L)) + coalesce(col("d_chars"), lit(0L))).as("total_chars"))
         .filter(col("n_docs") > 0)
         .write.mode("overwrite").parquet(view2)
-      val fullDir = Tables.scratch("card_incr_full")
-      card(Snapshots.read(s, root)).write.mode("overwrite").parquet(fullDir)
+      val full = Drills.materialize(card(Snapshots.read(s, root)),
+        Tables.scratch("card_incr_full"))
       val incr = s.read.parquet(view2)
-      val full = s.read.parquet(fullDir)
-      val ivmOk = incr.exceptAll(full).isEmpty && full.exceptAll(incr).isEmpty
+      val ivmOk = Drills.sameRows(incr, full)
       incr
         .withColumn("avg_words",
           col("total_words").cast("double") / col("n_docs"))
@@ -4247,9 +4208,7 @@ object LlmPipeline {
       val emb = t(s, dir, "embeddings")
       val tests = emb.filter(col("vec_id") % 20 === 0)
         .select((col("vec_id") / 20).cast("long").as("test_id"),
-          transform(col("embedding"), (x, j) =>
-            (x + ((col("vec_id") * 31 + j * 7) % 1000 - 500).cast("double")
-              / 100000.0d).cast("float")).as("test_vec"))
+          Drills.jitter(col("embedding")).as("test_vec"))
       Dedup.semanticDecontaminate(emb, "vec_id", "embedding",
           tests, "test_id", "test_vec", threshold = 0.95)
         .orderBy("vec_id")
@@ -4307,9 +4266,9 @@ object LlmPipeline {
         .orderBy("doc_id")
     }),
 
-    // SQL surface of the custom expressions (registered functions).
+    // SQL surface of the custom expressions (GraftExtensions injects
+    // them into every graft session).
     "q_sql_cosine" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.registerAll(s, dir)
       s.sql(
         """SELECT a.vec_id AS vid, cosine_sim(a.embedding, b.embedding) AS cos
@@ -4408,10 +4367,9 @@ object LlmPipeline {
     // takes ALL pairs at hamming ≤ 3 — the banded Spark plan must agree
     // exactly because 4-chunk pigeonhole banding is complete at ≤3.
     "q_dedup_simhash" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       x -> len(x) > 0)) AS tok
+        |    unnest(${duckWords("x")}) AS tok
         |  FROM documents),
         |th AS (
         |  SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS h
@@ -4497,33 +4455,21 @@ object LlmPipeline {
         |ORDER BY d.doc_id""".stripMargin),
 
     "q_text_search_any" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM documents),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2)
+      s"""WITH ${duckTermTf()}
         |SELECT doc_id, count(*) AS n_terms, CAST(sum(tf) AS BIGINT) AS total_tf
         |FROM tf GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "q_text_wildcard_index" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM documents),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w LIKE 'me%' GROUP BY 1, 2)
+      s"""WITH ${duckTermTf("w LIKE 'me%'")}
         |SELECT doc_id, count(*) AS n_terms, CAST(sum(tf) AS BIGINT) AS total_tf
         |FROM tf GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     // 1-based positions here vs 0-based in the index — only the
     // DIFFERENCE enters the predicate, so the bases cancel
     "q_text_proximity_index" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0) AS toks
+        |    ${duckWords()} AS toks
         |  FROM documents),
         |p AS (
         |  SELECT doc_id, unnest(generate_series(1, len(toks))) AS i, toks
@@ -4538,25 +4484,14 @@ object LlmPipeline {
     // same deliverable as q_text_search_index (the TVF is an access
     // path, not a semantics change)
     "q_sql_text_search" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM documents),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2)
-        |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS total_tf, d.lang
-        |FROM tf JOIN documents d ON tf.doc_id = d.doc_id
-        |GROUP BY tf.doc_id, d.lang
-        |HAVING count(*) = 3
-        |ORDER BY tf.doc_id""".stripMargin,
+      duckConjunctiveSearch,
 
     // corpus-side adjacency count twin of the positional-index phrase
     // search
     "q_text_phrase_index" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0) AS toks
+        |    ${duckWords()} AS toks
         |  FROM documents),
         |p AS (
         |  SELECT doc_id, unnest(generate_series(1, len(toks) - 1)) AS i, toks
@@ -4573,93 +4508,35 @@ object LlmPipeline {
         .map(duckSearchEval).mkString("", "\nUNION ALL\n", "\nORDER BY query"),
 
     "q_text_bm25_index" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0) AS toks
-        |  FROM documents),
-        |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-        |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-        |tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2, 3),
-        |df AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w)
-        |SELECT tf.doc_id,
-        |  sum(ln((s.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-        |      * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / s.avgdl))) AS score
-        |FROM tf, df, s WHERE tf.w = df.w
-        |GROUP BY tf.doc_id
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
+      duckBm25Top20(),
 
-    // Exact RRF oracle: corpus-side BM25 ranks (identical formula to
-    // q_text_bm25_index) + brute-force cosine ranks per probe, fused
-    // by the same 1/(60+r) sum. DOUBLE casts force double division
-    // (a bare 1.0/bigint would type DECIMAL in DuckDB); ties break by
-    // doc id ascending in both rankers and the fused cut, exactly as
-    // the heap aggregator does.
+    // Exact RRF oracle (duckRrfFused); the fused cut breaks ties by
+    // doc id ascending, exactly as the heap aggregator does.
     "q_hybrid_search_rrf" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '\\W+'), t -> len(t) > 0) AS toks
-         |  FROM documents),
-         |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-         |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-         |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-         |tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-         |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2, 3),
-         |dfs AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w),
-         |bm_scores AS (
-         |  SELECT tf.doc_id,
-         |    sum(ln((st.n_docs - dfs.df + 0.5) / (dfs.df + 0.5) + 1)
-         |        * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl))) AS score
-         |  FROM tf, dfs, st WHERE tf.w = dfs.w GROUP BY tf.doc_id),
-         |bm AS (SELECT doc_id, trank FROM (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS trank
-         |  FROM bm_scores) WHERE trank <= 50),
-         |vr AS (SELECT probe_id, neighbor_id, vrank FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS vrank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 5 AND c.vec_id <> p.vec_id) WHERE vrank <= 50),
-         |contrib AS (
-         |  SELECT probes.probe_id, bm.doc_id,
-         |    CAST(1 AS DOUBLE) / CAST(60 + bm.trank AS DOUBLE) AS c
-         |  FROM (SELECT vec_id AS probe_id FROM embeddings WHERE vec_id < 5) probes, bm
-         |  UNION ALL
-         |  SELECT probe_id, neighbor_id AS doc_id,
-         |    CAST(1 AS DOUBLE) / CAST(60 + vrank AS DOUBLE) AS c FROM vr),
-         |fused AS (SELECT probe_id, doc_id, sum(c) AS rrf FROM contrib GROUP BY 1, 2)
-         |SELECT probe_id, rank, doc_id, rrf FROM (
-         |  SELECT probe_id, doc_id, rrf,
-         |    row_number() OVER (PARTITION BY probe_id ORDER BY rrf DESC, doc_id) AS rank
-         |  FROM fused)
-         |WHERE rank <= 10 ORDER BY probe_id, rank""".stripMargin,
+      duckRrfTop10(),
 
     // recomputes the final card from the deterministically-mutated
     // state; ivm_ok TRUE is the engine-side incremental-equals-full
     // proof carried into the compared output
     "q_card_incremental" ->
-      """WITH v3 AS (
+      s"""WITH v3 AS (
         |  SELECT doc_id, source,
         |    CASE WHEN doc_id % 11 = 0 THEN text || ' vector' ELSE text END AS text
         |  FROM documents WHERE doc_id % 13 <> 0)
         |SELECT source,
         |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-        |                           x -> len(x) > 0))) AS BIGINT) AS total_words,
+        |  CAST(sum(len(${duckSpaceWords("x")})) AS BIGINT) AS total_words,
         |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
-        |  CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-        |                           x -> len(x) > 0))) AS DOUBLE) / count(*) AS avg_words,
+        |  CAST(sum(len(${duckSpaceWords("x")})) AS DOUBLE) / count(*) AS avg_words,
         |  true AS ivm_ok
         |FROM v3 GROUP BY source ORDER BY source""".stripMargin,
 
     // live totals recomputed from the surviving docs; n_tombs = the
     // retracted id count
     "q_sql_index_stats" ->
-      """WITH l AS (
+      s"""WITH l AS (
         |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(lower(text), '\W+'),
-        |                    t -> len(t) > 0)) AS dl
+        |    len(${duckWords()}) AS dl
         |  FROM documents)
         |SELECT
         |  CAST(count(*) FILTER (WHERE doc_id % 7 <> 0) AS BIGINT) AS n_docs,
@@ -4672,10 +4549,9 @@ object LlmPipeline {
     // boolean algebra mirrored as set ops over the distinct doc-term
     // incidence
     "q_text_boolean_index" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT DISTINCT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
+        |    unnest(${duckWords()}) AS w
         |  FROM documents),
         |a AS (SELECT doc_id FROM tok WHERE w = 'hash'
         |      INTERSECT SELECT doc_id FROM tok WHERE w = 'merge'),
@@ -4699,7 +4575,7 @@ object LlmPipeline {
          |  WHERE d.doc_id % 13 <> 0),
          |d2 AS (
          |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '\\W+'), t -> len(t) > 0) AS toks
+         |    ${duckWords()} AS toks
          |  FROM m),
          |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d2),
          |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
@@ -4739,20 +4615,9 @@ object LlmPipeline {
     // by the integer occurrence metric → round-2 BM25 with the
     // expanded term set; both BM25 rounds are the proven-exact formula
     "q_text_prf_search" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '\\W+'), t -> len(t) > 0) AS toks
-         |  FROM documents),
-         |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-         |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-         |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-         |tf1 AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-         |        WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2, 3),
-         |dfs1 AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf1 GROUP BY w),
+      s"""WITH ${duckBm25Ctes(df = "dfs1", tf = "tf1")},
          |bm1 AS (
-         |  SELECT tf1.doc_id,
-         |    sum(ln((st.n_docs - dfs1.df + 0.5) / (dfs1.df + 0.5) + 1)
-         |        * tf1.tf * 2.2 / (tf1.tf + 1.2 * (0.25 + 0.75 * tf1.dl / st.avgdl))) AS score
+         |  SELECT tf1.doc_id, sum(${duckBm25("tf1", "dfs1", "st")}) AS score
          |  FROM tf1, dfs1, st WHERE tf1.w = dfs1.w GROUP BY tf1.doc_id),
          |fb AS (SELECT doc_id FROM (
          |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r
@@ -4766,9 +4631,7 @@ object LlmPipeline {
          |tf2 AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
          |        WHERE w IN (SELECT term FROM terms2) GROUP BY 1, 2, 3),
          |dfs2 AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf2 GROUP BY w)
-         |SELECT tf2.doc_id,
-         |  sum(ln((st.n_docs - dfs2.df + 0.5) / (dfs2.df + 0.5) + 1)
-         |      * tf2.tf * 2.2 / (tf2.tf + 1.2 * (0.25 + 0.75 * tf2.dl / st.avgdl))) AS score
+         |SELECT tf2.doc_id, sum(${duckBm25("tf2", "dfs2", "st")}) AS score
          |FROM tf2, dfs2, st WHERE tf2.w = dfs2.w
          |GROUP BY tf2.doc_id
          |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
@@ -4776,145 +4639,32 @@ object LlmPipeline {
     // the hybrid oracle wrapped by the same SQL the engine composes on
     // top of the TVF (rank filter + documents join)
     "q_sql_hybrid" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '\\W+'), t -> len(t) > 0) AS toks
-         |  FROM documents),
-         |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-         |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-         |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-         |tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-         |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2, 3),
-         |dfs AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w),
-         |bm_scores AS (
-         |  SELECT tf.doc_id,
-         |    sum(ln((st.n_docs - dfs.df + 0.5) / (dfs.df + 0.5) + 1)
-         |        * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl))) AS score
-         |  FROM tf, dfs, st WHERE tf.w = dfs.w GROUP BY tf.doc_id),
-         |bm AS (SELECT doc_id, trank FROM (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS trank
-         |  FROM bm_scores) WHERE trank <= 50),
-         |vr AS (SELECT probe_id, neighbor_id, vrank FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS vrank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 5 AND c.vec_id <> p.vec_id) WHERE vrank <= 50),
-         |contrib AS (
-         |  SELECT probes.probe_id, bm.doc_id,
-         |    CAST(1 AS DOUBLE) / CAST(60 + bm.trank AS DOUBLE) AS c
-         |  FROM (SELECT vec_id AS probe_id FROM embeddings WHERE vec_id < 5) probes, bm
-         |  UNION ALL
-         |  SELECT probe_id, neighbor_id AS doc_id,
-         |    CAST(1 AS DOUBLE) / CAST(60 + vrank AS DOUBLE) AS c FROM vr),
-         |fused AS (SELECT probe_id, doc_id, sum(c) AS rrf FROM contrib GROUP BY 1, 2),
-         |hybrid AS (
-         |  SELECT probe_id, rank, doc_id, rrf FROM (
-         |    SELECT probe_id, doc_id, rrf,
-         |      row_number() OVER (PARTITION BY probe_id ORDER BY rrf DESC, doc_id) AS rank
-         |    FROM fused))
-         |SELECT h.probe_id, h.rank, h.doc_id, h.rrf, dd.source
-         |FROM hybrid h JOIN documents dd ON h.doc_id = dd.doc_id
-         |WHERE h.rank <= 5
-         |ORDER BY h.probe_id, h.rank""".stripMargin,
+      duckSqlHybrid(),
 
     // the q_sql_hybrid replay over the PIN-TIME corpus (both legs
     // minus the pre-pin %17 deletes); the post-pin index mutations
     // must be invisible to the pinned TVF relation
     "q_sql_hybrid_asof" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '\\W+'), t -> len(t) > 0) AS toks
-         |  FROM documents WHERE doc_id % 17 <> 3),
-         |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-         |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-         |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-         |tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-         |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2, 3),
-         |dfs AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w),
-         |bm_scores AS (
-         |  SELECT tf.doc_id,
-         |    sum(ln((st.n_docs - dfs.df + 0.5) / (dfs.df + 0.5) + 1)
-         |        * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl))) AS score
-         |  FROM tf, dfs, st WHERE tf.w = dfs.w GROUP BY tf.doc_id),
-         |bm AS (SELECT doc_id, trank FROM (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS trank
-         |  FROM bm_scores) WHERE trank <= 50),
-         |vr AS (SELECT probe_id, neighbor_id, vrank FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS vrank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 5 AND c.vec_id <> p.vec_id
-         |    AND c.vec_id % 17 <> 3) WHERE vrank <= 50),
-         |contrib AS (
-         |  SELECT probes.probe_id, bm.doc_id,
-         |    CAST(1 AS DOUBLE) / CAST(60 + bm.trank AS DOUBLE) AS c
-         |  FROM (SELECT vec_id AS probe_id FROM embeddings WHERE vec_id < 5) probes, bm
-         |  UNION ALL
-         |  SELECT probe_id, neighbor_id AS doc_id,
-         |    CAST(1 AS DOUBLE) / CAST(60 + vrank AS DOUBLE) AS c FROM vr),
-         |fused AS (SELECT probe_id, doc_id, sum(c) AS rrf FROM contrib GROUP BY 1, 2),
-         |hybrid AS (
-         |  SELECT probe_id, rank, doc_id, rrf FROM (
-         |    SELECT probe_id, doc_id, rrf,
-         |      row_number() OVER (PARTITION BY probe_id ORDER BY rrf DESC, doc_id) AS rank
-         |    FROM fused))
-         |SELECT h.probe_id, h.rank, h.doc_id, h.rrf, dd.source
-         |FROM hybrid h JOIN documents dd ON h.doc_id = dd.doc_id
-         |WHERE h.rank <= 5
-         |ORDER BY h.probe_id, h.rank""".stripMargin,
+      duckSqlHybrid(" WHERE doc_id % 17 <> 3", " AND c.vec_id % 17 <> 3"),
 
     "q_text_bm25" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0) AS toks
-        |  FROM documents),
-        |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-        |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-        |tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2, 3),
-        |df AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w)
-        |SELECT tf.doc_id,
-        |  sum(ln((s.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-        |      * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / s.avgdl))) AS score
-        |FROM tf, df, s WHERE tf.w = df.w
-        |GROUP BY tf.doc_id
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
+      duckBm25Top20(),
 
     // The index is an access-path optimization, not a semantics change:
     // the oracle computes the same conjunctive tf-sum straight from the
     // corpus. Only docs containing ALL three terms survive.
     "q_text_search_index" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM documents),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2)
-        |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS total_tf, d.lang
-        |FROM tf JOIN documents d ON tf.doc_id = d.doc_id
-        |GROUP BY tf.doc_id, d.lang
-        |HAVING count(*) = 3
-        |ORDER BY tf.doc_id""".stripMargin,
+      duckConjunctiveSearch,
 
     // the v3 live state recomputed corpus-side: %11 docs carry the
     // appended term, %13 docs are gone
     "q_text_index_cdc" ->
-      """WITH live AS (
+      s"""WITH live AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 11 = 0 THEN text || ' vector' ELSE text END AS text,
         |    lang
         |  FROM documents WHERE doc_id % 13 <> 0),
-        |tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM live),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2)
+        |${duckTermTf(from = "live")}
         |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS total_tf, d.lang
         |FROM tf JOIN live d ON tf.doc_id = d.doc_id
         |GROUP BY tf.doc_id, d.lang
@@ -4922,10 +4672,9 @@ object LlmPipeline {
         |ORDER BY tf.doc_id""".stripMargin,
 
     "q_text_synonym_search" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
+        |    unnest(${duckWords()}) AS w
         |  FROM documents),
         |tf AS (
         |  SELECT doc_id, w, count(*) AS tf,
@@ -4943,13 +4692,7 @@ object LlmPipeline {
     // merged-shard search == corpus-side search; totals_ok is the
     // engine-measured manifest invariant
     "q_text_index_merge" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM documents),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2)
+      s"""WITH ${duckTermTf()}
         |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS total_tf, d.lang,
         |  TRUE AS totals_ok
         |FROM tf JOIN documents d ON tf.doc_id = d.doc_id
@@ -4960,13 +4703,7 @@ object LlmPipeline {
     // conjunctive search over the LIVE corpus only (doc_id % 7 = 0
     // deleted); the booleans are engine-measured invariants
     "q_text_index_delete" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM documents WHERE doc_id % 7 <> 0),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2)
+      s"""WITH ${duckTermTf(from = "documents WHERE doc_id % 7 <> 0")}
         |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS total_tf, d.lang,
         |  TRUE AS purged, TRUE AS tombstone_exact
         |FROM tf JOIN documents d ON tf.doc_id = d.doc_id
@@ -4979,13 +4716,7 @@ object LlmPipeline {
     // TRUE (a compaction that loses rows or fails to drop files flips
     // them and fails the hash gate)
     "q_text_index_compact" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM documents),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2)
+      s"""WITH ${duckTermTf()}
         |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS total_tf, d.lang,
         |  TRUE AS files_dropped, TRUE AS search_identical
         |FROM tf JOIN documents d ON tf.doc_id = d.doc_id
@@ -4994,9 +4725,9 @@ object LlmPipeline {
         |ORDER BY tf.doc_id""".stripMargin,
 
     "q_text_chunk" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0) AS toks
+        |    ${duckSpaceWords()} AS toks
         |  FROM documents),
         |c AS (
         |  SELECT doc_id, toks, len(toks) AS n,
@@ -5014,9 +4745,9 @@ object LlmPipeline {
     // logw doubles compare at the canonicalizer's 6dp, the selected
     // boolean sits behind the 1e-9 band
     "q_train_dsir" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id, source,
-        |    list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |    ${duckWords("x")} AS w
         |  FROM documents),
         |g AS (
         |  SELECT doc_id, source,
@@ -5078,9 +4809,9 @@ object LlmPipeline {
         |GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "q_text_mixture" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id, source,
-        |    len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS n_words
+        |    len(${duckSpaceWords()}) AS n_words
         |  FROM documents),
         |r AS (
         |  SELECT doc_id, source, n_words,
@@ -5115,9 +4846,9 @@ object LlmPipeline {
     // positions (exclusive end = Spark's inclusive sequence(start,
     // start+7))
     "q_dedup_substring" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |    ${duckWords("x")} AS w
         |  FROM documents),
         |base AS (
         |  SELECT doc_id, len(w) AS n_tok, greatest(len(w) - 7, 0) AS n_spans, w
@@ -5145,7 +4876,7 @@ object LlmPipeline {
         |ORDER BY doc_id""".stripMargin,
 
     "q_dedup_editdist" ->
-      """WITH m AS (SELECT max(doc_id) + 1 AS off FROM documents),
+      s"""WITH m AS (SELECT max(doc_id) + 1 AS off FROM documents),
         |d AS (
         |  SELECT doc_id, text FROM documents WHERE source = 'src0'
         |  UNION ALL
@@ -5156,7 +4887,7 @@ object LlmPipeline {
         |  SELECT doc_id, text,
         |    list_distinct([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS grams
         |  FROM (SELECT doc_id, text,
-        |          list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |          ${duckWords("x")} AS w
         |        FROM d))
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
@@ -5172,20 +4903,12 @@ object LlmPipeline {
     // counts are exact; the booleans are the engine's end-to-end
     // removal recheck (see the query comment) predicted TRUE
     "q_dedup_semantic" ->
-      """WITH base AS (SELECT count(*) AS n FROM embeddings),
-        |p AS (SELECT count(*) AS np FROM embeddings WHERE vec_id % 10 = 0)
-        |SELECT base.n + p.np AS n_corpus, p.np AS n_planted,
-        |  TRUE AS precision_ok, TRUE AS recall_ok
-        |FROM base, p""".stripMargin,
+      duckPlantedDedup,
 
     // same planted fixture and recheck contract; only the quantizer's
     // feature space differs (top-8 PCA), which precision/recall gate
     "q_dedup_semantic_pca" ->
-      """WITH base AS (SELECT count(*) AS n FROM embeddings),
-        |p AS (SELECT count(*) AS np FROM embeddings WHERE vec_id % 10 = 0)
-        |SELECT base.n + p.np AS n_corpus, p.np AS n_planted,
-        |  TRUE AS precision_ok, TRUE AS recall_ok
-        |FROM base, p""".stripMargin,
+      duckPlantedDedup,
 
     "q_train_shuffle" ->
       """WITH e AS (
@@ -5228,9 +4951,9 @@ object LlmPipeline {
     // the ONE-WINDOW formulation of the prefix rule — the engine's
     // two-phase bucketed selection must reproduce it doc-for-doc
     "q_train_token_budget" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id, source,
-        |    len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS tok,
+        |    len(${duckSpaceWords()}) AS tok,
         |    CAST(len(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
         |      / len(text) AS q
         |  FROM documents WHERE len(text) > 0),
@@ -5276,9 +4999,9 @@ object LlmPipeline {
     // (window cumsum here = the engine's driver-side walk), so stage
     // assignment and the integer schedule arithmetic are bit-exact
     "q_train_curriculum" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |    ${duckWords("x")} AS w
         |  FROM documents),
         |base AS (
         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS tok,
@@ -5307,11 +5030,11 @@ object LlmPipeline {
     // same 8-gram construction as the binary decontaminate oracle;
     // overlap in integer basis points — bit-exact across engines
     "q_decontaminate_overlap" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(w[i:i+7], ' ') FOR i IN range(1, len(w) - 6)]) AS grams
         |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |          ${duckWords("x")} AS w
         |        FROM documents)
         |  WHERE len(w) >= 8),
         |e AS (SELECT doc_id, unnest(grams) AS gram FROM g),
@@ -5391,8 +5114,8 @@ object LlmPipeline {
     // order with the lexicographic tiebreak), PMI re-derived in double
     // with the same left-associated arithmetic
     "q_text_cooccur_pmi" ->
-      """WITH tok AS (
-        |  SELECT list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+      s"""WITH tok AS (
+        |  SELECT ${duckWords("x")} AS w
         |  FROM documents),
         |p1 AS (SELECT unnest([{'lo': least(w[i], w[i+1]), 'hi': greatest(w[i], w[i+1])}
         |                      FOR i IN range(1, len(w))]) AS p FROM tok),
@@ -5415,9 +5138,9 @@ object LlmPipeline {
     // the q_text_pack CTE with a per-source rollup on top; offset
     // bucketing can overflow a bucket, so fill_bp may exceed 10000
     "q_train_pack_efficiency" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, source,
-        |    len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS n_tok
+        |    len(${duckSpaceWords()}) AS n_tok
         |  FROM documents),
         |cum AS (
         |  SELECT doc_id, source, n_tok,
@@ -5437,9 +5160,9 @@ object LlmPipeline {
     // the q_text_pack_sharded CTE with the same per-source rollup —
     // the production (shard-bounded) layout's fill report
     "q_train_pack_efficiency_sharded" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, source,
-        |    len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS n_tok,
+        |    len(${duckSpaceWords()}) AS n_tok,
         |    CAST(floor(doc_id / 200) AS BIGINT) AS shard
         |  FROM documents),
         |loc AS (
@@ -5509,11 +5232,11 @@ object LlmPipeline {
     // same 8-gram construction as the decontaminate oracles, keyed by
     // source; uniqueness = gram appears in exactly one source
     "q_text_gram_novelty" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT source,
         |    list_distinct([array_to_string(w[i:i+7], ' ') FOR i IN range(1, len(w) - 6)]) AS grams
         |  FROM (SELECT source,
-        |          list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |          ${duckWords("x")} AS w
         |        FROM documents)
         |  WHERE len(w) >= 8),
         |sg AS (SELECT DISTINCT source, gram
@@ -5529,10 +5252,9 @@ object LlmPipeline {
     // identical pure-integer budget arithmetic (uniform 2×-corpus
     // split, repeat factor in hundredths capped at 400)
     "q_train_repeat_epochs" ->
-      """WITH per AS (
+      s"""WITH per AS (
         |  SELECT source,
-        |    CAST(sum(len(list_filter(string_split_regex(lower(text), '\W+'),
-        |      x -> len(x) > 0))) AS BIGINT) AS n_tok
+        |    CAST(sum(len(${duckWords("x")})) AS BIGINT) AS n_tok
         |  FROM documents GROUP BY source),
         |tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS total,
         |               count(*) AS n_sources FROM per)
@@ -5543,13 +5265,12 @@ object LlmPipeline {
         |FROM per, tot ORDER BY source""".stripMargin,
 
     "q_text_tfidf_pairs" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE source = 'src0'),
+      s"""WITH d AS (SELECT doc_id, text FROM documents WHERE source = 'src0'),
         |n AS (SELECT count(*) AS nd FROM d),
         |t AS (
         |  SELECT doc_id, w AS term, count(*) AS tf
         |  FROM (SELECT doc_id,
-        |          unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                             x -> len(x) > 0)) AS w
+        |          unnest(${duckWords("x")}) AS w
         |        FROM d)
         |  GROUP BY 1, 2),
         |df AS (SELECT term, count(*) AS dfreq FROM t GROUP BY 1),
@@ -5569,11 +5290,11 @@ object LlmPipeline {
         |ORDER BY cos DESC, doc_a, doc_b LIMIT 10""".stripMargin,
 
     "q_text_ngram_jaccard" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT doc_id,
         |    list_distinct([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS grams
         |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |          ${duckWords("x")} AS w
         |        FROM documents WHERE source = 'src0'))
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
@@ -5585,59 +5306,25 @@ object LlmPipeline {
         |ORDER BY doc_a, doc_b""".stripMargin,
 
     "q_sim_ann" ->
-      s"""SELECT p.vec_id AS probe_id,
-         |  max(${duckCos("p.embedding", "c.embedding")}) AS exact_top1_cos,
-         |  TRUE AS ann_ok
-         |FROM embeddings p, embeddings c
-         |WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id
-         |GROUP BY p.vec_id ORDER BY probe_id""".stripMargin,
+      duckTop1("ann_ok"),
 
     "q_sim_ann_multiprobe" ->
-      s"""SELECT p.vec_id AS probe_id,
-         |  max(${duckCos("p.embedding", "c.embedding")}) AS exact_top1_cos,
-         |  TRUE AS ann_ok
-         |FROM embeddings p, embeddings c
-         |WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id
-         |GROUP BY p.vec_id ORDER BY probe_id""".stripMargin,
+      duckTop1("ann_ok"),
 
     "q_sim_ivf" ->
-      s"""SELECT p.vec_id AS probe_id,
-         |  max(${duckCos("p.embedding", "c.embedding")}) AS exact_top1_cos,
-         |  TRUE AS ivf_ok
-         |FROM embeddings p, embeddings c
-         |WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id
-         |GROUP BY p.vec_id ORDER BY probe_id""".stripMargin,
+      duckTop1("ivf_ok"),
 
     "q_sim_ivf_pq" ->
-      s"""SELECT p.vec_id AS probe_id,
-         |  max(${duckCos("p.embedding", "c.embedding")}) AS exact_top1_cos,
-         |  TRUE AS pq_ok
-         |FROM embeddings p, embeddings c
-         |WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id
-         |GROUP BY p.vec_id ORDER BY probe_id""".stripMargin,
+      duckTop1("pq_ok"),
 
     // exhaustive probing + the label pre-filter → exact brute force
     // over the eligible (label = 3) corpus
     "q_sim_filtered_ann" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id AND c.label = 3)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(filter = "c.vec_id <> p.vec_id AND c.label = 3"),
 
     // exhaustive probing → the knn join equals brute force per probe
     "q_sim_knn_join" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id % 10 = 1 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 3 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(k = 3, probes = "p.vec_id % 10 = 1"),
 
     // exhaustive probing → the radius cut is an exact threshold join
     "q_sim_range_search" ->
@@ -5649,13 +5336,7 @@ object LlmPipeline {
          |ORDER BY probe_id, neighbor_id""".stripMargin,
 
     "q_text_faceted_search" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
-        |  FROM documents),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2),
+      s"""WITH ${duckTermTf()},
         |hits AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS total_tf
         |         FROM tf GROUP BY doc_id HAVING count(*) = 3)
         |SELECT d.source, d.lang, count(*) AS n_hits,
@@ -5669,9 +5350,9 @@ object LlmPipeline {
     // as the start×occupant join; best window = most hits, earliest
     // start
     "q_text_snippet" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0) AS toks
+        |    ${duckWords()} AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(toks) AS w,
         |               unnest(range(len(toks))) AS pos FROM d),
@@ -5784,14 +5465,7 @@ object LlmPipeline {
     // merged-shard IVF probed exhaustively = brute force over the
     // union corpus
     "q_sim_ivf_merge" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(),
 
     "q_sim_matryoshka" ->
       s"""WITH tr AS (
@@ -5817,111 +5491,54 @@ object LlmPipeline {
          |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
 
     "q_sim_topk" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(),
 
     // nProbes = nCentroids makes the incremental-IVF search exhaustive
     // over the (fit-half ∪ appended-half) lists = the whole corpus, so
     // the exact brute-force oracle applies verbatim
     "q_sim_ivf_incremental" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(),
 
     // streamed-ingest IVF probed exhaustively = the whole corpus: the
     // same exact brute-force oracle; multi_batch is the engine-side
     // proof the ingest actually arrived in ≥3 paced micro-batches
     "q_stream_ivf_ingest" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos, true AS multi_batch FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(", true AS multi_batch"),
 
     // auto-repair composition: mid-stream rebalances move rows but
     // never change the answer — exhaustive probing over the final
     // live generation = the same exact brute-force top-5; the two
     // booleans are the engine-side advisory⇔repair proof
     "q_stream_ivf_autorepair" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos,
-         |  true AS repair_loop_ok, true AS advisory_clean FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(", true AS repair_loop_ok, true AS advisory_clean"),
 
     // the SQL TVF's exhaustive search with the rank<=3 SQL filter on
     // top = brute-force top-3 exactly
     "q_sql_ann" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 3 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(k = 3),
 
     // CDC-synced IVF probed exhaustively = brute force over the v3
     // live state (updates applied, deletes gone) — the oracle
     // recomputes the re-embedding (reverse) and the erasure directly
     "q_sim_ivf_cdc" ->
-      s"""WITH live AS (
-         |  SELECT vec_id,
-         |    CASE WHEN vec_id % 11 = 0 THEN list_reverse(embedding)
-         |         ELSE embedding END AS embedding
-         |  FROM embeddings WHERE vec_id % 13 <> 0)
-         |SELECT probe_id, rank, neighbor_id, cos FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, live c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      ("""WITH live AS (
+        |  SELECT vec_id,
+        |    CASE WHEN vec_id % 11 = 0 THEN list_reverse(embedding)
+        |         ELSE embedding END AS embedding
+        |  FROM embeddings WHERE vec_id % 13 <> 0)
+        |""".stripMargin + duckTopK(corpus = "live c")),
 
     // deleted-IVF probed exhaustively = brute force over the REMAINING
     // corpus; purged/compact_identical are engine-side invariants
     "q_sim_ivf_delete" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos,
-         |  true AS purged, true AS compact_identical FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id % 7 <> 0 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(", true AS purged, true AS compact_identical",
+        filter = "c.vec_id % 7 <> 0 AND c.vec_id <> p.vec_id"),
 
     // rebalanced IVF probed exhaustively over the LIVE centroid set =
     // the whole corpus moved exactly once: same exact oracle;
     // rebalance_ok is the engine-side max-list-shrank proof
     "q_sim_ivf_rebalance" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos, true AS rebalance_ok FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(", true AS rebalance_ok"),
 
     "q_sim_ivf_skew" ->
       """SELECT CAST(count(*) AS BIGINT) AS total_live,
@@ -5930,25 +5547,10 @@ object LlmPipeline {
         |FROM embeddings""".stripMargin,
 
     "q_sim_recall_curve" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos,
-         |  true AS recall_monotone_ok, true AS exhaustive_exact FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(", true AS recall_monotone_ok, true AS exhaustive_exact"),
 
     "q_sim_topk_agg" ->
-      s"""SELECT probe_id, rank, neighbor_id, cos FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("p.embedding", "c.embedding")} AS cos,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS rank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 10 AND c.vec_id <> p.vec_id)
-         |WHERE rank <= 5 ORDER BY probe_id, rank""".stripMargin,
+      duckTopK(),
 
     // exhaustive probing both directions → the mined set is the exact
     // margin pipeline over brute-force kNN: mutual top-4, ratio margin,
@@ -5979,10 +5581,10 @@ object LlmPipeline {
         |ORDER BY doc_id""".stripMargin,
 
     "q_text_quality" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  length(text) AS n_chars_actual,
         |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS DOUBLE) / length(text) END AS punct_ratio,
+        |       ELSE CAST(length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS DOUBLE) / length(text) END AS punct_ratio,
         |  CASE WHEN len(toks) = 0 THEN 0.0
         |       ELSE CAST(len(list_filter(toks, t -> t IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','be','this'))) AS DOUBLE) / len(toks) END AS stop_ratio,
         |  round((
@@ -5990,41 +5592,41 @@ object LlmPipeline {
         |         WHEN length(text) < 100 THEN CAST(length(text) AS DOUBLE) / 100.0
         |         ELSE 0.5 END
         |    + greatest(0.0, 1.0 - (CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0)
+        |       ELSE CAST(length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0)
         |    + CASE WHEN nw = 0 THEN 0.3
-        |           WHEN CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE) / nw BETWEEN 2.0 AND 12.0 THEN 1.0
+        |           WHEN CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / nw BETWEEN 2.0 AND 12.0 THEN 1.0
         |           ELSE 0.3 END
         |  ) / 3.0, 6) AS quality
         |FROM (
         |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0) AS toks,
-        |    len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS nw
+        |    ${duckWords()} AS toks,
+        |    len(${duckSpaceWords()}) AS nw
         |  FROM documents)
         |ORDER BY doc_id""".stripMargin,
 
     "q_text_tokens" ->
-      """SELECT doc_id,
-        |  len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS n_words,
-        |  len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]')) AS n_tokens_est,
+      s"""SELECT doc_id,
+        |  len(${duckSpaceWords()}) AS n_words,
+        |  len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\\s]')) AS n_tokens_est,
         |  n_chars = length(text) AS chars_ok
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "q_text_dataset_card" ->
-      """SELECT source,
+      s"""SELECT source,
         |  count(*) AS n_docs,
-        |  CAST(sum(len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0))) AS BIGINT) AS total_words,
+        |  CAST(sum(len(${duckSpaceWords()})) AS BIGINT) AS total_words,
         |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |  avg(len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0))) AS avg_words,
-        |  CAST(max(len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0))) AS BIGINT) AS max_words,
+        |  avg(len(${duckSpaceWords()})) AS avg_words,
+        |  CAST(max(len(${duckSpaceWords()})) AS BIGINT) AS max_words,
         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
 
     // vocab rank is fully ordered (count desc, token asc), so the
     // top-256 set and every id agree across engines exactly
     "q_text_vocab_encode" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0) AS toks
+        |    ${duckWords()} AS toks
         |  FROM documents),
         |flat AS (SELECT doc_id, unnest(toks) AS w FROM tok),
         |cnt AS (SELECT w, count(*) AS n FROM flat GROUP BY w),
@@ -6049,10 +5651,9 @@ object LlmPipeline {
         |ORDER BY t.doc_id""".stripMargin,
 
     "q_text_perplexity" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |      x -> len(x) > 0)) AS tok
+        |    unnest(${duckWords("x")}) AS tok
         |  FROM documents),
         |dt AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY 1, 2),
         |vocab AS (SELECT tok, sum(c) AS cnt FROM dt GROUP BY 1),
@@ -6066,10 +5667,9 @@ object LlmPipeline {
         |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin,
 
     "q_text_keyphrase" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |      x -> len(x) > 0)) AS term
+        |    unnest(${duckWords("x")}) AS term
         |  FROM documents),
         |dt AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
         |dfc AS (SELECT term, count(*) AS df FROM dt GROUP BY 1),
@@ -6085,9 +5685,9 @@ object LlmPipeline {
         |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
 
     "q_text_bigram_lm" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |    ${duckWords("x")} AS w
         |  FROM documents),
         |bg AS (
         |  SELECT doc_id, unnest([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS bg
@@ -6138,9 +5738,9 @@ object LlmPipeline {
         |FROM p ORDER BY doc_id""".stripMargin,
 
     "q_text_top_ngrams" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |    ${duckWords("x")} AS w
         |  FROM documents),
         |e AS (
         |  SELECT DISTINCT doc_id,
@@ -6150,9 +5750,9 @@ object LlmPipeline {
         |GROUP BY gram ORDER BY doc_freq DESC, gram ASC LIMIT 20""".stripMargin,
 
     "q_text_repetition" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |    ${duckWords("x")} AS w
         |  FROM documents),
         |e AS (
         |  SELECT doc_id, unnest([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS gram
@@ -6164,9 +5764,9 @@ object LlmPipeline {
         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "q_text_pack" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, source,
-        |    len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS n_tok
+        |    len(${duckSpaceWords()}) AS n_tok
         |  FROM documents),
         |cum AS (
         |  SELECT doc_id, source, n_tok,
@@ -6178,9 +5778,9 @@ object LlmPipeline {
         |FROM cum GROUP BY source, seq_id ORDER BY source, seq_id""".stripMargin,
 
     "q_text_pack_sharded" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, source,
-        |    len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS n_tok,
+        |    len(${duckSpaceWords()}) AS n_tok,
         |    CAST(floor(doc_id / 200) AS BIGINT) AS shard
         |  FROM documents),
         |loc AS (
@@ -6225,11 +5825,11 @@ object LlmPipeline {
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "q_text_decontaminate" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT doc_id,
         |    unnest(list_distinct([array_to_string(w[i:i+7], ' ') FOR i IN range(1, len(w) - 6)])) AS gram
         |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS w
+        |          ${duckWords("x")} AS w
         |        FROM documents)
         |  WHERE len(w) >= 8),
         |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0),
@@ -6242,24 +5842,12 @@ object LlmPipeline {
     // the shared inverted-index CTE; the prefix-filtered cross join
     // must reproduce it verbatim (completeness has no recall term)
     "q_text_decontaminate_fuzzy" ->
-      s"""WITH $gramIndexCte
-         |SELECT CASE WHEN doc_a % 10 = 0 THEN doc_b ELSE doc_a END AS doc_id,
-         |  CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS bench_id,
-         |  jaccard
-         |FROM jpairs
-         |WHERE jaccard >= 0.8 AND ((doc_a % 10 = 0) <> (doc_b % 10 = 0))
-         |ORDER BY doc_id, bench_id""".stripMargin,
+      duckFuzzyContamination,
 
     // identical one-shot oracle as q_text_decontaminate_fuzzy: per-
     // batch completeness means the union of batch checks reproduces it
     "q_decontaminate_incremental" ->
-      s"""WITH $gramIndexCte
-         |SELECT CASE WHEN doc_a % 10 = 0 THEN doc_b ELSE doc_a END AS doc_id,
-         |  CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS bench_id,
-         |  jaccard
-         |FROM jpairs
-         |WHERE jaccard >= 0.8 AND ((doc_a % 10 = 0) <> (doc_b % 10 = 0))
-         |ORDER BY doc_id, bench_id""".stripMargin,
+      duckFuzzyContamination,
 
     // exact threshold join over the replanted benchmark side: every
     // corpus × test cosine is scored, flagged rows keep their best
@@ -6409,80 +5997,27 @@ object LlmPipeline {
     // minus the pre-pin %17 deletes) — post-pin mutations and layout
     // maintenance must be invisible to the pinned ranking
     "q_text_bm25_asof" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\W+'), t -> len(t) > 0) AS toks
-        |  FROM documents WHERE doc_id % 17 <> 3),
-        |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-        |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-        |tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-        |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2, 3),
-        |df AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w)
-        |SELECT tf.doc_id,
-        |  sum(ln((s.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-        |      * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / s.avgdl))) AS score,
-        |  TRUE AS ranking_stable
-        |FROM tf, df, s WHERE tf.w = df.w
-        |GROUP BY tf.doc_id
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
+      duckBm25Top20(" WHERE doc_id % 17 <> 3", ",\n  TRUE AS ranking_stable"),
 
     // the q_hybrid_search_rrf replay over the PIN-TIME corpus: both
     // legs recomputed from documents/embeddings minus the pre-pin %17
     // deletes — post-pin mutation and all layout maintenance on both
     // indexes must be invisible to the fused pinned ranking
     "q_hybrid_asof" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '\\W+'), t -> len(t) > 0) AS toks
-         |  FROM documents WHERE doc_id % 17 <> 3),
-         |l AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
-         |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM l),
-         |tok AS (SELECT doc_id, dl, unnest(toks) AS w FROM l),
-         |tf AS (SELECT doc_id, dl, w, CAST(count(*) AS DOUBLE) AS tf FROM tok
-         |       WHERE w IN ('hash', 'merge', 'vector') GROUP BY 1, 2, 3),
-         |dfs AS (SELECT w, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY w),
-         |bm_scores AS (
-         |  SELECT tf.doc_id,
-         |    sum(ln((st.n_docs - dfs.df + 0.5) / (dfs.df + 0.5) + 1)
-         |        * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl))) AS score
-         |  FROM tf, dfs, st WHERE tf.w = dfs.w GROUP BY tf.doc_id),
-         |bm AS (SELECT doc_id, trank FROM (
-         |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS trank
-         |  FROM bm_scores) WHERE trank <= 50),
-         |vr AS (SELECT probe_id, neighbor_id, vrank FROM (
-         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY ${duckCos("p.embedding", "c.embedding")} DESC, c.vec_id ASC) AS vrank
-         |  FROM embeddings p, embeddings c
-         |  WHERE p.vec_id < 5 AND c.vec_id <> p.vec_id
-         |    AND c.vec_id % 17 <> 3) WHERE vrank <= 50),
-         |contrib AS (
-         |  SELECT probes.probe_id, bm.doc_id,
-         |    CAST(1 AS DOUBLE) / CAST(60 + bm.trank AS DOUBLE) AS c
-         |  FROM (SELECT vec_id AS probe_id FROM embeddings WHERE vec_id < 5) probes, bm
-         |  UNION ALL
-         |  SELECT probe_id, neighbor_id AS doc_id,
-         |    CAST(1 AS DOUBLE) / CAST(60 + vrank AS DOUBLE) AS c FROM vr),
-         |fused AS (SELECT probe_id, doc_id, sum(c) AS rrf FROM contrib GROUP BY 1, 2)
-         |SELECT probe_id, rank, doc_id, rrf, TRUE AS fused_stable FROM (
-         |  SELECT probe_id, doc_id, rrf,
-         |    row_number() OVER (PARTITION BY probe_id ORDER BY rrf DESC, doc_id) AS rank
-         |  FROM fused)
-         |WHERE rank <= 10 ORDER BY probe_id, rank""".stripMargin,
+      duckRrfTop10(" WHERE doc_id % 17 <> 3", " AND c.vec_id % 17 <> 3",
+        ", TRUE AS fused_stable"),
 
     // the pin-time state recomputed corpus-side: the pinned corpus is
     // documents ∩ embeddings minus the pre-pin %17 deletes; post-pin
     // mutations and all layout maintenance must be invisible to it
     "q_epoch_retention" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT d.doc_id, d.text FROM documents d
         |  JOIN embeddings e ON d.doc_id = e.vec_id
         |  WHERE d.doc_id % 17 <> 3),
         |tok AS (
         |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                       t -> len(t) > 0)) AS w
+        |    unnest(${duckWords()}) AS w
         |  FROM corpus)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS total_tf,
         |  TRUE AS pinned_stable_text, TRUE AS pinned_stable_vec,

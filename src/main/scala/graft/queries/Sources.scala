@@ -639,10 +639,8 @@ object Sources {
       val (v2, nBefore, nAfter) = Snapshots.compact(s, root, 1L << 40)
       val expired = Snapshots.expire(s, root, retain = 1)
       val manifestOk = Snapshots.versions(s, root) == Seq(v2)
-      val v1Gone = {
-        val p = new org.apache.hadoop.fs.Path(s"$root/v_1")
-        !p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-      }
+      val v1Gone = !graft.GraftSession.fsOf(s, root)
+        .exists(new org.apache.hadoop.fs.Path(s"$root/v_1"))
       Snapshots.read(s, root)
         .agg(count(lit(1)).as("n_docs"),
           sum(length(col("text"))).as("total_chars"))

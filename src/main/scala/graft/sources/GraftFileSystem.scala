@@ -107,9 +107,7 @@ class GraftFileSystem extends FileSystem {
   }
 
   private def convert(st: FileStatus): FileStatus =
-    new FileStatus(st.getLen, st.isDirectory, 3, getDefaultBlockSize(st.getPath),
-      st.getModificationTime, st.getAccessTime, st.getPermission,
-      st.getOwner, st.getGroup, fromLocal(st.getPath))
+    new GraftFileStatus(st, getDefaultBlockSize(st.getPath), fromLocal(st.getPath))
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val lf = toLocal(f)
@@ -206,7 +204,9 @@ class GraftFileSystem extends FileSystem {
     * intersects the requested range. This is what hands Spark's scan
     * planner >1 block — and so >1 locality-addressable split — for a
     * large file, instead of the single-block default a local store
-    * reports.
+    * reports. Every block names `localhost`, the host Hadoop's local
+    * filesystem reports: a host no executor runs on would hold each
+    * task for the full locality wait before Spark gives up on it.
     */
   override def getFileBlockLocations(file: FileStatus, start: Long,
       len: Long): Array[BlockLocation] = {
@@ -221,10 +221,26 @@ class GraftFileSystem extends FileSystem {
     (firstBlock to lastBlock).map { b =>
       val bStart = b * blockSize
       val bLen = math.min(bStart + blockSize, file.getLen) - bStart
-      new BlockLocation(Array(s"localhost$bStart:50010"),
-        Array(s"localhost$bStart"), bStart, bLen)
+      new BlockLocation(Array("localhost:50010"), Array("localhost"), bStart, bLen)
     }.toArray
   }
+}
+
+/** A backing-store status re-addressed into the `graft://` namespace,
+  * with the reference's fixed replication of 3 and the configured
+  * block size. Permission, owner and group are read from the backing
+  * status only when asked for: `RawLocalFileSystem` loads them lazily,
+  * and without the native Hadoop library each load starts a shell
+  * process — paying that on every stat and list entry made each one
+  * cost milliseconds, where Spark's scans and committers never read
+  * these fields.
+  */
+private final class GraftFileStatus(backing: FileStatus, blockSize: Long, path: Path)
+    extends FileStatus(backing.getLen, backing.isDirectory, 3, blockSize,
+      backing.getModificationTime, backing.getAccessTime, null, null, null, path) {
+  override def getPermission: FsPermission = backing.getPermission
+  override def getOwner: String = backing.getOwner
+  override def getGroup: String = backing.getGroup
 }
 
 /** The errno → Hadoop exception taxonomy of the reference's native

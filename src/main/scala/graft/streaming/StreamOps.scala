@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -83,9 +83,8 @@ object StreamOps {
     * work against any Hadoop-FS store, not just local disk.
     */
   private def pinMtimesToRangeOrder(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(p)
+    val fs = GraftSession.fsOf(spark, dir)
+    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(_.getPath.getName.startsWith("part-"))
       .sortBy(_.getPath.getName)
     parts.zipWithIndex.foreach { case (st, i) =>
@@ -101,10 +100,9 @@ object StreamOps {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val evPath = Tables.path(dir, "events")
     val rawSchema = spark.read.parquet(evPath).schema
-    val p = new org.apache.hadoop.fs.Path(evPath)
     val raw =
-      if (p.getFileSystem(spark.sessionState.newHadoopConf())
-          .getFileStatus(p).isDirectory)
+      if (GraftSession.fsOf(spark, evPath)
+          .getFileStatus(new org.apache.hadoop.fs.Path(evPath)).isDirectory)
         // multi-file table (e.g. a ScaleUp-synthesized sf): the dir IS
         // the stream source
         spark.readStream.schema(rawSchema).parquet(evPath)

@@ -12,13 +12,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a temp SQL function on a live session (the conf-free
-    * sibling of GraftExtensions.injectFunction).
-    */
-  def registerTemp(
-      spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
 }

@@ -219,12 +219,69 @@ class GraftFileSystemSpec extends SparkSuite {
     assert(all.length === 4)
     assert(all.map(_.getOffset).toSeq === Seq(0L, 256L << 10, 512L << 10, 768L << 10))
     assert(all.forall(_.getLength === (256L << 10)))
+    // every block names the one host a local store has: a phantom host
+    // per offset would hold each task for the full locality wait
+    assert(all.flatMap(_.getHosts).toSet === Set("localhost"))
     // a sub-range resolves only the overlapping block
     val mid = fs.getFileBlockLocations(st, 300000, 10)
     assert(mid.length === 1 && mid.head.getOffset === (256L << 10))
     // start beyond EOF: empty
     assert(fs.getFileBlockLocations(st, st.getLen, 1).isEmpty)
     intercept[IllegalArgumentException](fs.getFileBlockLocations(st, -1, 1))
+  }
+
+  test("a graft:// status reports the backing file's owner, group and permission") {
+    val (fs, root) = mountedFs("perm")
+    val p = new Path("graft://perm/dir/f.bin")
+    val out = fs.create(p, true)
+    out.write(Array[Byte](1, 2, 3))
+    out.close()
+    val local = FileSystem.getLocal(new Configuration()).getRawFileSystem
+    for ((graftSt, localPath) <- Seq(
+        fs.getFileStatus(p) -> new Path(s"file://$root/dir/f.bin"),
+        fs.getFileStatus(p.getParent) -> new Path(s"file://$root/dir"),
+        fs.listStatus(p.getParent).head -> new Path(s"file://$root/dir/f.bin"))) {
+      val localSt = local.getFileStatus(localPath)
+      assert(graftSt.getOwner === localSt.getOwner)
+      assert(graftSt.getGroup === localSt.getGroup)
+      assert(graftSt.getPermission === localSt.getPermission)
+      assert(graftSt.getOwner.nonEmpty)
+      // the connector's own contract rides along unchanged
+      assert(graftSt.getReplication === 3)
+      assert(graftSt.getBlockSize === (128L << 20))
+      assert(graftSt.getPath.toString.startsWith("graft://perm/dir"))
+    }
+  }
+
+  test("TextIndex build + appends on a graft:// volume finish under the default locality wait") {
+    import org.apache.spark.sql.functions.col
+    import scala.concurrent.{Await, Future, TimeoutException}
+    import scala.concurrent.duration._
+    assert(spark.conf.getOption("spark.locality.wait").isEmpty)
+    val root = Tables.scratch("graftfs_locality")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+    GraftFileSystem.mount(spark.sparkContext.hadoopConfiguration, "locvol", root)
+    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    val idx = "graft://locvol/idx"
+    val group = s"graftfs-locality-${System.nanoTime()}"
+    val work = Future {
+      spark.sparkContext.setJobGroup(group, "graft:// locality", interruptOnCancel = true)
+      try {
+        operators.TextIndex.buildIndex(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", idx)
+        (1 to 3).foreach { i =>
+          operators.TextIndex.appendDocs(docs.filter(col("doc_id") % 4 === i), "doc_id", "text", idx)
+        }
+        operators.TextIndex.indexStats(spark, idx).head.getAs[Long]("n_docs")
+      } finally spark.sparkContext.clearJobGroup()
+    }(scala.concurrent.ExecutionContext.global)
+    // the deadline cancels the job group, so a stalled scheduler fails
+    // this test instead of hanging the suite
+    val nDocs = try Await.result(work, 120.seconds) catch {
+      case e: TimeoutException =>
+        spark.sparkContext.cancelJobGroup(group)
+        fail("index build + appends on graft:// did not finish within 120 s", e)
+    }
+    assert(nDocs === docs.count())
   }
 
   test("a multi-block graft:// file plans as multiple scan partitions") {
