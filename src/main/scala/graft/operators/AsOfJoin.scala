@@ -38,6 +38,27 @@ object AsOfJoin {
       leftId: String, pickCols: Seq[String],
       tieBreak: String): DataFrame = {
     import graft.functions.VectorExpressions.pack_ord
+    import org.apache.spark.sql.types._
+    // the (rightTs, tieBreak) ordering packs into one decimal so every
+    // pick's max_by buffer is UnsafeRow-mutable and the aggregate stays
+    // a HashAggregate — the former struct ordering demoted it to a
+    // SortAggregate, a per-task sort of the full |left|·fanout join
+    // output. Timestamps enter as exact epoch micros, dates as epoch
+    // days; unmatched rows' all-null ordering keeps returning all-null
+    // picks (a matched group never contains a null-ordering row under
+    // left_outer). Any other type would need a cast that can null out
+    // or truncate the ordering, so it is rejected.
+    val tsAsLong = right.schema(rightTs).dataType match {
+      // NTZ routes through an instant cast — exact and monotone under
+      // the engine-wide pinned UTC session zone
+      case TimestampType | TimestampNTZType =>
+        unix_micros(right(rightTs).cast(TimestampType))
+      case DateType => unix_date(right(rightTs)).cast(LongType)
+      case ByteType | ShortType | IntegerType | LongType => right(rightTs).cast(LongType)
+      case other => throw new IllegalArgumentException(
+        s"latestBefore: rightTs column '$rightTs' has type ${other.simpleString}; " +
+          "expected a timestamp, date or integral type")
+    }
     // only (id, key, ts) rides through the fan-out join + aggregate;
     // grouping by every left column would shuffle full-width rows
     // multiplied by the per-key join fan-out. The remaining left columns
@@ -48,21 +69,6 @@ object AsOfJoin {
       right,
       probe(leftKey) === right(rightKey) && right(rightTs) <= probe(leftTs),
       "left_outer")
-    // the (rightTs, tieBreak) ordering packs into one decimal so every
-    // pick's max_by buffer is UnsafeRow-mutable and the aggregate stays
-    // a HashAggregate — the former struct ordering demoted it to a
-    // SortAggregate, a per-task sort of the full |left|·fanout join
-    // output. Timestamps enter as exact epoch micros; unmatched rows'
-    // all-null ordering keeps returning all-null picks (a matched
-    // group never contains a null-ordering row under left_outer).
-    val tsAsLong = right.schema(rightTs).dataType match {
-      // NTZ routes through an instant cast — exact and monotone under
-      // the engine-wide pinned UTC session zone
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType =>
-        unix_micros(right(rightTs).cast(org.apache.spark.sql.types.TimestampType))
-      case _ => right(rightTs).cast("long")
-    }
     val ord = pack_ord(tsAsLong, right(tieBreak))
     val picks = pickCols.map(c => max_by(right(c), ord).as(c))
     val picked = joined.groupBy(probe(leftId)).agg(picks.head, picks.tail: _*)

@@ -10,12 +10,12 @@ import org.apache.spark.sql.SparkSession
   * from the same change feed each commit their own generations
   * independently, so a reader between the two commits sees text at v3
   * and vectors at v1 — a torn hybrid ranking. The epoch manifest fixes
-  * that with one CAS: `_manifest_<n>` at the epoch root pins BOTH
+  * that with one CAS: manifest `<n>` at the epoch root pins BOTH
   * index generations (the text index's manifest content + the vector
   * index's committed ingest seq), published atomically (tmp write +
-  * rename, fail-if-exists — the [[Snapshots]] commit machinery
-  * verbatim). Cross-index readers resolve the max committed epoch and
-  * read each index AS OF its pinned generation
+  * rename, fail-if-exists — [[Commit.publish]], the machinery
+  * [[Snapshots]] commits through). Cross-index readers resolve the
+  * max committed epoch and read each index AS OF its pinned generation
   * ([[TextIndex.searchAllAsOf]], [[IvfIndex.loadLiveAsOf]]); the flip
   * to the new pair is the one rename, so there is no schedule in
   * which a reader observes a mixed pair. A crash anywhere between the
@@ -81,8 +81,9 @@ object IndexEpoch {
   def livePins(spark: SparkSession): (Seq[Seq[String]], Seq[Seq[String]]) = {
     val all = for {
       root <- registeredRoots(spark)
-      seq <- Snapshots.manifestSeqs(spark, root)
-    } yield Snapshots.readManifestLines(spark, root, seq)
+      fs = GraftSession.fsOf(spark, root)
+      seq <- Commit.numbered(fs, root, Commit.Manifest.prefix)
+    } yield Commit.read(fs, root, Commit.Manifest, seq)
     (all.map(_.filter(_.startsWith("t:")).map(_.stripPrefix("t:")))
        .filter(_.nonEmpty),
      all.map(_.filter(_.startsWith("v:")).map(_.stripPrefix("v:")))
@@ -97,9 +98,8 @@ object IndexEpoch {
     */
   def expire(spark: SparkSession, root: String, keepFrom: Int): Seq[Int] = {
     val fs = GraftSession.fsOf(spark, root)
-    val dropped = Snapshots.manifestSeqs(spark, root).filter(_ < keepFrom)
-    dropped.foreach(s => fs.delete(
-      new org.apache.hadoop.fs.Path(root, Snapshots.ManifestPrefix + s), false))
+    val dropped = Commit.numbered(fs, root, Commit.Manifest.prefix).filter(_ < keepFrom)
+    Commit.remove(fs, root, Commit.Manifest, dropped)
     dropped
   }
 
@@ -114,13 +114,9 @@ object IndexEpoch {
     * the published epoch number.
     */
   def publish(spark: SparkSession, root: String,
-      textPin: Seq[String], vecPin: Seq[String]): Int = {
-    val seqs = Snapshots.manifestSeqs(spark, root)
-    val next = if (seqs.isEmpty) 1 else seqs.max + 1
-    Snapshots.writeManifestLines(spark, root,
-      textPin.map("t:" + _) ++ vecPin.map("v:" + _),
-      sweep = false, expectedNext = Some(next))
-  }
+      textPin: Seq[String], vecPin: Seq[String]): Int =
+    Commit.publish(GraftSession.fsOf(spark, root), root, Commit.Manifest,
+      textPin.map("t:" + _) ++ vecPin.map("v:" + _))
 
   /** A NAMED committed epoch's pinned pair: (pinned text state,
     * pinned vector state) — the time-travel read of the epoch log
@@ -128,13 +124,15 @@ object IndexEpoch {
     * level). None if that epoch was never published or was expired.
     */
   def at(spark: SparkSession, root: String, epoch: Int)
-      : Option[(Seq[String], Seq[String])] =
-    if (!Snapshots.manifestSeqs(spark, root).contains(epoch)) None
+      : Option[(Seq[String], Seq[String])] = {
+    val fs = GraftSession.fsOf(spark, root)
+    if (!Commit.numbered(fs, root, Commit.Manifest.prefix).contains(epoch)) None
     else {
-      val lines = Snapshots.readManifestLines(spark, root, epoch)
+      val lines = Commit.read(fs, root, Commit.Manifest, epoch)
       Some((lines.filter(_.startsWith("t:")).map(_.stripPrefix("t:")),
         lines.filter(_.startsWith("v:")).map(_.stripPrefix("v:"))))
     }
+  }
 
   /** The current committed epoch: (epoch number, pinned text state,
     * pinned vector state) — one small FS read, no Spark job (the same
@@ -142,14 +140,9 @@ object IndexEpoch {
     * publish.
     */
   def current(spark: SparkSession, root: String)
-      : Option[(Int, Seq[String], Seq[String])] = {
-    val seqs = Snapshots.manifestSeqs(spark, root)
-    if (seqs.isEmpty) None
-    else {
-      val lines = Snapshots.readManifestLines(spark, root, seqs.max)
-      Some((seqs.max,
-        lines.filter(_.startsWith("t:")).map(_.stripPrefix("t:")),
-        lines.filter(_.startsWith("v:")).map(_.stripPrefix("v:"))))
+      : Option[(Int, Seq[String], Seq[String])] =
+    Commit.latest(GraftSession.fsOf(spark, root), root).map { case (n, lines) =>
+      (n, lines.filter(_.startsWith("t:")).map(_.stripPrefix("t:")),
+        lines.filter(_.startsWith("v:")).map(_.stripPrefix("v:")))
     }
-  }
 }

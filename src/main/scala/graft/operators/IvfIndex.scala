@@ -166,15 +166,8 @@ object IvfIndex {
   /** Live centroid generation: the max committed `_cgen_<n>` marker,
     * or 0 (the plain buildIndex layout).
     */
-  def liveCentroidGen(spark: SparkSession, path: String): Int = {
-    val fs = fsOf(spark, path)
-    val root = new Path(path)
-    if (!fs.exists(root)) 0
-    else fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith(CGenPrefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(CGenPrefix).toInt).toOption)
-      .foldLeft(0)(math.max)
-  }
+  def liveCentroidGen(spark: SparkSession, path: String): Int =
+    Commit.numbered(fsOf(spark, path), path, CGenPrefix).foldLeft(0)(math.max)
 
   // ── ingest sequences ──────────────────────────────────────────────
   // Every row carries the `ingest_seq` of the batch that wrote it
@@ -199,11 +192,7 @@ object IvfIndex {
     * markers. Build-time rows (seq 0) are implicitly committed.
     */
   private def seqMarkers(spark: SparkSession, path: String): (Set[Long], Set[Long]) = {
-    val fs = fsOf(spark, path)
-    val root = new Path(path)
-    if (!fs.exists(root)) return (Set.empty, Set.empty)
-    val names = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith(SeqPrefix)).toSeq
+    val names = Commit.names(fsOf(spark, path), path).filter(_.startsWith(SeqPrefix))
     def num(n: String, suffix: String) =
       scala.util.Try(n.stripPrefix(SeqPrefix).stripSuffix(suffix).toLong).toOption
     (names.filterNot(_.endsWith(ReservedSuffix)).flatMap(num(_, "")).toSet,
@@ -218,7 +207,7 @@ object IvfIndex {
     val (committed, reserved) = seqMarkers(spark, path)
     val next = (committed ++ reserved).foldLeft(0L)(math.max) + 1
     val fs = fsOf(spark, path)
-    if (!fs.createNewFile(new Path(s"$path/$SeqPrefix$next$ReservedSuffix")))
+    if (!Commit.claim(fs, new Path(s"$path/$SeqPrefix$next$ReservedSuffix")))
       throw new IllegalStateException(
         s"concurrent IVF append: seq $next already reserved")
     next
@@ -995,9 +984,7 @@ object IvfIndex {
       .parquet(centroidsGenPath(path, gen + 1))
     val fs = fsOf(spark, path)
     val marker = new Path(s"$path/$CGenPrefix${gen + 1}")
-    val created = try { fs.createNewFile(marker) } catch {
-      case _: java.io.IOException => false }
-    if (!created)
+    if (!Commit.claim(fs, marker))
       throw new IllegalStateException(
         s"concurrent IVF maintenance: commit marker $marker already exists")
     // the older-generation sweep is destructive and not CAS'd (the

@@ -57,7 +57,7 @@ import org.apache.spark.sql.SparkSession
   *     corrupt the index: its heartbeats stamp only its OWN sidecar
   *     (the stealer's marker is untouchable), TextIndex manifest
   *     commits are CAS'd against the manifest number their state was
-  *     read from ([[Snapshots.writeManifestLines]] `expectedNext`),
+  *     read from ([[Commit.publish]] `expectedNext`),
   *     IVF rebalance commits CAS the `_cgen_` marker, and the
   *     destructive non-CAS'd steps (IVF compaction's rewrite + hygiene
   *     tail, buildIndex's stale-artifact sweep, rebalance's purge)
@@ -101,12 +101,7 @@ private[graft] object MaintenanceLock {
   private def readBody(fs: org.apache.hadoop.fs.FileSystem,
       marker: Path): Option[(String, Option[Long])] =
     try {
-      val in = fs.open(marker)
-      val body = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8)
-      finally in.close()
-      val lines = body.split("\n", 2)
+      val lines = Commit.readString(fs, marker).split("\n", 2)
       Some((lines(0),
         lines.drop(1).headOption.flatMap(s =>
           scala.util.Try(s.trim.toLong).toOption)))
@@ -201,14 +196,9 @@ private[graft] object MaintenanceLock {
       held: Option[(String, Option[Long])]): Option[Long] = held match {
     case Some((token, bodyTs)) =>
       val hbTs =
-        try {
-          val in = fs.open(hbPath(path, token))
-          val s = try new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            StandardCharsets.UTF_8)
-          finally in.close()
-          scala.util.Try(s.trim.toLong).toOption
-        } catch { case _: java.io.IOException => None }
+        try scala.util.Try(
+          Commit.readString(fs, hbPath(path, token)).trim.toLong).toOption
+        catch { case _: java.io.IOException => None }
       hbTs.orElse(bodyTs).orElse(
         try Some(fs.getFileStatus(markerPath(path)).getModificationTime)
         catch { case _: java.io.IOException => None })

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.GraftSession.fsOf
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions.col
   * Layout: `root/parts/<partDir>/v_<N>/part-*.parquet` where
   * `<partDir>` is the hive-escaped `__p=<value>` directory produced by
   * Spark's partitioned writer and `N` is the table version that last
-  * rewrote the partition. The manifest (same immutable
-  * `_manifest.v_K` protocol as [[Snapshots]] — tmp + rename-to-fresh-
-  * name, last-wins) maps partition dir → data version:
+  * rewrote the partition. The manifest (the same immutable numbered
+  * chain as [[Snapshots]], published by [[Commit.publish]] — tmp +
+  * rename-to-fresh-name, last-wins) maps partition dir → data version:
   *
   *   `__p=A<TAB>3`   — partition A's data lives at parts/__p=A/v_3
   *
@@ -46,32 +46,32 @@ object PartitionedSnapshots {
     * dir names written. The writer's own hive escaping defines the dir
     * names, so value→dir mapping is consistent by construction.
     */
-  private def writeVersion(spark: SparkSession, root: String, df: DataFrame,
+  private def writeVersion(fs: FileSystem, root: String, df: DataFrame,
       partCol: String, v: Int): Seq[String] = {
     val stage = s"$root/.stage_v_$v"
     df.withColumn(StagePartCol, col(partCol))
       .write.partitionBy(StagePartCol).parquet(stage)
-    val f = fsOf(spark, root)
-    val dirs = f.listStatus(new Path(stage))
+    val dirs = fs.listStatus(new Path(stage))
       .filter(_.isDirectory).map(_.getPath.getName).toSeq
     dirs.foreach { d =>
       val dest = new Path(partPath(root, d, v))
-      f.mkdirs(dest.getParent)
-      if (!f.rename(new Path(stage, d), dest))
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(new Path(stage, d), dest))
         throw new java.io.IOException(s"failed to publish partition $d at v$v")
     }
-    f.delete(new Path(stage), true)
+    fs.delete(new Path(stage), true)
     dirs
   }
 
   /** partition dir → data version, from manifest sequence `version`
     * (latest when None). */
   def mapping(spark: SparkSession, root: String, version: Option[Int] = None): Map[String, Int] = {
-    val seqs = Snapshots.manifestSeqs(spark, root)
+    val fs = fsOf(spark, root)
+    val seqs = Commit.numbered(fs, root, Commit.Manifest.prefix)
     require(seqs.nonEmpty, s"no partitioned snapshot table at $root")
     val v = version.getOrElse(seqs.max)
     require(seqs.contains(v), s"version $v not committed (have ${seqs.mkString(",")})")
-    Snapshots.readManifestLines(spark, root, v).map { line =>
+    Commit.read(fs, root, Commit.Manifest, v).map { line =>
       val Array(dir, dv) = line.split("\t")
       dir -> dv.toInt
     }.toMap
@@ -79,7 +79,7 @@ object PartitionedSnapshots {
 
   /** Committed table versions in ascending order; empty if no table. */
   def versions(spark: SparkSession, root: String): Seq[Int] =
-    Snapshots.manifestSeqs(spark, root)
+    Commit.numbered(fsOf(spark, root), root, Commit.Manifest.prefix)
 
   // ── empty-table readability ─────────────────────────────────────────
   // A partitioned write of ZERO rows produces ZERO partition dirs — a
@@ -92,37 +92,27 @@ object PartitionedSnapshots {
 
   private val SchemaFile = "_schema.json"
 
-  private def writeSchema(spark: SparkSession, root: String, df: DataFrame): Unit = {
-    val out = fsOf(spark, root).create(new Path(root, SchemaFile), true)
-    try out.write(df.schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeSchema(fs: FileSystem, root: String, df: DataFrame): Unit =
+    Commit.writeString(fs, new Path(root, SchemaFile), df.schema.json)
 
   private def emptyTyped(spark: SparkSession, root: String): Option[DataFrame] = {
     val p = new Path(root, SchemaFile)
     val f = fsOf(spark, root)
     if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val json = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-      Some(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]))
-    }
+    else Some(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.DataType.fromJson(Commit.readString(f, p))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]))
   }
 
   /** Create the table at version 1 (drops any existing table at root). */
   def create(spark: SparkSession, root: String, df: DataFrame, partCol: String): Int = {
-    fsOf(spark, root).delete(new Path(root), true)
-    val dirs = writeVersion(spark, root, df, partCol, 1)
+    val fs = fsOf(spark, root)
+    fs.delete(new Path(root), true)
+    val dirs = writeVersion(fs, root, df, partCol, 1)
     // schema sidecar BEFORE the manifest commit (the commit publishes)
-    writeSchema(spark, root, df)
-    Snapshots.writeManifestLines(spark, root,
-      dirs.sorted.map(d => s"$d\t1"), sweep = false)
+    writeSchema(fs, root, df)
+    Commit.publish(fs, root, Commit.Manifest, dirs.sorted.map(d => s"$d\t1"))
   }
 
   /** Read table version `version` (latest when None): the union of
@@ -187,13 +177,13 @@ object PartitionedSnapshots {
     */
   def commitMerge(spark: SparkSession, root: String, updates: DataFrame,
       key: String, partCol: String): Int = {
+    val f = fsOf(spark, root)
     val cur = mapping(spark, root)
     val next = versions(spark, root).max + 1
     // Discover the touched partition dirs by stage-writing the delta
     // itself — delta-sized I/O, and the dir names are escaped by the
     // same writer that will write the merged output.
     val probe = s"$root/.probe_v_$next"
-    val f = fsOf(spark, root)
     updates.select(col(partCol).as(StagePartCol)).distinct()
       .withColumn("one", org.apache.spark.sql.functions.lit(1))
       .write.partitionBy(StagePartCol).parquet(probe)
@@ -207,15 +197,15 @@ object PartitionedSnapshots {
       else spark.read.parquet(
         existingTouched.map(d => partPath(root, d, cur(d))): _*)
     val merged = Upsert.merge(target, updates, key)
-    val written = writeVersion(spark, root, merged, partCol, next)
+    val written = writeVersion(f, root, merged, partCol, next)
     // refresh the schema sidecar on EVERY commit (one driver file
     // write): a create-time-only sidecar would hand empty reads a
     // schema that disagrees with non-empty reads once a later commit
     // widened the row type
-    writeSchema(spark, root, merged)
+    writeSchema(f, root, merged)
     val entries = (cur -- written) ++ written.map(_ -> next)
-    Snapshots.writeManifestLines(spark, root,
-      entries.toSeq.sorted.map { case (d, v) => s"$d\t$v" }, sweep = false)
+    Commit.publish(f, root, Commit.Manifest,
+      entries.toSeq.sorted.map { case (d, v) => s"$d\t$v" })
   }
 
   /** (path, length, modificationTime) of every data file a version

@@ -1,10 +1,8 @@
 package graft.operators
 
 import graft.GraftSession.fsOf
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-
-import java.nio.charset.StandardCharsets
 
 /** Versioned table snapshots with time travel — the capability the
   * reference's declared ecosystem gets from Iceberg tables under
@@ -34,106 +32,34 @@ import java.nio.charset.StandardCharsets
   * granularity changes.
   */
 object Snapshots {
-  private[operators] val ManifestPrefix = "_manifest.v_"
-
   private def versionPath(root: String, v: Int) = s"$root/v_$v"
+  private val VersionPrefix = "v_"
 
-  // Manifests are immutable, monotonically numbered files
-  // (_manifest.v_1, _manifest.v_2, ...); the LIVE manifest is the one
-  // with the highest sequence. Committing writes a NEW name (tmp +
-  // rename onto a path that does not exist — atomic on HDFS-like
-  // stores, and the rename FAILS rather than clobbers if a concurrent
-  // committer won the race). The previous manifest is never deleted
-  // before the new one is fully durable, so there is no instant at
-  // which the table has no resolvable manifest — the flaw of a
-  // delete-then-rename swap, where a crash in the window loses the
-  // whole table.
-  private[operators] def manifestSeqs(spark: SparkSession, root: String): Seq[Int] = {
-    val f = fsOf(spark, root)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) Seq.empty
-    else f.listStatus(rootPath).map(_.getPath.getName)
-      .filter(_.startsWith(ManifestPrefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(ManifestPrefix).toInt).toOption)
-      .toSeq.sorted
-  }
-
-  private[operators] def readManifestLines(spark: SparkSession, root: String, seq: Int): Seq[String] = {
-    val f = fsOf(spark, root)
-    val in = f.open(new Path(root, ManifestPrefix + seq))
-    try {
-      val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      new String(bytes, StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty).toSeq
-    } finally in.close()
-  }
-
-  private def readManifest(spark: SparkSession, root: String, seq: Int): Seq[Int] =
-    readManifestLines(spark, root, seq).map(_.toInt).sorted
+  // Manifests are immutable, monotonically numbered files committed
+  // through [[Commit.publish]]; the LIVE manifest is the one with the
+  // highest number, and its body lists the committed versions.
+  private def versionsOf(fs: FileSystem, root: String): Seq[Int] =
+    Commit.latest(fs, root).fold(Seq.empty[Int])(_._2.map(_.toInt).sorted)
 
   /** Committed versions in ascending order; empty if no table. */
-  def versions(spark: SparkSession, root: String): Seq[Int] = {
-    val seqs = manifestSeqs(spark, root)
-    if (seqs.isEmpty) Seq.empty else readManifest(spark, root, seqs.max)
-  }
+  def versions(spark: SparkSession, root: String): Seq[Int] =
+    versionsOf(fsOf(spark, root), root)
 
-  /** Commit `lines` as the next manifest; returns the new sequence.
-    * `sweep` keeps only the new manifest + one recovery spare — the
-    * whole-table layout wants that (version history lives INSIDE the
-    * manifest); the partition-sharded layout keeps every manifest,
-    * because each sequence IS a table version (time travel resolves
-    * old sequences directly).
-    */
-  /** `expectedNext`: compare-and-swap commit — commit EXACTLY at that
-    * manifest number or fail. Callers that computed their state from
-    * manifest n pass n+1, so a concurrent commit that landed since the
-    * state was read surfaces as a loud conflict instead of silently
-    * publishing totals/generations derived from a stale base (the
-    * lost-update window of recomputing `next` at commit time). A
-    * zombie writer whose intent lease was stolen dies here too.
-    */
-  private[graft] def writeManifestLines(spark: SparkSession, root: String,
-      lines: Seq[String], sweep: Boolean,
-      expectedNext: Option[Int] = None): Int = {
-    val f = fsOf(spark, root)
-    val seqs = manifestSeqs(spark, root)
-    val next = expectedNext.getOrElse(if (seqs.isEmpty) 1 else seqs.max + 1)
-    if (seqs.exists(_ >= next))
-      throw new java.io.IOException(
-        s"manifest commit conflict for $root at seq $next: a concurrent " +
-          s"commit already published seq ${seqs.max} — state was derived " +
-          "from a stale manifest; re-read and retry")
-    val tmp = new Path(root, s".tmp_manifest_$next")
-    val out = f.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // Atomic commit point. Renaming onto an EXISTING path returns
-    // false on Hadoop FileSystems → a lost race surfaces as a commit
-    // conflict instead of silently overwriting the winner.
-    if (!f.rename(tmp, new Path(root, ManifestPrefix + next))) {
-      f.delete(tmp, false)
-      throw new java.io.IOException(
-        s"manifest commit conflict for $root at seq $next (concurrent commit?)")
-    }
-    // Best-effort cleanup of superseded manifests, keeping the
-    // immediately previous one as a recovery spare. A crash here only
-    // leaves extra manifest files; resolution is last-wins regardless.
-    if (sweep)
-      seqs.filter(_ < next - 1)
-        .foreach(s => f.delete(new Path(root, ManifestPrefix + s), false))
-    next
-  }
+  // version history lives INSIDE the manifest, so only the new
+  // manifest and one recovery spare are kept
+  private def writeManifest(fs: FileSystem, root: String, vs: Seq[Int]): Unit =
+    Commit.publish(fs, root, Commit.Manifest, vs.sorted.map(_.toString),
+      sweep = true): Unit
 
-  private def writeManifest(spark: SparkSession, root: String, vs: Seq[Int]): Unit =
-    writeManifestLines(spark, root, vs.sorted.map(_.toString), sweep = true): Unit
-
-  /** Next fresh version number — GLOBAL across main and every branch
-    * ref, so a commit on any ref can never write into a `v_N` dir
-    * another ref already staged (the data-dir namespace is shared even
-    * though histories are per-ref).
+  /** Next fresh version number: above every committed version and
+    * every `v_N` directory on disk. The data-dir namespace is shared
+    * by main and every branch ref (histories are per-ref), and a
+    * commit that failed before its manifest publish leaves a `v_N`
+    * that no manifest names; a new commit writes into neither, so a
+    * re-run after such a failure needs no [[vacuum]] first.
     */
-  private def nextVersion(spark: SparkSession, root: String): Int =
-    (versions(spark, root) ++
-      branches(spark, root).flatMap(branchVersions(spark, root, _))).max + 1
+  private def nextVersion(fs: FileSystem, root: String, vs: Seq[Int]): Int =
+    (vs ++ Commit.names(fs, root).flatMap(Commit.seqOf(_, VersionPrefix))).max + 1
 
   // ---- transactional per-file column stats -------------------------
   //
@@ -154,16 +80,13 @@ object Snapshots {
 
   /** The table's registered stats/clustering columns; empty when the
     * table was created without them. */
-  def statsColumns(spark: SparkSession, root: String): Seq[String] = {
+  def statsColumns(spark: SparkSession, root: String): Seq[String] =
+    statsColumnsOf(fsOf(spark, root), root)
+
+  private def statsColumnsOf(fs: FileSystem, root: String): Seq[String] = {
     val p = new Path(root, StatsColsFile)
-    val f = fsOf(spark, root)
-    if (!f.exists(p)) Seq.empty
-    else {
-      val in = f.open(p)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      finally in.close()
-    }
+    if (!fs.exists(p)) Seq.empty
+    else Commit.readString(fs, p).split(",").map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   private def writeColumnStats(spark: SparkSession, root: String, v: Int,
@@ -232,16 +155,14 @@ object Snapshots {
     */
   def create(spark: SparkSession, root: String, df: DataFrame,
       statsCols: Seq[String] = Nil): Unit = {
-    val f = fsOf(spark, root)
-    f.delete(new Path(root), true)
+    val fs = fsOf(spark, root)
+    fs.delete(new Path(root), true)
     df.write.parquet(versionPath(root, 1))
     if (statsCols.nonEmpty) {
-      val out = f.create(new Path(root, StatsColsFile), true)
-      try out.write(statsCols.mkString(",").getBytes(StandardCharsets.UTF_8))
-      finally out.close()
+      Commit.writeString(fs, new Path(root, StatsColsFile), statsCols.mkString(","))
       writeColumnStats(spark, root, 1, statsCols)
     }
-    writeManifest(spark, root, Seq(1))
+    writeManifest(fs, root, Seq(1))
   }
 
   /** The resolved data directory of a committed version (latest when
@@ -284,21 +205,31 @@ object Snapshots {
     */
   def commitMerge(spark: SparkSession, root: String,
       updates: DataFrame, key: String, evolveSchema: Boolean = false): Int = {
-    val vs = versions(spark, root)
+    val fs = fsOf(spark, root)
+    val vs = versionsOf(fs, root)
     require(vs.nonEmpty, s"no snapshot table at $root")
-    val next = nextVersion(spark, root)
-    val merged =
-      if (evolveSchema) Upsert.mergeEvolve(read(spark, root), updates, key)
-      else Upsert.merge(read(spark, root), updates, key)
-    val statCols = statsColumns(spark, root)
+    val cur = spark.read.parquet(versionPath(root, vs.max))
+    commitRewrite(spark, fs, root, vs,
+      if (evolveSchema) Upsert.mergeEvolve(cur, updates, key)
+      else Upsert.merge(cur, updates, key))
+  }
+
+  /** Write `df` as the next version of main — an engine-owned rewrite
+    * of the head, so with registered stats columns it keeps the head's
+    * file count, clustered on those columns so per-file bounds stay
+    * tight, plus its stats sidecar — then publish it in main's
+    * manifest, the commit point. Returns the new version number.
+    */
+  private def commitRewrite(spark: SparkSession, fs: FileSystem, root: String,
+      vs: Seq[Int], df: DataFrame): Int = {
+    val next = nextVersion(fs, root, vs)
+    val statCols = statsColumnsOf(fs, root)
     val shaped =
-      if (statCols.isEmpty) merged
-      // engine-owned rewrite: keep the previous version's file count,
-      // cluster on the registered columns so per-file bounds stay tight
-      else clustered(merged, statCols, dataFiles(spark, root, vs.max).length)
+      if (statCols.isEmpty) df
+      else clustered(df, statCols, dataFiles(fs, root, vs.max).length)
     shaped.write.parquet(versionPath(root, next))
     if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeManifest(spark, root, vs :+ next)
+    writeManifest(fs, root, vs :+ next)
     next
   }
 
@@ -315,18 +246,11 @@ object Snapshots {
   def commitDelete(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val vs = versions(spark, root)
+    val fs = fsOf(spark, root)
+    val vs = versionsOf(fs, root)
     require(vs.nonEmpty, s"no snapshot table at $root")
-    val next = nextVersion(spark, root)
-    val remaining = read(spark, root).filter(not(coalesce(predicate, lit(false))))
-    val statCols = statsColumns(spark, root)
-    val shaped =
-      if (statCols.isEmpty) remaining
-      else clustered(remaining, statCols, dataFiles(spark, root, vs.max).length)
-    shaped.write.parquet(versionPath(root, next))
-    if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeManifest(spark, root, vs :+ next)
-    next
+    commitRewrite(spark, fs, root, vs, spark.read.parquet(versionPath(root, vs.max))
+      .filter(not(coalesce(predicate, lit(false)))))
   }
 
   /** UPDATE … SET … WHERE as a new snapshot commit (the Delta/Iceberg
@@ -343,10 +267,10 @@ object Snapshots {
       set: Map[String, org.apache.spark.sql.Column]): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, when}
     require(set.nonEmpty, "commitUpdate needs at least one assignment")
-    val vs = versions(spark, root)
+    val fs = fsOf(spark, root)
+    val vs = versionsOf(fs, root)
     require(vs.nonEmpty, s"no snapshot table at $root")
-    val next = nextVersion(spark, root)
-    val cur = read(spark, root)
+    val cur = spark.read.parquet(versionPath(root, vs.max))
     // SQL UPDATE fails analysis on an unknown SET target; a silent
     // no-op commit would be strictly worse. Match with the session's
     // resolver so case sensitivity follows spark.sql.caseSensitive.
@@ -358,20 +282,12 @@ object Snapshots {
     val hit = coalesce(predicate, lit(false))
     // one select, every assignment against the old row — sequential
     // withColumn would let one SET read another's output
-    val updated = cur.select(cur.columns.map { c =>
+    commitRewrite(spark, fs, root, vs, cur.select(cur.columns.map { c =>
       set.collectFirst { case (k, e) if resolver(c, k) => e } match {
         case Some(e) => when(hit, e).otherwise(cur(c)).as(c)
         case None => cur(c)
       }
-    }: _*)
-    val statCols = statsColumns(spark, root)
-    val shaped =
-      if (statCols.isEmpty) updated
-      else clustered(updated, statCols, dataFiles(spark, root, vs.max).length)
-    shaped.write.parquet(versionPath(root, next))
-    if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeManifest(spark, root, vs :+ next)
-    next
+    }: _*))
   }
 
   /** Roll the table back to `toVersion` by committing a NEW version
@@ -390,22 +306,22 @@ object Snapshots {
     * which is the fact-scale form.
     */
   def rollback(spark: SparkSession, root: String, toVersion: Int): Int = {
-    val vs = versions(spark, root)
+    val fs = fsOf(spark, root)
+    val vs = versionsOf(fs, root)
     require(vs.contains(toVersion),
       s"version $toVersion not in manifest (have ${vs.mkString(",")})")
-    val next = nextVersion(spark, root)
-    val f = fsOf(spark, root)
+    val next = nextVersion(fs, root, vs)
     org.apache.hadoop.fs.FileUtil.copy(
-      f, new Path(versionPath(root, toVersion)),
-      f, new Path(versionPath(root, next)),
+      fs, new Path(versionPath(root, toVersion)),
+      fs, new Path(versionPath(root, next)),
       false, spark.sessionState.newHadoopConf())
     // the byte-copy carries the target's _stats sidecar, but its
     // file_path values name the OLD version's files — rewrite the
     // stats against the new paths before publishing (conservative
     // lookups would otherwise just stop pruning, never miscount)
-    val statCols = statsColumns(spark, root)
+    val statCols = statsColumnsOf(fs, root)
     if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeManifest(spark, root, vs :+ next)
+    writeManifest(fs, root, vs :+ next)
     next
   }
 
@@ -469,14 +385,14 @@ object Snapshots {
       .select(col("__ch.img.*"), col("__ch._change_type").as("_change_type"))
   }
 
-  private def dataFiles(spark: SparkSession, root: String, v: Int) =
-    fsOf(spark, root).listStatus(new Path(versionPath(root, v)))
+  private def dataFiles(fs: FileSystem, root: String, v: Int) =
+    fs.listStatus(new Path(versionPath(root, v)))
       .filter(_.getPath.getName.startsWith("part-"))
 
   /** Committed data files of a version (count, total bytes) — the
     * observable a compaction changes. */
   def fileStats(spark: SparkSession, root: String, v: Int): (Int, Long) = {
-    val files = dataFiles(spark, root, v)
+    val files = dataFiles(fsOf(spark, root), root, v)
     (files.length, files.map(_.getLen).sum)
   }
 
@@ -495,22 +411,24 @@ object Snapshots {
     * input was.
     */
   def compact(spark: SparkSession, root: String, targetBytes: Long): (Int, Int, Int) = {
-    val vs = versions(spark, root)
+    val fs = fsOf(spark, root)
+    val vs = versionsOf(fs, root)
     require(vs.nonEmpty, s"no snapshot table at $root")
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val cur = vs.max
-    val (nBefore, totalBytes) = fileStats(spark, root, cur)
+    val curFiles = dataFiles(fs, root, cur)
+    val (nBefore, totalBytes) = (curFiles.length, curFiles.map(_.getLen).sum)
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val next = nextVersion(spark, root)
+    val next = nextVersion(fs, root, vs)
     val cur0 = spark.read.parquet(versionPath(root, cur))
-    val statCols = statsColumns(spark, root)
+    val statCols = statsColumnsOf(fs, root)
     val shaped =
       if (statCols.isEmpty) cur0.repartition(nFiles)
       else clustered(cur0, statCols, nFiles) // bin-pack AND re-cluster
     shaped.write.parquet(versionPath(root, next))
     if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeManifest(spark, root, vs :+ next)
-    (next, nBefore, dataFiles(spark, root, next).length)
+    writeManifest(fs, root, vs :+ next)
+    (next, nBefore, dataFiles(fs, root, next).length)
   }
 
   /** The table's version history as a DataFrame (Iceberg's `snapshots`
@@ -557,70 +475,22 @@ object Snapshots {
   // branch, audit the staged snapshot (expectations / row checks),
   // publish by fast-forward, or walk away and [[dropBranch]].
 
-  private def branchManifestPrefix(name: String) = s"_branch.$name.v_"
-
   private def requireBranchName(name: String): Unit =
     require(name.matches("[A-Za-z0-9_-]+"),
       s"branch name must be [A-Za-z0-9_-]+: '$name'")
 
-  private def branchSeqs(spark: SparkSession, root: String, name: String): Seq[Int] = {
-    val f = fsOf(spark, root)
-    val rootPath = new Path(root)
-    val prefix = branchManifestPrefix(name)
-    if (!f.exists(rootPath)) Seq.empty
-    else f.listStatus(rootPath).map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toInt).toOption)
-      .toSeq.sorted
-  }
-
-  private def writeBranchManifest(spark: SparkSession, root: String,
-      name: String, vs: Seq[Int], expectFirst: Boolean = false): Unit = {
-    val f = fsOf(spark, root)
-    val seqs = branchSeqs(spark, root, name)
-    require(!expectFirst || seqs.isEmpty, s"branch '$name' already exists at $root")
-    val next = if (seqs.isEmpty) 1 else seqs.max + 1
-    val tmp = new Path(root, s".tmp_branch_${name}_$next")
-    val out = f.create(tmp, true)
-    try out.write(vs.sorted.map(_.toString).mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // rename onto a fresh name is the atomic commit; a lost race (two
-    // creators, two committers) surfaces as a conflict, never a clobber
-    if (!f.rename(tmp, new Path(root, branchManifestPrefix(name) + next))) {
-      f.delete(tmp, false)
-      throw new java.io.IOException(
-        s"branch manifest commit conflict for '$name' at $root seq $next")
-    }
-    seqs.filter(_ < next - 1)
-      .foreach(s => f.delete(new Path(root, branchManifestPrefix(name) + s), false))
-  }
-
   /** Names of the table's live branches. */
-  def branches(spark: SparkSession, root: String): Seq[String] = {
-    val f = fsOf(spark, root)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) Seq.empty
-    else f.listStatus(rootPath).map(_.getPath.getName)
-      .filter(_.startsWith("_branch."))
-      .flatMap { n =>
-        val body = n.stripPrefix("_branch.")
-        val i = body.lastIndexOf(".v_")
-        if (i > 0) Some(body.substring(0, i)) else None
-      }.toSeq.distinct.sorted
-  }
+  def branches(spark: SparkSession, root: String): Seq[String] =
+    Commit.branches(fsOf(spark, root), root)
 
   /** The branch's committed versions (its visible history), ascending. */
-  def branchVersions(spark: SparkSession, root: String, name: String): Seq[Int] = {
-    val seqs = branchSeqs(spark, root, name)
-    require(seqs.nonEmpty, s"no branch '$name' at $root")
-    val f = fsOf(spark, root)
-    val in = f.open(new Path(root, branchManifestPrefix(name) + seqs.max))
-    try {
-      val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      new String(bytes, StandardCharsets.UTF_8)
-        .split("\n").filter(_.nonEmpty).map(_.toInt).toSeq.sorted
-    } finally in.close()
+  def branchVersions(spark: SparkSession, root: String, name: String): Seq[Int] =
+    branchVersionsOf(fsOf(spark, root), root, name)
+
+  private def branchVersionsOf(fs: FileSystem, root: String, name: String): Seq[Int] = {
+    val head = Commit.latest(fs, root, Commit.branch(name))
+    require(head.nonEmpty, s"no branch '$name' at $root")
+    head.get._2.map(_.toInt).sorted
   }
 
   /** Fork a branch from main at `at` (default: the current head). The
@@ -630,11 +500,17 @@ object Snapshots {
   def createBranch(spark: SparkSession, root: String, name: String,
       at: Option[Int] = None): Unit = {
     requireBranchName(name)
-    val vs = versions(spark, root)
+    val fs = fsOf(spark, root)
+    val vs = versionsOf(fs, root)
     require(vs.nonEmpty, s"no snapshot table at $root")
     val atV = at.getOrElse(vs.max)
     require(vs.contains(atV), s"fork version $atV not in manifest")
-    writeBranchManifest(spark, root, name, vs.filter(_ <= atV), expectFirst = true)
+    // a branch's first manifest is number 1: an existing branch of the
+    // same name (or a racing creator) makes that publish lose
+    try Commit.publish(fs, root, Commit.branch(name),
+      vs.filter(_ <= atV).map(_.toString), expectedNext = Some(1))
+    catch { case _: Commit.Conflict =>
+      throw new IllegalArgumentException(s"branch '$name' already exists at $root") }
   }
 
   /** Read the branch head (or a specific version on the branch). */
@@ -656,15 +532,17 @@ object Snapshots {
     */
   def commitToBranch(spark: SparkSession, root: String, name: String,
       df: DataFrame): Int = {
-    val bvs = branchVersions(spark, root, name) // also validates the branch
-    val next = nextVersion(spark, root)
-    val statCols = statsColumns(spark, root)
+    val fs = fsOf(spark, root)
+    val bvs = branchVersionsOf(fs, root, name) // also validates the branch
+    val next = nextVersion(fs, root, versionsOf(fs, root))
+    val statCols = statsColumnsOf(fs, root)
     val shaped =
       if (statCols.isEmpty) df
-      else clustered(df, statCols, dataFiles(spark, root, bvs.max).length)
+      else clustered(df, statCols, dataFiles(fs, root, bvs.max).length)
     shaped.write.parquet(versionPath(root, next))
     if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeBranchManifest(spark, root, name, bvs :+ next)
+    Commit.publish(fs, root, Commit.branch(name), (bvs :+ next).map(_.toString),
+      sweep = true)
     next
   }
 
@@ -676,12 +554,13 @@ object Snapshots {
     * head version. The branch ref stays; [[dropBranch]] retires it.
     */
   def fastForward(spark: SparkSession, root: String, name: String): Int = {
-    val bvs = branchVersions(spark, root, name)
-    val mvs = versions(spark, root)
+    val fs = fsOf(spark, root)
+    val bvs = branchVersionsOf(fs, root, name)
+    val mvs = versionsOf(fs, root)
     require(bvs.startsWith(mvs),
       s"main advanced since the fork of '$name' " +
         s"(main ${mvs.mkString(",")} is not a prefix of branch ${bvs.mkString(",")}); rebase")
-    if (bvs != mvs) writeManifest(spark, root, bvs)
+    if (bvs != mvs) writeManifest(fs, root, bvs)
     bvs.max
   }
 
@@ -689,9 +568,9 @@ object Snapshots {
     * become orphans that [[vacuum]] reclaims (age-guarded).
     */
   def dropBranch(spark: SparkSession, root: String, name: String): Unit = {
-    val f = fsOf(spark, root)
-    branchSeqs(spark, root, name).foreach(s =>
-      f.delete(new Path(root, branchManifestPrefix(name) + s), false))
+    val fs = fsOf(spark, root)
+    val chain = Commit.branch(name)
+    Commit.remove(fs, root, chain, Commit.numbered(fs, root, chain.prefix))
   }
 
   /** Delete crash-leaked `v_N` directories that no manifest ever
@@ -699,8 +578,8 @@ object Snapshots {
     * `commitMerge`'s data write and its manifest swap leaves a `v_N`
     * dir that readers can never resolve and `expire` never touches (it
     * only deletes versions DROPPED from the manifest). Also sweeps
-    * stale `.tmp_manifest_*` / `.tmp_branch_*` files from crashed
-    * manifest writes. Returns the deleted directory/file names.
+    * the stage files of crashed manifest publishes
+    * ([[Commit.isStaleTmp]]). Returns the deleted directory/file names.
     *
     * Versions referenced by ANY live branch ref count as live — a
     * staged-but-unpublished branch commit is resolvable through its
@@ -713,19 +592,18 @@ object Snapshots {
     * Iceberg's own safeguard for this exact race. Tests pass 0.
     */
   def vacuum(spark: SparkSession, root: String, olderThanMs: Long = 3600000L): Seq[String] = {
-    val f = fsOf(spark, root)
-    val live = versions(spark, root).toSet ++
-      branches(spark, root).flatMap(branchVersions(spark, root, _))
+    val fs = fsOf(spark, root)
+    val live = versionsOf(fs, root).toSet ++
+      Commit.branches(fs, root).flatMap(branchVersionsOf(fs, root, _))
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val orphans = f.listStatus(new Path(root)).toSeq.filter { st =>
+    val orphans = fs.listStatus(new Path(root)).toSeq.filter { st =>
       val n = st.getPath.getName
-      val leakedData = st.isDirectory && n.startsWith("v_") &&
-        scala.util.Try(n.stripPrefix("v_").toInt).toOption.exists(!live.contains(_))
-      val leakedTmp = !st.isDirectory &&
-        (n.startsWith(".tmp_manifest_") || n.startsWith(".tmp_branch_"))
+      val leakedData = st.isDirectory &&
+        Commit.seqOf(n, VersionPrefix).exists(!live.contains(_))
+      val leakedTmp = !st.isDirectory && Commit.isStaleTmp(n)
       (leakedData || leakedTmp) && st.getModificationTime <= cutoff
     }
-    orphans.foreach(st => f.delete(st.getPath, true))
+    orphans.foreach(st => fs.delete(st.getPath, true))
     orphans.map(_.getPath.getName)
   }
 
@@ -738,20 +616,20 @@ object Snapshots {
     */
   def expire(spark: SparkSession, root: String, retain: Int): Seq[Int] = {
     require(retain >= 1, s"must retain at least 1 version: $retain")
-    val vs = versions(spark, root)
+    val fs = fsOf(spark, root)
+    val vs = versionsOf(fs, root)
     require(vs.nonEmpty, s"no snapshot table at $root")
     val keep = vs.takeRight(retain)
     val drop = vs.dropRight(retain)
     if (drop.nonEmpty) {
-      writeManifest(spark, root, keep)
-      val f = fsOf(spark, root)
+      writeManifest(fs, root, keep)
       // a version expired from MAIN may still be resolvable through a
       // live branch ref (a fork below the expiry horizon) — drop it
       // from main's history but keep its data until the branch retires
-      val branchLive = branches(spark, root)
-        .flatMap(branchVersions(spark, root, _)).toSet
+      val branchLive = Commit.branches(fs, root)
+        .flatMap(branchVersionsOf(fs, root, _)).toSet
       drop.filterNot(branchLive.contains)
-        .foreach(v => f.delete(new Path(versionPath(root, v)), true))
+        .foreach(v => fs.delete(new Path(versionPath(root, v)), true))
     }
     drop
   }

@@ -166,24 +166,15 @@ object TextIndex {
     */
   // `mseq` is the MANIFEST number this state was read from (0 for a
   // fresh build) — the commit CASes at mseq+1, so a state derived from
-  // a superseded manifest cannot publish (see writeManifestLines).
+  // a superseded manifest cannot publish (see Commit.publish).
   private case class IndexState(fmt: Int, nBuckets: Int, seq: Long,
       nDocs: Long, sumDl: Long, nTombs: Long, gens: Gens, mseq: Int = 0)
 
   private def readState(spark: SparkSession, path: String): IndexState = {
-    val seqs = Snapshots.manifestSeqs(spark, path)
-    require(seqs.nonEmpty, s"no text index manifest at $path")
-    readStateAt(spark, path, seqs.max)
+    val head = Commit.latest(fsOf(spark, path), path)
+    require(head.nonEmpty, s"no text index manifest at $path")
+    parseState(head.get._2, head.get._1)
   }
-
-  /** The state AT a pinned manifest — the [[IndexEpoch]] read path:
-    * generations, seq ceiling, and tombstone horizon all resolve from
-    * manifest `mseq` instead of the live max, so an epoch-pinned
-    * reader sees the index exactly as that commit published it.
-    */
-  private def readStateAt(spark: SparkSession, path: String,
-      mseq: Int): IndexState =
-    parseState(Snapshots.readManifestLines(spark, path, mseq), mseq)
 
   private def parseState(lines: Seq[String], mseq: Int): IndexState = {
     // exported pins append non-kv "tombfile:" lines — ignore them here
@@ -208,15 +199,15 @@ object TextIndex {
     * files). One FS read + one listing, no Spark job.
     */
   def exportManifest(spark: SparkSession, path: String): Seq[String] = {
-    val seqs = Snapshots.manifestSeqs(spark, path)
-    require(seqs.nonEmpty, s"no text index manifest at $path")
+    val fs = fsOf(spark, path)
+    val head = Commit.latest(fs, path)
+    require(head.nonEmpty, s"no text index manifest at $path")
     val tombDir = new Path(s"$path/$TombstonesDir")
     val tombFiles =
-      if (!fsOf(spark, path).exists(tombDir)) Seq.empty[String]
-      else fsOf(spark, path).listStatus(tombDir).map(_.getPath.getName)
+      if (!fs.exists(tombDir)) Seq.empty[String]
+      else fs.listStatus(tombDir).map(_.getPath.getName)
         .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSeq.sorted
-    Snapshots.readManifestLines(spark, path, seqs.max) ++
-      tombFiles.map("tombfile:" + _)
+    head.get._2 ++ tombFiles.map("tombfile:" + _)
   }
 
   private def readGens(spark: SparkSession, path: String): Gens =
@@ -224,13 +215,13 @@ object TextIndex {
 
   private def commitState(spark: SparkSession, path: String,
       st: IndexState): Unit =
-    Snapshots.writeManifestLines(spark, path,
+    Commit.publish(fsOf(spark, path), path, Commit.Manifest,
       Seq(s"fmt=$Fmt", s"n_buckets=${st.nBuckets}", s"seq=${st.seq}",
         s"n_docs=${st.nDocs}", s"sum_dl=${st.sumDl}",
         s"n_tombs=${st.nTombs}",
         s"postings=${st.gens.postings}", s"term_stats=${st.gens.stats}",
         s"doc_stats=${st.gens.docs}"),
-      sweep = true, expectedNext = Some(st.mseq + 1)): Unit
+      expectedNext = Some(st.mseq + 1), sweep = true): Unit
 
   /** The manifest's LIVE corpus totals (n_docs, sum_dl) — the BM25
     * inputs, read straight off the committed manifest with zero jobs.
@@ -291,11 +282,8 @@ object TextIndex {
     // shield lifted from Snapshots.vacuum)
     val pinned = epochPinnedGens(spark, prefix)
     fs.listStatus(new Path(path))
-      .filter(_.getPath.getName.startsWith(prefix))
-      .filter { s =>
-        scala.util.Try(s.getPath.getName.stripPrefix(prefix).toInt)
-          .toOption.exists(g => g < keepFloor && !pinned.contains(g))
-      }
+      .filter(s => Commit.seqOf(s.getPath.getName, prefix)
+        .exists(g => g < keepFloor && !pinned.contains(g)))
       .foreach(s => fs.delete(s.getPath, true))
   }
 
@@ -521,15 +509,14 @@ object TextIndex {
   def appendDocs(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val spark = docs.sparkSession
-    if (Snapshots.manifestSeqs(spark, path).isEmpty) {
+    val fs = fsOf(spark, path)
+    if (Commit.numbered(fs, path, Commit.Manifest.prefix).isEmpty) {
       // first batch of a streaming ingest: no index yet — bootstrap
       // one, but ONLY into virgin ground. A non-empty dir without a
       // manifest is an unrecognized (legacy/corrupted) layout;
       // buildIndex would silently DELETE it and replace it with an
       // index of just this batch — refuse loudly instead.
-      val fs = fsOf(spark, path)
-      val p = new Path(path)
-      require(!fs.exists(p) || fs.listStatus(p).isEmpty,
+      require(Commit.names(fs, path).isEmpty,
         s"$path is non-empty but has no index manifest — refusing to " +
           "bootstrap over an unrecognized layout; rebuild explicitly " +
           "with buildIndex")
@@ -549,9 +536,8 @@ object TextIndex {
     // above the committed seq — masked from every reader, but this
     // batch publishes at that same seq, so purge them first or the
     // commit below would make both copies visible at once
-    val fs0 = fsOf(spark, path)
-    purgeOrphanFiles(fs0, new Path(postingsPath(path, st.gens.postings)), st.seq)
-    purgeOrphanFiles(fs0, new Path(docStatsPath(path, st.gens.docs)), st.seq)
+    purgeOrphanFiles(fs, new Path(postingsPath(path, st.gens.postings)), st.seq)
+    purgeOrphanFiles(fs, new Path(docStatsPath(path, st.gens.docs)), st.seq)
     val tmp = s"$path/$IngestTmpPrefix${java.util.UUID.randomUUID}"
     tokenizePostings(docs, idCol, textCol, st.nBuckets, newSeq)
       .repartition(col("bucket"))
@@ -562,7 +548,6 @@ object TextIndex {
     // the batch totals ride the write as observe metrics
     val (batchN, batchDl) = writeDocStats(docs, idCol, textCol,
       s"$tmp/docstats", SaveMode.Overwrite, newSeq)
-    val fs = fsOf(spark, path)
     val bucketDirs = fs.listStatus(new Path(s"$tmp/postings"))
       .filter(_.getPath.getName.startsWith("bucket="))
     // an all-empty batch (a streaming source can deliver one) touches
@@ -1095,8 +1080,8 @@ object TextIndex {
     * but before the manifest commit leaves a directory readers can
     * never resolve ([[Snapshots.vacuum]]'s orphan rule applied to
     * generations). Swept: generation dirs STRICTLY BELOW the reader
-    * spare (live-1), `_ingest_tmp_*` orphans, and stale
-    * `.tmp_manifest_*` files. Generations NUMBERED ABOVE the live one
+    * spare (live-1), `_ingest_tmp_*` orphans, and the stage files of
+    * crashed manifest publishes ([[Commit.isStaleTmp]]). Generations NUMBERED ABOVE the live one
     * are deliberately NOT candidates — they are indistinguishable from
     * an in-flight maintenance writer's about-to-commit output, and
     * deleting one would publish a missing directory when its manifest
@@ -1126,18 +1111,16 @@ object TextIndex {
     val pinnedByPrefix = Seq(PostingsPrefix, StatsPrefix, DocStatsPrefix)
       .map(p => p -> epochPinnedGens(spark, p)).toMap
     def leakedGen(name: String, prefix: String, live: Int) =
-      name.startsWith(prefix) &&
-        scala.util.Try(name.stripPrefix(prefix).toInt).toOption
-          // epoch-pinned generations are never orphans: a live pin's
-          // as-of read still resolves them (enforced retention)
-          .exists(g => g < live - 1 && !pinnedByPrefix(prefix).contains(g))
+      Commit.seqOf(name, prefix)
+        // epoch-pinned generations are never orphans: a live pin's
+        // as-of read still resolves them (enforced retention)
+        .exists(g => g < live - 1 && !pinnedByPrefix(prefix).contains(g))
     val orphans = fs.listStatus(new Path(path)).toSeq.filter { st =>
       val n = st.getPath.getName
       val leaked = leakedGen(n, PostingsPrefix, gens.postings) ||
         leakedGen(n, StatsPrefix, gens.stats) ||
         leakedGen(n, DocStatsPrefix, gens.docs) ||
-        n.startsWith(IngestTmpPrefix) ||
-        n.startsWith(".tmp_manifest_")
+        n.startsWith(IngestTmpPrefix) || Commit.isStaleTmp(n)
       leaked && st.getModificationTime <= cutoff
     }
     orphans.foreach(st => fs.delete(st.getPath, true))

@@ -190,8 +190,8 @@ class IndexEpochSpec extends SparkSuite {
     // a publisher that derived its state from epoch 1 (stale) must
     // lose the CAS, not silently overwrite epoch 2
     val thrown = intercept[java.io.IOException] {
-      graft.operators.Snapshots.writeManifestLines(spark, root,
-        Seq("t:stale"), sweep = false, expectedNext = Some(2))
+      graft.operators.Commit.publish(GraftSession.fsOf(spark, root), root,
+        graft.operators.Commit.Manifest, Seq("t:stale"), expectedNext = Some(2))
     }
     assert(thrown.getMessage.contains("conflict"))
     // the winner's epoch is intact

@@ -238,8 +238,11 @@ class SnapshotsSpec extends SparkSuite {
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(root, ".tmp_manifest_99")
     val out = f.create(tmp, true); out.write("1".getBytes); out.close()
+    // ... and a branch-manifest write that crashed before its rename
+    val btmp = new org.apache.hadoop.fs.Path(root, ".tmp_branch_audit_3")
+    val bout = f.create(btmp, true); bout.write("1".getBytes); bout.close()
     val removed = Snapshots.vacuum(spark, root, olderThanMs = 0L)
-    assert(removed.toSet === Set("v_9", ".tmp_manifest_99"))
+    assert(removed.toSet === Set("v_9", ".tmp_manifest_99", ".tmp_branch_audit_3"))
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$root/v_9")))
     // published versions are untouched
     assert(Snapshots.versions(spark, root) === Seq(1, 2))

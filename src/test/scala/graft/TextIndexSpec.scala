@@ -782,15 +782,17 @@ class TextIndexSpec extends SparkSuite {
     // both writers derived their state from "no manifest" → both
     // target seq 1; the first rename wins, the second must conflict
     // rather than publish state computed from a stale base
-    assert(graft.operators.Snapshots.writeManifestLines(
-      spark, root, Seq("a=1"), sweep = false, expectedNext = Some(1)) === 1)
+    import graft.operators.Commit
+    val fs = GraftSession.fsOf(spark, root)
+    assert(Commit.publish(
+      fs, root, Commit.Manifest, Seq("a=1"), expectedNext = Some(1)) === 1)
     intercept[java.io.IOException] {
-      graft.operators.Snapshots.writeManifestLines(
-        spark, root, Seq("a=2"), sweep = false, expectedNext = Some(1))
+      Commit.publish(
+        fs, root, Commit.Manifest, Seq("a=2"), expectedNext = Some(1))
     }
     // a writer that re-read state proceeds at the next number
-    assert(graft.operators.Snapshots.writeManifestLines(
-      spark, root, Seq("a=3"), sweep = false, expectedNext = Some(2)) === 2)
+    assert(Commit.publish(
+      fs, root, Commit.Manifest, Seq("a=3"), expectedNext = Some(2)) === 2)
   }
 
   test("two threads racing appendDocs: winner publishes, loser fails loudly; totals count exactly the winners") {
