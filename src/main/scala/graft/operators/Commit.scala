@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import java.io.IOException
 import java.nio.charset.StandardCharsets.UTF_8
@@ -11,10 +11,10 @@ import java.nio.charset.StandardCharsets.UTF_8
   * serves (`CubefsFileSystem.java:218-245`): create, rename onto a
   * fresh name, and delete.
   *
-  *   - Numbered files (`<prefix><n>`): manifests, branch refs, marker
-  *     generations. The live one is the highest `n`, so a reader
-  *     resolves state with one listing and one small read, never by
-  *     inspecting data directories.
+  *   - Numbered files (`<prefix><n>`): manifests and branch refs.
+  *     The live one is the highest `n`, so a reader resolves state
+  *     with one listing and one small read, never by inspecting data
+  *     directories.
   *   - [[publish]] writes a tmp file and renames it onto the next
   *     fresh number. The rename is the single commit point. Renaming
   *     onto an existing name returns false on Hadoop stores, so a lost
@@ -22,8 +22,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   *     previous manifest is never deleted before the new one is
   *     durable, so no instant leaves a table without a resolvable
   *     manifest (the flaw of a delete-then-rename swap).
-  *   - [[claim]] creates a body-less marker with fail-if-exists; the
-  *     create is the commit point.
+  *   - Appends to an index: [[publishFiles]] renames a staged batch
+  *     into the live data directories as `s<seq>-<name>` files, above
+  *     the committed seq and so invisible, before the manifest that
+  *     raises the seq commits; [[purgeOrphanFiles]] removes a crashed
+  *     batch's files before its re-run publishes at the same seq.
   *
   * Every call takes a `FileSystem` its caller already resolved, so a
   * verb opens its store once.
@@ -122,18 +125,61 @@ private[graft] object Commit {
     next
   }
 
+  /** Published-append file names are `s<seq>-<part name>`: the name
+    * carries the ingest seq of the batch, so a crashed batch is
+    * purgeable without opening a footer. */
+  private val AppendFileRe = "^s([0-9]+)-.*".r
+
+  /** The ingest seq a published-append file name carries. */
+  def appendSeqOf(name: String): Option[Long] = name match {
+    case AppendFileRe(s) => Some(s.toLong)
+    case _ => None
+  }
+
+  /** Rename every data file under `staged` into `dst` as
+    * `s<seq>-<name>`, mirroring partition directories; returns the
+    * published names relative to `dst`. The caller's manifest commit
+    * is what makes them visible (a reader's seq ceiling, or the
+    * manifest's file list). Throws when a rename answers false, so
+    * that commit never counts a file that did not land. */
+  def publishFiles(fs: FileSystem, staged: Path, dst: Path, seq: Long): Seq[String] = {
+    val (dirs, files) = fs.listStatus(staged).toSeq.partition(_.isDirectory)
+    val data = files.map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    if (data.nonEmpty && !fs.exists(dst)) fs.mkdirs(dst)
+    dirs.flatMap { d =>
+      val sub = d.getPath.getName
+      publishFiles(fs, d.getPath, new Path(dst, sub), seq).map(n => s"$sub/$n")
+    } ++ data.map { p =>
+      val name = s"s$seq-${p.getName}"
+      if (!fs.rename(p, new Path(dst, name)))
+        throw new IOException(s"publish of $p onto $dst/$name failed")
+      name
+    }
+  }
+
+  /** Delete files a crashed append published under `dir` (any nesting)
+    * with a seq above `committedSeq` and older than `olderThanMs`.
+    * Files without a seq prefix are never candidates: they publish
+    * through a manifest swap. Returns the deleted names. */
+  def purgeOrphanFiles(fs: FileSystem, dir: Path, committedSeq: Long,
+      olderThanMs: Long = 0L): Seq[String] = {
+    val cutoff = System.currentTimeMillis() - olderThanMs
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) purgeOrphanFiles(fs, st.getPath, committedSeq, olderThanMs)
+      else appendSeqOf(st.getPath.getName) match {
+        case Some(s) if s > committedSeq && st.getModificationTime <= cutoff =>
+          fs.delete(st.getPath, false)
+          Seq(st.getPath.getName)
+        case _ => Seq.empty
+      }
+    }
+  }
+
   /** Delete manifests `ns` of `chain`. */
   def remove(fs: FileSystem, dir: String, chain: Chain, ns: Seq[Int]): Unit =
     ns.foreach(n => fs.delete(new Path(dir, chain.prefix + n), false))
-
-  /** Create the empty marker `path`, failing if it exists; false when
-    * another writer got there first. `FileSystem.createNewFile`
-    * answers a lost race either with false (the name existed before
-    * the call) or with `FileAlreadyExistsException` (it appeared
-    * between the existence check and the create). */
-  def claim(fs: FileSystem, path: Path): Boolean =
-    try fs.createNewFile(path)
-    catch { case _: FileAlreadyExistsException => false }
 
   /** The whole body of the small file `path`. */
   def readString(fs: FileSystem, path: Path): String = {

@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * and vectors at v1 — a torn hybrid ranking. The epoch manifest fixes
   * that with one CAS: manifest `<n>` at the epoch root pins BOTH
   * index generations (the text index's manifest content + the vector
-  * index's committed ingest seq), published atomically (tmp write +
+  * index's manifest seq and centroid generation, each with its
+  * tombstone file list), published atomically (tmp write +
   * rename, fail-if-exists — [[Commit.publish]], the machinery
   * [[Snapshots]] commits through). Cross-index readers resolve the
   * max committed epoch and read each index AS OF its pinned generation

@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.VectorExpressions._
 import graft.InFlight.{await, inFlight}
 import graft.GraftSession.fsOf
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -40,6 +40,21 @@ import org.apache.spark.sql.functions._
   * codes (4× less I/O and memory bandwidth) and its exact re-rank
   * over the float column of the SAME pruned files, so the whole
   * two-stage query reads index files only — IVF-PQ-lite.
+  *
+  * == Commit protocol ==
+  *
+  * The committed state is one [[Commit.Manifest]] chain at the index
+  * root — `fmt`, `seq` (the committed ingest seq), `cgen` (the live
+  * centroid generation) and `lists` (the live list generation) — the
+  * TextIndex discipline. Every verb reads it once and commits with a
+  * CAS at the next manifest number, so a verb whose state went stale
+  * fails instead of publishing over a successor. Readers admit rows
+  * with `ingest_seq <= seq`; an append stages its batch, renames it
+  * into the live lists as `s<seq>-` files above that ceiling, and
+  * becomes visible only when its manifest lands. A rebalance commits
+  * `cgen+1`, a compaction `lists+1`, and [[buildIndex]] /
+  * [[mergeIndexes]] publish their first manifest last. A directory
+  * without a manifest is not read: it is refused with its path.
   */
 object IvfIndex {
 
@@ -85,12 +100,84 @@ object IvfIndex {
             .cast("byte")))
       .otherwise(transform(col(vecCol), _ => lit(0).cast("byte"))))
 
+  // ── committed state ───────────────────────────────────────────────
+  // Every row carries the `ingest_seq` of the batch that wrote it
+  // (build = 0). Tombstones are seq-scoped (`del_seq` = the committed
+  // seq at delete time): a row survives unless a tombstone for its id
+  // sits AT OR ABOVE its own ingest seq, which makes retract →
+  // re-ingest O(changes) with no compaction in between — the
+  // TextIndex fmt-4 discipline applied to the vector index.
+
+  private val Fmt = "ivf1"
+  private val IngestTmpPrefix = "_ingest_tmp_"
+  private val TombstonesDir = "tombstones"
+
+  /** The manifest content: committed ingest seq, live centroid
+    * generation, live list generation, and the manifest number it
+    * was read from (a commit CASes at `mseq + 1`).
+    */
+  private case class State(seq: Long, cgen: Int, lists: Int, mseq: Int)
+
+  private def stateOf(fs: FileSystem, path: String): State = {
+    val (mseq, lines) = Commit.latest(fs, path).getOrElse(
+      throw new IllegalStateException(
+        s"$path has no IVF index manifest (no index, a build that never " +
+          "committed, or a layout this binary does not read) — rebuild " +
+          "with buildIndex"))
+    val kv = lines.filter(_.contains("="))
+      .map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
+    if (!kv.get("fmt").contains(Fmt))
+      throw new IllegalStateException(
+        s"$path: manifest format ${kv.getOrElse("fmt", "?")} is not $Fmt " +
+          "— rebuild with buildIndex")
+    State(kv("seq").toLong, kv("cgen").toInt, kv("lists").toInt, mseq)
+  }
+
+  private def commit(fs: FileSystem, path: String, st: State): Unit =
+    Commit.publish(fs, path, Commit.Manifest,
+      Seq(s"fmt=$Fmt", s"seq=${st.seq}", s"cgen=${st.cgen}", s"lists=${st.lists}"),
+      expectedNext = Some(st.mseq + 1), sweep = true): Unit
+
+  /** The first manifest of a fresh layout (build, merge). */
+  private val Fresh = State(seq = 0L, cgen = 0, lists = 0, mseq = 0)
+
+  // Generation 0 of the centroids and of the lists is the buildIndex
+  // layout (`centroids`, `assigned`); [[rebalanceIndex]] and
+  // [[compactLists]] write the next generation fully before the
+  // manifest names it.
+  private def centroidsGenPath(path: String, gen: Int): String =
+    if (gen == 0) s"$path/centroids" else s"$path/centroids_g$gen"
+
+  private def listsGenPath(path: String, gen: Int): String =
+    if (gen == 0) s"$path/assigned" else s"$path/assigned_g$gen"
+
+  private def listsGenOf(name: String): Option[Int] =
+    if (name == "assigned") Some(0) else Commit.seqOf(name, "assigned_g")
+
+  /** Live centroid generation, from the manifest. */
+  def liveCentroidGen(spark: SparkSession, path: String): Int =
+    stateOf(fsOf(spark, path), path).cgen
+
+  /** Committed ingest seq (0 for a never-appended index), from the
+    * manifest.
+    */
+  def maxCommittedSeq(spark: SparkSession, path: String): Long =
+    stateOf(fsOf(spark, path), path).seq
+
+  /** The live list directory (`partitionBy("cluster")`) — for callers
+    * that read the physical layout (erasure audits, file-count
+    * assertions). Searches go through [[loadIndex]]/[[loadLive]].
+    */
+  def listsDir(spark: SparkSession, path: String): String =
+    listsGenPath(path, stateOf(fsOf(spark, path), path).lists)
+
   /** Persist a fitted index under `path`: the cluster-assigned corpus
     * written `partitionBy("cluster")` — one partition directory per
     * inverted list, the layout [[searchTopK]]'s probed-cluster filter
     * prunes at planning time — plus int8 codes per row and the
     * centroid table. Fit ONCE, search many — at scale a k-means refit
-    * per lookup is the difference between an index and a scan.
+    * per lookup is the difference between an index and a scan. The
+    * manifest publishes last, so a half-written build is never read.
     */
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, path: String, seed: Long = 42L): Unit = {
@@ -98,147 +185,63 @@ object IvfIndex {
     // the rebuild is itself a maintenance verb and SERIALIZES with the
     // others through the writer intent: a rebuild racing an in-flight
     // append/compaction fails loudly at acquire instead of deleting
-    // the holder's intent marker as "stale state" (which would reopen
-    // the unsynchronized-writer window — the holder's owner-checked
-    // release then no-ops and a third verb could acquire mid-flight)
+    // the holder's intent marker as "stale state"
     MaintenanceLock.withLockToken(corpus.sparkSession, path) { token =>
+    val fs = fsOf(corpus.sparkSession, path)
+    // ownership re-check before the sweep: it is destructive and not
+    // CAS'd — a rebuild whose lease was somehow stolen must die HERE,
+    // before it can delete a live successor's uncommitted artifacts
+    MaintenanceLock.assertHeld(corpus.sparkSession, path, token)
+    // idempotent init: the manifest goes first, so no reader resolves
+    // a half-cleared index, then every other artifact of a previous
+    // index at `path` (tombstones, generations, staged batches) but
+    // the writer intent
+    Commit.remove(fs, path, Commit.Manifest,
+      Commit.numbered(fs, path, Commit.Manifest.prefix))
+    Commit.names(fs, path).filterNot(MaintenanceLock.isLockFile)
+      .foreach(n => fs.delete(new Path(path, n), true))
+    // the centroid table is independent of the assigned write (both
+    // derive from the completed fit), so it lands as a concurrent job
+    val centF = inFlight {
+      centroids.coalesce(1).write.mode("overwrite").parquet(centroidsGenPath(path, 0))
+    }
     // cluster-exclusive shuffle before the partitioned write: ONE file
     // per inverted list instead of write-tasks × clusters small files
     // (the TextIndex bucket rule) — nCentroids doubles as the build's
     // write-parallelism lever, exactly how an IVF sizes itself: more
     // data → more lists → more parallel writers AND smaller probes
-    // idempotent init: a rebuild over a previously-used path must not
-    // inherit stale tombstones, seq markers, OR centroid generations —
-    // a leftover `_cgen_*` marker would make liveCentroidGen resolve a
-    // pre-rebuild centroid set whose cluster ids don't match the fresh
-    // `assigned` layout (silently wrong search, and vacuumIndex could
-    // then reap the new build's lists as "unreferenced"). The assigned
-    // dir is removed explicitly too: the overwrite below truncates it
-    // only under STATIC partitionOverwriteMode, and a caller session
-    // running dynamic mode would otherwise leave retired rebalance
-    // lists (cluster ids the fresh build never writes) alive.
-    val fs = fsOf(corpus.sparkSession, path)
-    // ownership re-check before the sweep: it is destructive and not
-    // CAS'd — a rebuild whose lease was somehow stolen (JVM paused
-    // past the full lease despite heartbeats) must die HERE, before it
-    // can delete a live successor's uncommitted artifacts
-    MaintenanceLock.assertHeld(corpus.sparkSession, path, token)
-    if (fs.exists(new Path(path)))
-      fs.listStatus(new Path(path)).map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith(SeqPrefix) || n == TombstonesDir ||
-            n.startsWith(CGenPrefix) || n.startsWith("centroids_g") ||
-            n == "assigned"
-        }
-        .foreach(fs.delete(_, true))
-    // the centroid table is independent of the assigned write (both
-    // derive from the completed fit), so it lands as a concurrent job —
-    // the build returns only once BOTH artifacts are on disk
-    val centF = inFlight {
-      centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    }
     withCodes(assigned, vecCol)
       .withColumn("ingest_seq", lit(0L))
       .repartition(col("cluster"))
       .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$path/assigned")
+      .parquet(listsGenPath(path, 0))
     await(centF)
+    commit(fs, path, Fresh)
     }
   }
 
-  // ── centroid generations ──────────────────────────────────────────
-  // [[rebalanceIndex]] republishes the centroid table; the swap must be
-  // atomic for readers (a search plans against ONE coherent centroid
-  // set) and safe against concurrent maintenance. Same discipline as
-  // TextIndex/Snapshots: the new generation's data directory is written
-  // fully, then a zero-byte `_cgen_<n>` marker is created with
-  // fail-if-exists — the marker IS the commit (two racing rebalances
-  // cannot both create it), and readers resolve max(committed marker).
-  // Generation 0 is the [[buildIndex]] layout (`centroids`, no marker),
-  // so indexes that were never rebalanced need no manifest at all.
-
-  private val CGenPrefix = "_cgen_"
-
-  private def centroidsGenPath(path: String, gen: Int): String =
-    if (gen == 0) s"$path/centroids" else s"$path/centroids_g$gen"
-
-  /** Live centroid generation: the max committed `_cgen_<n>` marker,
-    * or 0 (the plain buildIndex layout).
+  /** (assigned corpus at COMMITTED visibility, LIVE centroids) of
+    * state `st`.
     */
-  def liveCentroidGen(spark: SparkSession, path: String): Int =
-    Commit.numbered(fsOf(spark, path), path, CGenPrefix).foldLeft(0)(math.max)
-
-  // ── ingest sequences ──────────────────────────────────────────────
-  // Every row carries the `ingest_seq` of the batch that wrote it
-  // (build = 0). An append RESERVES its seq first (`_seq_<n>.reserved`
-  // marker, fail-if-exists), writes its rows, then COMMITS by renaming
-  // the marker to `_seq_<n>`. Readers admit only rows whose seq is at
-  // or below the max committed seq and not a crashed reservation — so
-  // a batch that died between its parquet write and its commit is
-  // invisible, and the re-run (which reserves a FRESH seq past the
-  // orphan) can never make duplicates visible. Tombstones are
-  // seq-scoped (`del_seq` = max committed at delete time): a row
-  // survives unless a tombstone for its id sits AT OR ABOVE its own
-  // ingest seq, which makes retract → re-ingest O(changes) with no
-  // compaction in between — the TextIndex fmt-4 discipline applied to
-  // the vector index. [[compactLists]] folds tombstones, squashes
-  // surviving rows to the max committed seq, and clears stale markers.
-
-  private val SeqPrefix = "_seq_"
-  private val ReservedSuffix = ".reserved"
-
-  /** (committed seqs, crashed/in-flight reserved seqs) from the root
-    * markers. Build-time rows (seq 0) are implicitly committed.
-    */
-  private def seqMarkers(spark: SparkSession, path: String): (Set[Long], Set[Long]) = {
-    val names = Commit.names(fsOf(spark, path), path).filter(_.startsWith(SeqPrefix))
-    def num(n: String, suffix: String) =
-      scala.util.Try(n.stripPrefix(SeqPrefix).stripSuffix(suffix).toLong).toOption
-    (names.filterNot(_.endsWith(ReservedSuffix)).flatMap(num(_, "")).toSet,
-      names.filter(_.endsWith(ReservedSuffix)).flatMap(num(_, ReservedSuffix)).toSet)
-  }
-
-  /** Max committed ingest seq (0 for a never-appended index). */
-  def maxCommittedSeq(spark: SparkSession, path: String): Long =
-    seqMarkers(spark, path)._1.foldLeft(0L)(math.max)
-
-  private def reserveSeq(spark: SparkSession, path: String): Long = {
-    val (committed, reserved) = seqMarkers(spark, path)
-    val next = (committed ++ reserved).foldLeft(0L)(math.max) + 1
-    val fs = fsOf(spark, path)
-    if (!Commit.claim(fs, new Path(s"$path/$SeqPrefix$next$ReservedSuffix")))
-      throw new IllegalStateException(
-        s"concurrent IVF append: seq $next already reserved")
-    next
-  }
-
-  private def commitSeq(spark: SparkSession, path: String, seq: Long): Unit = {
-    val fs = fsOf(spark, path)
-    if (!fs.rename(new Path(s"$path/$SeqPrefix$seq$ReservedSuffix"),
-        new Path(s"$path/$SeqPrefix$seq")))
-      throw new IllegalStateException(s"IVF seq commit failed for $seq")
-  }
+  private def loadAt(spark: SparkSession, fs: FileSystem, path: String,
+      st: State): (DataFrame, DataFrame) =
+    (spark.read.parquet(listsGenPath(path, st.lists))
+      .filter(col("ingest_seq") <= st.seq),
+      liveCentroids(spark, fs, path, st.cgen))
 
   /** Load a persisted index: (assigned corpus at COMMITTED visibility,
     * LIVE centroids). The visibility filter admits rows with
-    * `ingest_seq <= max committed` minus crashed reservations, so a
-    * half-published append is never served. Retired inverted lists a
-    * past [[rebalanceIndex]] left on disk are harmless through this
-    * API: every search restricts the scan to `cluster IN (<probed
-    * ids>)` and only live centroids are ever probed, so an
-    * unreferenced list's files are planned away with the unprobed
-    * ones. [[vacuumIndex]] reclaims them.
+    * `ingest_seq <=` the manifest's seq, so a half-published append is
+    * never served. Retired inverted lists a past [[rebalanceIndex]]
+    * left on disk are harmless through this API: every search
+    * restricts the scan to `cluster IN (<probed ids>)` and only live
+    * centroids are ever probed, so an unreferenced list's files are
+    * planned away with the unprobed ones. [[vacuumIndex]] reclaims
+    * them.
     */
   def loadIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val (committed, reserved) = seqMarkers(spark, path)
-    val maxC = committed.foldLeft(0L)(math.max)
-    val raw = spark.read.parquet(s"$path/assigned")
-    val visible0 = raw.filter(col("ingest_seq") <= maxC)
-    val visible =
-      if (reserved.isEmpty) visible0
-      else visible0.filter(!col("ingest_seq").isin(reserved.toSeq: _*))
-    (visible, liveCentroids(spark, path))
+    val fs = fsOf(spark, path)
+    loadAt(spark, fs, path, stateOf(fs, path))
   }
 
   /** Load the LIVE view of a persisted index: like [[loadIndex]] but
@@ -250,82 +253,68 @@ object IvfIndex {
     */
   def loadLive(spark: SparkSession, path: String,
       idCol: String): (DataFrame, DataFrame) = {
-    val (assigned, centroids) = loadIndex(spark, path)
-    (maskDeleted(spark, path, assigned, idCol), centroids)
+    val fs = fsOf(spark, path)
+    val (assigned, centroids) = loadAt(spark, fs, path, stateOf(fs, path))
+    (maskDeleted(spark, fs, path, assigned, idCol), centroids)
   }
 
   /** The live committed PIN — what [[IndexEpoch.publish]] embeds (the
-    * Iceberg snapshot pattern): the max committed ingest seq PLUS the
-    * tombstone sidecar's file list. The file list is load-bearing: a
-    * delete committed just after the pin carries `del_seq` equal to
-    * the pinned seq (tombstones are stamped with the max committed
-    * seq AT delete time), so seq arithmetic alone cannot tell
-    * "deleted at pin" from "deleted after pin" — only the listing
-    * can, exactly why Iceberg snapshots track their delete files.
-    * One listing, no Spark job.
+    * Iceberg snapshot pattern): the manifest's committed seq and
+    * centroid generation PLUS the tombstone sidecar's file list. The
+    * file list is load-bearing: a delete committed just after the pin
+    * carries `del_seq` equal to the pinned seq (tombstones are stamped
+    * with the committed seq AT delete time), so seq arithmetic alone
+    * cannot tell "deleted at pin" from "deleted after pin" — only the
+    * listing can, exactly why Iceberg snapshots track their delete
+    * files. The centroid generation scopes the read: after a
+    * rebalance the live generation's lists double-hold moved rows
+    * (retired dir + new sub-lists, until vacuum), and only the pinned
+    * generation's cluster set reads each row exactly once. One
+    * manifest read and one listing, no Spark job.
     */
   def exportPin(spark: SparkSession, path: String): Seq[String] = {
-    val seq = maxCommittedSeq(spark, path)
-    val tombDir = new Path(s"$path/$TombstonesDir")
-    val tombFiles =
-      if (!fsOf(spark, path).exists(tombDir)) Seq.empty[String]
-      else fsOf(spark, path).listStatus(tombDir).map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSeq.sorted
-    // the CENTROID GENERATION is part of the pin: after a rebalance the
-    // live generation's lists double-hold moved rows (retired dir +
-    // new sub-lists, until vacuum), and only the pinned generation's
-    // cluster set reads each row exactly once
-    Seq(s"seq=$seq", s"cgen=${liveCentroidGen(spark, path)}") ++
-      tombFiles.map("tombfile:" + _)
+    val fs = fsOf(spark, path)
+    val st = stateOf(fs, path)
+    val tombFiles = Commit.names(fs, s"$path/$TombstonesDir")
+      .filter(n => !n.startsWith("_") && !n.startsWith(".")).sorted
+    Seq(s"seq=${st.seq}", s"cgen=${st.cgen}") ++ tombFiles.map("tombfile:" + _)
   }
 
   /** [[loadLive]] AT A PIN ([[exportPin]]) — the epoch-coordinated
     * read ([[IndexEpoch]]): rows admit iff `ingest_seq <=` the pinned
-    * seq (minus crashed reservations), and the tombstone horizon is
-    * exactly the pin's file list — an append or delete committed
-    * AFTER the pin is invisible, so the epoch reader sees the index
-    * exactly as it was when the pin published. With the epoch root
-    * REGISTERED (`graft.epoch.roots`), layout maintenance retains the
-    * pinned rows, tombstone files, and centroid generation
-    * ([[IndexEpoch]] — enforced retention), so the read stays valid
-    * until the epoch is expired; unregistered pins keep the old
-    * until-layout-maintenance lifetime.
+    * seq, and the tombstone horizon is exactly the pin's file list —
+    * an append or delete committed AFTER the pin is invisible, so the
+    * epoch reader sees the index exactly as it was when the pin
+    * published. With the epoch root REGISTERED (`graft.epoch.roots`),
+    * layout maintenance retains the pinned rows, tombstone files, and
+    * centroid generation ([[IndexEpoch]] — enforced retention), so the
+    * read stays valid until the epoch is expired; unregistered pins
+    * keep the old until-layout-maintenance lifetime.
     */
   def loadLiveAsOf(spark: SparkSession, path: String, idCol: String,
       pin: Seq[String]): (DataFrame, DataFrame) = {
     val asOfSeq = pin.collectFirst {
       case l if l.startsWith("seq=") => l.stripPrefix("seq=").toLong
     }.getOrElse(sys.error("IVF pin missing seq"))
-    val tombFiles = pin.filter(_.startsWith("tombfile:"))
+    val pinTombs = pin.filter(_.startsWith("tombfile:"))
       .map(n => s"$path/$TombstonesDir/${n.stripPrefix("tombfile:")}")
-    // the pinned centroid GENERATION scopes the read: its cluster set
-    // is the partition filter (a rebalance since the pin double-holds
-    // moved rows across retired + new lists — only the pinned
-    // generation's clusters read each row exactly once), and its
-    // centroid table is what searches against this view must probe.
-    // Pins predating the cgen line fall back to the live generation.
+    val st = stateOf(fsOf(spark, path), path)
+    // the pinned centroid GENERATION is the partition filter and the
+    // centroid table searches against this view must probe. Pins
+    // predating the cgen line fall back to the live generation.
     val pinGen = pin.collectFirst {
       case l if l.startsWith("cgen=") => l.stripPrefix("cgen=").toInt
-    }.getOrElse(liveCentroidGen(spark, path))
+    }.getOrElse(st.cgen)
     val pinCentroids = spark.read.parquet(centroidsGenPath(path, pinGen))
-    val pinClusters = pinCentroids.select("centroid_id")
-      .collect().map(_.getInt(0)).toSeq
-    val (_, reserved) = seqMarkers(spark, path)
-    val raw = spark.read.parquet(s"$path/assigned")
+    val pinClusters = centroidIds(pinCentroids)
+    val visible = spark.read.parquet(listsGenPath(path, st.lists))
       .filter(col("cluster").isin(pinClusters: _*))
       .filter(col("ingest_seq") <= asOfSeq)
-    val visible =
-      if (reserved.isEmpty) raw
-      else raw.filter(!col("ingest_seq").isin(reserved.toSeq: _*))
     val masked =
-      if (tombFiles.isEmpty) visible
+      if (pinTombs.isEmpty) visible
       else {
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("del_id",
-            visible.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("del_seq",
-            org.apache.spark.sql.types.LongType)))
-        val pinned = spark.read.schema(schema).parquet(tombFiles: _*)
+        val pinned = spark.read.schema(tombSchema(visible.schema(idCol).dataType))
+          .parquet(pinTombs: _*)
           .groupBy("del_id").agg(max("del_seq").as("del_seq"))
         visible.join(broadcast(pinned),
           visible(idCol) === pinned("del_id") &&
@@ -335,20 +324,6 @@ object IvfIndex {
     (masked, pinCentroids)
   }
 
-  /** Incremental maintenance: assign NEW vectors to the EXISTING
-    * centroids (nearest-centroid, no refit) and append them to the
-    * persisted inverted lists — FAISS's add-without-train, the ingest
-    * path an index needs at scale: a per-batch k-means refit re-scans
-    * the whole corpus, while assignment is one broadcast crossJoin +
-    * `min_by` partial aggregation over the batch — O(batch ×
-    * nCentroids) work, no shuffle of anything corpus-sized, no window.
-    * The append lands INSIDE the cluster partition directories (same
-    * `partitionBy` layout as the build), so searches over the grown
-    * index keep pruning to probed lists. Ties break by centroid id,
-    * matching the deterministic argmin the fit-time transform
-    * computes. Centroid staleness under distribution drift is the
-    * caller's rebuild-cadence policy, as in any IVF system.
-    */
   // ── centroid pairing: literal projection, broadcast fallback ─────
   // The centroid table is driver-resident BY CONSTRUCTION — the
   // KMeans model that produced it lives on the driver, and every
@@ -400,19 +375,13 @@ object IvfIndex {
       (String, org.apache.spark.sql.types.StructType,
         java.util.List[org.apache.spark.sql.Row])]()
 
-  private def dirSignature(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): String =
-    fs.listStatus(dir)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString(",")
-
   /** The LIVE centroid table, served from the driver cache when its
     * on-disk bytes sit under the literal gate (nCentroids is a chosen
     * parameter — metadata, not data).
     */
-  private def liveCentroids(spark: SparkSession, path: String): DataFrame = {
-    val p = centroidsGenPath(path, liveCentroidGen(spark, path))
-    val fs = fsOf(spark, path)
+  private def liveCentroids(spark: SparkSession, fs: FileSystem, path: String,
+      gen: Int): DataFrame = {
+    val p = centroidsGenPath(path, gen)
     val dir = new Path(p)
     val statuses = fs.listStatus(dir)
     // gate on raw parquet bytes (floats are ≥4B encoded): past it the
@@ -471,43 +440,59 @@ object IvfIndex {
             .map(c => col(s"__best.$c")): _*)
     }
 
+  /** Incremental maintenance: assign NEW vectors to the EXISTING
+    * centroids (nearest-centroid, no refit) and append them to the
+    * persisted inverted lists — FAISS's add-without-train, the ingest
+    * path an index needs at scale: a per-batch k-means refit re-scans
+    * the whole corpus, while assignment is one broadcast crossJoin +
+    * `min_by` partial aggregation over the batch — O(batch ×
+    * nCentroids) work, no shuffle of anything corpus-sized, no window.
+    * The append lands INSIDE the cluster partition directories (same
+    * `partitionBy` layout as the build), so searches over the grown
+    * index keep pruning to probed lists. Ties break by centroid id,
+    * matching the deterministic argmin the fit-time transform
+    * computes. Centroid staleness under distribution drift is the
+    * caller's rebuild-cadence policy, as in any IVF system.
+    */
   def appendToIndex(newVecs: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
     val spark = newVecs.sparkSession
-    // single-writer intent (MaintenanceLock): the seq reservation
-    // already makes two same-seq appends loud, but an append racing a
-    // compaction/rebalance could have its rows dropped by the
-    // dynamic-overwrite rewrite, its reservation stranded by marker
-    // hygiene, or its target list retired mid-write — the intent
-    // makes every such interleaving fail loudly BEFORE any write
+    // single-writer intent (MaintenanceLock): an append racing a
+    // compaction/rebalance could land in a list generation being
+    // superseded or a list being retired mid-write — the intent makes
+    // every such interleaving fail loudly BEFORE any write
     MaintenanceLock.withLock(spark, path) {
-    // the LIVE centroid table only (driver-cached) — loadIndex would
-    // also list the assigned layout's files for its visibility view,
-    // an O(lists) metadata read the append never consumes
-    val centroids = liveCentroids(spark, path)
-    // reserve → write → commit: the batch's rows are invisible (seq
-    // above the committed ceiling) until the marker rename lands, so a
-    // crash mid-append publishes nothing and the re-run's FRESH seq
-    // can't collide with the orphan rows
-    val seq = reserveSeq(spark, path)
-    withCodes(assignToCentroids(newVecs, centroids, idCol, vecCol), vecCol)
+    val fs = fsOf(spark, path)
+    val st = stateOf(fs, path)
+    val lists = new Path(listsGenPath(path, st.lists))
+    // a PRIOR append that crashed mid-publish left `s<seq>-` files
+    // above the committed seq — invisible, but this batch publishes at
+    // that same seq, so purge them first or the commit below would
+    // make both copies visible at once
+    Commit.purgeOrphanFiles(fs, lists, st.seq)
+    val seq = st.seq + 1
+    // stage → publish → commit: the batch's rows carry a seq above the
+    // committed ceiling, so nothing of it is visible until the
+    // manifest lands. The centroids are the driver-cached live table.
+    val tmp = new Path(path, s"$IngestTmpPrefix${java.util.UUID.randomUUID}")
+    withCodes(assignToCentroids(newVecs,
+        liveCentroids(spark, fs, path, st.cgen), idCol, vecCol), vecCol)
       .withColumn("ingest_seq", lit(seq))
       .repartition(col("cluster")) // one file per touched list per batch
-      .write.mode("append").partitionBy("cluster")
-      .parquet(s"$path/assigned")
-    commitSeq(spark, path, seq)
+      .write.partitionBy("cluster").parquet(tmp.toString)
+    Commit.publishFiles(fs, tmp, lists, seq)
+    fs.delete(tmp, true)
+    commit(fs, path, st.copy(seq = seq))
     }
   }
 
   // ── deletion (retraction) ─────────────────────────────────────────
 
-  private val TombstonesDir = "tombstones"
-
   /** Retract vectors from a persisted index — the GDPR-erasure /
     * unlearning verb, O(deleted ids): one tombstone append, no list is
     * read or rewritten. Tombstones are SEQ-SCOPED — each carries the
-    * max committed ingest seq at delete time, and the mask removes a
-    * row only if a tombstone for its id sits at or above the row's own
+    * committed ingest seq at delete time, and the mask removes a row
+    * only if a tombstone for its id sits at or above the row's own
     * ingest seq. Deletion is therefore visible immediately and
     * exactly, AND a later [[appendToIndex]] re-adding the same id is
     * visible the moment it lands (its rows carry a higher seq) — no
@@ -523,8 +508,9 @@ object IvfIndex {
     // a tombstone landing mid-compaction would be cleared unfolded
     // (a silently lost erasure)
     MaintenanceLock.withLock(spark, path) {
+    val st = stateOf(fsOf(spark, path), path)
     // tombstones are keyed in the INDEX'S OWN id type (read from the
-    // assigned layout's parquet footer — a metadata read): a blind
+    // list layout's parquet footer — a metadata read): a blind
     // cast("long") would turn a string-keyed index's erasure verb into
     // a silent no-op (cast → null → anti-join matches nothing). Ids
     // that don't fit the index type fail LOUDLY instead — validated
@@ -532,8 +518,7 @@ object IvfIndex {
     // so the verb is ONE Spark job, not a count pass plus a write
     // pass; a raised error aborts the write before any file commits,
     // the same visibility as the former pre-count.
-    val idType = spark.read.parquet(s"$path/assigned").schema(idCol).dataType
-    val seq = maxCommittedSeq(spark, path)
+    val idType = spark.read.parquet(listsGenPath(path, st.lists)).schema(idCol).dataType
     val typed = ids.select(col(idCol).as("__raw"))
       .withColumn("del_id",
         when(col("__raw").isNotNull && col("__raw").cast(idType).isNull,
@@ -542,7 +527,7 @@ object IvfIndex {
             lit(s"' not castable to the index id type $idType"))).cast(idType))
         .otherwise(col("__raw").cast(idType)))
       .select("del_id").distinct()
-      .withColumn("del_seq", lit(seq))
+      .withColumn("del_seq", lit(st.seq))
     try typed.coalesce(1).write.mode("append").parquet(s"$path/$TombstonesDir")
     catch {
       // surface the in-job validation as the API's contract exception
@@ -556,29 +541,31 @@ object IvfIndex {
     }
   }
 
-  /** Per-id tombstone horizon: (del_id, del_seq = max over that id's
-    * tombstones). Read with an EXPLICIT schema — del_id in the index's
-    * own id type, del_seq long — so a sidecar holding files of mixed
-    * del_id widths (e.g. a pre-typed-delete index whose old files were
-    * written long before [[deleteFromIndex]] learned native keying)
-    * either reads deterministically via parquet upcast or fails LOUDLY,
-    * instead of mis-typing on whichever footer schema-merge picks.
+  /** The tombstone sidecar's schema: del_id in the index's own id
+    * type, del_seq long.
     */
-  private def tombstonesOf(spark: SparkSession, path: String,
-      idType: org.apache.spark.sql.types.DataType): Option[DataFrame] = {
-    val p = new Path(s"$path/$TombstonesDir")
-    if (fsOf(spark, path).exists(p)) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("del_id", idType),
-        org.apache.spark.sql.types.StructField("del_seq",
-          org.apache.spark.sql.types.LongType)))
-      Some(spark.read.schema(schema).parquet(p.toString)
-        .groupBy("del_id").agg(max("del_seq").as("del_seq")))
-    } else None
+  private def tombSchema(idType: org.apache.spark.sql.types.DataType) = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("del_id", idType), StructField("del_seq", LongType)))
   }
 
-  private def tombstonesExist(spark: SparkSession, path: String): Boolean =
-    fsOf(spark, path).exists(new Path(s"$path/$TombstonesDir"))
+  /** Per-id tombstone horizon: (del_id, del_seq = max over that id's
+    * tombstones). Read with an EXPLICIT schema ([[tombSchema]]) so a
+    * sidecar holding files of mixed del_id widths (e.g. a
+    * pre-typed-delete index whose old files were written long before
+    * [[deleteFromIndex]] learned native keying) either reads
+    * deterministically via parquet upcast or fails LOUDLY, instead of
+    * mis-typing on whichever footer schema-merge picks.
+    */
+  private def tombstonesOf(spark: SparkSession, fs: FileSystem, path: String,
+      idType: org.apache.spark.sql.types.DataType): Option[DataFrame] =
+    if (tombstonesExist(fs, path))
+      Some(spark.read.schema(tombSchema(idType)).parquet(s"$path/$TombstonesDir")
+        .groupBy("del_id").agg(max("del_seq").as("del_seq")))
+    else None
+
+  private def tombstonesExist(fs: FileSystem, path: String): Boolean =
+    fs.exists(new Path(s"$path/$TombstonesDir"))
 
   /** Pinned vector-index states across every live epoch of every
     * registered epoch root ([[IndexEpoch.livePins]]): (pinned seq,
@@ -601,18 +588,19 @@ object IvfIndex {
     }
 
   /** Cluster ids of every epoch-pinned centroid generation that exists
-    * on disk — lists [[purgeUnreferencedLists]] must treat as
+    * on disk — lists the layout-maintenance verbs must treat as
     * referenced whatever the live generation says.
     */
-  private def epochPinnedClusterIds(spark: SparkSession, path: String): Set[Int] = {
-    val fs = fsOf(spark, path)
-    epochPinnedVec(spark).map(_._3).distinct.flatMap { g =>
-      val p = centroidsGenPath(path, g)
-      if (fs.exists(new Path(p)))
-        spark.read.parquet(p).select("centroid_id")
-          .collect().map(_.getInt(0)).toSeq
-      else Seq.empty
-    }.toSet
+  private def epochPinnedClusterIds(spark: SparkSession, fs: FileSystem,
+      path: String): Set[Int] =
+    epochPinnedVec(spark).map(_._3).distinct
+      .flatMap(genClusterIds(spark, fs, path, _)).toSet
+
+  /** Cluster ids of centroid generation `g`; empty when it is gone. */
+  private def genClusterIds(spark: SparkSession, fs: FileSystem, path: String,
+      g: Int): Seq[Int] = {
+    val p = centroidsGenPath(path, g)
+    if (fs.exists(new Path(p))) centroidIds(spark.read.parquet(p)) else Seq.empty
   }
 
   /** Anti-join the tombstone horizon out of an index frame: a row dies
@@ -622,9 +610,9 @@ object IvfIndex {
     * tiny next to a list scan — an index whose deletes outrun its
     * compaction cadence should compact, not ship a giant horizon).
     */
-  private def maskDeleted(spark: SparkSession, path: String,
+  private def maskDeleted(spark: SparkSession, fs: FileSystem, path: String,
       df: DataFrame, idCol: String): DataFrame =
-    tombstonesOf(spark, path, df.schema(idCol).dataType) match {
+    tombstonesOf(spark, fs, path, df.schema(idCol).dataType) match {
       case Some(t) =>
         df.join(broadcast(t),
           df(idCol) === t("del_id") && df("ingest_seq") <= t("del_seq"),
@@ -632,46 +620,51 @@ object IvfIndex {
       case None => df
     }
 
-  /** Fold pending tombstones into the physical layout: every live list
-    * is rewritten without its masked rows (one dynamic-partition
-    * overwrite — only live partitions are touched), lists left empty
-    * are dropped, and the tombstone sidecar is cleared LAST. Crash-safe
-    * by mask idempotence: at any interruption point the surviving
-    * tombstones still mask whatever a half-done rewrite left behind,
-    * so reads stay exact and a re-run completes the fold.
+  private def centroidIds(centroids: DataFrame): Seq[Int] =
+    centroids.select("centroid_id").collect().map(_.getInt(0)).toSeq
+
+  /** Fold pending tombstones into the physical layout: the kept rows
+    * of every live list are written as the NEXT list generation
+    * (lists left empty simply do not appear in it), the manifest then
+    * names that generation, and the superseded generation and the
+    * tombstone sidecar are deleted after the commit. Readers see the
+    * old generation or the new one, never a list in between; a crash
+    * before the commit leaves an unreferenced generation that the
+    * re-run overwrites, and one after it leaves garbage that
+    * [[vacuumIndex]] reclaims.
     */
   def compactLists(spark: SparkSession, path: String, idCol: String): Unit = {
-    if (!tombstonesExist(spark, path)) return
+    val fs = fsOf(spark, path)
+    if (!tombstonesExist(fs, path)) return
     MaintenanceLock.withLockToken(spark, path) { token =>
-    val (assigned, centroids) = loadIndex(spark, path)
-    val live = centroids.select("centroid_id").collect().map(_.getInt(0)).toSeq
-    val maxC = maxCommittedSeq(spark, path)
-    // surviving rows squash to the max committed seq, which lets the
-    // stale seq markers retire below. Safe against the rewrite-done/
-    // tombstones-not-yet-cleared crash window: a re-added row's
-    // tombstone necessarily sits STRICTLY below maxC (its re-ingest
-    // committed a higher seq), so the squashed row still clears the
-    // horizon; fully-dead ids have no rows left to mask.
+    val st = stateOf(fs, path)
+    val (assigned, centroids) = loadAt(spark, fs, path, st)
+    val live = centroidIds(centroids)
+    // surviving rows squash to the committed seq: the fold is one
+    // ingest point, and every row that survives it already sits above
+    // its id's tombstones, so the squash cannot expose it to one.
     //
     // ENFORCED EPOCH-PIN RETENTION: with live epoch pins registered
     // (graft.epoch.roots), the fold keeps every row ANY pin still
     // serves (ingest_seq ≤ pin seq and not masked under the pin's own
-    // tombstone files), seqs are NOT squashed (the pins' ceilings must
-    // keep partitioning rows), and the tombstone sidecar is retained
-    // in full (pinned files are opened by path by the as-of reads;
-    // unpinned files still mask the kept-but-dead rows for live
+    // tombstone files) — including the lists of pinned retired
+    // centroid generations — seqs are NOT squashed (the pins' ceilings
+    // must keep partitioning rows), and the tombstone sidecar is
+    // retained in full (pinned files are opened by path by the as-of
+    // reads; unpinned files still mask the kept-but-dead rows for live
     // readers — re-applying either against purged rows is a no-op).
     // Compaction still reclaims everything dead to live AND every pin;
     // expiring the epoch releases the rest to the next pass.
     val pins = epochPinnedVec(spark)
-    val base = assigned.filter(col("cluster").isin(live: _*))
+    val carried = (live ++ epochPinnedClusterIds(spark, fs, path)).distinct
+    val base = assigned.filter(col("cluster").isin(carried: _*))
     val kept =
       if (pins.isEmpty)
-        maskDeleted(spark, path, base, idCol)
-          .withColumn("ingest_seq", lit(maxC))
+        maskDeleted(spark, fs, path, base, idCol)
+          .withColumn("ingest_seq", lit(st.seq))
       else {
         val idT = base.schema(idCol).dataType
-        var df = tombstonesOf(spark, path, idT) match {
+        var df = tombstonesOf(spark, fs, path, idT) match {
           case Some(liveT) => base.join(broadcast(liveT),
             base(idCol) === liveT("del_id") &&
               base("ingest_seq") <= liveT("del_seq"), "left_outer")
@@ -684,115 +677,65 @@ object IvfIndex {
         // epoch still names its files; a sibling stack can share the
         // conf), and reading a dangling name would abort the whole
         // compaction instead of simply not masking for that pin
-        val tombFs = fsOf(spark, path)
         pins.zipWithIndex.foreach { case ((pseq, ptombs0, _), j) =>
           val ptombs = ptombs0.filter(n =>
-            tombFs.exists(new Path(s"$path/$TombstonesDir/$n")))
+            fs.exists(new Path(s"$path/$TombstonesDir/$n")))
           val visibleToPin =
             if (ptombs.isEmpty) col("ingest_seq") <= lit(pseq)
             else {
-              val schema = org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("del_id", idT),
-                org.apache.spark.sql.types.StructField("del_seq",
-                  org.apache.spark.sql.types.LongType)))
-              val ph = spark.read.schema(schema)
+              val ph = spark.read.schema(tombSchema(idT))
                 .parquet(ptombs.map(n => s"$path/$TombstonesDir/$n"): _*)
                 .groupBy("del_id").agg(max("del_seq").as("del_seq"))
-                .select(col("del_id").as(s"pdel_id_$j"),
-                  col("del_seq").as(s"pdel_seq_$j"))
+                .select(col("del_id").as(s"pin${j}_del_id"),
+                  col("del_seq").as(s"pin${j}_del"))
               df = df.join(broadcast(ph),
-                df(idCol) === ph(s"pdel_id_$j") &&
-                  df("ingest_seq") <= ph(s"pdel_seq_$j"), "left_outer")
-              col("ingest_seq") <= lit(pseq) && col(s"pdel_seq_$j").isNull
+                df(idCol) === ph(s"pin${j}_del_id") &&
+                  df("ingest_seq") <= ph(s"pin${j}_del"), "left_outer")
+              col("ingest_seq") <= lit(pseq) && col(s"pin${j}_del").isNull
             }
           keepCond = keepCond || visibleToPin
         }
         df.filter(keepCond).select(base.columns.map(col): _*)
       }
-    // which lists still have rows once the mask applies — observed ON
-    // the rewrite job itself: a dir the dynamic overwrite never
-    // touches still holds its stale rows (post-write state can't
-    // tell), and a separate pre-count would scan the masked index
-    // twice. collect_set(cluster) carries nCentroids values: metadata.
+    // which lists still have rows — observed ON the rewrite job
+    // itself, not by a second scan. collect_set(cluster) carries
+    // nCentroids values: metadata.
     val obs = org.apache.spark.sql.Observation(
       s"ivf_compact_${java.util.UUID.randomUUID}")
-    // ownership re-check at the point of no return: the rewrite below
-    // is the verb's first NON-CAS'd destructive step (a dynamic
-    // overwrite replaces live partition directories in place) — a
-    // compaction whose lease was somehow stolen despite the heartbeat
-    // (a JVM paused past the full lease) must die HERE, before it can
-    // drop a successor append's rows from the partitions it rewrites
+    val next = listsGenPath(path, st.lists + 1)
+    // a crashed earlier attempt may have left this generation half
+    // written; the intent is ours, so it is nobody's in-flight output
     MaintenanceLock.assertHeld(spark, path, token)
-    // dynamic mode scoped to THIS write via the per-writer option —
-    // never the session conf: maintenance verbs now run on concurrent
-    // threads of one session (InFlight chains in LlmPipeline), and a
-    // session-global set/restore racing a sibling compaction could
-    // flip ITS in-flight overwrite back to STATIC, whose whole-dir
-    // truncate forfeits the crash-safety this rewrite was chosen for
+    fs.delete(new Path(next), true)
     kept.observe(obs, collect_set(col("cluster")).as("clusters"))
       .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$path/assigned")
-    // a fully-masked rewrite runs ZERO write tasks, so the metric row
-    // never materializes and the observation resolves to an EMPTY map
-    // — that IS the all-lists-deleted signal, not an error
+      .write.partitionBy("cluster").parquet(next)
+    // full-erasure edge: when EVERY row was tombstoned the write above
+    // produced no list at all, and a generation without a single
+    // parquet file would brick every later loadIndex/deleteFromIndex
+    // with "Unable to infer schema". Keep the layout readable with ONE
+    // empty-but-schema'd file in the lowest live list; searches return
+    // zero rows and appendToIndex re-grows the index normally. (A
+    // fully-masked rewrite runs ZERO write tasks, so the observation
+    // resolves to an EMPTY map — that IS the signal, not an error.)
     val nonEmpty = obs.get.getOrElse("clusters", scala.collection.Seq.empty[Int])
-      .asInstanceOf[scala.collection.Seq[Int]].toSet
-    // second ownership re-check before the hygiene tail (explicit list
-    // deletes, retired-list purge, tombstone clear, seq-marker sweep):
-    // none of these steps is CAS'd, and each is destructive
-    MaintenanceLock.assertHeld(spark, path, token)
-    val fs = fsOf(spark, path)
-    // full-erasure edge: when EVERY row was tombstoned the dynamic
-    // overwrite touched no partition and the per-list deletes below
-    // would leave assigned/ without a single parquet file — bricking
-    // every later loadIndex/deleteFromIndex with "Unable to infer
-    // schema". Keep the layout readable by writing ONE empty-but-
-    // schema'd file into the lowest live list (overwrite replaces that
-    // list's stale files in the same step, so at any crash point the
-    // surviving tombstones still mask whatever is on disk); searches
-    // return zero rows and appendToIndex re-grows the index normally.
-    val keepSchemaIn =
-      if (nonEmpty.isEmpty && live.nonEmpty) Some(live.min) else None
-    keepSchemaIn.foreach { sentinel =>
+      .asInstanceOf[scala.collection.Seq[Int]]
+    if (nonEmpty.isEmpty && live.nonEmpty)
       kept.drop("cluster").limit(0).repartition(1)
-        .write.mode("overwrite").parquet(s"$path/assigned/cluster=$sentinel")
-    }
-    // a list whose rows were ALL deleted produces no output partition,
-    // so the dynamic overwrite never replaces its directory — drop it
-    // explicitly (BEFORE the tombstones clear, so a crash here still
-    // masks the leftover rows)
-    live.filterNot(nonEmpty).filterNot(keepSchemaIn.contains).foreach { c =>
-      fs.delete(new Path(s"$path/assigned/cluster=$c"), true) }
-    // retired lists a past rebalance left on disk still physically
-    // hold rows for ids retired-then-deleted — and the tombstone clear
-    // below would erase the only mask hiding them. Erasure (q_forget)
-    // is a PHYSICAL claim, so compaction reclaims every unreferenced
-    // list here, before the tombstones go (no age guard / no spare:
-    // compaction is stop-the-world for readers of superseded
-    // generations, the same contract as the live-list rewrite above
-    // that just replaced their files).
-    // `live` above IS the live generation's centroid set, so the purge
-    // re-uses it instead of re-collecting the centroid parquet (one
-    // fewer job in the compaction path)
-    purgeUnreferencedLists(spark, path, olderThanMs = 0L, keepSpare = false,
-      knownReferenced = Some(live.toSet))
-    // the sidecar clears only with NO live pins: pinned files are read
-    // by path by the as-of reads, and unpinned files mask the retained
-    // pin-visible dead rows for live readers (see the retention note
-    // on the rewrite above)
+        .write.parquet(s"$next/cluster=${live.min}")
+    commit(fs, path, st.copy(lists = st.lists + 1))
+    // after the commit nothing reads the old generation or (without
+    // pins) the sidecar; both deletes are destructive and not CAS'd,
+    // so re-assert ownership first. Erasure (q_forget) is a PHYSICAL
+    // claim: older generations (a crashed pass may have left more than
+    // one) hold the folded rows and retired lists, so they go now, with
+    // no reader spare — compaction is stop-the-world for readers of the
+    // superseded generation.
+    MaintenanceLock.assertHeld(spark, path, token)
+    Commit.names(fs, path).filter(listsGenOf(_).exists(_ != st.lists + 1))
+      .foreach(n => fs.delete(new Path(path, n), true))
     if (pins.isEmpty)
       fs.delete(new Path(s"$path/$TombstonesDir"), true): Unit
-    // marker hygiene, LAST: every surviving row now sits at maxC, so
-    // finals below maxC and crashed reservations (whose orphan rows
-    // this rewrite just dropped) can retire. Partial deletion here is
-    // harmless — visibility only needs the max final marker.
-    val (committed, reserved) = seqMarkers(spark, path)
-    committed.filter(_ < maxC).foreach(s =>
-      fs.delete(new Path(s"$path/$SeqPrefix$s"), false))
-    reserved.foreach(s =>
-      fs.delete(new Path(s"$path/$SeqPrefix$s$ReservedSuffix"), false))
     }
   }
 
@@ -801,26 +744,26 @@ object IvfIndex {
     * cadence. nCentroids rows (parameter-sized, never data-sized), so
     * collecting it is a metadata read.
     *
-    * QUIESCED fast path: with no pending tombstones and no reserved
-    * (in-flight or crashed) ingest seqs, EVERY row on disk is visible
-    * — a row's seq is either committed (≤ the ceiling) or still
-    * carries its `.reserved` marker, and compaction removes orphan
-    * rows together with their reservations — so the per-list counts
-    * are exactly each live cluster directory's parquet FOOTER row
-    * sums: one driver metadata pass, NO Spark job, no corpus scan.
-    * That is what makes the skew advisory a cadence-pollable verb at
-    * 100 TB (an advisory that re-counts the corpus per poll is a scan,
-    * not an advisory). Any pending tombstone or reservation falls back
-    * to the exact masked aggregate.
+    * Fast path: with no pending tombstones, every row in a file at or
+    * below the seq ceiling is visible, so the per-list counts are
+    * exactly [[listSizesBound]]'s parquet FOOTER row sums: one driver
+    * metadata pass, NO Spark job, no corpus scan. That is what makes
+    * the skew advisory a cadence-pollable verb at 100 TB (an advisory
+    * that re-counts the corpus per poll is a scan, not an advisory).
+    * Pending tombstones fall back to the exact masked aggregate.
     */
   def listSizes(spark: SparkSession, path: String,
       idCol: String): Seq[(Int, Long)] = {
-    val (_, reserved) = seqMarkers(spark, path)
-    if (!tombstonesExist(spark, path) && reserved.isEmpty)
-      return listSizesBound(spark, path)
-    val (assigned, centroids) = loadIndex(spark, path)
-    val live = centroids.select("centroid_id").collect().map(_.getInt(0)).toSeq
-    val counted = maskDeleted(spark, path,
+    val fs = fsOf(spark, path)
+    sizesAt(spark, fs, path, stateOf(fs, path), idCol)
+  }
+
+  private def sizesAt(spark: SparkSession, fs: FileSystem, path: String,
+      st: State, idCol: String): Seq[(Int, Long)] = {
+    if (!tombstonesExist(fs, path)) return boundAt(spark, fs, path, st)
+    val (assigned, centroids) = loadAt(spark, fs, path, st)
+    val live = centroidIds(centroids)
+    val counted = maskDeleted(spark, fs, path,
         assigned.filter(col("cluster").isin(live: _*)), idCol)
       .groupBy("cluster").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
@@ -829,28 +772,33 @@ object IvfIndex {
   }
 
   /** Per-list UPPER-BOUND row counts from parquet FOOTERS — one driver
-    * metadata pass, NO Spark job, at any corpus size. On a QUIESCED
-    * index (no pending tombstones, no reserved seqs) the bound IS the
-    * exact live count; under load it over-counts by exactly the
-    * masked/invisible rows (tombstoned rows not yet folded, rows of an
-    * in-flight or crashed reservation), which only shrink on fold.
-    * This is [[skewReport]]'s sizing source: an advisory polled at
-    * cadence must stay metadata-sized even on an index that never
-    * quiesces (continuous delete load) — exactness is only needed by
-    * [[rebalanceIndex]] itself, which re-measures with the masked
-    * aggregate ([[listSizes]]) before acting.
+    * metadata pass, NO Spark job, at any corpus size. Only files at or
+    * below the committed seq count (a crashed append's `s<seq>-` files
+    * above it never do), so with no pending tombstones the bound IS
+    * the exact live count; under deletes it over-counts by exactly the
+    * tombstoned rows not yet folded. This is [[skewReport]]'s sizing
+    * source: an advisory polled at cadence must stay metadata-sized
+    * even on an index that never quiesces (continuous delete load) —
+    * exactness is only needed by [[rebalanceIndex]] itself, which
+    * re-measures with the masked aggregate ([[listSizes]]) before
+    * acting.
     */
   def listSizesBound(spark: SparkSession, path: String): Seq[(Int, Long)] = {
+    val fs = fsOf(spark, path)
+    boundAt(spark, fs, path, stateOf(fs, path))
+  }
+
+  private def boundAt(spark: SparkSession, fs: FileSystem, path: String,
+      st: State): Seq[(Int, Long)] = {
     // centroid ids come from the driver-cached LIVE centroid table (a
     // LocalRelation on a warm session — no job past the first read)
-    val live = liveCentroids(spark, path)
-      .select("centroid_id").collect().map(_.getInt(0)).toSeq
-    val fs = fsOf(spark, path)
+    val live = centroidIds(liveCentroids(spark, fs, path, st.cgen))
+    val committed = (name: String) => Commit.appendSeqOf(name).forall(_ <= st.seq)
     live.sorted.map { c =>
-      val dir = new Path(s"$path/assigned/cluster=$c")
+      val dir = new Path(s"${listsGenPath(path, st.lists)}/cluster=$c")
       // empty lists report 0: a centroid with no rows is still live
       (c, if (fs.exists(dir))
-        graft.plans.ManifestSized.parquetRowCount(spark, dir.toString)
+        graft.plans.ManifestSized.parquetRowCount(spark, dir.toString, committed)
       else 0L)
     }
   }
@@ -861,7 +809,7 @@ object IvfIndex {
     * rows than sidecar rows).
     */
   def tombstoneRowCount(spark: SparkSession, path: String): Long =
-    if (tombstonesExist(spark, path))
+    if (tombstonesExist(fsOf(spark, path), path))
       graft.plans.ManifestSized.parquetRowCount(spark, s"$path/$TombstonesDir")
     else 0L
 
@@ -872,13 +820,13 @@ object IvfIndex {
     * split under the same `maxListFactor` rule (size strictly above
     * factor × mean, and ≥ 2 rows — a 1-row list can never be a hot
     * spot), using the SAME selection arithmetic over
-    * [[listSizesBound]]'s footer counts. On a QUIESCED index the
-    * bound is exact, so `rebalance_advised = false` ⇔ a rebalance run
-    * would be a no-op; under pending tombstones/reservations the
-    * advisory sizes are upper bounds (the poll stays METADATA-sized —
-    * zero Spark jobs — even on an index that never quiesces under
-    * continuous delete load; `total_live` subtracts the tombstone
-    * sidecar's footer count). The repair itself re-measures exactly.
+    * [[listSizesBound]]'s footer counts. With no pending tombstones
+    * the bound is exact, so `rebalance_advised = false` ⇔ a rebalance
+    * run would be a no-op; under pending tombstones the advisory sizes
+    * are upper bounds (the poll stays METADATA-sized — zero Spark jobs
+    * — even on an index that never quiesces under continuous delete
+    * load; `total_live` subtracts the tombstone sidecar's footer
+    * count). The repair itself re-measures exactly.
     */
   def skewReport(spark: SparkSession, path: String, idCol: String,
       maxListFactor: Double = 2.0): DataFrame = {
@@ -912,15 +860,15 @@ object IvfIndex {
     * FRESH cluster ids appended as new partition directories. Fresh
     * ids — not reusing the hot id — is what makes the publish atomic:
     * the new directories are invisible (no centroid references them)
-    * until the single centroid-generation commit retires the hot
-    * centroids and adds the sub-centroids, at which point every new
-    * search plans against the split layout and never probes the
-    * retired lists again. A crash anywhere before the marker commit
-    * leaves the old generation fully live and the orphan directories
-    * unreferenced (re-run to completion, [[vacuumIndex]] to reclaim);
-    * in-flight searches that planned against the old generation keep
-    * reading the retired lists, which stay on disk until vacuum — the
-    * TextIndex reader-spare discipline.
+    * until the single manifest commit of the next centroid generation
+    * retires the hot centroids and adds the sub-centroids, at which
+    * point every new search plans against the split layout and never
+    * probes the retired lists again. A crash anywhere before the
+    * commit leaves the old generation fully live and the orphan
+    * directories unreferenced (re-run to completion, [[vacuumIndex]]
+    * to reclaim); in-flight searches that planned against the old
+    * generation keep reading the retired lists, which stay on disk
+    * until vacuum — the TextIndex reader-spare discipline.
     *
     * Returns the split (retired) cluster ids; empty when the index is
     * already balanced. Run at cadence until empty — a grotesquely hot
@@ -930,124 +878,125 @@ object IvfIndex {
       vecCol: String, maxListFactor: Double = 2.0,
       seed: Long = 42L): Seq[Int] = MaintenanceLock.withLockToken(
       spark, path) { token =>
+    val fs = fsOf(spark, path)
+    val st = stateOf(fs, path)
     // re-run repair FIRST (the appendDocs purge-before-republish rule):
     // a prior rebalance that crashed after appending its sub-lists but
     // before its commit left orphan directories in exactly the fresh
     // ids THIS run will allocate — appending into them again would
     // duplicate every moved row. Purge unreferenced lists up front
-    // (no age guard: rebalance is a single-writer maintenance verb,
-    // like compaction — concurrency is excluded by the CAS commit).
+    // (no age guard: rebalance is a single-writer maintenance verb).
     // Ownership re-check first: the purge is destructive and not
     // CAS'd — a rebalance whose lease was stolen must die here, before
-    // it can delete a live peer's uncommitted sub-lists (whose CAS
-    // commit would then publish bricked lists).
+    // it can delete a live peer's uncommitted sub-lists.
     MaintenanceLock.assertHeld(spark, path, token)
-    purgeUnreferencedLists(spark, path, olderThanMs = 0L, keepSpare = true)
-    val (assigned, centroids) = loadIndex(spark, path)
-    val sizes = listSizes(spark, path, idCol)
-    if (sizes.isEmpty) return Seq.empty
-    val mean = sizes.map(_._2).sum.toDouble / sizes.size
+    purgeUnreferencedLists(spark, fs, path, st, olderThanMs = 0L, keepSpare = true)
+    val (assigned, centroids) = loadAt(spark, fs, path, st)
+    val sizes = sizesAt(spark, fs, path, st, idCol)
+    val mean = sizes.map(_._2).sum.toDouble / math.max(1, sizes.size)
     // a 2-means needs two rows; a 1-row list can never be a hot spot
     val hot = sizes.filter(s => s._2 > maxListFactor * mean && s._2 >= 2)
       .map(_._1)
-    if (hot.isEmpty) return Seq.empty
-    var nextId = centroids.agg(max("centroid_id")).head().getInt(0)
-    val newCents = Seq.newBuilder[(Int, Array[Float])]
-    hot.foreach { h =>
-      // ONE list's rows — the probed-cluster partition filter prunes
-      // the scan to this list's files, so a split reads what it splits.
-      // Tombstoned rows fold out here for free (the split IS a rewrite)
-      val rows = maskDeleted(spark, path,
-          assigned.filter(col("cluster") === h), idCol)
-        .withColumn("__v", array_to_vector(col(vecCol)))
-      val model = new KMeans().setK(2).setSeed(seed)
-        .setFeaturesCol("__v").setPredictionCol("__sub").fit(rows)
-      val ids = Seq(nextId + 1, nextId + 2); nextId += 2
-      model.transform(rows).drop("__v")
-        .withColumn("cluster",
-          when(col("__sub") === 0, lit(ids(0))).otherwise(lit(ids(1))))
-        .drop("__sub")
-        .repartition(col("cluster")) // one file per sub-list
-        .write.mode("append").partitionBy("cluster")
-        .parquet(s"$path/assigned")
-      model.clusterCenters.zipWithIndex.foreach { case (c, i) =>
-        newCents += ((ids(i), c.toArray.map(_.toFloat))) }
-    }
-    // ONE commit covering every split: write the next centroid
-    // generation fully, then CAS the marker. Keep the previous
-    // generation as the in-flight readers' spare; sweep older ones.
-    import spark.implicits._
-    val gen = liveCentroidGen(spark, path)
-    val updated = centroids.filter(!col("centroid_id").isin(hot: _*))
-      .unionByName(newCents.result().toDF("centroid_id", "centroid_vec"))
-    updated.coalesce(1).write.mode("overwrite")
-      .parquet(centroidsGenPath(path, gen + 1))
-    val fs = fsOf(spark, path)
-    val marker = new Path(s"$path/$CGenPrefix${gen + 1}")
-    if (!Commit.claim(fs, marker))
-      throw new IllegalStateException(
-        s"concurrent IVF maintenance: commit marker $marker already exists")
-    // the older-generation sweep is destructive and not CAS'd (the
-    // commit above was) — re-assert ownership before deleting what an
-    // in-flight successor might still be reading as ITS spare
-    MaintenanceLock.assertHeld(spark, path, token)
-    // epoch-pinned centroid generations survive the sweep: a live
-    // pin's as-of read resolves its generation's centroid table and
-    // cluster set directly (enforced retention)
-    val pinnedCg = epochPinnedVec(spark).map(_._3).toSet
-    (1 until gen).filterNot(pinnedCg.contains).foreach { g =>
-      fs.delete(new Path(centroidsGenPath(path, g)), true)
-      fs.delete(new Path(s"$path/$CGenPrefix$g"), false)
+    if (hot.nonEmpty) {
+      var nextId = centroids.agg(max("centroid_id")).head().getInt(0)
+      val newCents = Seq.newBuilder[(Int, Array[Float])]
+      hot.foreach { h =>
+        // ONE list's rows — the probed-cluster partition filter prunes
+        // the scan to this list's files, so a split reads what it
+        // splits. Tombstoned rows fold out here for free (the split IS
+        // a rewrite)
+        val rows = maskDeleted(spark, fs, path,
+            assigned.filter(col("cluster") === h), idCol)
+          .withColumn("__v", array_to_vector(col(vecCol)))
+        val model = new KMeans().setK(2).setSeed(seed)
+          .setFeaturesCol("__v").setPredictionCol("__sub").fit(rows)
+        val ids = Seq(nextId + 1, nextId + 2); nextId += 2
+        model.transform(rows).drop("__v")
+          .withColumn("cluster",
+            when(col("__sub") === 0, lit(ids(0))).otherwise(lit(ids(1))))
+          .drop("__sub")
+          .repartition(col("cluster")) // one file per sub-list
+          .write.mode("append").partitionBy("cluster")
+          .parquet(listsGenPath(path, st.lists))
+        model.clusterCenters.zipWithIndex.foreach { case (c, i) =>
+          newCents += ((ids(i), c.toArray.map(_.toFloat))) }
+      }
+      // ONE commit covering every split: write the next centroid
+      // generation fully, then CAS the manifest naming it. Keep the
+      // previous generation as the in-flight readers' spare; sweep
+      // older ones.
+      import spark.implicits._
+      centroids.filter(!col("centroid_id").isin(hot: _*))
+        .unionByName(newCents.result().toDF("centroid_id", "centroid_vec"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(centroidsGenPath(path, st.cgen + 1))
+      commit(fs, path, st.copy(cgen = st.cgen + 1))
+      // the older-generation sweep is destructive and not CAS'd (the
+      // commit above was) — re-assert ownership before deleting what an
+      // in-flight successor might still be reading as ITS spare.
+      // Epoch-pinned centroid generations survive it: a live pin's
+      // as-of read resolves its generation's centroid table and
+      // cluster set directly (enforced retention)
+      MaintenanceLock.assertHeld(spark, path, token)
+      val pinnedCg = epochPinnedVec(spark).map(_._3).toSet
+      (1 until st.cgen).filterNot(pinnedCg.contains).foreach(g =>
+        fs.delete(new Path(centroidsGenPath(path, g)), true))
     }
     hot
   }
 
-  /** Reclaim inverted lists the LIVE centroid generation no longer
-    * references: lists retired by committed [[rebalanceIndex]] runs
-    * and orphan sub-lists of a rebalance that crashed before its
-    * commit. Age-guarded like Snapshots.vacuum — the guard is what
-    * protects in-flight readers that planned against the previous
-    * generation (the internal pre-split repair instead keeps the
-    * spare generation's lists unconditionally, since the orphans it
-    * must remove are referenced by NO committed generation). Returns
-    * the deleted directory names.
+  /** Reclaim what no committed state references: inverted lists the
+    * LIVE centroid generation no longer names (retired by committed
+    * [[rebalanceIndex]] runs, or orphan sub-lists of a rebalance that
+    * crashed before its commit), list generations other than the live
+    * one (a compaction's superseded or uncommitted output), staged
+    * `_ingest_tmp_*` batches and manifest stage files of crashed
+    * verbs, and `s<seq>-` files above the committed seq (a crashed
+    * append's half-published batch, invisible already). Age-guarded
+    * like Snapshots.vacuum — the guard is what protects in-flight
+    * readers that planned against the previous centroid generation
+    * (the internal pre-split repair instead keeps the spare
+    * generation's lists unconditionally, since the orphans it must
+    * remove are referenced by NO committed generation). Returns the
+    * deleted names.
     */
   def vacuumIndex(spark: SparkSession, path: String,
       olderThanMs: Long = 3600000L): Seq[String] =
     MaintenanceLock.withLock(spark, path) {
-      purgeUnreferencedLists(spark, path, olderThanMs, keepSpare = false)
+      val fs = fsOf(spark, path)
+      val st = stateOf(fs, path)
+      val cutoff = System.currentTimeMillis() - olderThanMs
+      val stale = fs.listStatus(new Path(path)).toSeq.filter { s =>
+        val n = s.getPath.getName
+        (listsGenOf(n).exists(_ != st.lists) || n.startsWith(IngestTmpPrefix) ||
+          Commit.isStaleTmp(n)) && s.getModificationTime <= cutoff
+      }
+      stale.foreach(s => fs.delete(s.getPath, true))
+      stale.map(_.getPath.getName) ++
+        Commit.purgeOrphanFiles(fs, new Path(listsGenPath(path, st.lists)),
+          st.seq, olderThanMs) ++
+        purgeUnreferencedLists(spark, fs, path, st, olderThanMs, keepSpare = false)
     }
 
-  private def purgeUnreferencedLists(spark: SparkSession, path: String,
-      olderThanMs: Long, keepSpare: Boolean,
-      knownReferenced: Option[Set[Int]] = None): Seq[String] = {
-    val fs = fsOf(spark, path)
-    val gen = liveCentroidGen(spark, path)
+  private def purgeUnreferencedLists(spark: SparkSession, fs: FileSystem,
+      path: String, st: State, olderThanMs: Long,
+      keepSpare: Boolean): Seq[String] = {
     val refGens =
-      if (keepSpare) math.max(0, gen - 1) to gen else gen to gen
-    // callers that already hold the live set (compactLists) pass it in;
-    // only valid when the reference set is exactly the live generation.
-    // Lists any EPOCH-PINNED generation references are always retained
-    // on top — the enforced-retention contract (IndexEpoch).
-    val referenced = knownReferenced.filter(_ => !keepSpare).getOrElse {
-      refGens.flatMap { g =>
-        val p = centroidsGenPath(path, g)
-        if (fs.exists(new Path(p)))
-          spark.read.parquet(p).select("centroid_id")
-            .collect().map(_.getInt(0)).toSeq
-        else Seq.empty
-      }.toSet
-    } ++ epochPinnedClusterIds(spark, path)
+      if (keepSpare) math.max(0, st.cgen - 1) to st.cgen else st.cgen to st.cgen
+    // lists any EPOCH-PINNED generation references are always retained
+    // on top — the enforced-retention contract (IndexEpoch)
+    val referenced = refGens.flatMap(genClusterIds(spark, fs, path, _)).toSet ++
+      epochPinnedClusterIds(spark, fs, path)
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val dirs = fs.listStatus(new Path(s"$path/assigned")).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
+    val dirs = fs.listStatus(new Path(listsGenPath(path, st.lists))).toSeq
+      .filter { s =>
+        val n = s.getPath.getName
         n.startsWith("cluster=") &&
           scala.util.Try(n.stripPrefix("cluster=").toInt).toOption
             .exists(!referenced.contains(_)) &&
-          st.getModificationTime <= cutoff
+          s.getModificationTime <= cutoff
       }
-    dirs.foreach(st => fs.delete(st.getPath, true))
+    dirs.foreach(s => fs.delete(s.getPath, true))
     dirs.map(_.getPath.getName)
   }
 
@@ -1261,12 +1210,13 @@ object IvfIndex {
     * path [[appendToIndex]] uses — no k-means refit, nothing
     * corpus-sized broadcast. Both sides read through their LIVE views
     * (seq ceiling + tombstone mask), so pending deletes fold during
-    * the merge. The result is a fresh generation-0 layout (seq 1, no
-    * tombstones, `partitionBy(cluster)` pruning intact); sources are
-    * left untouched. Centroid fidelity for the secondary's region is
-    * the caller's rebuild-cadence call, as with any add-without-train.
-    * Doc-id disjointness is validated loudly (an id live in both
-    * shards would duplicate its vector silently).
+    * the merge. The result is a fresh generation-0 layout (seq 0, no
+    * tombstones, `partitionBy(cluster)` pruning intact) whose manifest
+    * publishes last; sources are left untouched. Centroid fidelity for
+    * the secondary's region is the caller's rebuild-cadence call, as
+    * with any add-without-train. Doc-id disjointness is validated
+    * loudly (an id live in both shards would duplicate its vector
+    * silently).
     */
   def mergeIndexes(spark: SparkSession, aPath: String, bPath: String,
       dstPath: String, idCol: String, vecCol: String): Unit = {
@@ -1284,10 +1234,8 @@ object IvfIndex {
     // live list — loadLive alone would carry both copies into the
     // merge, where they land in the SAME merged list (duplicate top-k
     // hits) or resurrect retired cluster ids in dst
-    val liveIdsA = centroids.select("centroid_id").collect().map(_.getInt(0)).toSeq
-    val liveIdsB = centroidsB.select("centroid_id").collect().map(_.getInt(0)).toSeq
-    val liveA = liveA0.filter(col("cluster").isin(liveIdsA: _*))
-    val liveB = liveB0.filter(col("cluster").isin(liveIdsB: _*))
+    val liveA = liveA0.filter(col("cluster").isin(centroidIds(centroids): _*))
+    val liveB = liveB0.filter(col("cluster").isin(centroidIds(centroidsB): _*))
     val overlap = liveA.select(idCol).join(liveB.select(idCol), idCol).count()
     require(overlap == 0,
       s"mergeIndexes: $overlap id(s) live in BOTH shards — shards must " +
@@ -1302,8 +1250,9 @@ object IvfIndex {
       .withColumn("ingest_seq", lit(0L))
       .repartition(col("cluster"))
       .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$dstPath/assigned")
-    centroids.coalesce(1).write.mode("overwrite").parquet(s"$dstPath/centroids")
+      .parquet(listsGenPath(dstPath, 0))
+    centroids.coalesce(1).write.mode("overwrite").parquet(centroidsGenPath(dstPath, 0))
+    commit(fs, dstPath, Fresh)
   }
 
   /** Convenience fit+search in one call (small corpora / tests). */

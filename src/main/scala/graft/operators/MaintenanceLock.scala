@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import graft.GraftSession.fsOf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Single-writer intent lease for index maintenance verbs.
   *
@@ -14,9 +15,8 @@ import org.apache.spark.sql.SparkSession
   * before its first write and releases it after its commit; a second
   * writer arriving mid-verb fails immediately with a clear message —
   * BEFORE it can corrupt shared state (two appends from the same base
-  * state overwrite each other's sidecar generation; a compaction's
-  * dynamic-overwrite rewrite silently drops a racing append's rows; a
-  * compaction's marker hygiene strands a racing append's reservation).
+  * state overwrite each other's sidecar generation; a compaction that
+  * publishes a new list generation drops a racing append's rows).
   *
   * Mechanics (the reference's own rename/create-as-commit semantics,
   * `CubefsFileSystem.java:218-245`, applied to a lock file):
@@ -55,17 +55,20 @@ import org.apache.spark.sql.SparkSession
   *   - ZOMBIE SAFETY: a stolen writer that is somehow still alive (a
   *     JVM paused past the full lease despite heartbeats) cannot
   *     corrupt the index: its heartbeats stamp only its OWN sidecar
-  *     (the stealer's marker is untouchable), TextIndex manifest
-  *     commits are CAS'd against the manifest number their state was
-  *     read from ([[Commit.publish]] `expectedNext`),
-  *     IVF rebalance commits CAS the `_cgen_` marker, and the
-  *     destructive non-CAS'd steps (IVF compaction's rewrite + hygiene
-  *     tail, buildIndex's stale-artifact sweep, rebalance's purge)
-  *     re-assert ownership ([[assertHeld]]) immediately before running
-  *     and abort if the token is no longer theirs.
+  *     (the stealer's marker is untouchable), TextIndex and IvfIndex
+  *     manifest commits are CAS'd against the manifest number their
+  *     state was read from ([[Commit.publish]] `expectedNext`), and
+  *     the destructive non-CAS'd steps (IVF compaction's generation
+  *     and tombstone deletes, buildIndex's stale-artifact sweep,
+  *     rebalance's purge) re-assert ownership ([[assertHeld]])
+  *     immediately before running and abort if the token is no longer
+  *     theirs.
   *   - RELEASE: delete the marker ONLY if the body still holds our
   *     token (a zombie's release must not evict the stealer); our own
-  *     heartbeat sidecar is removed unconditionally.
+  *     heartbeat sidecar is removed unconditionally. A failed marker
+  *     delete fails the verb (or rides its own failure as suppressed):
+  *     a verb that reported success with its marker left behind would
+  *     lock the index for the whole lease.
   *
   * Cost: two driver FS metadata ops per maintenance verb plus one
   * sidecar rewrite per heartbeat interval — noise next to any index
@@ -88,6 +91,10 @@ private[graft] object MaintenanceLock {
 
   private[graft] def hbPath(path: String, token: String) =
     new Path(path, HbPrefix + token)
+
+  /** Is `name` (an entry of an index root) one of the intent's files? */
+  private[graft] def isLockFile(name: String): Boolean =
+    name == MarkerName || name.startsWith(HbPrefix)
 
   private def isLocal(p: Path): Boolean = {
     val scheme = p.toUri.getScheme
@@ -262,10 +269,10 @@ private[graft] object MaintenanceLock {
 
   /** Abort loudly if the intent is no longer ours — called by verbs
     * immediately before a destructive, non-CAS'd step (e.g. IVF
-    * compaction's dynamic-overwrite rewrite and its tombstone/marker
-    * hygiene tail, buildIndex's stale-artifact sweep, rebalance's
-    * unreferenced-list purge), so a stolen-but-alive writer dies
-    * BEFORE it can drop a successor's rows.
+    * compaction's generation and tombstone deletes, buildIndex's
+    * stale-artifact sweep, rebalance's unreferenced-list purge), so a
+    * stolen-but-alive writer dies BEFORE it can drop a successor's
+    * rows.
     */
   def assertHeld(spark: SparkSession, path: String, token: String): Unit =
     if (!isHeld(spark, path, token))
@@ -290,17 +297,18 @@ private[graft] object MaintenanceLock {
 
   /** Release the intent if we still own it (a stolen marker belongs to
     * the stealer and is left alone); our heartbeat sidecar is ours
-    * alone and is removed unconditionally.
+    * alone and is removed unconditionally. A failed marker delete
+    * throws: the index would stay locked for the whole lease.
     */
   def release(spark: SparkSession, path: String, token: String): Unit = {
     val fs = fsOf(spark, path)
-    if (isHeld(spark, path, token))
-      try fs.delete(markerPath(path), false) catch {
+    try {
+      if (readBody(fs, markerPath(path)).exists(_._1 == token))
+        fs.delete(markerPath(path), false)
+    } finally
+      try fs.delete(hbPath(path, token), false) catch {
         case _: java.io.IOException => ()
       }
-    try fs.delete(hbPath(path, token), false) catch {
-      case _: java.io.IOException => ()
-    }
   }
 
   /** Run `f` holding the intent for `path`, heartbeating from a daemon
@@ -324,14 +332,22 @@ private[graft] object MaintenanceLock {
     hb.scheduleWithFixedDelay(
       () => try heartbeat(spark, path, token) catch { case _: Throwable => () },
       period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
+    var failure: Throwable = null
     try f(token)
+    catch { case t: Throwable => failure = t; throw t }
     finally {
       // stop the stamper and WAIT for an in-flight stamp before
       // deleting the sidecar, so release leaves no orphan hb file
       hb.shutdownNow()
       try hb.awaitTermination(2, java.util.concurrent.TimeUnit.SECONDS)
       catch { case _: InterruptedException => Thread.currentThread().interrupt() }
-      release(spark, path, token)
+      // a verb that succeeded reports a failed release; a verb that
+      // threw keeps its own failure and carries the release's along
+      try release(spark, path, token)
+      catch {
+        case e: Exception if failure != null && NonFatal(failure) =>
+          failure.addSuppressed(e)
+      }
     }
   }
 }

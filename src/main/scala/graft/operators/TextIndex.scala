@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.GraftSession.fsOf
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.InFlight.{await, inFlight}
@@ -96,6 +96,10 @@ object TextIndex {
     * index whose recorded fmt it does not recognize, because probing
     * with mismatched parameters is a silent wrong-bucket miss (the same
     * failure class the DataSkipping bloom format row guards against).
+    * fmt 6 = fmt 5 plus the committed tombstone files LISTED in the
+    * manifest (`tombfile:` lines): a delete stages its file, publishes
+    * it, and only the manifest commit makes it mask anything, so a
+    * crash in between leaves search and corpus totals agreeing.
     * fmt 5 = fmt 4 plus the seq-CEILING visibility rule (readers mask
     * `seq > manifest seq`, append files are named `s<seq>-…` so a
     * crashed batch is purgeable before its re-run) and the tombstone
@@ -109,7 +113,8 @@ object TextIndex {
     * commit + id-only tombstones; fmt 2 a flat append-only doc-stats
     * dir; fmt 1 flat dirs with in-place sidecar overwrite).
     */
-  private val Fmt = 5
+  private val Fmt = 6
+  private val TombFile = "tombfile:"
 
   /** Explicit artifact schemas: every index read DECLARES its schema
     * instead of inferring — no footer sampling at planning time (at
@@ -162,22 +167,23 @@ object TextIndex {
     * sidecar. `nTombs` is the tombstone sidecar's ROW count (grown by
     * each delete, zeroed when compaction folds the sidecar) — the
     * mask-strategy switch: past [[tombBroadcastMax]] rows the
-    * tombstone horizon stops being broadcast.
+    * tombstone horizon stops being broadcast. `tombs` names the
+    * committed tombstone files: the only ones any reader applies.
     */
   // `mseq` is the MANIFEST number this state was read from (0 for a
   // fresh build) — the commit CASes at mseq+1, so a state derived from
   // a superseded manifest cannot publish (see Commit.publish).
   private case class IndexState(fmt: Int, nBuckets: Int, seq: Long,
-      nDocs: Long, sumDl: Long, nTombs: Long, gens: Gens, mseq: Int = 0)
+      nDocs: Long, sumDl: Long, nTombs: Long, gens: Gens, mseq: Int = 0,
+      tombs: Seq[String] = Nil)
 
-  private def readState(spark: SparkSession, path: String): IndexState = {
-    val head = Commit.latest(fsOf(spark, path), path)
+  private def readState(fs: FileSystem, path: String): IndexState = {
+    val head = Commit.latest(fs, path)
     require(head.nonEmpty, s"no text index manifest at $path")
     parseState(head.get._2, head.get._1)
   }
 
   private def parseState(lines: Seq[String], mseq: Int): IndexState = {
-    // exported pins append non-kv "tombfile:" lines — ignore them here
     val kv = lines.filter(_.contains("="))
       .map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
     val fmt = kv("fmt").toInt
@@ -186,48 +192,43 @@ object TextIndex {
     IndexState(fmt, kv("n_buckets").toInt, kv("seq").toLong,
       kv("n_docs").toLong, kv("sum_dl").toLong, kv("n_tombs").toLong,
       Gens(kv("postings").toInt, kv("term_stats").toInt,
-        kv("doc_stats").toInt), mseq = mseq)
+        kv("doc_stats").toInt), mseq = mseq,
+      tombs = lines.filter(_.startsWith(TombFile)).map(_.stripPrefix(TombFile)))
   }
 
   /** The live committed PIN — what [[IndexEpoch.publish]] embeds (the
     * Iceberg catalog/snapshot pattern: a pin must carry the state, not
     * point at it): the manifest CONTENT (manifest files are swept past
-    * one round) plus the tombstone sidecar's FILE LIST (tombstones are
-    * seq-scoped, but a delete committed just after the pin reuses the
-    * pinned seq — only the file list separates "deleted at pin" from
-    * "deleted after pin", exactly why Iceberg snapshots track delete
-    * files). One FS read + one listing, no Spark job.
+    * one round), which lists the committed tombstone FILES (tombstones
+    * are seq-scoped, but a delete committed just after the pin reuses
+    * the pinned seq — only the file list separates "deleted at pin"
+    * from "deleted after pin", exactly why Iceberg snapshots track
+    * delete files). One FS read, no Spark job.
     */
   def exportManifest(spark: SparkSession, path: String): Seq[String] = {
-    val fs = fsOf(spark, path)
-    val head = Commit.latest(fs, path)
+    val head = Commit.latest(fsOf(spark, path), path)
     require(head.nonEmpty, s"no text index manifest at $path")
-    val tombDir = new Path(s"$path/$TombstonesDir")
-    val tombFiles =
-      if (!fs.exists(tombDir)) Seq.empty[String]
-      else fs.listStatus(tombDir).map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSeq.sorted
-    head.get._2 ++ tombFiles.map("tombfile:" + _)
+    head.get._2
   }
 
   private def readGens(spark: SparkSession, path: String): Gens =
-    readState(spark, path).gens
+    readState(fsOf(spark, path), path).gens
 
-  private def commitState(spark: SparkSession, path: String,
+  private def commitState(fs: FileSystem, path: String,
       st: IndexState): Unit =
-    Commit.publish(fsOf(spark, path), path, Commit.Manifest,
+    Commit.publish(fs, path, Commit.Manifest,
       Seq(s"fmt=$Fmt", s"n_buckets=${st.nBuckets}", s"seq=${st.seq}",
         s"n_docs=${st.nDocs}", s"sum_dl=${st.sumDl}",
         s"n_tombs=${st.nTombs}",
         s"postings=${st.gens.postings}", s"term_stats=${st.gens.stats}",
-        s"doc_stats=${st.gens.docs}"),
+        s"doc_stats=${st.gens.docs}") ++ st.tombs.map(TombFile + _),
       expectedNext = Some(st.mseq + 1), sweep = true): Unit
 
   /** The manifest's LIVE corpus totals (n_docs, sum_dl) — the BM25
     * inputs, read straight off the committed manifest with zero jobs.
     */
   def corpusTotals(spark: SparkSession, path: String): (Long, Long) = {
-    val st = readState(spark, path)
+    val st = readState(fsOf(spark, path), path)
     (st.nDocs, st.sumDl)
   }
 
@@ -258,8 +259,7 @@ object TextIndex {
       : Seq[(IndexState, Seq[String])] =
     IndexEpoch.livePins(spark)._1.flatMap { pin =>
       scala.util.Try(parseState(pin, 0)).toOption.map(st =>
-        (st, pin.filter(_.startsWith("tombfile:"))
-          .map(_.stripPrefix("tombfile:"))))
+        (st, st.tombs))
     }
 
   /** The generation numbers live epoch pins hold for `prefix` — the
@@ -274,9 +274,8 @@ object TextIndex {
       }
     }.toSet
 
-  private def sweepGens(spark: SparkSession, path: String, prefix: String,
-      keepFloor: Int): Unit = {
-    val fs = fsOf(spark, path)
+  private def sweepGens(spark: SparkSession, fs: FileSystem, path: String,
+      prefix: String, keepFloor: Int): Unit = {
     // generations a live epoch pins are NOT swept, whatever their age:
     // the pin's as-of read resolves them directly (the branch-ref
     // shield lifted from Snapshots.vacuum)
@@ -306,7 +305,8 @@ object TextIndex {
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String, nBuckets: Int = 64): Unit = {
     val spark = docs.sparkSession
-    fsOf(spark, path).delete(new Path(path), true)
+    val fs = fsOf(spark, path)
+    fs.delete(new Path(path), true)
     // bucket-exclusive shuffle before the partitioned write: ONE file
     // per bucket instead of write-tasks × buckets. nBuckets is the
     // build-parallelism lever — each bucket is written by one task, so
@@ -342,7 +342,7 @@ object TextIndex {
     // Build parameters travel IN the manifest — a probe that
     // re-supplied its own bucket count could silently hash into the
     // wrong partitions and miss every posting.
-    commitState(spark, path, IndexState(Fmt, nBuckets, seq = 1L,
+    commitState(fs, path, IndexState(Fmt, nBuckets, seq = 1L,
       nDocs = n, sumDl = dl, nTombs = 0L,
       Gens(postings = 1, stats = 1, docs = 1)))
   }
@@ -357,38 +357,6 @@ object TextIndex {
   private def tombBroadcastMax(spark: SparkSession): Long =
     spark.conf.getOption("graft.textindex.tombBroadcastMax")
       .map(_.toLong).getOrElse(1000000L)
-
-  /** Published-append file names are `s<seq>-<part name>`; anything
-    * matching with seq ABOVE the committed manifest seq is a crashed
-    * batch's orphan.
-    */
-  private val AppendFileRe = "^s([0-9]+)-.*".r
-
-  private def orphanSeqOf(name: String): Option[Long] = name match {
-    case AppendFileRe(s) => Some(s.toLong)
-    case _ => None
-  }
-
-  /** Delete data files a crashed append renamed into `dir` (any
-    * nesting — postings bucket dirs sit one level down) whose encoded
-    * seq exceeds the committed manifest seq. Files from build or
-    * compaction carry no seq prefix and are never candidates: their
-    * generations publish atomically through the manifest swap.
-    */
-  private def purgeOrphanFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path, committedSeq: Long, olderThanMs: Long = 0L): Seq[String] = {
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap { st0 =>
-      if (st0.isDirectory) purgeOrphanFiles(fs, st0.getPath, committedSeq, olderThanMs)
-      else orphanSeqOf(st0.getPath.getName) match {
-        case Some(s) if s > committedSeq && st0.getModificationTime <= cutoff =>
-          fs.delete(st0.getPath, false)
-          Seq(st0.getPath.getName)
-        case _ => Seq.empty
-      }
-    }
-  }
 
   /** (row count, sum of dl) of a doc-stats frame — the two corpus
     * scalars the manifest carries for BM25.
@@ -530,14 +498,14 @@ object TextIndex {
     // the bucket count comes from the index being appended to — never
     // from the caller, who could otherwise split one term across two
     // bucket layouts
-    val st = readState(spark, path)
+    val st = readState(fs, path)
     val newSeq = st.seq + 1
     // a PRIOR append that crashed mid-publish left `s<seq>-` files
     // above the committed seq — masked from every reader, but this
     // batch publishes at that same seq, so purge them first or the
     // commit below would make both copies visible at once
-    purgeOrphanFiles(fs, new Path(postingsPath(path, st.gens.postings)), st.seq)
-    purgeOrphanFiles(fs, new Path(docStatsPath(path, st.gens.docs)), st.seq)
+    Commit.purgeOrphanFiles(fs, new Path(postingsPath(path, st.gens.postings)), st.seq)
+    Commit.purgeOrphanFiles(fs, new Path(docStatsPath(path, st.gens.docs)), st.seq)
     val tmp = s"$path/$IngestTmpPrefix${java.util.UUID.randomUUID}"
     tokenizePostings(docs, idCol, textCol, st.nBuckets, newSeq)
       .repartition(col("bucket"))
@@ -561,24 +529,17 @@ object TextIndex {
     // publish under seq-prefixed names: the name IS the crash-recovery
     // metadata (purgeable without opening a footer), and the reader's
     // seq ceiling keeps the batch invisible until the commit below
-    val genDir = new Path(postingsPath(path, st.gens.postings))
-    bucketDirs.foreach { d =>
-      val dst = new Path(genDir, d.getPath.getName)
-      if (!fs.exists(dst)) fs.mkdirs(dst)
-      fs.listStatus(d.getPath).foreach(f0 =>
-        fs.rename(f0.getPath, new Path(dst, s"s$newSeq-${f0.getPath.getName}")))
-    }
-    val docsDir = new Path(docStatsPath(path, st.gens.docs))
-    fs.listStatus(new Path(s"$tmp/docstats"))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach(f0 => fs.rename(f0.getPath, new Path(docsDir, s"s$newSeq-${f0.getPath.getName}")))
+    Commit.publishFiles(fs, new Path(s"$tmp/postings"),
+      new Path(postingsPath(path, st.gens.postings)), newSeq)
+    Commit.publishFiles(fs, new Path(s"$tmp/docstats"),
+      new Path(docStatsPath(path, st.gens.docs)), newSeq)
     fs.delete(new Path(tmp), true)
     val stats1 = if (newStatsGen) st.gens.stats + 1 else st.gens.stats
-    commitState(spark, path, st.copy(seq = newSeq,
+    commitState(fs, path, st.copy(seq = newSeq,
       nDocs = st.nDocs + batchN, sumDl = st.sumDl + batchDl,
       gens = st.gens.copy(stats = stats1)))
     if (newStatsGen)
-      sweepGens(spark, path, StatsPrefix, keepFloor = st.gens.stats)
+      sweepGens(spark, fs, path, StatsPrefix, keepFloor = st.gens.stats)
     }
   }
 
@@ -612,8 +573,7 @@ object TextIndex {
       terms: Seq[String], manifest: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "searchAllAsOf needs at least one term")
     val distinctTerms = terms.distinct
-    pinnedPrunedPostings(spark, path, distinctTerms, parseState(manifest, 0),
-        manifest)
+    pinnedPrunedPostings(spark, path, distinctTerms, parseState(manifest, 0))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"), sum("tf").as("total_tf"))
       .filter(col("n_terms") === distinctTerms.size)
@@ -628,24 +588,16 @@ object TextIndex {
     * makes the pin a true snapshot). Shared by every as-of read.
     */
   private def pinnedPrunedPostings(spark: SparkSession, path: String,
-      distinctTerms: Seq[String], st: IndexState,
-      manifest: Seq[String]): DataFrame = {
+      distinctTerms: Seq[String], st: IndexState): DataFrame = {
     val raw = spark.read.schema(PostingsSchema)
       .parquet(postingsPath(path, st.gens.postings))
       .filter(col("bucket").isin(distinctTerms.map(bucketIdOf(_, st.nBuckets)): _*))
       .filter(col("term").isin(distinctTerms: _*))
       .filter(col("seq") <= st.seq)
-    val tombFiles = manifest.filter(_.startsWith("tombfile:"))
-      .map(n => s"$path/$TombstonesDir/${n.stripPrefix("tombfile:")}")
-    if (tombFiles.isEmpty) raw
-    else {
-      val pinned = spark.read.schema(TombSchema).parquet(tombFiles: _*)
-        .groupBy(col("doc_id").as("del_doc_id"))
-        .agg(max("seq").as("del_seq"))
+    tombstones(spark, path, st).fold(raw)(pinned =>
       raw.join(broadcast(pinned),
         col("doc_id") === col("del_doc_id") && col("seq") <= col("del_seq"),
-        "left_anti")
-    }
+        "left_anti"))
   }
 
   /** [[bm25]] AT A PINNED MANIFEST — the epoch-coordinated RANKED read
@@ -664,7 +616,7 @@ object TextIndex {
     val st = parseState(manifest, 0)
     val nDocs = st.nDocs.toDouble
     val avgdl = if (st.nDocs == 0) 0.0 else st.sumDl.toDouble / st.nDocs.toDouble
-    val tf = pinnedPrunedPostings(spark, path, terms.distinct, st, manifest)
+    val tf = pinnedPrunedPostings(spark, path, terms.distinct, st)
       .select(col("doc_id"), col("term"), col("tf").cast("double").as("tf"),
         col("dl").cast("double").as("dl"))
     val dfT = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
@@ -774,8 +726,8 @@ object TextIndex {
     */
   def mergeIndexes(spark: SparkSession, aPath: String, bPath: String,
       dstPath: String, nBuckets: Int = 64): Unit = {
-    val stA = readState(spark, aPath)
-    val stB = readState(spark, bPath)
+    val stA = readState(fsOf(spark, aPath), aPath)
+    val stB = readState(fsOf(spark, bPath), bPath)
     def liveSide(path: String, st: IndexState) = (
       maskDeleted(spark, path, st,
         spark.read.schema(PostingsSchema)
@@ -792,7 +744,8 @@ object TextIndex {
     require(overlap == 0,
       s"mergeIndexes: $overlap doc id(s) live in BOTH shards — shards " +
         "must partition the corpus")
-    fsOf(spark, dstPath).delete(new Path(dstPath), true)
+    val fs = fsOf(spark, dstPath)
+    fs.delete(new Path(dstPath), true)
     // one bucket-keyed shuffle re-buckets the union to the dst layout;
     // seq squashes to 1 (the merged index is a fresh build lineage)
     postA.unionByName(postB)
@@ -820,7 +773,7 @@ object TextIndex {
       .repartition(StatsFiles)
       .write.mode("overwrite").parquet(statsPath(dstPath, 1))
     val (n, dl) = await(sideF)
-    commitState(spark, dstPath, IndexState(Fmt, nBuckets, seq = 1L,
+    commitState(fs, dstPath, IndexState(Fmt, nBuckets, seq = 1L,
       nDocs = n, sumDl = dl, nTombs = 0L,
       Gens(postings = 1, stats = 1, docs = 1)))
   }
@@ -883,7 +836,7 @@ object TextIndex {
     */
   def prunedPostings(spark: SparkSession, path: String,
       terms: Seq[String]): DataFrame = {
-    val st = readState(spark, path) // one manifest read: gens + params
+    val st = readState(fsOf(spark, path), path) // one manifest read: gens + params
     val distinctTerms = terms.distinct
     maskDeleted(spark, path, st,
       spark.read.schema(PostingsSchema).parquet(postingsPath(path, st.gens.postings))
@@ -1008,9 +961,10 @@ object TextIndex {
     */
   def compactIndex(spark: SparkSession, path: String): Unit =
     MaintenanceLock.withLock(spark, path) {
-    val st = readState(spark, path) // includes the format check
+    val fs = fsOf(spark, path)
+    val st = readState(fs, path) // includes the format check
     val gens = st.gens
-    val tomb = tombstones(spark, path)
+    val tomb = tombstones(spark, path, st)
     val live = spark.read.schema(PostingsSchema).parquet(postingsPath(path, gens.postings))
       .filter(col("seq") <= st.seq) // crashed-append orphans die here too
     val kept = maskDeleted(spark, path, st, live)
@@ -1041,7 +995,8 @@ object TextIndex {
         val obs = org.apache.spark.sql.Observation(
           s"compact_totals_${java.util.UUID.randomUUID}")
         maskDeleted(spark, path, st,
-            docStats(spark, path).filter(col("seq") <= st.seq))
+            spark.read.schema(DocStatsSchema).parquet(docStatsPath(path, gens.docs))
+              .filter(col("seq") <= st.seq))
           .observe(obs, count(lit(1)).as("n"),
             coalesce(sum("dl"), lit(0L)).as("dl"))
           .repartition(StatsFiles)
@@ -1049,10 +1004,10 @@ object TextIndex {
         val (n, dl) = (obs.get("n").asInstanceOf[Long],
           obs.get("dl").asInstanceOf[Long])
         await(dfF)
-        st.copy(nDocs = n, sumDl = dl, nTombs = 0L,
+        st.copy(nDocs = n, sumDl = dl, nTombs = 0L, tombs = Nil,
           gens = Gens(gens.postings + 1, gens.stats + 1, gens.docs + 1))
       }
-    commitState(spark, path, next)
+    commitState(fs, path, next)
     // tombstones are folded into the new generations; re-applying them
     // against data they no longer match is a no-op, so a crash between
     // the commit and this delete costs nothing. Files a live epoch pin
@@ -1060,7 +1015,6 @@ object TextIndex {
     // delete-file tracking), and against the pinned OLD generation they
     // still carry meaning — only the unpinned files clear.
     if (tomb.nonEmpty) {
-      val fs = fsOf(spark, path)
       val tombDir = new Path(s"$path/$TombstonesDir")
       val pinnedTombs = epochPinnedText(spark).flatMap(_._2).toSet
       if (pinnedTombs.isEmpty) fs.delete(tombDir, true): Unit
@@ -1068,10 +1022,10 @@ object TextIndex {
         .filter(f => f.isFile && !pinnedTombs.contains(f.getPath.getName))
         .foreach(f => fs.delete(f.getPath, false))
     }
-    sweepGens(spark, path, PostingsPrefix, keepFloor = gens.postings)
+    sweepGens(spark, fs, path, PostingsPrefix, keepFloor = gens.postings)
     if (tomb.nonEmpty) {
-      sweepGens(spark, path, StatsPrefix, keepFloor = gens.stats)
-      sweepGens(spark, path, DocStatsPrefix, keepFloor = gens.docs)
+      sweepGens(spark, fs, path, StatsPrefix, keepFloor = gens.stats)
+      sweepGens(spark, fs, path, DocStatsPrefix, keepFloor = gens.docs)
     }
     }
 
@@ -1099,14 +1053,14 @@ object TextIndex {
   def vacuumIndex(spark: SparkSession, path: String,
       olderThanMs: Long = 3600000L): Seq[String] =
     MaintenanceLock.withLock(spark, path) {
-    val st0 = readState(spark, path)
-    val gens = st0.gens
     val fs = fsOf(spark, path)
+    val st0 = readState(fs, path)
+    val gens = st0.gens
     val cutoff = System.currentTimeMillis() - olderThanMs
     val orphanFiles =
-      purgeOrphanFiles(fs, new Path(postingsPath(path, gens.postings)),
+      Commit.purgeOrphanFiles(fs, new Path(postingsPath(path, gens.postings)),
         st0.seq, olderThanMs) ++
-      purgeOrphanFiles(fs, new Path(docStatsPath(path, gens.docs)),
+      Commit.purgeOrphanFiles(fs, new Path(docStatsPath(path, gens.docs)),
         st0.seq, olderThanMs)
     val pinnedByPrefix = Seq(PostingsPrefix, StatsPrefix, DocStatsPrefix)
       .map(p => p -> epochPinnedGens(spark, p)).toMap
@@ -1136,7 +1090,7 @@ object TextIndex {
     * compaction cadence.
     */
   def indexStats(spark: SparkSession, path: String): DataFrame = {
-    val st = readState(spark, path)
+    val st = readState(fsOf(spark, path), path)
     import spark.implicits._
     Seq((st.fmt, st.nBuckets, st.seq, st.nDocs, st.sumDl,
       if (st.nDocs == 0) 0.0 else st.sumDl.toDouble / st.nDocs.toDouble,
@@ -1175,42 +1129,37 @@ object TextIndex {
     *
     * Cost: O(ids) for the tombstone write plus ONE column-pruned scan
     * of the doc-length sidecar that RECOUNTS the live totals under the
-    * full tombstone horizon (new tombstones included). The recount —
-    * not an incremental subtract — is what makes the verb genuinely
-    * idempotent ACROSS crashes: an incremental form computed from the
-    * pre-delete live set re-runs as a no-op once its own tombstones
-    * are on disk (they mask the docs out of the live set), leaving the
-    * totals permanently inflated after a crash between the tombstone
-    * write and the manifest commit; the recount derives the same exact
-    * totals from (sidecar, full post-delete horizon) alone — which
-    * also lets it run CONCURRENTLY with the tombstone append (the
-    * horizon is built in memory, not re-read from disk) — and the
-    * commit waits for both, so a re-run after ANY crash point
-    * reconciles. Same input volume either way: one scan of the
-    * (doc_id, dl, seq) sidecar.
+    * full tombstone horizon (new tombstones included), derived from
+    * (sidecar, committed horizon + this batch) alone — which lets it
+    * run CONCURRENTLY with the tombstone write (the horizon is built
+    * in memory, not re-read from disk). The new tombstone file masks
+    * nothing until the manifest commit lists it next to the
+    * recounted totals, so searches and totals flip together, and a
+    * crash anywhere before that commit leaves the old state whole.
     */
   def deleteDocs(docIds: DataFrame, idCol: String, path: String): Unit = {
     val spark = docIds.sparkSession
     MaintenanceLock.withLock(spark, path) {
-    val st = readState(spark, path)
+    val fs = fsOf(spark, path)
+    val st = readState(fs, path)
     val ids = docIds.select(col(idCol).cast("long").as("doc_id")).distinct()
     // the recount's mask is the POST-delete horizon built in memory:
-    // the pre-delete sidecar (its file listing snapshots eagerly at
-    // read time, so the concurrent append below is invisible to it)
-    // unioned with this batch's ids — bit-identical to re-reading the
-    // tombstone dir after the write, which is what lets the recount
-    // job run CONCURRENTLY with the tombstone append instead of
-    // serializing behind it. The commit still waits for both, so every
-    // crash window matches the sequential protocol: tombstones
-    // durable + manifest stale reconciles on re-run, nothing durable
-    // re-runs from scratch.
-    val preHorizon = tombstones(spark, path)
+    // the committed tombstones unioned with this batch's ids —
+    // bit-identical to re-reading them after the write, which is what
+    // lets the recount job run CONCURRENTLY with the tombstone write
+    // instead of serializing behind it. The tombstone file stages in
+    // an `_ingest_tmp_*` dir and is published into the sidecar after
+    // both finish; it masks nothing until the manifest commit lists
+    // it, so every crash point leaves the old state readable and the
+    // re-run starts from scratch.
+    val preHorizon = tombstones(spark, path, st)
     val obs = org.apache.spark.sql.Observation(
       s"tomb_count_${java.util.UUID.randomUUID}")
+    val tmp = new Path(path, s"$IngestTmpPrefix${java.util.UUID.randomUUID}")
     val writeF = inFlight {
       ids.withColumn("seq", lit(st.seq))
         .observe(obs, count(lit(1)).as("n"))
-        .coalesce(1).write.mode("append").parquet(s"$path/$TombstonesDir")
+        .coalesce(1).write.parquet(tmp.toString)
       obs.get("n").asInstanceOf[Long]
     }
     val newT = ids.select(col("doc_id").as("del_doc_id"))
@@ -1222,29 +1171,33 @@ object TextIndex {
     val hintedHorizon =
       if (st.nTombs <= tombBroadcastMax(spark)) broadcast(horizon) else horizon
     val (n, dl) = docTotals(
-      docStats(spark, path).filter(col("seq") <= st.seq)
+      spark.read.schema(DocStatsSchema).parquet(docStatsPath(path, st.gens.docs))
+        .filter(col("seq") <= st.seq)
         .join(hintedHorizon,
           col("doc_id") === col("del_doc_id") && col("seq") <= col("del_seq"),
           "left_anti"))
     val nNew = await(writeF)
-    commitState(spark, path, st.copy(nDocs = n, sumDl = dl,
-      nTombs = st.nTombs + nNew))
+    val published = Commit.publishFiles(fs, tmp, new Path(s"$path/$TombstonesDir"), st.seq)
+    fs.delete(tmp, true)
+    commitState(fs, path, st.copy(nDocs = n, sumDl = dl,
+      nTombs = st.nTombs + nNew, tombs = st.tombs ++ published))
     }
   }
 
   /** The per-doc tombstone horizon: `(doc_id, del_seq = max seq)` over
-    * the sidecar — broadcast-sized (deleted ids), uniquely-named
-    * columns so the anti-join condition in [[maskDeleted]] resolves
-    * without ambiguity.
+    * the tombstone files state `st` lists — broadcast-sized (deleted
+    * ids), uniquely-named columns so the anti-join condition in
+    * [[maskDeleted]] resolves without ambiguity. The sidecar is read as
+    * one directory and filtered by file name: a list of file paths
+    * would open the store once per file.
     */
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new Path(s"$path/$TombstonesDir")
-    if (fsOf(spark, path).exists(p))
-      Some(spark.read.schema(TombSchema).parquet(p.toString)
-        .groupBy(col("doc_id").as("del_doc_id"))
-        .agg(max("seq").as("del_seq")))
-    else None
-  }
+  private def tombstones(spark: SparkSession, path: String,
+      st: IndexState): Option[DataFrame] =
+    if (st.tombs.isEmpty) None
+    else Some(spark.read.schema(TombSchema).parquet(s"$path/$TombstonesDir")
+      .filter(col("_metadata.file_name").isin(st.tombs: _*))
+      .groupBy(col("doc_id").as("del_doc_id"))
+      .agg(max("seq").as("del_seq")))
 
   /** Mask tombstoned rows out of a (doc_id, seq)-carrying frame — a
     * hash ANTI join on doc_id with the seq horizon as the join's extra
@@ -1262,7 +1215,7 @@ object TextIndex {
     */
   private def maskDeleted(spark: SparkSession, path: String,
       st: IndexState, df: DataFrame): DataFrame =
-    tombstones(spark, path).fold(df) { t =>
+    tombstones(spark, path, st).fold(df) { t =>
       val horizon =
         if (st.nTombs <= tombBroadcastMax(spark)) broadcast(t) else t
       df.join(horizon,
@@ -1291,7 +1244,7 @@ object TextIndex {
     */
   def bm25(spark: SparkSession, path: String, terms: Seq[String],
       k: Int): DataFrame = {
-    val st = readState(spark, path)
+    val st = readState(fsOf(spark, path), path)
     val nDocs = st.nDocs.toDouble
     val avgdl = if (st.nDocs == 0) 0.0 else st.sumDl.toDouble / st.nDocs.toDouble
     val tf = prunedPostings(spark, path, terms)

@@ -62,7 +62,8 @@ object ManifestSized {
     * snapshot version's exact cardinality) at ANALYSIS time without
     * running a data-sized count() action per query resolution: a
     * DataFrame `count()` on a v1 parquet source is a real scan job,
-    * paid again on every statement that references the TVF.
+    * paid again on every statement that references the TVF. `keep`
+    * selects the counted files by name.
     */
   // Per-FILE footer-count cache keyed by (path, length, mtime): the
   // TVF builders run at ANALYSIS time on every statement resolution,
@@ -75,7 +76,8 @@ object ManifestSized {
   private val footerCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  def parquetRowCount(spark: SparkSession, path: String): Long = {
+  def parquetRowCount(spark: SparkSession, path: String,
+      keep: String => Boolean = _ => true): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
@@ -85,7 +87,7 @@ object ManifestSized {
       val st = it.next()
       val name = st.getPath.getName
       if (st.isFile && name.endsWith(".parquet") &&
-          !name.startsWith("_") && !name.startsWith(".")) {
+          !name.startsWith("_") && !name.startsWith(".") && keep(name)) {
         val key = s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
         val cached = footerCache.get(key)
         if (cached != null) n += cached

@@ -1646,7 +1646,7 @@ object LlmPipeline {
         IndexEpoch.expire(s, root, keepFrom =
           IndexEpoch.current(s, root).map(_._1 + 1).getOrElse(1))
         IvfIndex.compactLists(s, vidx, "doc_id")
-        val reclaimed = s.read.parquet(s"$vidx/assigned")
+        val reclaimed = s.read.parquet(IvfIndex.listsDir(s, vidx))
           .filter(col("doc_id") % 13 === 0).isEmpty &&
           !GraftSession.fsOf(s, vidx)
             .exists(new org.apache.hadoop.fs.Path(s"$vidx/tombstones"))
@@ -1858,7 +1858,7 @@ object LlmPipeline {
         s.read.parquet(TextIndex.postingsDir(s, tidx))
           .join(ids, "doc_id").count() }
       val listResidueF = inFlight {
-        s.read.parquet(s"$vidx/assigned")
+        s.read.parquet(IvfIndex.listsDir(s, vidx))
           .join(ids, Seq("doc_id"), "left_semi").count() }
       val histResidue = Snapshots.versions(s, root).size - 1
       val tableResidue = await(tableResidueF)

@@ -1,8 +1,7 @@
 package graft
 
-import graft.operators.{Commit, Snapshots, TextIndex}
+import graft.operators.{IvfIndex, Snapshots, TextIndex}
 import graft.sources.GraftFileSystem
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
@@ -15,7 +14,9 @@ import scala.jdk.CollectionConverters._
   * `rename` or `delete` made while armed, counted across every
   * instance (graft:// instances are not cached, so each resolve is a
   * new one). The failing call does nothing: it models a store that
-  * dies before applying the operation. Installed as `fs.graft.impl`.
+  * dies before applying the operation. In the `renameFalse` mode only
+  * renames count, and the Nth answers false instead, as a store does
+  * when the target exists. Installed as `fs.graft.impl`.
   */
 class FaultyGraftFileSystem extends GraftFileSystem {
   import FaultyGraftFileSystem.tick
@@ -27,10 +28,8 @@ class FaultyGraftFileSystem extends GraftFileSystem {
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 
-  override def rename(src: Path, dst: Path): Boolean = {
-    tick("rename", src)
-    super.rename(src, dst)
-  }
+  override def rename(src: Path, dst: Path): Boolean =
+    !tick("rename", src) && super.rename(src, dst)
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
     tick("delete", f)
@@ -41,23 +40,31 @@ class FaultyGraftFileSystem extends GraftFileSystem {
 object FaultyGraftFileSystem {
   private val calls = new AtomicInteger
   @volatile private var failAt = 0 // 0: disarmed
+  @volatile private var renameFalse = false
   @volatile private var firedAt: Option[String] = None
 
   /** Fail the `n`th counted call from now on. */
-  def arm(n: Int): Unit = { calls.set(0); firedAt = None; failAt = n }
+  def arm(n: Int, renameFalse: Boolean = false): Unit = {
+    calls.set(0); firedAt = None; this.renameFalse = renameFalse; failAt = n
+  }
 
   /** Stop failing; returns the injected fault, if one fired. */
   def disarm(): Option[String] = { failAt = 0; firedAt }
 
-  private def tick(op: String, p: Path): Unit =
-    if (failAt > 0 && calls.incrementAndGet() == failAt) {
+  /** Counts the call; true when it must answer false. */
+  private def tick(op: String, p: Path): Boolean =
+    if (failAt == 0 || (renameFalse && op != "rename") ||
+        calls.incrementAndGet() != failAt) false
+    else {
       firedAt = Some(s"$op #$failAt on $p")
-      throw new IOException(s"injected fault: $op #$failAt on $p")
+      if (!renameFalse) throw new IOException(s"injected fault: $op #$failAt on $p")
+      true
     }
 }
 
 class CommitSpec extends SparkSuite {
   import spark.implicits._
+  import org.apache.spark.sql.functions.col
 
   private val Vol = "faultvol"
   private lazy val mountRoot: String = {
@@ -94,17 +101,22 @@ class CommitSpec extends SparkSuite {
     finally walk.close()
   }
 
+  private val sweeps = new AtomicInteger
+
   /** Run `verb` on a fresh copy of the fixture `base` with the Nth
-    * create, rename or delete failing, for N = 1, 2, … until a run
-    * fires no fault. After each fault a reader must see exactly the
-    * old or exactly the new content; a re-run (when it still sees the
+    * create, rename or delete failing (with `renameFalse`, the Nth
+    * rename answering false), for N = 1, 2, … until a run fires no
+    * fault. After each fault a reader must see exactly the old or
+    * exactly the new content, and a fault on the writer-intent
+    * release must fail the verb; a re-run (when it still sees the
     * old) plus `vacuum` must then reach the no-fault result and leave
     * no stage file behind. Returns the number of calls the verb makes.
     */
-  private def sweep[T](base: String)(verb: String => Unit)(read: String => T)(
-      vacuum: String => Unit): Int = {
+  private def sweep[T](base: String, renameFalse: Boolean = false)(
+      verb: String => Unit)(read: String => T)(vacuum: String => Unit): Int = {
     val old = read(graftPath(base))
-    val clean = copyOf(base, s"${base}_clean")
+    val run = s"${base}_s${sweeps.incrementAndGet()}" // copy-name stem
+    val clean = copyOf(base, s"${run}_clean")
     verb(clean)
     vacuum(clean)
     val expected = read(clean)
@@ -113,14 +125,16 @@ class CommitSpec extends SparkSuite {
     var fired = true
     while (fired) {
       n += 1
-      val root = copyOf(base, s"${base}_$n")
-      FaultyGraftFileSystem.arm(n)
+      val root = copyOf(base, s"${run}_$n")
+      FaultyGraftFileSystem.arm(n, renameFalse)
       val failure =
         try { verb(root); None }
         catch { case e: Exception => Some(e) }
       val fault = FaultyGraftFileSystem.disarm()
       fired = fault.nonEmpty
       val seen = read(root)
+      if (fault.exists(f => f.startsWith("delete") && f.endsWith("/_maint_intent")))
+        assert(failure.nonEmpty, s"N=$n ($fault): the verb hid its failed intent release")
       if (failure.isEmpty)
         assert(seen == expected, s"N=$n ($fault): the verb returned but its commit is not visible")
       else {
@@ -135,23 +149,9 @@ class CommitSpec extends SparkSuite {
         vacuum(root)
       } finally spark.conf.unset("graft.index.writerLeaseMs")
       assert(read(root) == expected, s"N=$n ($fault): did not converge")
-      assert(leftovers(s"${base}_$n").isEmpty, s"N=$n ($fault): stage files left")
+      assert(leftovers(s"${run}_$n").isEmpty, s"N=$n ($fault): stage files left")
     }
     n - 1
-  }
-
-  test("claim returns false on a lost race, whether the store answers false or throws") {
-    val p = new Path(graftPath("claim/_cgen_1"))
-    val fs = GraftSession.fsOf(spark, p.toString)
-    assert(Commit.claim(fs, p))
-    assert(!Commit.claim(fs, p)) // createNewFile sees the name: false
-    // the name appears between createNewFile's existence check and its
-    // create: the store throws FileAlreadyExistsException
-    val racing = new GraftFileSystem { override def exists(f: Path): Boolean = false }
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    racing.initialize(new java.net.URI(s"graft://$Vol/"), conf)
-    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](racing.createNewFile(p))
-    assert(!Commit.claim(racing, p))
   }
 
   test("fault sweep: Snapshots.commitMerge is all-or-nothing and converges after a re-run and vacuum") {
@@ -168,26 +168,140 @@ class CommitSpec extends SparkSuite {
     info(s"swept $calls create/rename/delete calls")
   }
 
-  test("fault sweep: TextIndex.appendDocs is all-or-nothing and converges after a re-run and vacuumIndex") {
-    val base = "text"
+  // ── text index: one-file 2-bucket fixture ──────────────────────────
+
+  private lazy val textBase: String = {
     TextIndex.buildIndex(
       Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text").coalesce(1),
-      "doc_id", "text", graftPath(base), nBuckets = 2)
-    val batch = Seq((3L, "gamma delta"), (4L, "alpha delta delta")).toDF("doc_id", "text")
-    val vocab = Seq("alpha", "beta", "gamma", "delta")
-    def read(root: String): Seq[String] = {
-      val stats = TextIndex.indexStats(spark, root)
-        .select("seq", "n_docs", "sum_dl", "n_tombs").collect().map(_.toString)
-      val postings = TextIndex.prunedPostings(spark, root, vocab)
-        .select("term", "doc_id", "tf", "positions").collect().map(_.toString).sorted
-      val df = TextIndex.termStats(spark, root).collect().map(_.toString).sorted
-      stats.toSeq ++ postings ++ df
-    }
+      "doc_id", "text", graftPath("text"), nBuckets = 2)
+    "text"
+  }
+
+  /** The text fixture with one delete pending, for compaction. */
+  private lazy val textDeleted: String = {
+    TextIndex.deleteDocs(Seq(1L).toDF("doc_id"), "doc_id", copyOf(textBase, "text_del"))
+    "text_del"
+  }
+
+  private def textRead(root: String): Seq[String] = {
+    val stats = TextIndex.indexStats(spark, root)
+      .select("seq", "n_docs", "sum_dl", "n_tombs").collect().map(_.toString)
+    val postings = TextIndex.prunedPostings(spark, root, Seq("alpha", "beta", "gamma", "delta"))
+      .select("term", "doc_id", "tf", "positions").collect().map(_.toString).sorted
+    val df = TextIndex.termStats(spark, root).collect().map(_.toString).sorted
+    stats.toSeq ++ postings ++ df
+  }
+
+  private def textSweep(base: String, renameFalse: Boolean = false)(verb: String => Unit): Unit = {
     val calls = withFaultyFs {
-      sweep(base)(root => TextIndex.appendDocs(batch, "doc_id", "text", root))(read)(
+      sweep(base, renameFalse)(verb)(textRead)(
         root => TextIndex.vacuumIndex(spark, root, olderThanMs = 0L): Unit)
     }
     assert(calls > 0)
-    info(s"swept $calls create/rename/delete calls")
+    info(s"swept $calls calls")
+  }
+
+  private lazy val textBatch =
+    Seq((3L, "gamma delta"), (4L, "alpha delta delta")).toDF("doc_id", "text")
+
+  test("fault sweep: TextIndex.appendDocs is all-or-nothing and converges after a re-run and vacuumIndex") {
+    textSweep(textBase)(root => TextIndex.appendDocs(textBatch, "doc_id", "text", root))
+  }
+
+  test("fault sweep: TextIndex.appendDocs publishes nothing when a rename answers false") {
+    textSweep(textBase, renameFalse = true)(root =>
+      TextIndex.appendDocs(textBatch, "doc_id", "text", root))
+  }
+
+  test("fault sweep: TextIndex.deleteDocs is all-or-nothing and converges after a re-run and vacuumIndex") {
+    textSweep(textBase)(root => TextIndex.deleteDocs(Seq(1L).toDF("doc_id"), "doc_id", root))
+  }
+
+  test("fault sweep: TextIndex.compactIndex is all-or-nothing and converges after a re-run and vacuumIndex") {
+    textSweep(textDeleted)(root => TextIndex.compactIndex(spark, root))
+  }
+
+  // ── vector index: a 2-list fixture with one hot list ───────────────
+
+  private def vectors(ids: Seq[Long], hot: Boolean) = {
+    val rnd = new scala.util.Random(ids.head)
+    ids.map(i => (i, Array.fill(4)(
+      if (hot) 5f + rnd.nextFloat() * 0.2f else rnd.nextFloat() * 4f - 2f)))
+      .toDF("vec_id", "embedding")
+  }
+
+  private lazy val ivfBase: String = {
+    IvfIndex.buildIndex(
+      vectors(0L until 10L, hot = true).union(vectors(10L until 12L, hot = false)).coalesce(1),
+      "vec_id", "embedding", nCentroids = 2, path = graftPath("ivf"))
+    "ivf"
+  }
+
+  /** The vector fixture with two deletes pending, for compaction. */
+  private lazy val ivfDeleted: String = {
+    IvfIndex.deleteFromIndex(Seq(0L, 11L).toDF("vec_id"), "vec_id", copyOf(ivfBase, "ivf_del"))
+    "ivf_del"
+  }
+
+  /** What a search sees: the rows of the live lists, with the
+    * manifest's seq and generation and both list-size readings. */
+  private def ivfRead(root: String): Seq[String] = {
+    val (rows, centroids) = IvfIndex.loadLive(spark, root, "vec_id")
+    val live = centroids.select("centroid_id").as[Int].collect().toSeq
+    Seq(s"seq=${IvfIndex.maxCommittedSeq(spark, root)}",
+      s"cgen=${IvfIndex.liveCentroidGen(spark, root)}",
+      s"sizes=${IvfIndex.listSizes(spark, root, "vec_id")}",
+      s"bound=${IvfIndex.listSizesBound(spark, root)}") ++
+      rows.filter(col("cluster").isin(live: _*))
+        .select("vec_id", "cluster", "ingest_seq").collect().map(_.toString).sorted
+  }
+
+  private def ivfSweep(base: String, renameFalse: Boolean = false)(verb: String => Unit): Unit = {
+    val calls = withFaultyFs {
+      sweep(base, renameFalse)(verb)(ivfRead)(
+        root => IvfIndex.vacuumIndex(spark, root, olderThanMs = 0L): Unit)
+    }
+    assert(calls > 0)
+    info(s"swept $calls calls")
+  }
+
+  private lazy val ivfBatch = vectors(20L until 22L, hot = false)
+
+  test("fault sweep: IvfIndex.appendToIndex is all-or-nothing and converges after a re-run and vacuumIndex") {
+    ivfSweep(ivfBase)(root => IvfIndex.appendToIndex(ivfBatch, "vec_id", "embedding", root))
+  }
+
+  test("fault sweep: IvfIndex.appendToIndex publishes nothing when a rename answers false") {
+    ivfSweep(ivfBase, renameFalse = true)(root =>
+      IvfIndex.appendToIndex(ivfBatch, "vec_id", "embedding", root))
+  }
+
+  test("fault sweep: IvfIndex.deleteFromIndex is all-or-nothing and converges after a re-run and vacuumIndex") {
+    ivfSweep(ivfBase)(root => IvfIndex.deleteFromIndex(Seq(0L, 11L).toDF("vec_id"), "vec_id", root))
+  }
+
+  test("fault sweep: IvfIndex.compactLists is all-or-nothing and converges after a re-run and vacuumIndex") {
+    ivfSweep(ivfDeleted)(root => IvfIndex.compactLists(spark, root, "vec_id"))
+  }
+
+  test("fault sweep: IvfIndex.rebalanceIndex is all-or-nothing and converges after a re-run and vacuumIndex") {
+    ivfSweep(ivfBase)(root =>
+      assert(IvfIndex.rebalanceIndex(spark, root, "vec_id", "embedding", maxListFactor = 1.2).nonEmpty))
+  }
+
+  test("an IVF directory without a manifest is refused by name") {
+    val root = graftPath("ivf_markers")
+    val fs = GraftSession.fsOf(spark, root)
+    // a marker-era layout: lists, centroids and a commit marker, no manifest
+    spark.read.parquet(s"${graftPath(ivfBase)}/assigned")
+      .write.partitionBy("cluster").parquet(s"$root/assigned")
+    spark.read.parquet(s"${graftPath(ivfBase)}/centroids").write.parquet(s"$root/centroids")
+    assert(fs.createNewFile(new Path(root, "_seq_1")))
+    Seq[() => Any](() => IvfIndex.loadIndex(spark, root),
+      () => IvfIndex.appendToIndex(ivfBatch, "vec_id", "embedding", root)).foreach { f =>
+      val e = intercept[IllegalStateException](f())
+      assert(e.getMessage.contains(root) && e.getMessage.contains("rebuild with buildIndex"),
+        e.getMessage)
+    }
   }
 }

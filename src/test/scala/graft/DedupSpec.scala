@@ -15,6 +15,15 @@ class DedupSpec extends SparkSuite {
     (5L, "spark engines and shuffles are completely different content about") // token-set dup of 4
   ).toDF("doc_id", "text")
 
+  /** Rewind an index to its previous commit by deleting its latest
+    * manifest — the state a crash just before that commit leaves. */
+  private def rewindManifest(path: String): Unit = {
+    val fs = GraftSession.fsOf(spark, path)
+    val n = graft.operators.Commit.numbered(fs, path, graft.operators.Commit.Manifest.prefix).max
+    assert(fs.delete(new org.apache.hadoop.fs.Path(path,
+      graft.operators.Commit.Manifest.prefix + n), false))
+  }
+
   test("exact dedup keeps min id per content and counts copies") {
     val out = Dedup.exact(docs, "doc_id", "text").orderBy("doc_id").collect()
     assert(out.length == 4)
@@ -535,14 +544,15 @@ class DedupSpec extends SparkSuite {
     // crash drill: a rebalance that appended sub-lists but died before
     // its commit must be invisible, and the re-run must not duplicate
     // the moved rows. Simulate by committing a second split, then
-    // deleting its marker + centroid generation (crash rewound to just
-    // before the commit — the orphan sub-list dirs remain).
+    // rewinding its manifest and deleting its centroid generation
+    // (crash rewound to just before the commit — the orphan sub-list
+    // dirs remain).
     val split2 = IvfIndex.rebalanceIndex(spark, path, "vec_id", "embedding",
       maxListFactor = 1.0) // anything above the mean splits
     assert(split2.nonEmpty)
+    rewindManifest(path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_cgen_2"), false)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/centroids_g2"), true)
     assert(IvfIndex.liveCentroidGen(spark, path) === 1,
       "uncommitted generation became visible")
@@ -600,7 +610,7 @@ class DedupSpec extends SparkSuite {
     assert(inC0.nonEmpty)
     IvfIndex.deleteFromIndex(inC0.toSeq.toDF("vec_id"), "vec_id", path)
     IvfIndex.compactLists(spark, path, "vec_id")
-    assert(!new java.io.File(s"$path/assigned/cluster=$c0").exists(),
+    assert(!new java.io.File(s"${IvfIndex.listsDir(spark, path)}/cluster=$c0").exists(),
       "emptied inverted list's directory survived the fold")
     val live2 = live1.filter(!col("vec_id").isin(inC0.toSeq: _*))
     assert(exhaustiveLive() === brute(live2))
@@ -711,10 +721,11 @@ class DedupSpec extends SparkSuite {
     val doomed = Seq(0L, 1L, 2L)
     IvfIndex.deleteFromIndex(doomed.toDF("vec_id"), "vec_id", path)
     IvfIndex.compactLists(spark, path, "vec_id")
-    // the erasure claim is PHYSICAL: a raw read over every file still
-    // under assigned/ — committed, retired, or orphaned — must show no
-    // residue (the q_forget audit discipline; masked is not enough)
-    val residue = spark.read.parquet(s"$path/assigned")
+    // the erasure claim is PHYSICAL: a raw read over every file of the
+    // live list generation — committed, retired, or orphaned — must
+    // show no residue (the q_forget audit discipline; masked is not
+    // enough)
+    val residue = spark.read.parquet(IvfIndex.listsDir(spark, path))
       .filter(col("vec_id").isin(doomed: _*)).count()
     assert(residue === 0L,
       s"$residue deleted row(s) physically persist in on-disk lists")
@@ -1130,17 +1141,14 @@ class DedupSpec extends SparkSuite {
       .unionByName(Seq((5L, newVec)).toDF("vec_id", "embedding"))
     assert(exhaustiveLive() === brute(live1),
       "update (retract + re-ingest, no compaction) diverged")
-    // crashed append drill: append, then rewind its commit marker to
-    // the reserved state — the batch must vanish, and the re-run must
-    // publish exactly one visible copy
+    // crashed append drill: append, then rewind its manifest commit —
+    // the batch must vanish, and the re-run must publish exactly one
+    // visible copy
     val v100 = Array.fill(16)(0.33f)
     IvfIndex.appendToIndex(Seq((100L, v100)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", path)
     val m = IvfIndex.maxCommittedSeq(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$path/_seq_$m"),
-      new org.apache.hadoop.fs.Path(s"$path/_seq_$m.reserved")))
+    rewindManifest(path)
     assert(IvfIndex.maxCommittedSeq(spark, path) < m)
     assert(exhaustiveLive() === brute(live1),
       "uncommitted append batch became visible")
@@ -1634,7 +1642,7 @@ class DedupSpec extends SparkSuite {
     IvfIndex.compactLists(spark, path, "vec_id")
     // erasure is PHYSICAL: zero rows anywhere under assigned/, not
     // just masked rows
-    assert(spark.read.parquet(s"$path/assigned").count() === 0L,
+    assert(spark.read.parquet(IvfIndex.listsDir(spark, path)).count() === 0L,
       "full-erasure compaction left physical rows behind")
     // the erased index still reads and searches (zero results)
     val (assigned, centroids) = IvfIndex.loadLive(spark, path, "vec_id")
@@ -1773,7 +1781,7 @@ class DedupSpec extends SparkSuite {
     }
     // clean re-run completes the fold; erasure is then physical
     IvfIndex.compactLists(spark, path, "vec_id")
-    assert(spark.read.parquet(s"$path/assigned")
+    assert(spark.read.parquet(IvfIndex.listsDir(spark, path))
       .filter(col("vec_id") % 4 === 0).count() === 0L,
       "re-run compaction left physical residue")
     assert(IvfIndex.loadLive(spark, path, "vec_id")._1.count() === 30L)
@@ -1806,13 +1814,14 @@ class DedupSpec extends SparkSuite {
     }.toDF("vec_id", "embedding"), "vec_id", "embedding", path)
     assert(sizes().values.sum === 70L)
     assert(sizes() === sparkCounts(), "fast path wrong after a committed append")
-    // a crashed reservation forces the conservative fallback — same
-    // numbers (the orphan batch never wrote rows)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.createNewFile(new org.apache.hadoop.fs.Path(s"$path/_seq_99.reserved"))
-    assert(sizes() === sparkCounts(), "fallback disagrees under a reservation")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_seq_99.reserved"), false)
+    // a crashed append (published files, manifest rewound) leaves
+    // files above the committed seq: the footer counts skip them
+    IvfIndex.appendToIndex((200L until 210L).map { i =>
+      val rnd = new scala.util.Random(i)
+      (i, Array.fill(8)(rnd.nextFloat() - 0.5f))
+    }.toDF("vec_id", "embedding"), "vec_id", "embedding", path)
+    rewindManifest(path)
+    assert(sizes() === sparkCounts(), "fast path counted an uncommitted batch")
     // pending tombstones: exact masked fallback
     IvfIndex.deleteFromIndex(Seq(0L, 1L, 100L).toDF("vec_id"), "vec_id", path)
     assert(sizes().values.sum === 67L)
@@ -1885,7 +1894,7 @@ class DedupSpec extends SparkSuite {
         .getFileSystem(spark.sessionState.newHadoopConf())
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/tombstones")),
         s"$p: tombstone sidecar not cleared")
-      val physical = spark.read.parquet(s"$p/assigned")
+      val physical = spark.read.parquet(IvfIndex.listsDir(spark, p))
       assert(physical.count() === 48L,
         s"$p: a concurrent static-mode flip truncated the layout")
       assert(physical.filter(col("vec_id") % 5 === 0).count() === 0L,

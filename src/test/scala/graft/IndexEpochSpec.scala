@@ -114,7 +114,7 @@ class IndexEpochSpec extends SparkSuite {
       IvfIndex.compactLists(spark, vidx, "doc_id")
       // doc 2's rows are now PHYSICALLY gone from the vector store and
       // the tombstone sidecar cleared
-      val rawIds = spark.read.parquet(s"$vidx/assigned")
+      val rawIds = spark.read.parquet(IvfIndex.listsDir(spark, vidx))
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(rawIds === Seq(1L, 3L, 4L),
         s"expired pin's rows not reclaimed: $rawIds")
