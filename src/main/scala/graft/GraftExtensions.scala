@@ -12,18 +12,9 @@ import org.apache.spark.sql.types.StringType
   * `spark.sql.extensions=graft.GraftExtensions` on the session builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intArg(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
+  import GraftExtensions.{info, intArg}
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def info(name: String, usage: String) =
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
     // naive interval theta-join → bucketed equi-join (never BNLJ)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
 
@@ -70,109 +61,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("hyperplane_bucket", "hyperplane_bucket(array<float>, nBits) - LSH bucket id"),
       (es: Seq[Expression]) => HyperplaneBucket(es(0), intArg(es(1), "nBits"))))
 
-    // SQL time travel over graft snapshot tables:
-    //   SELECT * FROM graft_snapshot('/path/to/table', 2)
-    // (Iceberg's `table VERSION AS OF` / Delta's `@v2` surface). The
-    // builder resolves the version through the snapshot MANIFEST and
-    // returns the analyzed parquet plan of that version's directory,
-    // so filter/column pushdown applies to the scan exactly as for a
-    // directly-read table.
-    ext.injectTableFunction((FunctionIdentifier("graft_snapshot"),
-      info("graft_snapshot",
-        "graft_snapshot(root, version) - read a snapshot table version"),
-      GraftExtensions.snapshotTvfBuilder))
-
-    // SQL surface for index-served retrieval:
-    //   SELECT * FROM graft_text_search('/path/to/index', 'hash merge')
-    // resolves to TextIndex.searchAll's analyzed plan — conjunctive
-    // match over the persisted inverted index, reading only the query
-    // terms' bucket partitions; joins/filters compose on top in SQL.
-    ext.injectTableFunction((FunctionIdentifier("graft_text_search"),
-      info("graft_text_search",
-        "graft_text_search(indexPath, 'terms ...') - conjunctive index search"),
-      GraftExtensions.textSearchTvfBuilder))
-
-    // SQL surface for index-served vector search:
-    //   SELECT * FROM graft_ann_search('/path/to/ivf', '/path/to/probes', 5, 8)
-    // resolves to IvfIndex.searchTopK over the LIVE index view
-    // (committed seqs, tombstones masked) — the probed-cluster
-    // partition pruning and the bounded-heap cut both survive into
-    // SQL, and joins/filters compose on top. Probe tables follow the
-    // embeddings schema convention: (vec_id, embedding).
-    ext.injectTableFunction((FunctionIdentifier("graft_ann_search"),
-      info("graft_ann_search",
-        "graft_ann_search(indexPath, probesPath, k, nProbes) - IVF ANN top-k"),
-      GraftExtensions.annSearchTvfBuilder))
-
-    // Index observability in SQL:
-    //   SELECT * FROM graft_index_stats('/path/to/index')
-    // one manifest-served row (totals, seq, tombstone horizon, live
-    // generations) — zero jobs at any index size.
-    ext.injectTableFunction((FunctionIdentifier("graft_index_stats"),
-      info("graft_index_stats",
-        "graft_index_stats(indexPath) - one-row live manifest view"),
-      GraftExtensions.indexStatsTvfBuilder))
-
-    // IVF skew advisory in SQL (the observability half of
-    // rebalanceIndex; factor = optional 2nd arg, else
-    // graft.ivf.maxListFactor, else 2.0):
-    //   SELECT * FROM graft_ivf_skew('/path/to/ivf'[, 1.25])
-    // one row naming the lists a rebalance would split, same selection
-    // rule, so `WHERE rebalance_advised` schedules the repair at
-    // cadence from plain SQL.
-    ext.injectTableFunction((FunctionIdentifier("graft_ivf_skew"),
-      info("graft_ivf_skew",
-        "graft_ivf_skew(indexPath[, maxListFactor]) - one-row hot-list advisory"),
-      GraftExtensions.ivfSkewTvfBuilder))
-
-    // SQL surface for hybrid retrieval: RRF fusion of the two index-
-    // served legs (HybridSearch.rrfTopK) —
-    //   SELECT * FROM graft_hybrid_search(textIdx, vecIdx, probes,
-    //                                     'terms ...', n, k, nProbes)
-    // Both legs keep their layouts' pruning (term buckets / probed
-    // cluster partitions) and the fused cut stays a heap aggregate;
-    // joins/filters compose on top in SQL.
-    ext.injectTableFunction((FunctionIdentifier("graft_hybrid_search"),
-      info("graft_hybrid_search",
-        "graft_hybrid_search(textIndexPath, vecIndexPath, probesPath, " +
-          "'terms ...', n, k, nProbes) - RRF-fused hybrid top-k"),
-      GraftExtensions.hybridSearchTvfBuilder))
-
-    // The epoch surface in SQL — pinned fused retrieval:
-    //   SELECT * FROM graft_hybrid_search_asof(epochRoot, textIdx,
-    //     vecIdx, probes, 'terms ...', n, k, nProbes[, epoch])
-    // resolves the pin from the epoch root's manifest CONTENT (max
-    // committed epoch unless named) and serves rrfTopKAsOf's plan —
-    // the same ranking a coordinator-pinned tier returns, stable
-    // under post-pin mutation and (root registered) maintenance.
-    ext.injectTableFunction((FunctionIdentifier("graft_hybrid_search_asof"),
-      info("graft_hybrid_search_asof",
-        "graft_hybrid_search_asof(epochRoot, textIndexPath, vecIndexPath, " +
-          "probesPath, 'terms ...', n, k, nProbes[, epoch]) - pinned fused top-k"),
-      GraftExtensions.hybridSearchAsOfTvfBuilder))
-
-    // SQL surface for the change feed (Delta's table_changes):
-    //   SELECT * FROM graft_table_changes('/path/to/table', 1, 3, 'key')
-    // Resolves to Snapshots.changes' analyzed plan — the one
-    // full-outer diff join — with _change_type exposed for SQL
-    // filters/aggregates on top (the standard CDC-consumer shape).
-    ext.injectTableFunction((FunctionIdentifier("graft_table_changes"),
-      info("graft_table_changes",
-        "graft_table_changes(root, vFrom, vTo, keyCol) - row-level change feed"),
-      GraftExtensions.tableChangesTvfBuilder))
-
-    // SQL surface for branch reads (write-audit-publish from SQL):
-    //   SELECT * FROM graft_branch('/path/to/table', 'audit'[, version])
-    // Resolves through the BRANCH ref's manifest to the staged
-    // version's parquet plan — pushdown intact, main untouched.
-    ext.injectTableFunction((FunctionIdentifier("graft_branch"),
-      info("graft_branch",
-        "graft_branch(root, name[, version]) - read a branch head/version"),
-      GraftExtensions.branchTvfBuilder))
+    // the table functions (TVFs): one table, in the companion
+    GraftExtensions.tableFunctions.foreach(t =>
+      ext.injectTableFunction((FunctionIdentifier(t.name), info(t.name, t.usage), t.builder)))
   }
 }
 
 object GraftExtensions {
+  private type Builder = Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+  /** A table function: SQL name, usage line and plan builder. */
+  private final case class Tvf(name: String, usage: String, builder: Builder)
+
+  private def info(name: String, usage: String) =
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+
   private def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
     case Literal(v: Long, _) => v.toInt
@@ -185,13 +88,8 @@ object GraftExtensions {
     * analyzed parquet plan, so filter/column pushdown reach the scan
     * exactly as for a directly-read table.
     */
-  val snapshotTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val snapshotTvfBuilder: Builder =
     (es: Seq[Expression]) => {
-      def strArg(e: Expression, what: String): String = e match {
-        case Literal(v, StringType) if v != null => v.toString
-        case other => throw new IllegalArgumentException(
-          s"$what must be a string literal, got $other")
-      }
       val root = strArg(es.head, "graft_snapshot root")
       val version = es.drop(1).headOption.map(intArg(_, "graft_snapshot version"))
       val s = SparkSession.active
@@ -234,7 +132,7 @@ object GraftExtensions {
     * return TextIndex.searchAll's analyzed plan — the partition-pruned
     * conjunctive search as a SQL-composable relation.
     */
-  val textSearchTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val textSearchTvfBuilder: Builder =
     (es: Seq[Expression]) => {
       if (es.length != 2) throw new IllegalArgumentException(
         s"graft_text_search expects exactly 2 string-literal arguments " +
@@ -259,7 +157,7 @@ object GraftExtensions {
     * persisted index, as a SQL-composable relation. Schema convention:
     * index and probe tables carry (vec_id, embedding).
     */
-  val annSearchTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val annSearchTvfBuilder: Builder =
     (es: Seq[Expression]) => {
       if (es.length != 4) throw new IllegalArgumentException(
         s"graft_ann_search expects (indexPath, probesPath, k, nProbes); got ${es.length} args")
@@ -287,7 +185,7 @@ object GraftExtensions {
     * session's `graft.ivf.maxListFactor` (default 2.0, rebalance's own
     * default). Index id convention as for graft_ann_search: vec_id.
     */
-  val ivfSkewTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val ivfSkewTvfBuilder: Builder =
     (es: Seq[Expression]) => {
       if (es.length < 1 || es.length > 2) throw new IllegalArgumentException(
         s"graft_ivf_skew expects (indexPath[, maxListFactor]); got ${es.length} args")
@@ -310,7 +208,7 @@ object GraftExtensions {
     }
 
   /** The graft_index_stats TVF: the one-row manifest view. */
-  val indexStatsTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val indexStatsTvfBuilder: Builder =
     (es: Seq[Expression]) => {
       if (es.length != 1) throw new IllegalArgumentException(
         s"graft_index_stats expects (indexPath); got ${es.length} args")
@@ -323,7 +221,7 @@ object GraftExtensions {
     * persisted text index and the live view of a persisted vector
     * index, as a SQL-composable relation.
     */
-  val hybridSearchTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val hybridSearchTvfBuilder: Builder =
     (es: Seq[Expression]) => {
       if (es.length != 7) throw new IllegalArgumentException(
         "graft_hybrid_search expects (textIndexPath, vecIndexPath, " +
@@ -356,7 +254,7 @@ object GraftExtensions {
     * (max committed epoch, or the explicit trailing epoch number), so
     * a SQL reader names a coordinate, never an index generation.
     */
-  val hybridSearchAsOfTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val hybridSearchAsOfTvfBuilder: Builder =
     (es: Seq[Expression]) => {
       if (es.length != 8 && es.length != 9) throw new IllegalArgumentException(
         "graft_hybrid_search_asof expects (epochRoot, textIndexPath, " +
@@ -396,7 +294,7 @@ object GraftExtensions {
     * `table_changes`). One full-outer key join under the hood —
     * O(|vFrom| + |vTo|) at any table size.
     */
-  val tableChangesTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val tableChangesTvfBuilder: Builder =
     (es: Seq[Expression]) => {
       if (es.length != 4) throw new IllegalArgumentException(
         s"graft_table_changes expects (root, vFrom, vTo, keyCol); got ${es.length} args")
@@ -423,7 +321,7 @@ object GraftExtensions {
     * manifest — the SQL read half of write-audit-publish (audit the
     * staged snapshot in plain SQL before fast-forwarding main).
     */
-  val branchTvfBuilder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private val branchTvfBuilder: Builder =
     (es: Seq[Expression]) => {
       if (es.length < 2 || es.length > 3) throw new IllegalArgumentException(
         s"graft_branch expects (root, name[, version]); got ${es.length} args")
@@ -440,37 +338,101 @@ object GraftExtensions {
           graft.operators.Snapshots.branchVersionDir(s, root, name, version)))
     }
 
-  /** Register ONLY the graft_snapshot name binding on a live session —
-    * no optimizer rules, no expression functions. Lets a stock session
-    * (the Baseline control JVM) run the SQL-time-travel query's graft
-    * side without contaminating any control plan.
-    */
-  def registerSnapshotTvf(spark: SparkSession): Unit =
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_snapshot"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "graft_snapshot",
-        "graft_snapshot(root, version) - read a snapshot table version", ""),
-      snapshotTvfBuilder)
+  /** Every table function [[GraftExtensions]] injects. Lazy: the
+    * builders are vals defined above. */
+  private lazy val tableFunctions: Seq[Tvf] = Seq(
+    // SQL time travel over graft snapshot tables:
+    //   SELECT * FROM graft_snapshot('/path/to/table', 2)
+    // (Iceberg's `table VERSION AS OF` / Delta's `@v2` surface). The
+    // builder resolves the version through the snapshot MANIFEST and
+    // returns the analyzed parquet plan of that version's directory,
+    // so filter/column pushdown applies to the scan exactly as for a
+    // directly-read table.
+    Tvf("graft_snapshot",
+      "graft_snapshot(root, version) - read a snapshot table version",
+      snapshotTvfBuilder),
+    // SQL surface for index-served retrieval:
+    //   SELECT * FROM graft_text_search('/path/to/index', 'hash merge')
+    // resolves to TextIndex.searchAll's analyzed plan — conjunctive
+    // match over the persisted inverted index, reading only the query
+    // terms' bucket partitions; joins/filters compose on top in SQL.
+    Tvf("graft_text_search",
+      "graft_text_search(indexPath, 'terms ...') - conjunctive index search",
+      textSearchTvfBuilder),
+    // SQL surface for index-served vector search:
+    //   SELECT * FROM graft_ann_search('/path/to/ivf', '/path/to/probes', 5, 8)
+    // resolves to IvfIndex.searchTopK over the LIVE index view
+    // (committed seqs, tombstones masked) — the probed-cluster
+    // partition pruning and the bounded-heap cut both survive into
+    // SQL, and joins/filters compose on top. Probe tables follow the
+    // embeddings schema convention: (vec_id, embedding).
+    Tvf("graft_ann_search",
+      "graft_ann_search(indexPath, probesPath, k, nProbes) - IVF ANN top-k",
+      annSearchTvfBuilder),
+    // Index observability in SQL:
+    //   SELECT * FROM graft_index_stats('/path/to/index')
+    // one manifest-served row (totals, seq, tombstone horizon, live
+    // generations) — zero jobs at any index size.
+    Tvf("graft_index_stats",
+      "graft_index_stats(indexPath) - one-row live manifest view",
+      indexStatsTvfBuilder),
+    // IVF skew advisory in SQL (the observability half of
+    // rebalanceIndex; factor = optional 2nd arg, else
+    // graft.ivf.maxListFactor, else 2.0):
+    //   SELECT * FROM graft_ivf_skew('/path/to/ivf'[, 1.25])
+    // one row naming the lists a rebalance would split, same selection
+    // rule, so `WHERE rebalance_advised` schedules the repair at
+    // cadence from plain SQL.
+    Tvf("graft_ivf_skew",
+      "graft_ivf_skew(indexPath[, maxListFactor]) - one-row hot-list advisory",
+      ivfSkewTvfBuilder),
+    // SQL surface for hybrid retrieval: RRF fusion of the two index-
+    // served legs (HybridSearch.rrfTopK) —
+    //   SELECT * FROM graft_hybrid_search(textIdx, vecIdx, probes,
+    //                                     'terms ...', n, k, nProbes)
+    // Both legs keep their layouts' pruning (term buckets / probed
+    // cluster partitions) and the fused cut stays a heap aggregate;
+    // joins/filters compose on top in SQL.
+    Tvf("graft_hybrid_search",
+      "graft_hybrid_search(textIndexPath, vecIndexPath, probesPath, " +
+        "'terms ...', n, k, nProbes) - RRF-fused hybrid top-k",
+      hybridSearchTvfBuilder),
+    // The epoch surface in SQL — pinned fused retrieval:
+    //   SELECT * FROM graft_hybrid_search_asof(epochRoot, textIdx,
+    //     vecIdx, probes, 'terms ...', n, k, nProbes[, epoch])
+    // resolves the pin from the epoch root's manifest CONTENT (max
+    // committed epoch unless named) and serves rrfTopKAsOf's plan —
+    // the same ranking a coordinator-pinned tier returns, stable
+    // under post-pin mutation and (root registered) maintenance.
+    Tvf("graft_hybrid_search_asof",
+      "graft_hybrid_search_asof(epochRoot, textIndexPath, vecIndexPath, " +
+        "probesPath, 'terms ...', n, k, nProbes[, epoch]) - pinned fused top-k",
+      hybridSearchAsOfTvfBuilder),
+    // SQL surface for the change feed (Delta's table_changes):
+    //   SELECT * FROM graft_table_changes('/path/to/table', 1, 3, 'key')
+    // Resolves to Snapshots.changes' analyzed plan — the one
+    // full-outer diff join — with _change_type exposed for SQL
+    // filters/aggregates on top (the standard CDC-consumer shape).
+    Tvf("graft_table_changes",
+      "graft_table_changes(root, vFrom, vTo, keyCol) - row-level change feed",
+      tableChangesTvfBuilder),
+    // SQL surface for branch reads (write-audit-publish from SQL):
+    //   SELECT * FROM graft_branch('/path/to/table', 'audit'[, version])
+    // Resolves through the BRANCH ref's manifest to the staged
+    // version's parquet plan — pushdown intact, main untouched.
+    Tvf("graft_branch",
+      "graft_branch(root, name[, version]) - read a branch head/version",
+      branchTvfBuilder))
 
-  /** Same stock-session exception for the other snapshot-layer TVFs
-    * the SQL pairs' graft sides need (graft_table_changes,
-    * graft_branch): name bindings only, nothing touches a control
-    * plan.
+  /** Register ONLY the snapshot-layer table functions (graft_snapshot,
+    * graft_table_changes, graft_branch) on a live session — no
+    * optimizer rules, no expression functions. Lets a stock session
+    * (the Baseline control JVM) run the SQL pairs' graft sides without
+    * contaminating any control plan.
     */
-  def registerSnapshotSqlSurface(spark: SparkSession): Unit = {
-    registerSnapshotTvf(spark)
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_table_changes"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "graft_table_changes",
-        "graft_table_changes(root, vFrom, vTo, keyCol) - row-level change feed", ""),
-      tableChangesTvfBuilder)
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_branch"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "graft_branch",
-        "graft_branch(root, name[, version]) - read a branch head/version", ""),
-      branchTvfBuilder)
-  }
+  def registerSnapshotSqlSurface(spark: SparkSession): Unit =
+    tableFunctions
+      .filter(t => Set("graft_snapshot", "graft_table_changes", "graft_branch")(t.name))
+      .foreach(t => spark.sessionState.tableFunctionRegistry.registerFunction(
+        FunctionIdentifier(t.name), info(t.name, t.usage), t.builder))
 }

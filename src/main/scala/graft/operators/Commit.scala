@@ -79,6 +79,16 @@ private[graft] object Commit {
   def isStaleTmp(name: String): Boolean =
     name.startsWith(Manifest.tmp) || name.startsWith(BranchTmp)
 
+  private val StagePrefix = "_ingest_tmp_"
+
+  /** A fresh directory under the index root `path` to stage a batch in
+    * before [[publishFiles]] moves it into the live layout. */
+  def stageDir(path: String): Path =
+    new Path(path, s"$StagePrefix${java.util.UUID.randomUUID}")
+
+  /** A stage directory ([[stageDir]]) that a crashed verb left behind. */
+  def isStaged(name: String): Boolean = name.startsWith(StagePrefix)
+
   /** The lines of manifest `n` of `chain`. */
   def read(fs: FileSystem, dir: String, chain: Chain, n: Int): Seq[String] =
     readString(fs, new Path(dir, chain.prefix + n))

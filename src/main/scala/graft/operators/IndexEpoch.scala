@@ -11,9 +11,9 @@ import org.apache.spark.sql.SparkSession
   * independently, so a reader between the two commits sees text at v3
   * and vectors at v1 — a torn hybrid ranking. The epoch manifest fixes
   * that with one CAS: manifest `<n>` at the epoch root pins BOTH
-  * index generations (the text index's manifest content + the vector
-  * index's manifest seq and centroid generation, each with its
-  * tombstone file list), published atomically (tmp write +
+  * index states — each index's manifest CONTENT ([[TextIndex.exportManifest]],
+  * [[IvfIndex.exportPin]]), which lists its committed [[Tombstones]]
+  * files — published atomically (tmp write +
   * rename, fail-if-exists — [[Commit.publish]], the machinery
   * [[Snapshots]] commits through). Cross-index readers resolve the
   * max committed epoch and read each index AS OF its pinned generation
@@ -36,8 +36,10 @@ import org.apache.spark.sql.SparkSession
   * [[IvfIndex.compactLists]]/[[IvfIndex.rebalanceIndex]]/
   * [[IvfIndex.vacuumIndex]] consult every live epoch of every
   * registered root and retain whatever those pins still resolve:
-  * pinned generation directories, pinned tombstone files, and (IVF,
-  * whose row store rewrites in place) the rows any pin still serves —
+  * pinned generation directories, pinned tombstone files (one
+  * retention rule for both indexes, [[Tombstones.sweep]]), and (IVF,
+  * whose compaction writes a single list generation) the rows any pin
+  * still serves —
   * the [[Snapshots]] branch-ref shield (`q_table_branch`) lifted to
   * the index-stack level. Dropping an epoch ([[expire]]) releases its
   * pins; the next layout-maintenance pass reclaims. An UNREGISTERED
@@ -106,10 +108,10 @@ object IndexEpoch {
 
   /** Atomically publish an epoch pinning both index states verbatim
     * (a [[TextIndex.exportManifest]] export and an
-    * [[IvfIndex.exportPin]] export — CONTENT, not pointers, so the
-    * pins survive each index's own manifest sweep; each export also
-    * lists its tombstone files, the delete-file tracking that makes
-    * the pin a true snapshot). CAS: the publish lands at exactly
+    * [[IvfIndex.exportPin]] export — both the index's manifest
+    * CONTENT, not pointers, so the pins survive each index's own
+    * manifest sweep; each lists its tombstone files, the delete-file
+    * tracking that makes the pin a true snapshot). CAS: the publish lands at exactly
     * `current max + 1`; a competing committer that read the same
     * state loses the rename and throws — re-read and retry. Returns
     * the published epoch number.

@@ -45,16 +45,20 @@ import org.apache.spark.sql.functions._
   *
   * The committed state is one [[Commit.Manifest]] chain at the index
   * root — `fmt`, `seq` (the committed ingest seq), `cgen` (the live
-  * centroid generation) and `lists` (the live list generation) — the
-  * TextIndex discipline. Every verb reads it once and commits with a
-  * CAS at the next manifest number, so a verb whose state went stale
+  * centroid generation), `lists` (the live list generation) and the
+  * committed deletes (`n_tombs`, `tombfile:` lines, [[Tombstones]]) —
+  * the TextIndex discipline. Every verb reads it once and commits with
+  * a CAS at the next manifest number, so a verb whose state went stale
   * fails instead of publishing over a successor. Readers admit rows
   * with `ingest_seq <= seq`; an append stages its batch, renames it
   * into the live lists as `s<seq>-` files above that ceiling, and
-  * becomes visible only when its manifest lands. A rebalance commits
-  * `cgen+1`, a compaction `lists+1`, and [[buildIndex]] /
-  * [[mergeIndexes]] publish their first manifest last. A directory
-  * without a manifest is not read: it is refused with its path.
+  * becomes visible only when its manifest lands. A delete publishes
+  * its tombstone file and commits the list naming it. A rebalance
+  * commits `cgen+1`, a compaction `lists+1` and an empty tombstone
+  * list, and [[buildIndex]] / [[mergeIndexes]] clear their root under
+  * the writer intent and publish their first manifest last. A
+  * directory without a manifest, or with another format, is not read:
+  * it is refused with its path.
   */
 object IvfIndex {
 
@@ -102,44 +106,53 @@ object IvfIndex {
 
   // ── committed state ───────────────────────────────────────────────
   // Every row carries the `ingest_seq` of the batch that wrote it
-  // (build = 0). Tombstones are seq-scoped (`del_seq` = the committed
-  // seq at delete time): a row survives unless a tombstone for its id
-  // sits AT OR ABOVE its own ingest seq, which makes retract →
-  // re-ingest O(changes) with no compaction in between — the
-  // TextIndex fmt-4 discipline applied to the vector index.
+  // (build = 0). Deletes are the sequence-scoped [[Tombstones]] the
+  // TextIndex shares: a row survives unless a committed tombstone for
+  // its id sits AT OR ABOVE its own ingest seq, which makes retract →
+  // re-ingest O(changes) with no compaction in between.
 
-  private val Fmt = "ivf1"
-  private val IngestTmpPrefix = "_ingest_tmp_"
-  private val TombstonesDir = "tombstones"
+  /** ivf2 = ivf1 plus the committed tombstone files listed in the
+    * manifest (`n_tombs=`, `tombfile:` lines). */
+  private val Fmt = "ivf2"
 
   /** The manifest content: committed ingest seq, live centroid
-    * generation, live list generation, and the manifest number it
-    * was read from (a commit CASes at `mseq + 1`).
+    * generation, live list generation, the committed deletes, and the
+    * manifest number it was read from (a commit CASes at `mseq + 1`).
     */
-  private case class State(seq: Long, cgen: Int, lists: Int, mseq: Int)
+  private case class State(seq: Long, cgen: Int, lists: Int,
+      tombs: Tombstones.Tombs, mseq: Int)
 
   private def stateOf(fs: FileSystem, path: String): State = {
-    val (mseq, lines) = Commit.latest(fs, path).getOrElse(
-      throw new IllegalStateException(
-        s"$path has no IVF index manifest (no index, a build that never " +
-          "committed, or a layout this binary does not read) — rebuild " +
-          "with buildIndex"))
+    val (mseq, lines) = manifestOf(fs, path)
+    parseState(lines, mseq, path)
+  }
+
+  private def manifestOf(fs: FileSystem, path: String): (Int, Seq[String]) =
+    Commit.latest(fs, path).getOrElse(throw new IllegalStateException(
+      s"$path has no IVF index manifest (no index, a build that never " +
+        "committed, or a layout this binary does not read) — rebuild " +
+        "with buildIndex"))
+
+  /** The state a manifest or an [[exportPin]] pin names. */
+  private def parseState(lines: Seq[String], mseq: Int, path: String): State = {
     val kv = lines.filter(_.contains("="))
       .map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
     if (!kv.get("fmt").contains(Fmt))
       throw new IllegalStateException(
         s"$path: manifest format ${kv.getOrElse("fmt", "?")} is not $Fmt " +
           "— rebuild with buildIndex")
-    State(kv("seq").toLong, kv("cgen").toInt, kv("lists").toInt, mseq)
+    State(kv("seq").toLong, kv("cgen").toInt, kv("lists").toInt,
+      Tombstones.parse(lines), mseq)
   }
 
   private def commit(fs: FileSystem, path: String, st: State): Unit =
     Commit.publish(fs, path, Commit.Manifest,
-      Seq(s"fmt=$Fmt", s"seq=${st.seq}", s"cgen=${st.cgen}", s"lists=${st.lists}"),
+      Seq(s"fmt=$Fmt", s"seq=${st.seq}", s"cgen=${st.cgen}", s"lists=${st.lists}") ++
+        st.tombs.lines,
       expectedNext = Some(st.mseq + 1), sweep = true): Unit
 
   /** The first manifest of a fresh layout (build, merge). */
-  private val Fresh = State(seq = 0L, cgen = 0, lists = 0, mseq = 0)
+  private val Fresh = State(seq = 0L, cgen = 0, lists = 0, Tombstones.Empty, mseq = 0)
 
   // Generation 0 of the centroids and of the lists is the buildIndex
   // layout (`centroids`, `assigned`); [[rebalanceIndex]] and
@@ -186,20 +199,7 @@ object IvfIndex {
     // others through the writer intent: a rebuild racing an in-flight
     // append/compaction fails loudly at acquire instead of deleting
     // the holder's intent marker as "stale state"
-    MaintenanceLock.withLockToken(corpus.sparkSession, path) { token =>
-    val fs = fsOf(corpus.sparkSession, path)
-    // ownership re-check before the sweep: it is destructive and not
-    // CAS'd — a rebuild whose lease was somehow stolen must die HERE,
-    // before it can delete a live successor's uncommitted artifacts
-    MaintenanceLock.assertHeld(corpus.sparkSession, path, token)
-    // idempotent init: the manifest goes first, so no reader resolves
-    // a half-cleared index, then every other artifact of a previous
-    // index at `path` (tombstones, generations, staged batches) but
-    // the writer intent
-    Commit.remove(fs, path, Commit.Manifest,
-      Commit.numbered(fs, path, Commit.Manifest.prefix))
-    Commit.names(fs, path).filterNot(MaintenanceLock.isLockFile)
-      .foreach(n => fs.delete(new Path(path, n), true))
+    MaintenanceLock.rebuilding(corpus.sparkSession, path) { fs =>
     // the centroid table is independent of the assigned write (both
     // derive from the completed fit), so it lands as a concurrent job
     val centF = inFlight {
@@ -254,74 +254,55 @@ object IvfIndex {
   def loadLive(spark: SparkSession, path: String,
       idCol: String): (DataFrame, DataFrame) = {
     val fs = fsOf(spark, path)
-    val (assigned, centroids) = loadAt(spark, fs, path, stateOf(fs, path))
-    (maskDeleted(spark, fs, path, assigned, idCol), centroids)
+    val st = stateOf(fs, path)
+    val (assigned, centroids) = loadAt(spark, fs, path, st)
+    (maskDeleted(spark, path, st.tombs, assigned, idCol), centroids)
   }
 
   /** The live committed PIN — what [[IndexEpoch.publish]] embeds (the
-    * Iceberg snapshot pattern): the manifest's committed seq and
-    * centroid generation PLUS the tombstone sidecar's file list. The
-    * file list is load-bearing: a delete committed just after the pin
-    * carries `del_seq` equal to the pinned seq (tombstones are stamped
-    * with the committed seq AT delete time), so seq arithmetic alone
-    * cannot tell "deleted at pin" from "deleted after pin" — only the
-    * listing can, exactly why Iceberg snapshots track their delete
-    * files. The centroid generation scopes the read: after a
-    * rebalance the live generation's lists double-hold moved rows
-    * (retired dir + new sub-lists, until vacuum), and only the pinned
-    * generation's cluster set reads each row exactly once. One
-    * manifest read and one listing, no Spark job.
+    * Iceberg snapshot pattern: a pin carries the state, not a pointer
+    * to it): the manifest CONTENT, as [[TextIndex.exportManifest]]
+    * exports it — committed seq, centroid generation and the committed
+    * tombstone FILE list. The file list is load-bearing: a delete
+    * committed just after the pin carries `del_seq` equal to the pinned
+    * seq, so seq arithmetic alone cannot tell "deleted at pin" from
+    * "deleted after pin" — only the list can ([[Tombstones]]). The
+    * centroid generation scopes the read: after a rebalance the live
+    * generation's lists double-hold moved rows (retired dir + new
+    * sub-lists, until vacuum), and only the pinned generation's cluster
+    * set reads each row exactly once. One manifest read, no Spark job.
     */
   def exportPin(spark: SparkSession, path: String): Seq[String] = {
-    val fs = fsOf(spark, path)
-    val st = stateOf(fs, path)
-    val tombFiles = Commit.names(fs, s"$path/$TombstonesDir")
-      .filter(n => !n.startsWith("_") && !n.startsWith(".")).sorted
-    Seq(s"seq=${st.seq}", s"cgen=${st.cgen}") ++ tombFiles.map("tombfile:" + _)
+    val (_, lines) = manifestOf(fsOf(spark, path), path)
+    parseState(lines, 0, path): Unit // refuses a format this binary does not read
+    lines
   }
 
   /** [[loadLive]] AT A PIN ([[exportPin]]) — the epoch-coordinated
-    * read ([[IndexEpoch]]): rows admit iff `ingest_seq <=` the pinned
-    * seq, and the tombstone horizon is exactly the pin's file list —
-    * an append or delete committed AFTER the pin is invisible, so the
-    * epoch reader sees the index exactly as it was when the pin
-    * published. With the epoch root REGISTERED (`graft.epoch.roots`),
-    * layout maintenance retains the pinned rows, tombstone files, and
-    * centroid generation ([[IndexEpoch]] — enforced retention), so the
-    * read stays valid until the epoch is expired; unregistered pins
-    * keep the old until-layout-maintenance lifetime.
+    * read ([[IndexEpoch]]): the pin parses with the live state's
+    * parser; rows admit iff `ingest_seq <=` the pinned seq, and the
+    * tombstone horizon is exactly the pin's file list — an append or
+    * delete committed AFTER the pin is invisible, so the epoch reader
+    * sees the index exactly as it was when the pin published. Rows come
+    * from the LIVE list generation: a compaction under a registered pin
+    * carries every row the pin serves into its new generation. With the
+    * epoch root REGISTERED (`graft.epoch.roots`), layout maintenance
+    * retains the pinned rows, tombstone files, and centroid generation
+    * ([[IndexEpoch]] — enforced retention), so the read stays valid
+    * until the epoch is expired; unregistered pins keep the old
+    * until-layout-maintenance lifetime.
     */
   def loadLiveAsOf(spark: SparkSession, path: String, idCol: String,
       pin: Seq[String]): (DataFrame, DataFrame) = {
-    val asOfSeq = pin.collectFirst {
-      case l if l.startsWith("seq=") => l.stripPrefix("seq=").toLong
-    }.getOrElse(sys.error("IVF pin missing seq"))
-    val pinTombs = pin.filter(_.startsWith("tombfile:"))
-      .map(n => s"$path/$TombstonesDir/${n.stripPrefix("tombfile:")}")
+    val pinned = parseState(pin, 0, path)
     val st = stateOf(fsOf(spark, path), path)
     // the pinned centroid GENERATION is the partition filter and the
-    // centroid table searches against this view must probe. Pins
-    // predating the cgen line fall back to the live generation.
-    val pinGen = pin.collectFirst {
-      case l if l.startsWith("cgen=") => l.stripPrefix("cgen=").toInt
-    }.getOrElse(st.cgen)
-    val pinCentroids = spark.read.parquet(centroidsGenPath(path, pinGen))
-    val pinClusters = centroidIds(pinCentroids)
+    // centroid table searches against this view must probe
+    val pinCentroids = spark.read.parquet(centroidsGenPath(path, pinned.cgen))
     val visible = spark.read.parquet(listsGenPath(path, st.lists))
-      .filter(col("cluster").isin(pinClusters: _*))
-      .filter(col("ingest_seq") <= asOfSeq)
-    val masked =
-      if (pinTombs.isEmpty) visible
-      else {
-        val pinned = spark.read.schema(tombSchema(visible.schema(idCol).dataType))
-          .parquet(pinTombs: _*)
-          .groupBy("del_id").agg(max("del_seq").as("del_seq"))
-        visible.join(broadcast(pinned),
-          visible(idCol) === pinned("del_id") &&
-            visible("ingest_seq") <= pinned("del_seq"),
-          "left_anti")
-      }
-    (masked, pinCentroids)
+      .filter(col("cluster").isin(centroidIds(pinCentroids): _*))
+      .filter(col("ingest_seq") <= pinned.seq)
+    (maskDeleted(spark, path, pinned.tombs, visible, idCol), pinCentroids)
   }
 
   // ── centroid pairing: literal projection, broadcast fallback ─────
@@ -474,7 +455,7 @@ object IvfIndex {
     // stage → publish → commit: the batch's rows carry a seq above the
     // committed ceiling, so nothing of it is visible until the
     // manifest lands. The centroids are the driver-cached live table.
-    val tmp = new Path(path, s"$IngestTmpPrefix${java.util.UUID.randomUUID}")
+    val tmp = Commit.stageDir(path)
     withCodes(assignToCentroids(newVecs,
         liveCentroids(spark, fs, path, st.cgen), idCol, vecCol), vecCol)
       .withColumn("ingest_seq", lit(seq))
@@ -489,26 +470,26 @@ object IvfIndex {
   // ── deletion (retraction) ─────────────────────────────────────────
 
   /** Retract vectors from a persisted index — the GDPR-erasure /
-    * unlearning verb, O(deleted ids): one tombstone append, no list is
-    * read or rewritten. Tombstones are SEQ-SCOPED — each carries the
-    * committed ingest seq at delete time, and the mask removes a row
-    * only if a tombstone for its id sits at or above the row's own
-    * ingest seq. Deletion is therefore visible immediately and
-    * exactly, AND a later [[appendToIndex]] re-adding the same id is
-    * visible the moment it lands (its rows carry a higher seq) — no
-    * compaction in the update path, the TextIndex fmt-4 discipline.
-    * Every read path ([[loadLive]], and [[listSizes]] /
-    * [[rebalanceIndex]] internally) applies the mask as a broadcast
-    * anti-join; [[compactLists]] later folds tombstones physically.
+    * unlearning verb, O(deleted ids): one tombstone file, no list is
+    * read or rewritten. Tombstones are SEQ-SCOPED ([[Tombstones]]) —
+    * each carries the committed ingest seq at delete time, and the mask
+    * removes a row only if a tombstone for its id sits at or above the
+    * row's own ingest seq. Deletion is therefore visible at its
+    * manifest commit and exact, AND a later [[appendToIndex]] re-adding
+    * the same id is visible the moment it lands (its rows carry a
+    * higher seq) — no compaction in the update path. The file stages,
+    * publishes, and masks nothing until the CAS'd manifest commit lists
+    * it. Every read path ([[loadLive]], and [[listSizes]] /
+    * [[rebalanceIndex]] internally) applies the mask as an anti-join;
+    * [[compactLists]] later folds tombstones physically.
     */
   def deleteFromIndex(ids: DataFrame, idCol: String, path: String): Unit = {
     val spark = ids.sparkSession
-    // intent held across the tombstone append: a racing compaction
-    // clears the tombstone dir LAST assuming it folded everything —
-    // a tombstone landing mid-compaction would be cleared unfolded
-    // (a silently lost erasure)
+    // intent held across the tombstone publish and commit: a racing
+    // compaction would fold a list that misses this delete
     MaintenanceLock.withLock(spark, path) {
-    val st = stateOf(fsOf(spark, path), path)
+    val fs = fsOf(spark, path)
+    val st = stateOf(fs, path)
     // tombstones are keyed in the INDEX'S OWN id type (read from the
     // list layout's parquet footer — a metadata read): a blind
     // cast("long") would turn a string-keyed index's erasure verb into
@@ -516,8 +497,7 @@ object IvfIndex {
     // that don't fit the index type fail LOUDLY instead — validated
     // INSIDE the write job (raise_error on the first uncastable id),
     // so the verb is ONE Spark job, not a count pass plus a write
-    // pass; a raised error aborts the write before any file commits,
-    // the same visibility as the former pre-count.
+    // pass; a raised error aborts the write before any file publishes.
     val idType = spark.read.parquet(listsGenPath(path, st.lists)).schema(idCol).dataType
     val typed = ids.select(col(idCol).as("__raw"))
       .withColumn("del_id",
@@ -527,65 +507,30 @@ object IvfIndex {
             lit(s"' not castable to the index id type $idType"))).cast(idType))
         .otherwise(col("__raw").cast(idType)))
       .select("del_id").distinct()
-      .withColumn("del_seq", lit(st.seq))
-    try typed.coalesce(1).write.mode("append").parquet(s"$path/$TombstonesDir")
-    catch {
-      // surface the in-job validation as the API's contract exception
-      case e: Throwable if Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-          .take(8).exists(c => Option(c.getMessage)
-            .exists(_.contains("not castable to the index id type"))) =>
-        throw new IllegalArgumentException(
-          "deleteFromIndex: id(s) not castable to the index id type " +
-            s"$idType — no tombstone was published", e)
-    }
+    val (tombs, _) =
+      try Tombstones.record(fs, path, typed, st.seq, st.tombs)(())
+      catch {
+        // surface the in-job validation as the API's contract exception
+        case e: Throwable if Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+            .take(8).exists(c => Option(c.getMessage)
+              .exists(_.contains("not castable to the index id type"))) =>
+          throw new IllegalArgumentException(
+            "deleteFromIndex: id(s) not castable to the index id type " +
+              s"$idType — no tombstone was published", e)
+      }
+    commit(fs, path, st.copy(tombs = tombs))
     }
   }
-
-  /** The tombstone sidecar's schema: del_id in the index's own id
-    * type, del_seq long.
-    */
-  private def tombSchema(idType: org.apache.spark.sql.types.DataType) = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("del_id", idType), StructField("del_seq", LongType)))
-  }
-
-  /** Per-id tombstone horizon: (del_id, del_seq = max over that id's
-    * tombstones). Read with an EXPLICIT schema ([[tombSchema]]) so a
-    * sidecar holding files of mixed del_id widths (e.g. a
-    * pre-typed-delete index whose old files were written long before
-    * [[deleteFromIndex]] learned native keying) either reads
-    * deterministically via parquet upcast or fails LOUDLY, instead of
-    * mis-typing on whichever footer schema-merge picks.
-    */
-  private def tombstonesOf(spark: SparkSession, fs: FileSystem, path: String,
-      idType: org.apache.spark.sql.types.DataType): Option[DataFrame] =
-    if (tombstonesExist(fs, path))
-      Some(spark.read.schema(tombSchema(idType)).parquet(s"$path/$TombstonesDir")
-        .groupBy("del_id").agg(max("del_seq").as("del_seq")))
-    else None
-
-  private def tombstonesExist(fs: FileSystem, path: String): Boolean =
-    fs.exists(new Path(s"$path/$TombstonesDir"))
 
   /** Pinned vector-index states across every live epoch of every
-    * registered epoch root ([[IndexEpoch.livePins]]): (pinned seq,
-    * pinned tombstone file names, pinned centroid generation) — what
-    * the layout-maintenance verbs must RETAIN. Pins predating the
-    * cgen line pin generation 0; pins from a sibling stack sharing
-    * the conf only over-retain.
+    * registered epoch root ([[IndexEpoch.livePins]]) — what the
+    * layout-maintenance verbs must RETAIN. A pin this binary's format
+    * cannot parse is skipped (it could not be served anyway); pins
+    * from a sibling stack sharing the conf only over-retain.
     */
-  private def epochPinnedVec(spark: SparkSession): Seq[(Long, Seq[String], Int)] =
-    IndexEpoch.livePins(spark)._2.flatMap { pin =>
-      pin.collectFirst {
-        case l if l.startsWith("seq=") => l.stripPrefix("seq=").toLong
-      }.map { seq =>
-        (seq,
-          pin.filter(_.startsWith("tombfile:")).map(_.stripPrefix("tombfile:")),
-          pin.collectFirst {
-            case l if l.startsWith("cgen=") => l.stripPrefix("cgen=").toInt
-          }.getOrElse(0))
-      }
-    }
+  private def epochPins(spark: SparkSession): Seq[State] =
+    IndexEpoch.livePins(spark)._2.flatMap(pin =>
+      scala.util.Try(parseState(pin, 0, "epoch pin")).toOption)
 
   /** Cluster ids of every epoch-pinned centroid generation that exists
     * on disk — lists the layout-maintenance verbs must treat as
@@ -593,7 +538,7 @@ object IvfIndex {
     */
   private def epochPinnedClusterIds(spark: SparkSession, fs: FileSystem,
       path: String): Set[Int] =
-    epochPinnedVec(spark).map(_._3).distinct
+    epochPins(spark).map(_.cgen).distinct
       .flatMap(genClusterIds(spark, fs, path, _)).toSet
 
   /** Cluster ids of centroid generation `g`; empty when it is gone. */
@@ -603,39 +548,31 @@ object IvfIndex {
     if (fs.exists(new Path(p))) centroidIds(spark.read.parquet(p)) else Seq.empty
   }
 
-  /** Anti-join the tombstone horizon out of an index frame: a row dies
-    * only when a tombstone for its id is AT OR ABOVE the row's ingest
-    * seq — re-ingested rows carry a higher seq and pass. Identity when
-    * no deletes are pending; broadcast-sized otherwise (deleted ids are
-    * tiny next to a list scan — an index whose deletes outrun its
-    * compaction cadence should compact, not ship a giant horizon).
+  /** `df` under the committed deletes `tombs` ([[Tombstones.masked]]):
+    * a row dies only when a tombstone for its id is AT OR ABOVE the
+    * row's ingest seq — re-ingested rows carry a higher seq and pass.
+    * Identity when no deletes are committed.
     */
-  private def maskDeleted(spark: SparkSession, fs: FileSystem, path: String,
-      df: DataFrame, idCol: String): DataFrame =
-    tombstonesOf(spark, fs, path, df.schema(idCol).dataType) match {
-      case Some(t) =>
-        df.join(broadcast(t),
-          df(idCol) === t("del_id") && df("ingest_seq") <= t("del_seq"),
-          "left_anti")
-      case None => df
-    }
+  private def maskDeleted(spark: SparkSession, path: String,
+      tombs: Tombstones.Tombs, df: DataFrame, idCol: String): DataFrame =
+    Tombstones.masked(spark, path, tombs, df, idCol, "ingest_seq")
 
   private def centroidIds(centroids: DataFrame): Seq[Int] =
     centroids.select("centroid_id").collect().map(_.getInt(0)).toSeq
 
-  /** Fold pending tombstones into the physical layout: the kept rows
-    * of every live list are written as the NEXT list generation
-    * (lists left empty simply do not appear in it), the manifest then
-    * names that generation, and the superseded generation and the
-    * tombstone sidecar are deleted after the commit. Readers see the
-    * old generation or the new one, never a list in between; a crash
-    * before the commit leaves an unreferenced generation that the
-    * re-run overwrites, and one after it leaves garbage that
-    * [[vacuumIndex]] reclaims.
+  /** Fold committed tombstones into the physical layout: the kept rows
+    * of every live list are written as the NEXT list generation (lists
+    * left empty simply do not appear in it), the manifest then names
+    * that generation with an empty tombstone list, and the superseded
+    * generation and the tombstone files no manifest or live pin lists
+    * are deleted after the commit. Readers see the old generation or
+    * the new one, never a list in between; a crash before the commit
+    * leaves an unreferenced generation that the re-run overwrites, and
+    * one after it leaves garbage that [[vacuumIndex]] reclaims.
     */
   def compactLists(spark: SparkSession, path: String, idCol: String): Unit = {
     val fs = fsOf(spark, path)
-    if (!tombstonesExist(fs, path)) return
+    if (stateOf(fs, path).tombs.isEmpty) return
     MaintenanceLock.withLockToken(spark, path) { token =>
     val st = stateOf(fs, path)
     val (assigned, centroids) = loadAt(spark, fs, path, st)
@@ -649,53 +586,35 @@ object IvfIndex {
     // serves (ingest_seq ≤ pin seq and not masked under the pin's own
     // tombstone files) — including the lists of pinned retired
     // centroid generations — seqs are NOT squashed (the pins' ceilings
-    // must keep partitioning rows), and the tombstone sidecar is
-    // retained in full (pinned files are opened by path by the as-of
-    // reads; unpinned files still mask the kept-but-dead rows for live
-    // readers — re-applying either against purged rows is a no-op).
-    // Compaction still reclaims everything dead to live AND every pin;
-    // expiring the epoch releases the rest to the next pass.
-    val pins = epochPinnedVec(spark)
+    // must keep partitioning rows), and the committed tombstone list
+    // stays as it is (it still masks the kept-but-dead rows for live
+    // readers). Compaction still reclaims everything dead to live AND
+    // every pin; expiring the epoch releases the rest to the next pass.
+    val pins = epochPins(spark)
     val carried = (live ++ epochPinnedClusterIds(spark, fs, path)).distinct
     val base = assigned.filter(col("cluster").isin(carried: _*))
     val kept =
       if (pins.isEmpty)
-        maskDeleted(spark, fs, path, base, idCol)
+        maskDeleted(spark, path, st.tombs, base, idCol)
           .withColumn("ingest_seq", lit(st.seq))
       else {
+        // one left-outer join per horizon, the live one first: a row
+        // stays when it is live or some pin still serves it
         val idT = base.schema(idCol).dataType
-        var df = tombstonesOf(spark, fs, path, idT) match {
-          case Some(liveT) => base.join(broadcast(liveT),
-            base(idCol) === liveT("del_id") &&
-              base("ingest_seq") <= liveT("del_seq"), "left_outer")
-          case None => base.withColumn("del_seq", lit(null).cast("long"))
+        val horizons = (st.tombs +: pins.map(_.tombs)).zipWithIndex.flatMap {
+          case (t, j) => Tombstones.horizon(spark, path, t.files, idT).map(h =>
+            j -> h.select(col("del_id").as(s"h${j}_id"), col("del_seq").as(s"h${j}_del")))
         }
-        var keepCond = col("del_seq").isNull // not dead to live readers
-        // a pinned tombstone file that no longer EXISTS is a no-op —
-        // the livePins over-retention contract: a pin can outlive its
-        // index incarnation (a rebuild clears the sidecar while an old
-        // epoch still names its files; a sibling stack can share the
-        // conf), and reading a dangling name would abort the whole
-        // compaction instead of simply not masking for that pin
-        pins.zipWithIndex.foreach { case ((pseq, ptombs0, _), j) =>
-          val ptombs = ptombs0.filter(n =>
-            fs.exists(new Path(s"$path/$TombstonesDir/$n")))
-          val visibleToPin =
-            if (ptombs.isEmpty) col("ingest_seq") <= lit(pseq)
-            else {
-              val ph = spark.read.schema(tombSchema(idT))
-                .parquet(ptombs.map(n => s"$path/$TombstonesDir/$n"): _*)
-                .groupBy("del_id").agg(max("del_seq").as("del_seq"))
-                .select(col("del_id").as(s"pin${j}_del_id"),
-                  col("del_seq").as(s"pin${j}_del"))
-              df = df.join(broadcast(ph),
-                df(idCol) === ph(s"pin${j}_del_id") &&
-                  df("ingest_seq") <= ph(s"pin${j}_del"), "left_outer")
-              col("ingest_seq") <= lit(pseq) && col(s"pin${j}_del").isNull
-            }
-          keepCond = keepCond || visibleToPin
+        val joined = horizons.foldLeft(base) { case (df, (j, h)) =>
+          df.join(broadcast(h),
+            df(idCol) === h(s"h${j}_id") && df("ingest_seq") <= h(s"h${j}_del"),
+            "left_outer")
         }
-        df.filter(keepCond).select(base.columns.map(col): _*)
+        def unmasked(j: Int) =
+          if (horizons.exists(_._1 == j)) col(s"h${j}_del").isNull else lit(true)
+        val keep = unmasked(0) +: pins.zipWithIndex.map { case (p, j) =>
+          col("ingest_seq") <= lit(p.seq) && unmasked(j + 1) }
+        joined.filter(keep.reduce(_ || _)).select(base.columns.map(col): _*)
       }
     // which lists still have rows — observed ON the rewrite job
     // itself, not by a second scan. collect_set(cluster) carries
@@ -723,19 +642,20 @@ object IvfIndex {
     if (nonEmpty.isEmpty && live.nonEmpty)
       kept.drop("cluster").limit(0).repartition(1)
         .write.parquet(s"$next/cluster=${live.min}")
-    commit(fs, path, st.copy(lists = st.lists + 1))
-    // after the commit nothing reads the old generation or (without
-    // pins) the sidecar; both deletes are destructive and not CAS'd,
-    // so re-assert ownership first. Erasure (q_forget) is a PHYSICAL
-    // claim: older generations (a crashed pass may have left more than
-    // one) hold the folded rows and retired lists, so they go now, with
-    // no reader spare — compaction is stop-the-world for readers of the
-    // superseded generation.
+    val folded = st.copy(lists = st.lists + 1,
+      tombs = if (pins.isEmpty) Tombstones.Empty else st.tombs)
+    commit(fs, path, folded)
+    // after the commit nothing reads the old generation or the
+    // tombstone files no manifest or pin lists; both deletes are
+    // destructive and not CAS'd, so re-assert ownership first. Erasure
+    // (q_forget) is a PHYSICAL claim: older generations (a crashed pass
+    // may have left more than one) hold the folded rows and retired
+    // lists, so they go now, with no reader spare — compaction is
+    // stop-the-world for readers of the superseded generation.
     MaintenanceLock.assertHeld(spark, path, token)
-    Commit.names(fs, path).filter(listsGenOf(_).exists(_ != st.lists + 1))
+    Commit.names(fs, path).filter(listsGenOf(_).exists(_ != folded.lists))
       .foreach(n => fs.delete(new Path(path, n), true))
-    if (pins.isEmpty)
-      fs.delete(new Path(s"$path/$TombstonesDir"), true): Unit
+    Tombstones.sweep(fs, path, folded.tombs +: pins.map(_.tombs)): Unit
     }
   }
 
@@ -760,10 +680,10 @@ object IvfIndex {
 
   private def sizesAt(spark: SparkSession, fs: FileSystem, path: String,
       st: State, idCol: String): Seq[(Int, Long)] = {
-    if (!tombstonesExist(fs, path)) return boundAt(spark, fs, path, st)
+    if (st.tombs.isEmpty) return boundAt(spark, fs, path, st)
     val (assigned, centroids) = loadAt(spark, fs, path, st)
     val live = centroidIds(centroids)
-    val counted = maskDeleted(spark, fs, path,
+    val counted = maskDeleted(spark, path, st.tombs,
         assigned.filter(col("cluster").isin(live: _*)), idCol)
       .groupBy("cluster").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
@@ -803,16 +723,6 @@ object IvfIndex {
     }
   }
 
-  /** Pending tombstone ROW count from the sidecar's parquet footers —
-    * driver metadata; an upper bound on masked rows (tombstones for
-    * since-re-ingested or repeatedly-deleted ids fold to fewer dead
-    * rows than sidecar rows).
-    */
-  def tombstoneRowCount(spark: SparkSession, path: String): Long =
-    if (tombstonesExist(fsOf(spark, path), path))
-      graft.plans.ManifestSized.parquetRowCount(spark, s"$path/$TombstonesDir")
-    else 0L
-
   /** One-row skew ADVISORY — the observability half of
     * [[rebalanceIndex]], so a pipeline can schedule the repair at
     * cadence from SQL (`graft_ivf_skew` TVF) instead of an operator
@@ -825,14 +735,16 @@ object IvfIndex {
     * run would be a no-op; under pending tombstones the advisory sizes
     * are upper bounds (the poll stays METADATA-sized — zero Spark jobs
     * — even on an index that never quiesces under continuous delete
-    * load; `total_live` subtracts the tombstone sidecar's footer
-    * count). The repair itself re-measures exactly.
+    * load; `total_live` subtracts the manifest's committed tombstone
+    * row count, an upper bound on masked rows). The repair itself
+    * re-measures exactly.
     */
   def skewReport(spark: SparkSession, path: String, idCol: String,
       maxListFactor: Double = 2.0): DataFrame = {
-    val sizes = listSizesBound(spark, path)
-    val total = math.max(0L,
-      sizes.map(_._2).sum - tombstoneRowCount(spark, path))
+    val fs = fsOf(spark, path)
+    val st = stateOf(fs, path)
+    val sizes = boundAt(spark, fs, path, st)
+    val total = math.max(0L, sizes.map(_._2).sum - st.tombs.n)
     val mean = if (sizes.isEmpty) 0.0
       else sizes.map(_._2).sum.toDouble / sizes.size
     val hot = sizes.filter(s => s._2 > maxListFactor * mean && s._2 >= 2)
@@ -905,7 +817,7 @@ object IvfIndex {
         // the scan to this list's files, so a split reads what it
         // splits. Tombstoned rows fold out here for free (the split IS
         // a rewrite)
-        val rows = maskDeleted(spark, fs, path,
+        val rows = maskDeleted(spark, path, st.tombs,
             assigned.filter(col("cluster") === h), idCol)
           .withColumn("__v", array_to_vector(col(vecCol)))
         val model = new KMeans().setK(2).setSeed(seed)
@@ -938,7 +850,7 @@ object IvfIndex {
       // as-of read resolves its generation's centroid table and
       // cluster set directly (enforced retention)
       MaintenanceLock.assertHeld(spark, path, token)
-      val pinnedCg = epochPinnedVec(spark).map(_._3).toSet
+      val pinnedCg = epochPins(spark).map(_.cgen).toSet
       (1 until st.cgen).filterNot(pinnedCg.contains).foreach(g =>
         fs.delete(new Path(centroidsGenPath(path, g)), true))
     }
@@ -951,8 +863,10 @@ object IvfIndex {
     * crashed before its commit), list generations other than the live
     * one (a compaction's superseded or uncommitted output), staged
     * `_ingest_tmp_*` batches and manifest stage files of crashed
-    * verbs, and `s<seq>-` files above the committed seq (a crashed
-    * append's half-published batch, invisible already). Age-guarded
+    * verbs, `s<seq>-` files above the committed seq (a crashed
+    * append's half-published batch, invisible already), and tombstone
+    * files neither the manifest nor a live pin lists (a crashed
+    * delete's published but never committed file). Age-guarded
     * like Snapshots.vacuum — the guard is what protects in-flight
     * readers that planned against the previous centroid generation
     * (the internal pre-split repair instead keeps the spare
@@ -968,14 +882,15 @@ object IvfIndex {
       val cutoff = System.currentTimeMillis() - olderThanMs
       val stale = fs.listStatus(new Path(path)).toSeq.filter { s =>
         val n = s.getPath.getName
-        (listsGenOf(n).exists(_ != st.lists) || n.startsWith(IngestTmpPrefix) ||
+        (listsGenOf(n).exists(_ != st.lists) || Commit.isStaged(n) ||
           Commit.isStaleTmp(n)) && s.getModificationTime <= cutoff
       }
       stale.foreach(s => fs.delete(s.getPath, true))
       stale.map(_.getPath.getName) ++
         Commit.purgeOrphanFiles(fs, new Path(listsGenPath(path, st.lists)),
           st.seq, olderThanMs) ++
-        purgeUnreferencedLists(spark, fs, path, st, olderThanMs, keepSpare = false)
+        purgeUnreferencedLists(spark, fs, path, st, olderThanMs, keepSpare = false) ++
+        Tombstones.sweep(fs, path, st.tombs +: epochPins(spark).map(_.tombs), olderThanMs)
     }
 
   private def purgeUnreferencedLists(spark: SparkSession, fs: FileSystem,
@@ -1240,8 +1155,9 @@ object IvfIndex {
     require(overlap == 0,
       s"mergeIndexes: $overlap id(s) live in BOTH shards — shards must " +
         "partition the corpus")
-    val fs = fsOf(spark, dstPath)
-    fs.delete(new Path(dstPath), true)
+    // the destination is a rebuild: it serializes with every other
+    // maintenance verb on dst through the writer intent
+    MaintenanceLock.rebuilding(spark, dstPath) { fs =>
     // secondary rows re-assign to the primary's centroid set (the
     // appendToIndex path); primary rows keep their clusters verbatim
     val reassigned =
@@ -1253,6 +1169,7 @@ object IvfIndex {
       .parquet(listsGenPath(dstPath, 0))
     centroids.coalesce(1).write.mode("overwrite").parquet(centroidsGenPath(dstPath, 0))
     commit(fs, dstPath, Fresh)
+    }
   }
 
   /** Convenience fit+search in one call (small corpora / tests). */

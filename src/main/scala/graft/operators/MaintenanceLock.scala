@@ -12,7 +12,9 @@ import scala.util.control.NonFatal
   * single-writer ("maintenance writers serialize, per the Snapshots
   * conflict-on-commit contract") — this object makes the contract
   * ENFORCED and LOUD instead of assumed. A verb acquires the intent
-  * before its first write and releases it after its commit; a second
+  * before its first write and releases it after its commit — builds
+  * and merges included, which clear their destination only while
+  * holding it ([[rebuilding]]); a second
   * writer arriving mid-verb fails immediately with a clear message —
   * BEFORE it can corrupt shared state (two appends from the same base
   * state overwrite each other's sidecar generation; a compaction that
@@ -55,14 +57,16 @@ import scala.util.control.NonFatal
   *   - ZOMBIE SAFETY: a stolen writer that is somehow still alive (a
   *     JVM paused past the full lease despite heartbeats) cannot
   *     corrupt the index: its heartbeats stamp only its OWN sidecar
-  *     (the stealer's marker is untouchable), TextIndex and IvfIndex
-  *     manifest commits are CAS'd against the manifest number their
-  *     state was read from ([[Commit.publish]] `expectedNext`), and
-  *     the destructive non-CAS'd steps (IVF compaction's generation
-  *     and tombstone deletes, buildIndex's stale-artifact sweep,
-  *     rebalance's purge) re-assert ownership ([[assertHeld]])
-  *     immediately before running and abort if the token is no longer
-  *     theirs.
+  *     (the stealer's marker is untouchable), EVERY TextIndex and
+  *     IvfIndex mutation — appends, deletes (whose tombstone files
+  *     mask nothing until the manifest lists them, [[Tombstones]]),
+  *     compactions, rebalances, builds and merges — commits through a
+  *     manifest CAS'd against the manifest number its state was read
+  *     from ([[Commit.publish]] `expectedNext`), and the destructive
+  *     non-CAS'd steps (compaction's generation and tombstone sweeps,
+  *     a rebuild's clear of its root ([[rebuilding]]), rebalance's
+  *     purge) re-assert ownership ([[assertHeld]]) immediately before
+  *     running and abort if the token is no longer theirs.
   *   - RELEASE: delete the marker ONLY if the body still holds our
   *     token (a zombie's release must not evict the stealer); our own
   *     heartbeat sidecar is removed unconditionally. A failed marker
@@ -93,7 +97,7 @@ private[graft] object MaintenanceLock {
     new Path(path, HbPrefix + token)
 
   /** Is `name` (an entry of an index root) one of the intent's files? */
-  private[graft] def isLockFile(name: String): Boolean =
+  private def isLockFile(name: String): Boolean =
     name == MarkerName || name.startsWith(HbPrefix)
 
   private def isLocal(p: Path): Boolean = {
@@ -310,6 +314,24 @@ private[graft] object MaintenanceLock {
         case _: java.io.IOException => ()
       }
   }
+
+  /** Run the rebuild `f` (a build or a merge into `path`) holding the
+    * intent, on a cleared root: the manifests go first, so no reader
+    * resolves a half-cleared index, then every other entry but the
+    * intent's own files. The clear is destructive and not CAS'd, so
+    * ownership is re-asserted before it. `f` gets the root's store.
+    */
+  def rebuilding[T](spark: SparkSession, path: String)(
+      f: org.apache.hadoop.fs.FileSystem => T): T =
+    withLockToken(spark, path) { token =>
+      val fs = fsOf(spark, path)
+      assertHeld(spark, path, token)
+      Commit.remove(fs, path, Commit.Manifest,
+        Commit.numbered(fs, path, Commit.Manifest.prefix))
+      Commit.names(fs, path).filterNot(isLockFile)
+        .foreach(n => fs.delete(new Path(path, n), true))
+      f(fs)
+    }
 
   /** Run `f` holding the intent for `path`, heartbeating from a daemon
     * thread so a long verb never ages out of its own lease.

@@ -29,6 +29,11 @@ import org.apache.spark.sql.functions.col
   * writer and kept in the data files themselves, so reading a set of
   * partition dirs needs no hive-path inference.
   *
+  * Commits are single-writer: [[commitMerge]] CASes its manifest on
+  * the one it read, so a concurrent commit fails loudly, and it stages
+  * under fresh `_ingest_tmp_*` names that the next commit clears, so a
+  * crashed commit never blocks its re-run.
+  *
   * MERGE cardinality rules: at most one update row per key (standard),
   * and a key never moves between partitions (the partition value is
   * part of the row's identity — Iceberg's identity-partitioning
@@ -41,25 +46,29 @@ object PartitionedSnapshots {
   private def partPath(root: String, dir: String, v: Int) =
     s"$root/parts/$dir/v_$v"
 
-  /** Stage-write `df` partitioned by `partCol` and move each produced
-    * partition dir under `parts/<dir>/v_<v>`. Returns the partition
-    * dir names written. The writer's own hive escaping defines the dir
-    * names, so value→dir mapping is consistent by construction.
+  /** Write `df` partitioned by `partCol` into `stage`; returns the
+    * partition dir names written. The writer's own hive escaping
+    * defines the dir names, so value→dir mapping is consistent by
+    * construction.
     */
-  private def writeVersion(fs: FileSystem, root: String, df: DataFrame,
-      partCol: String, v: Int): Seq[String] = {
-    val stage = s"$root/.stage_v_$v"
+  private def stageParts(fs: FileSystem, stage: Path, df: DataFrame,
+      partCol: String): Seq[String] = {
     df.withColumn(StagePartCol, col(partCol))
-      .write.partitionBy(StagePartCol).parquet(stage)
-    val dirs = fs.listStatus(new Path(stage))
-      .filter(_.isDirectory).map(_.getPath.getName).toSeq
+      .write.partitionBy(StagePartCol).parquet(stage.toString)
+    fs.listStatus(stage).filter(_.isDirectory).map(_.getPath.getName).toSeq
+  }
+
+  /** Stage-write `df` and move each produced partition dir under
+    * `parts/<dir>/v_<v>`. Returns the partition dir names written. */
+  private def writeVersion(fs: FileSystem, root: String, stage: Path,
+      df: DataFrame, partCol: String, v: Int): Seq[String] = {
+    val dirs = stageParts(fs, stage, df, partCol)
     dirs.foreach { d =>
       val dest = new Path(partPath(root, d, v))
       fs.mkdirs(dest.getParent)
       if (!fs.rename(new Path(stage, d), dest))
         throw new java.io.IOException(s"failed to publish partition $d at v$v")
     }
-    fs.delete(new Path(stage), true)
     dirs
   }
 
@@ -71,11 +80,14 @@ object PartitionedSnapshots {
     require(seqs.nonEmpty, s"no partitioned snapshot table at $root")
     val v = version.getOrElse(seqs.max)
     require(seqs.contains(v), s"version $v not committed (have ${seqs.mkString(",")})")
-    Commit.read(fs, root, Commit.Manifest, v).map { line =>
+    parseMapping(Commit.read(fs, root, Commit.Manifest, v))
+  }
+
+  private def parseMapping(lines: Seq[String]): Map[String, Int] =
+    lines.map { line =>
       val Array(dir, dv) = line.split("\t")
       dir -> dv.toInt
     }.toMap
-  }
 
   /** Committed table versions in ascending order; empty if no table. */
   def versions(spark: SparkSession, root: String): Seq[Int] =
@@ -109,31 +121,27 @@ object PartitionedSnapshots {
   def create(spark: SparkSession, root: String, df: DataFrame, partCol: String): Int = {
     val fs = fsOf(spark, root)
     fs.delete(new Path(root), true)
-    val dirs = writeVersion(fs, root, df, partCol, 1)
+    val stage = Commit.stageDir(root)
+    val dirs = writeVersion(fs, root, stage, df, partCol, 1)
+    fs.delete(stage, true)
     // schema sidecar BEFORE the manifest commit (the commit publishes)
     writeSchema(fs, root, df)
     Commit.publish(fs, root, Commit.Manifest, dirs.sorted.map(d => s"$d\t1"))
   }
 
+  /** The union of the data dirs `m` maps; an empty `m` reads as an
+    * empty typed frame, or throws `missing` on a pre-sidecar table. */
+  private def readMapped(spark: SparkSession, root: String, m: Map[String, Int],
+      missing: => Exception): DataFrame =
+    if (m.isEmpty) emptyTyped(spark, root).getOrElse(throw missing)
+    else spark.read.parquet(m.toSeq.sorted.map { case (d, v) => partPath(root, d, v) }: _*)
+
   /** Read table version `version` (latest when None): the union of
     * every partition's manifest-resolved data dir. */
-  def read(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame = {
-    val m = mapping(spark, root, version)
-    if (m.isEmpty)
-      return emptyTyped(spark, root).getOrElse(throw new IllegalStateException(
-        s"version maps no partitions and no schema sidecar exists at $root"))
-    spark.read.parquet(m.toSeq.sorted.map { case (d, v) => partPath(root, d, v) }: _*)
-  }
+  def read(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame =
+    readMapped(spark, root, mapping(spark, root, version), new IllegalStateException(
+      s"version maps no partitions and no schema sidecar exists at $root"))
 
-  /** Read ONLY the partitions whose raw value satisfies `keep` —
-    * manifest-level partition pruning: the plan contains just the
-    * selected partitions' data dirs, so unselected partitions cost
-    * zero I/O, zero file listing, zero scan tasks. This is the
-    * metadata-pruning contract Iceberg/Hive tables provide and a
-    * 100 TB read depends on (a WHERE on the partition column must not
-    * enumerate the other 10 000 partitions' files). The hive-escaped
-    * dir name is decoded back to the raw value before `keep` sees it.
-    */
   /** Hive-style dir-name unescape: decode ONLY %XX sequences (the
     * inverse of Hive/Spark's escapePathName). java.net.URLDecoder is
     * the wrong tool here — it additionally turns a literal '+' into a
@@ -155,41 +163,52 @@ object PartitionedSnapshots {
     sb.toString
   }
 
+  /** Read ONLY the partitions whose raw value satisfies `keep` —
+    * manifest-level partition pruning: the plan contains just the
+    * selected partitions' data dirs, so unselected partitions cost
+    * zero I/O, zero file listing, zero scan tasks. This is the
+    * metadata-pruning contract Iceberg/Hive tables provide and a
+    * 100 TB read depends on (a WHERE on the partition column must not
+    * enumerate the other 10 000 partitions' files). The hive-escaped
+    * dir name is decoded back to the raw value before `keep` sees it.
+    * SQL semantics: a predicate matching no partition returns an empty
+    * (typed) relation, not an error.
+    */
   def readPartitions(spark: SparkSession, root: String,
-      keep: String => Boolean, version: Option[Int] = None): DataFrame = {
-    val m = mapping(spark, root, version).filter { case (d, _) =>
-      val raw = unescapePathName(d.stripPrefix(s"$StagePartCol="))
-      keep(raw)
-    }
-    // SQL semantics: a predicate matching no partition returns an
-    // empty (typed) relation, not an error — pre-sidecar tables keep
-    // the loud failure since their schema is unrecoverable pathless
-    if (m.isEmpty)
-      return emptyTyped(spark, root).getOrElse(throw new IllegalArgumentException(
-        "no partition matches the filter (and no schema sidecar exists)"))
-    spark.read.parquet(m.toSeq.sorted.map { case (d, v) => partPath(root, d, v) }: _*)
-  }
+      keep: String => Boolean, version: Option[Int] = None): DataFrame =
+    readMapped(spark, root, mapping(spark, root, version).filter { case (d, _) =>
+      keep(unescapePathName(d.stripPrefix(s"$StagePartCol=")))
+    }, new IllegalArgumentException(
+      "no partition matches the filter (and no schema sidecar exists)"))
 
   /** MERGE `updates` into the latest version, rewriting ONLY the
     * partitions that appear in `updates`. Returns the new table
     * version. Untouched partitions' manifest entries — and therefore
     * their files — carry over verbatim.
+    *
+    * Crash-safe: the stage directories of a crashed commit are cleared
+    * first, and the rewritten partitions land at a data version above
+    * every `v_N` already in their directories (a crashed commit may
+    * have published some before its manifest), so a re-run converges
+    * with no cleanup. The manifest CASes on the one `cur` was read
+    * from.
     */
   def commitMerge(spark: SparkSession, root: String, updates: DataFrame,
       key: String, partCol: String): Int = {
     val f = fsOf(spark, root)
-    val cur = mapping(spark, root)
-    val next = versions(spark, root).max + 1
+    Commit.names(f, root).filter(Commit.isStaged)
+      .foreach(n => f.delete(new Path(root, n), true))
+    val (mseq, lines) = Commit.latest(f, root).getOrElse(
+      throw new IllegalArgumentException(s"no partitioned snapshot table at $root"))
+    val cur = parseMapping(lines)
+    val stage = Commit.stageDir(root)
     // Discover the touched partition dirs by stage-writing the delta
     // itself — delta-sized I/O, and the dir names are escaped by the
     // same writer that will write the merged output.
-    val probe = s"$root/.probe_v_$next"
-    updates.select(col(partCol).as(StagePartCol)).distinct()
-      .withColumn("one", org.apache.spark.sql.functions.lit(1))
-      .write.partitionBy(StagePartCol).parquet(probe)
-    val touched = f.listStatus(new Path(probe))
-      .filter(_.isDirectory).map(_.getPath.getName).toSeq
-    f.delete(new Path(probe), true)
+    val touched = stageParts(f, new Path(stage, "probe"),
+      updates.select(col(partCol)).distinct(), partCol)
+    val next = (mseq +: touched.flatMap(d =>
+      Commit.names(f, s"$root/parts/$d").flatMap(Commit.seqOf(_, "v_")))).max + 1
 
     val existingTouched = touched.filter(cur.contains)
     val target =
@@ -197,7 +216,8 @@ object PartitionedSnapshots {
       else spark.read.parquet(
         existingTouched.map(d => partPath(root, d, cur(d))): _*)
     val merged = Upsert.merge(target, updates, key)
-    val written = writeVersion(f, root, merged, partCol, next)
+    val written = writeVersion(f, root, new Path(stage, "data"), merged, partCol, next)
+    f.delete(stage, true)
     // refresh the schema sidecar on EVERY commit (one driver file
     // write): a create-time-only sidecar would hand empty reads a
     // schema that disagrees with non-empty reads once a later commit
@@ -205,7 +225,8 @@ object PartitionedSnapshots {
     writeSchema(f, root, merged)
     val entries = (cur -- written) ++ written.map(_ -> next)
     Commit.publish(f, root, Commit.Manifest,
-      entries.toSeq.sorted.map { case (d, v) => s"$d\t$v" })
+      entries.toSeq.sorted.map { case (d, v) => s"$d\t$v" },
+      expectedNext = Some(mseq + 1))
   }
 
   /** (path, length, modificationTime) of every data file a version

@@ -13,7 +13,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *   - readers resolve versions through the MANIFEST, never by listing
   *     the directory — a half-written `v_N` dir is invisible until its
   *     manifest entry lands (snapshot isolation, Iceberg's core trick);
-  *   - the manifest swap (write tmp + rename) is the single commit
+  *   - a rewrite stages its data under a fresh name and moves it onto
+  *     the next free `v_N`, so two commits never write one directory;
+  *   - the manifest swap (write tmp + rename, a CAS on the manifest the
+  *     commit read) is the single commit
   *     point — rename is atomic on HDFS-like stores, so a crashed
   *     commit leaves the table at the previous version, never corrupt;
   *   - old versions are immutable: a MERGE produces the NEXT snapshot
@@ -38,18 +41,51 @@ object Snapshots {
   // Manifests are immutable, monotonically numbered files committed
   // through [[Commit.publish]]; the LIVE manifest is the one with the
   // highest number, and its body lists the committed versions.
-  private def versionsOf(fs: FileSystem, root: String): Seq[Int] =
-    Commit.latest(fs, root).fold(Seq.empty[Int])(_._2.map(_.toInt).sorted)
+
+  /** A chain's committed versions and the manifest number they were
+    * read from (0 before the first publish). */
+  private case class Head(vs: Seq[Int], mseq: Int)
+
+  private def headOf(fs: FileSystem, root: String,
+      chain: Commit.Chain = Commit.Manifest): Head =
+    Commit.latest(fs, root, chain).fold(Head(Nil, 0)) { case (n, lines) =>
+      Head(lines.map(_.toInt).sorted, n)
+    }
+
+  /** Main's head; throws when there is no table. */
+  private def mainHead(fs: FileSystem, root: String): Head = {
+    val head = headOf(fs, root)
+    require(head.vs.nonEmpty, s"no snapshot table at $root")
+    head
+  }
 
   /** Committed versions in ascending order; empty if no table. */
   def versions(spark: SparkSession, root: String): Seq[Int] =
-    versionsOf(fsOf(spark, root), root)
+    headOf(fsOf(spark, root), root).vs
 
   // version history lives INSIDE the manifest, so only the new
-  // manifest and one recovery spare are kept
-  private def writeManifest(fs: FileSystem, root: String, vs: Seq[Int]): Unit =
-    Commit.publish(fs, root, Commit.Manifest, vs.sorted.map(_.toString),
-      sweep = true): Unit
+  // manifest and one recovery spare are kept. The publish CASes on the
+  // manifest `head` was read from: a commit derived from a stale head
+  // fails with a Commit.Conflict instead of landing and dropping the
+  // concurrent commit's version from the history.
+  private def writeManifest(fs: FileSystem, root: String, head: Head,
+      vs: Seq[Int], chain: Commit.Chain = Commit.Manifest): Unit =
+    Commit.publish(fs, root, chain, vs.sorted.map(_.toString),
+      expectedNext = Some(head.mseq + 1), sweep = true): Unit
+
+  /** The committed version `version` (the head when None) of main, or
+    * of branch `branch` — the one resolver every read goes through. */
+  private def resolve(spark: SparkSession, root: String, version: Option[Int],
+      branch: Option[String] = None): Int = {
+    val fs = fsOf(spark, root)
+    val (vs, where) = branch match {
+      case Some(name) => (branchHead(fs, root, name).vs, s"on branch '$name'")
+      case None => (mainHead(fs, root).vs, "in manifest")
+    }
+    val v = version.getOrElse(vs.max)
+    require(vs.contains(v), s"version $v not $where (have ${vs.mkString(",")})")
+    v
+  }
 
   /** Next fresh version number: above every committed version and
     * every `v_N` directory on disk. The data-dir namespace is shared
@@ -107,13 +143,8 @@ object Snapshots {
     * reconciliation caveats: the version's file set is immutable.
     */
   def columnStats(spark: SparkSession, root: String,
-      version: Option[Int] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in manifest (have ${vs.mkString(",")})")
-    spark.read.parquet(statsPath(root, v))
-  }
+      version: Option[Int] = None): DataFrame =
+    spark.read.parquet(statsPath(root, resolve(spark, root, version)))
 
   /** Read a version through a scan that prunes files from its OWN
     * transactional stats ([[DataSkipping.scanWithIndex]]): any
@@ -122,10 +153,7 @@ object Snapshots {
     */
   def readPruned(spark: SparkSession, root: String,
       version: Option[Int] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in manifest (have ${vs.mkString(",")})")
+    val v = resolve(spark, root, version)
     DataSkipping.scanWithIndex(spark, versionPath(root, v), statsPath(root, v))
   }
 
@@ -140,10 +168,7 @@ object Snapshots {
     */
   def readPrunedWhere(spark: SparkSession, root: String,
       predicate: Column, version: Option[Int] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in manifest (have ${vs.mkString(",")})")
+    val v = resolve(spark, root, version)
     DataSkipping.scanPrunedWhere(spark, versionPath(root, v),
       statsPath(root, v), predicate)
   }
@@ -162,7 +187,7 @@ object Snapshots {
       Commit.writeString(fs, new Path(root, StatsColsFile), statsCols.mkString(","))
       writeColumnStats(spark, root, 1, statsCols)
     }
-    writeManifest(fs, root, Seq(1))
+    writeManifest(fs, root, Head(Nil, 0), Seq(1))
   }
 
   /** The resolved data directory of a committed version (latest when
@@ -170,32 +195,17 @@ object Snapshots {
     * derive exact row counts from parquet footers without a job.
     */
   def versionDir(spark: SparkSession, root: String,
-      version: Option[Int] = None): String = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in manifest (have ${vs.mkString(",")})")
-    versionPath(root, v)
-  }
+      version: Option[Int] = None): String =
+    versionPath(root, resolve(spark, root, version))
 
   /** [[versionDir]] resolved through a BRANCH ref's manifest. */
   def branchVersionDir(spark: SparkSession, root: String, name: String,
-      version: Option[Int] = None): String = {
-    val bvs = branchVersions(spark, root, name)
-    val v = version.getOrElse(bvs.max)
-    require(bvs.contains(v),
-      s"version $v not on branch '$name' (have ${bvs.mkString(",")})")
-    versionPath(root, v)
-  }
+      version: Option[Int] = None): String =
+    versionPath(root, resolve(spark, root, version, Some(name)))
 
   /** Read a specific version, or the latest when `version` is None. */
-  def read(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in manifest (have ${vs.mkString(",")})")
-    spark.read.parquet(versionPath(root, v))
-  }
+  def read(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame =
+    spark.read.parquet(versionPath(root, resolve(spark, root, version)))
 
   /** MERGE `updates` into the latest snapshot and commit the result as
     * the next version (copy-on-write). Returns the new version number.
@@ -206,32 +216,48 @@ object Snapshots {
   def commitMerge(spark: SparkSession, root: String,
       updates: DataFrame, key: String, evolveSchema: Boolean = false): Int = {
     val fs = fsOf(spark, root)
-    val vs = versionsOf(fs, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    val cur = spark.read.parquet(versionPath(root, vs.max))
-    commitRewrite(spark, fs, root, vs,
+    val head = mainHead(fs, root)
+    val cur = spark.read.parquet(versionPath(root, head.vs.max))
+    commitRewrite(spark, fs, root, Commit.Manifest, head)(rewrite(fs, root, head,
       if (evolveSchema) Upsert.mergeEvolve(cur, updates, key)
-      else Upsert.merge(cur, updates, key))
+      else Upsert.merge(cur, updates, key)))
   }
 
-  /** Write `df` as the next version of main — an engine-owned rewrite
-    * of the head, so with registered stats columns it keeps the head's
-    * file count, clustered on those columns so per-file bounds stay
-    * tight, plus its stats sidecar — then publish it in main's
-    * manifest, the commit point. Returns the new version number.
+  /** Commit the next version of `chain` on top of `head`: `write` fills
+    * a fresh stage directory (it gets the registered stats columns),
+    * which then moves onto the next fresh version number; the stats
+    * sidecar follows, then the CAS'd manifest publish — the commit
+    * point. Returns the new version number.
     */
   private def commitRewrite(spark: SparkSession, fs: FileSystem, root: String,
-      vs: Seq[Int], df: DataFrame): Int = {
-    val next = nextVersion(fs, root, vs)
+      chain: Commit.Chain, head: Head)(write: (String, Seq[String]) => Unit): Int = {
     val statCols = statsColumnsOf(fs, root)
-    val shaped =
-      if (statCols.isEmpty) df
-      else clustered(df, statCols, dataFiles(fs, root, vs.max).length)
-    shaped.write.parquet(versionPath(root, next))
+    val stage = Commit.stageDir(root)
+    write(stage.toString, statCols)
+    val next = nextVersion(fs, root, head.vs)
+    val dst = new Path(versionPath(root, next))
+    // a rename onto an existing directory moves INTO it: a writer that
+    // took `next` first shows up as our stage dir nested under its own
+    val nested = new Path(dst, stage.getName)
+    if (!fs.rename(stage, dst) || fs.exists(nested)) {
+      fs.delete(nested, true)
+      fs.delete(stage, true)
+      throw new Commit.Conflict(s"commit conflict for $root/v_$next: the " +
+        "version was taken by a concurrent commit (or the store refused the move)")
+    }
     if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeManifest(fs, root, vs :+ next)
+    writeManifest(fs, root, head, head.vs :+ next, chain)
     next
   }
+
+  /** The write of an engine-owned rewrite of `head`: with registered
+    * stats columns it keeps the head's file count, clustered on those
+    * columns so per-file bounds stay tight. */
+  private def rewrite(fs: FileSystem, root: String, head: Head, df: DataFrame)(
+      dir: String, statCols: Seq[String]): Unit =
+    (if (statCols.isEmpty) df
+     else clustered(df, statCols, dataFiles(fs, root, head.vs.max).length))
+      .write.parquet(dir)
 
   /** DELETE … WHERE as a new snapshot commit (the Delta/Iceberg DELETE
     * verb, and the GDPR-erasure path when the predicate is a key
@@ -247,10 +273,10 @@ object Snapshots {
       predicate: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val fs = fsOf(spark, root)
-    val vs = versionsOf(fs, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    commitRewrite(spark, fs, root, vs, spark.read.parquet(versionPath(root, vs.max))
-      .filter(not(coalesce(predicate, lit(false)))))
+    val head = mainHead(fs, root)
+    commitRewrite(spark, fs, root, Commit.Manifest, head)(rewrite(fs, root, head,
+      spark.read.parquet(versionPath(root, head.vs.max))
+        .filter(not(coalesce(predicate, lit(false))))))
   }
 
   /** UPDATE … SET … WHERE as a new snapshot commit (the Delta/Iceberg
@@ -268,9 +294,8 @@ object Snapshots {
     import org.apache.spark.sql.functions.{coalesce, lit, when}
     require(set.nonEmpty, "commitUpdate needs at least one assignment")
     val fs = fsOf(spark, root)
-    val vs = versionsOf(fs, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    val cur = spark.read.parquet(versionPath(root, vs.max))
+    val head = mainHead(fs, root)
+    val cur = spark.read.parquet(versionPath(root, head.vs.max))
     // SQL UPDATE fails analysis on an unknown SET target; a silent
     // no-op commit would be strictly worse. Match with the session's
     // resolver so case sensitivity follows spark.sql.caseSensitive.
@@ -282,12 +307,13 @@ object Snapshots {
     val hit = coalesce(predicate, lit(false))
     // one select, every assignment against the old row — sequential
     // withColumn would let one SET read another's output
-    commitRewrite(spark, fs, root, vs, cur.select(cur.columns.map { c =>
-      set.collectFirst { case (k, e) if resolver(c, k) => e } match {
-        case Some(e) => when(hit, e).otherwise(cur(c)).as(c)
-        case None => cur(c)
-      }
-    }: _*))
+    commitRewrite(spark, fs, root, Commit.Manifest, head)(rewrite(fs, root, head,
+      cur.select(cur.columns.map { c =>
+        set.collectFirst { case (k, e) if resolver(c, k) => e } match {
+          case Some(e) => when(hit, e).otherwise(cur(c)).as(c)
+          case None => cur(c)
+        }
+      }: _*)))
   }
 
   /** Roll the table back to `toVersion` by committing a NEW version
@@ -307,22 +333,19 @@ object Snapshots {
     */
   def rollback(spark: SparkSession, root: String, toVersion: Int): Int = {
     val fs = fsOf(spark, root)
-    val vs = versionsOf(fs, root)
-    require(vs.contains(toVersion),
-      s"version $toVersion not in manifest (have ${vs.mkString(",")})")
-    val next = nextVersion(fs, root, vs)
-    org.apache.hadoop.fs.FileUtil.copy(
-      fs, new Path(versionPath(root, toVersion)),
-      fs, new Path(versionPath(root, next)),
-      false, spark.sessionState.newHadoopConf())
+    val head = headOf(fs, root)
+    require(head.vs.contains(toVersion),
+      s"version $toVersion not in manifest (have ${head.vs.mkString(",")})")
     // the byte-copy carries the target's _stats sidecar, but its
-    // file_path values name the OLD version's files — rewrite the
-    // stats against the new paths before publishing (conservative
-    // lookups would otherwise just stop pruning, never miscount)
-    val statCols = statsColumnsOf(fs, root)
-    if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeManifest(fs, root, vs :+ next)
-    next
+    // file_path values name the OLD version's files — commitRewrite
+    // rewrites the stats against the new paths before publishing
+    // (conservative lookups would otherwise just stop pruning, never
+    // miscount)
+    commitRewrite(spark, fs, root, Commit.Manifest, head) { (dir, _) =>
+      org.apache.hadoop.fs.FileUtil.copy(
+        fs, new Path(versionPath(root, toVersion)), fs, new Path(dir),
+        false, spark.sessionState.newHadoopConf()): Unit
+    }
   }
 
   /** Change data feed between two committed versions (Delta's
@@ -412,22 +435,18 @@ object Snapshots {
     */
   def compact(spark: SparkSession, root: String, targetBytes: Long): (Int, Int, Int) = {
     val fs = fsOf(spark, root)
-    val vs = versionsOf(fs, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
+    val head = mainHead(fs, root)
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val cur = vs.max
+    val cur = head.vs.max
     val curFiles = dataFiles(fs, root, cur)
     val (nBefore, totalBytes) = (curFiles.length, curFiles.map(_.getLen).sum)
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val next = nextVersion(fs, root, vs)
     val cur0 = spark.read.parquet(versionPath(root, cur))
-    val statCols = statsColumnsOf(fs, root)
-    val shaped =
-      if (statCols.isEmpty) cur0.repartition(nFiles)
-      else clustered(cur0, statCols, nFiles) // bin-pack AND re-cluster
-    shaped.write.parquet(versionPath(root, next))
-    if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    writeManifest(fs, root, vs :+ next)
+    val next = commitRewrite(spark, fs, root, Commit.Manifest, head) { (dir, statCols) =>
+      (if (statCols.isEmpty) cur0.repartition(nFiles)
+       else clustered(cur0, statCols, nFiles)) // bin-pack AND re-cluster
+        .write.parquet(dir)
+    }
     (next, nBefore, dataFiles(fs, root, next).length)
   }
 
@@ -485,12 +504,12 @@ object Snapshots {
 
   /** The branch's committed versions (its visible history), ascending. */
   def branchVersions(spark: SparkSession, root: String, name: String): Seq[Int] =
-    branchVersionsOf(fsOf(spark, root), root, name)
+    branchHead(fsOf(spark, root), root, name).vs
 
-  private def branchVersionsOf(fs: FileSystem, root: String, name: String): Seq[Int] = {
-    val head = Commit.latest(fs, root, Commit.branch(name))
-    require(head.nonEmpty, s"no branch '$name' at $root")
-    head.get._2.map(_.toInt).sorted
+  private def branchHead(fs: FileSystem, root: String, name: String): Head = {
+    val head = headOf(fs, root, Commit.branch(name))
+    require(head.vs.nonEmpty, s"no branch '$name' at $root")
+    head
   }
 
   /** Fork a branch from main at `at` (default: the current head). The
@@ -501,7 +520,7 @@ object Snapshots {
       at: Option[Int] = None): Unit = {
     requireBranchName(name)
     val fs = fsOf(spark, root)
-    val vs = versionsOf(fs, root)
+    val vs = headOf(fs, root).vs
     require(vs.nonEmpty, s"no snapshot table at $root")
     val atV = at.getOrElse(vs.max)
     require(vs.contains(atV), s"fork version $atV not in manifest")
@@ -515,12 +534,8 @@ object Snapshots {
 
   /** Read the branch head (or a specific version on the branch). */
   def readBranch(spark: SparkSession, root: String, name: String,
-      version: Option[Int] = None): DataFrame = {
-    val bvs = branchVersions(spark, root, name)
-    val v = version.getOrElse(bvs.max)
-    require(bvs.contains(v), s"version $v not on branch '$name' (have ${bvs.mkString(",")})")
-    spark.read.parquet(versionPath(root, v))
-  }
+      version: Option[Int] = None): DataFrame =
+    spark.read.parquet(versionPath(root, resolve(spark, root, version, Some(name))))
 
   /** Commit `df` wholesale as the branch's next version — the staging
     * verb of write-audit-publish. The version number is allocated
@@ -533,17 +548,8 @@ object Snapshots {
   def commitToBranch(spark: SparkSession, root: String, name: String,
       df: DataFrame): Int = {
     val fs = fsOf(spark, root)
-    val bvs = branchVersionsOf(fs, root, name) // also validates the branch
-    val next = nextVersion(fs, root, versionsOf(fs, root))
-    val statCols = statsColumnsOf(fs, root)
-    val shaped =
-      if (statCols.isEmpty) df
-      else clustered(df, statCols, dataFiles(fs, root, bvs.max).length)
-    shaped.write.parquet(versionPath(root, next))
-    if (statCols.nonEmpty) writeColumnStats(spark, root, next, statCols)
-    Commit.publish(fs, root, Commit.branch(name), (bvs :+ next).map(_.toString),
-      sweep = true)
-    next
+    val head = branchHead(fs, root, name) // also validates the branch
+    commitRewrite(spark, fs, root, Commit.branch(name), head)(rewrite(fs, root, head, df))
   }
 
   /** Publish the branch: atomically swap MAIN's manifest to the
@@ -555,12 +561,12 @@ object Snapshots {
     */
   def fastForward(spark: SparkSession, root: String, name: String): Int = {
     val fs = fsOf(spark, root)
-    val bvs = branchVersionsOf(fs, root, name)
-    val mvs = versionsOf(fs, root)
-    require(bvs.startsWith(mvs),
+    val bvs = branchHead(fs, root, name).vs
+    val main = headOf(fs, root)
+    require(bvs.startsWith(main.vs),
       s"main advanced since the fork of '$name' " +
-        s"(main ${mvs.mkString(",")} is not a prefix of branch ${bvs.mkString(",")}); rebase")
-    if (bvs != mvs) writeManifest(fs, root, bvs)
+        s"(main ${main.vs.mkString(",")} is not a prefix of branch ${bvs.mkString(",")}); rebase")
+    if (bvs != main.vs) writeManifest(fs, root, main, bvs)
     bvs.max
   }
 
@@ -579,7 +585,9 @@ object Snapshots {
     * dir that readers can never resolve and `expire` never touches (it
     * only deletes versions DROPPED from the manifest). Also sweeps
     * the stage files of crashed manifest publishes
-    * ([[Commit.isStaleTmp]]). Returns the deleted directory/file names.
+    * ([[Commit.isStaleTmp]]) and the stage directories of crashed
+    * rewrites ([[Commit.isStaged]]). Returns the deleted
+    * directory/file names.
     *
     * Versions referenced by ANY live branch ref count as live — a
     * staged-but-unpublished branch commit is resolvable through its
@@ -593,14 +601,14 @@ object Snapshots {
     */
   def vacuum(spark: SparkSession, root: String, olderThanMs: Long = 3600000L): Seq[String] = {
     val fs = fsOf(spark, root)
-    val live = versionsOf(fs, root).toSet ++
-      Commit.branches(fs, root).flatMap(branchVersionsOf(fs, root, _))
+    val live = headOf(fs, root).vs.toSet ++
+      Commit.branches(fs, root).flatMap(branchHead(fs, root, _).vs)
     val cutoff = System.currentTimeMillis() - olderThanMs
     val orphans = fs.listStatus(new Path(root)).toSeq.filter { st =>
       val n = st.getPath.getName
       val leakedData = st.isDirectory &&
         Commit.seqOf(n, VersionPrefix).exists(!live.contains(_))
-      val leakedTmp = !st.isDirectory && Commit.isStaleTmp(n)
+      val leakedTmp = if (st.isDirectory) Commit.isStaged(n) else Commit.isStaleTmp(n)
       (leakedData || leakedTmp) && st.getModificationTime <= cutoff
     }
     orphans.foreach(st => fs.delete(st.getPath, true))
@@ -617,17 +625,16 @@ object Snapshots {
   def expire(spark: SparkSession, root: String, retain: Int): Seq[Int] = {
     require(retain >= 1, s"must retain at least 1 version: $retain")
     val fs = fsOf(spark, root)
-    val vs = versionsOf(fs, root)
-    require(vs.nonEmpty, s"no snapshot table at $root")
-    val keep = vs.takeRight(retain)
-    val drop = vs.dropRight(retain)
+    val head = mainHead(fs, root)
+    val keep = head.vs.takeRight(retain)
+    val drop = head.vs.dropRight(retain)
     if (drop.nonEmpty) {
-      writeManifest(fs, root, keep)
+      writeManifest(fs, root, head, keep)
       // a version expired from MAIN may still be resolvable through a
       // live branch ref (a fork below the expiry horizon) — drop it
       // from main's history but keep its data until the branch retires
       val branchLive = Commit.branches(fs, root)
-        .flatMap(branchVersionsOf(fs, root, _)).toSet
+        .flatMap(branchHead(fs, root, _).vs).toSet
       drop.filterNot(branchLive.contains)
         .foreach(v => fs.delete(new Path(versionPath(root, v)), true))
     }

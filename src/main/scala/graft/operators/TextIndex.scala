@@ -65,9 +65,10 @@ import graft.InFlight.{await, inFlight}
   *
   * Every ingest (build = 1, each append bumps by 1) carries a
   * monotonic SEQUENCE number recorded in the manifest and stamped on
-  * every posting and doc-length row it writes. A delete records
-  * `(doc_id, seq = live manifest seq)` in the `_tombstones` sidecar,
-  * and readers mask only rows with `row.seq <= tombstone.seq` — the
+  * every posting and doc-length row it writes. A delete records each
+  * id with `del_seq = live manifest seq` through [[Tombstones]] (the
+  * delete protocol the vector index shares), and readers mask only
+  * rows with `row.seq <= del_seq` — the
   * per-segment deleted-docs contract of a merge-based index (e.g.
   * Lucene), re-expressed on parquet. The payoff is UPDATE maintenance
   * that is O(changes): retract (tombstone the old ids) then re-ingest
@@ -81,8 +82,6 @@ object TextIndex {
   private val PostingsPrefix = "_postings_g"
   private val StatsPrefix = "_term_stats_g"
   private val DocStatsPrefix = "_doc_stats_g"
-  private val IngestTmpPrefix = "_ingest_tmp_"
-  private val TombstonesDir = "_tombstones"
 
   /** File count for the df sidecar — vocabulary-sized data (a few
     * bytes per distinct term), where the default shuffle-partition
@@ -96,6 +95,8 @@ object TextIndex {
     * index whose recorded fmt it does not recognize, because probing
     * with mismatched parameters is a silent wrong-bucket miss (the same
     * failure class the DataSkipping bloom format row guards against).
+    * fmt 7 = fmt 6 with the tombstone files in the [[Tombstones]]
+    * schema the vector index shares (`del_id`, `del_seq`).
     * fmt 6 = fmt 5 plus the committed tombstone files LISTED in the
     * manifest (`tombfile:` lines): a delete stages its file, publishes
     * it, and only the manifest commit makes it mask anything, so a
@@ -113,8 +114,7 @@ object TextIndex {
     * commit + id-only tombstones; fmt 2 a flat append-only doc-stats
     * dir; fmt 1 flat dirs with in-place sidecar overwrite).
     */
-  private val Fmt = 6
-  private val TombFile = "tombfile:"
+  private val Fmt = 7
 
   /** Explicit artifact schemas: every index read DECLARES its schema
     * instead of inferring — no footer sampling at planning time (at
@@ -141,11 +141,6 @@ object TextIndex {
       StructField("doc_id", LongType), StructField("dl", LongType),
       StructField("seq", LongType)))
   }
-  private val TombSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", LongType), StructField("seq", LongType)))
-  }
 
   /** The live (postings, term-stats, doc-stats) generation triple,
     * resolved from the highest committed manifest — the only way any
@@ -164,23 +159,27 @@ object TextIndex {
     * `nDocs`/`sumDl` are the LIVE corpus totals — build sets them,
     * append adds its batch, delete recounts them under the new
     * tombstones, compaction recounts them exactly from the rewritten
-    * sidecar. `nTombs` is the tombstone sidecar's ROW count (grown by
-    * each delete, zeroed when compaction folds the sidecar) — the
-    * mask-strategy switch: past [[tombBroadcastMax]] rows the
-    * tombstone horizon stops being broadcast. `tombs` names the
-    * committed tombstone files: the only ones any reader applies.
+    * sidecar. `tombs` is the committed delete state ([[Tombstones]]):
+    * the listed files, the only ones any reader applies, and their row
+    * count (grown by each delete, zeroed when compaction folds them) —
+    * the mask-strategy switch.
     */
   // `mseq` is the MANIFEST number this state was read from (0 for a
   // fresh build) — the commit CASes at mseq+1, so a state derived from
   // a superseded manifest cannot publish (see Commit.publish).
   private case class IndexState(fmt: Int, nBuckets: Int, seq: Long,
-      nDocs: Long, sumDl: Long, nTombs: Long, gens: Gens, mseq: Int = 0,
-      tombs: Seq[String] = Nil)
+      nDocs: Long, sumDl: Long, gens: Gens, mseq: Int = 0,
+      tombs: Tombstones.Tombs = Tombstones.Empty)
 
   private def readState(fs: FileSystem, path: String): IndexState = {
+    val (mseq, lines) = manifestOf(fs, path)
+    parseState(lines, mseq)
+  }
+
+  private def manifestOf(fs: FileSystem, path: String): (Int, Seq[String]) = {
     val head = Commit.latest(fs, path)
     require(head.nonEmpty, s"no text index manifest at $path")
-    parseState(head.get._2, head.get._1)
+    head.get
   }
 
   private def parseState(lines: Seq[String], mseq: Int): IndexState = {
@@ -190,10 +189,9 @@ object TextIndex {
     require(fmt == Fmt,
       s"text index has format $fmt; this binary speaks $Fmt only")
     IndexState(fmt, kv("n_buckets").toInt, kv("seq").toLong,
-      kv("n_docs").toLong, kv("sum_dl").toLong, kv("n_tombs").toLong,
+      kv("n_docs").toLong, kv("sum_dl").toLong,
       Gens(kv("postings").toInt, kv("term_stats").toInt,
-        kv("doc_stats").toInt), mseq = mseq,
-      tombs = lines.filter(_.startsWith(TombFile)).map(_.stripPrefix(TombFile)))
+        kv("doc_stats").toInt), mseq = mseq, tombs = Tombstones.parse(lines))
   }
 
   /** The live committed PIN — what [[IndexEpoch.publish]] embeds (the
@@ -205,11 +203,8 @@ object TextIndex {
     * from "deleted after pin", exactly why Iceberg snapshots track
     * delete files). One FS read, no Spark job.
     */
-  def exportManifest(spark: SparkSession, path: String): Seq[String] = {
-    val head = Commit.latest(fsOf(spark, path), path)
-    require(head.nonEmpty, s"no text index manifest at $path")
-    head.get._2
-  }
+  def exportManifest(spark: SparkSession, path: String): Seq[String] =
+    manifestOf(fsOf(spark, path), path)._2
 
   private def readGens(spark: SparkSession, path: String): Gens =
     readState(fsOf(spark, path), path).gens
@@ -219,9 +214,8 @@ object TextIndex {
     Commit.publish(fs, path, Commit.Manifest,
       Seq(s"fmt=$Fmt", s"n_buckets=${st.nBuckets}", s"seq=${st.seq}",
         s"n_docs=${st.nDocs}", s"sum_dl=${st.sumDl}",
-        s"n_tombs=${st.nTombs}",
         s"postings=${st.gens.postings}", s"term_stats=${st.gens.stats}",
-        s"doc_stats=${st.gens.docs}") ++ st.tombs.map(TombFile + _),
+        s"doc_stats=${st.gens.docs}") ++ st.tombs.lines,
       expectedNext = Some(st.mseq + 1), sweep = true): Unit
 
   /** The manifest's LIVE corpus totals (n_docs, sum_dl) — the BM25
@@ -243,30 +237,22 @@ object TextIndex {
   def postingsDir(spark: SparkSession, path: String): String =
     postingsPath(path, readGens(spark, path).postings)
 
-  /** Best-effort sweep of superseded generation dirs, keeping
-    * `keepFloor` and everything newer (the previous generation stays
-    * as the in-flight readers' spare — the Snapshots recovery-spare
-    * rule applied to data dirs). A crash here only leaks directories.
-    */
   /** Pinned index states across every live epoch of every registered
-    * epoch root ([[IndexEpoch.livePins]]): (parsed state, pinned
-    * tombstone file names) — what generation sweeps and the
-    * compaction's tombstone clear must RETAIN. A pin this binary's
+    * epoch root ([[IndexEpoch.livePins]]) — the generations and
+    * tombstone files that generation sweeps, the compaction's
+    * tombstone sweep and vacuum must RETAIN. A pin this binary's
     * format cannot parse is skipped (it could not be served anyway);
     * pins from a sibling stack sharing the conf only over-retain.
     */
-  private def epochPinnedText(spark: SparkSession)
-      : Seq[(IndexState, Seq[String])] =
-    IndexEpoch.livePins(spark)._1.flatMap { pin =>
-      scala.util.Try(parseState(pin, 0)).toOption.map(st =>
-        (st, st.tombs))
-    }
+  private def epochPinnedText(spark: SparkSession): Seq[IndexState] =
+    IndexEpoch.livePins(spark)._1.flatMap(pin =>
+      scala.util.Try(parseState(pin, 0)).toOption)
 
   /** The generation numbers live epoch pins hold for `prefix` — the
     * enforced-retention set [[sweepGens]] and [[vacuumIndex]] exclude.
     */
   private def epochPinnedGens(spark: SparkSession, prefix: String): Set[Int] =
-    epochPinnedText(spark).map { case (st, _) =>
+    epochPinnedText(spark).map { st =>
       prefix match {
         case PostingsPrefix => st.gens.postings
         case StatsPrefix => st.gens.stats
@@ -274,11 +260,15 @@ object TextIndex {
       }
     }.toSet
 
+  /** Best-effort sweep of superseded generation dirs, keeping
+    * `keepFloor` and everything newer (the previous generation stays
+    * as the in-flight readers' spare — the Snapshots recovery-spare
+    * rule applied to data dirs) and every generation a live epoch pins,
+    * whatever its age (the branch-ref shield lifted from
+    * Snapshots.vacuum). A crash here only leaks directories.
+    */
   private def sweepGens(spark: SparkSession, fs: FileSystem, path: String,
       prefix: String, keepFloor: Int): Unit = {
-    // generations a live epoch pins are NOT swept, whatever their age:
-    // the pin's as-of read resolves them directly (the branch-ref
-    // shield lifted from Snapshots.vacuum)
     val pinned = epochPinnedGens(spark, prefix)
     fs.listStatus(new Path(path))
       .filter(s => Commit.seqOf(s.getPath.getName, prefix)
@@ -300,13 +290,14 @@ object TextIndex {
     * onto every posting row (one long, dictionary-encoded to almost
     * nothing in parquet), so BM25 never joins a doc-length table;
     * zero-token documents keep their sidecar row — corpus-side n_docs
-    * and sum(dl) must count them. Drops any existing index at `path`.
+    * and sum(dl) must count them. Drops any existing index at `path`,
+    * holding the writer intent ([[MaintenanceLock.rebuilding]]), so a
+    * rebuild racing another maintenance verb fails loudly.
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
-      path: String, nBuckets: Int = 64): Unit = {
+      path: String, nBuckets: Int = 64): Unit =
+    MaintenanceLock.rebuilding(docs.sparkSession, path) { fs =>
     val spark = docs.sparkSession
-    val fs = fsOf(spark, path)
-    fs.delete(new Path(path), true)
     // bucket-exclusive shuffle before the partitioned write: ONE file
     // per bucket instead of write-tasks × buckets. nBuckets is the
     // build-parallelism lever — each bucket is written by one task, so
@@ -343,20 +334,8 @@ object TextIndex {
     // re-supplied its own bucket count could silently hash into the
     // wrong partitions and miss every posting.
     commitState(fs, path, IndexState(Fmt, nBuckets, seq = 1L,
-      nDocs = n, sumDl = dl, nTombs = 0L,
-      Gens(postings = 1, stats = 1, docs = 1)))
-  }
-
-  /** Broadcast ceiling for the tombstone horizon, in sidecar rows —
-    * settable per session via `graft.textindex.tombBroadcastMax`. A
-    * tombstone row is two longs, so the default (1M rows, ~16 MB)
-    * sits under Spark's own broadcast comfort zone; an index whose
-    * deletes outrun compaction past this point masks through a
-    * shuffled anti-join instead of shipping the horizon to every task.
-    */
-  private def tombBroadcastMax(spark: SparkSession): Long =
-    spark.conf.getOption("graft.textindex.tombBroadcastMax")
-      .map(_.toLong).getOrElse(1000000L)
+      nDocs = n, sumDl = dl, Gens(postings = 1, stats = 1, docs = 1)))
+    }
 
   /** (row count, sum of dl) of a doc-stats frame — the two corpus
     * scalars the manifest carries for BM25.
@@ -506,7 +485,7 @@ object TextIndex {
     // commit below would make both copies visible at once
     Commit.purgeOrphanFiles(fs, new Path(postingsPath(path, st.gens.postings)), st.seq)
     Commit.purgeOrphanFiles(fs, new Path(docStatsPath(path, st.gens.docs)), st.seq)
-    val tmp = s"$path/$IngestTmpPrefix${java.util.UUID.randomUUID}"
+    val tmp = Commit.stageDir(path).toString
     tokenizePostings(docs, idCol, textCol, st.nBuckets, newSeq)
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$tmp/postings")
@@ -594,10 +573,7 @@ object TextIndex {
       .filter(col("bucket").isin(distinctTerms.map(bucketIdOf(_, st.nBuckets)): _*))
       .filter(col("term").isin(distinctTerms: _*))
       .filter(col("seq") <= st.seq)
-    tombstones(spark, path, st).fold(raw)(pinned =>
-      raw.join(broadcast(pinned),
-        col("doc_id") === col("del_doc_id") && col("seq") <= col("del_seq"),
-        "left_anti"))
+    maskDeleted(spark, path, st, raw)
   }
 
   /** [[bm25]] AT A PINNED MANIFEST — the epoch-coordinated RANKED read
@@ -714,9 +690,9 @@ object TextIndex {
     * (shards with different nBuckets merge correctly), df recounts
     * exactly from the merged postings, the doc sidecars union, and
     * everything publishes through the same single-manifest-commit
-    * protocol as [[buildIndex]] — a crash leaves no index at dst, a
-    * re-run overwrites cleanly. O(|shard postings|), the corpus is
-    * never re-tokenized.
+    * protocol as [[buildIndex]], holding dst's writer intent — a crash
+    * leaves no index at dst, a re-run overwrites cleanly.
+    * O(|shard postings|), the corpus is never re-tokenized.
     *
     * Doc-id spaces must be DISJOINT (shards of one corpus): validated
     * against the two doc sidecars — a doc present in both shards
@@ -744,8 +720,7 @@ object TextIndex {
     require(overlap == 0,
       s"mergeIndexes: $overlap doc id(s) live in BOTH shards — shards " +
         "must partition the corpus")
-    val fs = fsOf(spark, dstPath)
-    fs.delete(new Path(dstPath), true)
+    MaintenanceLock.rebuilding(spark, dstPath) { fs =>
     // one bucket-keyed shuffle re-buckets the union to the dst layout;
     // seq squashes to 1 (the merged index is a fresh build lineage)
     postA.unionByName(postB)
@@ -774,8 +749,8 @@ object TextIndex {
       .write.mode("overwrite").parquet(statsPath(dstPath, 1))
     val (n, dl) = await(sideF)
     commitState(fs, dstPath, IndexState(Fmt, nBuckets, seq = 1L,
-      nDocs = n, sumDl = dl, nTombs = 0L,
-      Gens(postings = 1, stats = 1, docs = 1)))
+      nDocs = n, sumDl = dl, Gens(postings = 1, stats = 1, docs = 1)))
+    }
   }
 
   /** Wildcard (prefix) search served ENTIRELY from the index —
@@ -964,7 +939,6 @@ object TextIndex {
     val fs = fsOf(spark, path)
     val st = readState(fs, path) // includes the format check
     val gens = st.gens
-    val tomb = tombstones(spark, path, st)
     val live = spark.read.schema(PostingsSchema).parquet(postingsPath(path, gens.postings))
       .filter(col("seq") <= st.seq) // crashed-append orphans die here too
     val kept = maskDeleted(spark, path, st, live)
@@ -972,8 +946,8 @@ object TextIndex {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(postingsPath(path, gens.postings + 1))
     val next =
-      if (tomb.isEmpty)
-        st.copy(nTombs = 0L, gens = gens.copy(postings = gens.postings + 1))
+      if (st.tombs.isEmpty)
+        st.copy(gens = gens.copy(postings = gens.postings + 1))
       else {
         // deletes fold in: recount per-term df from the compacted
         // postings (exact reconciliation of the one delete-stale stat)
@@ -1004,26 +978,20 @@ object TextIndex {
         val (n, dl) = (obs.get("n").asInstanceOf[Long],
           obs.get("dl").asInstanceOf[Long])
         await(dfF)
-        st.copy(nDocs = n, sumDl = dl, nTombs = 0L, tombs = Nil,
+        st.copy(nDocs = n, sumDl = dl, tombs = Tombstones.Empty,
           gens = Gens(gens.postings + 1, gens.stats + 1, gens.docs + 1))
       }
     commitState(fs, path, next)
     // tombstones are folded into the new generations; re-applying them
     // against data they no longer match is a no-op, so a crash between
-    // the commit and this delete costs nothing. Files a live epoch pin
-    // LISTS are retained: the pin's as-of read opens them by path (its
+    // the commit and this sweep costs nothing. Files a live epoch pin
+    // LISTS are retained: the pin's as-of read applies them (its
     // delete-file tracking), and against the pinned OLD generation they
     // still carry meaning — only the unpinned files clear.
-    if (tomb.nonEmpty) {
-      val tombDir = new Path(s"$path/$TombstonesDir")
-      val pinnedTombs = epochPinnedText(spark).flatMap(_._2).toSet
-      if (pinnedTombs.isEmpty) fs.delete(tombDir, true): Unit
-      else fs.listStatus(tombDir)
-        .filter(f => f.isFile && !pinnedTombs.contains(f.getPath.getName))
-        .foreach(f => fs.delete(f.getPath, false))
-    }
+    if (!st.tombs.isEmpty)
+      Tombstones.sweep(fs, path, Tombstones.Empty +: epochPinnedText(spark).map(_.tombs))
     sweepGens(spark, fs, path, PostingsPrefix, keepFloor = gens.postings)
-    if (tomb.nonEmpty) {
+    if (!st.tombs.isEmpty) {
       sweepGens(spark, fs, path, StatsPrefix, keepFloor = gens.stats)
       sweepGens(spark, fs, path, DocStatsPrefix, keepFloor = gens.docs)
     }
@@ -1045,7 +1013,9 @@ object TextIndex {
     * files inside the LIVE generations whose seq exceeds the
     * committed manifest seq — a crashed append's half-published
     * batch (already invisible to readers via the seq ceiling;
-    * reclaimed eagerly by the next append, or here by age).
+    * reclaimed eagerly by the next append, or here by age), and
+    * tombstone files neither the manifest nor a live pin lists (a
+    * crashed delete's published but never committed file).
     * `olderThanMs` additionally
     * age-guards everything swept; tests pass 0. Returns the deleted
     * names.
@@ -1074,14 +1044,14 @@ object TextIndex {
       val leaked = leakedGen(n, PostingsPrefix, gens.postings) ||
         leakedGen(n, StatsPrefix, gens.stats) ||
         leakedGen(n, DocStatsPrefix, gens.docs) ||
-        n.startsWith(IngestTmpPrefix) || Commit.isStaleTmp(n)
+        Commit.isStaged(n) || Commit.isStaleTmp(n)
       leaked && st.getModificationTime <= cutoff
     }
     orphans.foreach(st => fs.delete(st.getPath, true))
-    orphanFiles ++ orphans.map(_.getPath.getName)
+    orphanFiles ++ orphans.map(_.getPath.getName) ++ Tombstones.sweep(fs, path,
+      st0.tombs +: epochPinnedText(spark).map(_.tombs), olderThanMs)
     }
 
-  /** Per-term document frequencies from the persisted stats table. */
   /** One-row observability view of the live manifest — fmt, bucket
     * count, committed seq, corpus totals (with the derived avgdl), the
     * tombstone horizon, and the live artifact generations. Manifest
@@ -1094,11 +1064,12 @@ object TextIndex {
     import spark.implicits._
     Seq((st.fmt, st.nBuckets, st.seq, st.nDocs, st.sumDl,
       if (st.nDocs == 0) 0.0 else st.sumDl.toDouble / st.nDocs.toDouble,
-      st.nTombs, st.gens.postings, st.gens.stats, st.gens.docs))
+      st.tombs.n, st.gens.postings, st.gens.stats, st.gens.docs))
       .toDF("fmt", "n_buckets", "seq", "n_docs", "sum_dl", "avgdl",
         "n_tombs", "postings_gen", "stats_gen", "doc_stats_gen")
   }
 
+  /** Per-term document frequencies from the persisted stats table. */
   def termStats(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(StatsSchema).parquet(statsPath(path, readGens(spark, path).stats))
 
@@ -1111,15 +1082,15 @@ object TextIndex {
     spark.read.schema(DocStatsSchema).parquet(docStatsPath(path, readGens(spark, path).docs))
 
   /** Mark documents as DELETED (GDPR-erasure / retraction verb for the
-    * index): each id appends to the `_tombstones` sidecar stamped with
-    * the CURRENT manifest seq, and every read path masks postings with
-    * `seq <= tombstone.seq` — exact immediately for all tf-based
-    * results (searchAll/searchAny/phrase/proximity) and, via the
-    * manifest corpus totals this call commits, for BM25's
-    * n_docs/avgdl; per-term df keeps counting tombstoned docs until
-    * the next [[compactIndex]] physically purges their postings and
-    * recounts df exactly — Lucene's deleted-docs-bitmap + merge
-    * contract, re-expressed.
+    * index): the ids are recorded as [[Tombstones]] stamped with the
+    * CURRENT manifest seq, and every read path masks postings with
+    * `seq <= del_seq` — exact immediately for all tf-based results
+    * (searchAll/searchAny/phrase/proximity) and, via the manifest
+    * corpus totals this call commits, for BM25's n_docs/avgdl;
+    * per-term df keeps counting tombstoned docs until the next
+    * [[compactIndex]] physically purges their postings and recounts df
+    * exactly — Lucene's deleted-docs-bitmap + merge contract,
+    * re-expressed.
     *
     * RE-ADDING a deleted doc needs NO compaction: [[appendDocs]] bumps
     * the ingest seq past the tombstone, so the re-ingested postings
@@ -1142,86 +1113,36 @@ object TextIndex {
     MaintenanceLock.withLock(spark, path) {
     val fs = fsOf(spark, path)
     val st = readState(fs, path)
-    val ids = docIds.select(col(idCol).cast("long").as("doc_id")).distinct()
+    val ids = docIds.select(col(idCol).cast("long").as("del_id")).distinct()
     // the recount's mask is the POST-delete horizon built in memory:
     // the committed tombstones unioned with this batch's ids —
     // bit-identical to re-reading them after the write, which is what
-    // lets the recount job run CONCURRENTLY with the tombstone write
-    // instead of serializing behind it. The tombstone file stages in
-    // an `_ingest_tmp_*` dir and is published into the sidecar after
-    // both finish; it masks nothing until the manifest commit lists
-    // it, so every crash point leaves the old state readable and the
-    // re-run starts from scratch.
-    val preHorizon = tombstones(spark, path, st)
-    val obs = org.apache.spark.sql.Observation(
-      s"tomb_count_${java.util.UUID.randomUUID}")
-    val tmp = new Path(path, s"$IngestTmpPrefix${java.util.UUID.randomUUID}")
-    val writeF = inFlight {
-      ids.withColumn("seq", lit(st.seq))
-        .observe(obs, count(lit(1)).as("n"))
-        .coalesce(1).write.parquet(tmp.toString)
-      obs.get("n").asInstanceOf[Long]
+    // lets the recount job run alongside the tombstone write
+    val newT = ids.withColumn("del_seq", lit(st.seq))
+    val horizon = Tombstones.horizon(spark, path, st.tombs.files,
+        org.apache.spark.sql.types.LongType)
+      .fold(newT)(_.unionByName(newT))
+      .groupBy("del_id").agg(max("del_seq").as("del_seq"))
+    val (tombs, (n, dl)) = Tombstones.record(fs, path, ids, st.seq, st.tombs) {
+      docTotals(Tombstones.mask(spark,
+        spark.read.schema(DocStatsSchema).parquet(docStatsPath(path, st.gens.docs))
+          .filter(col("seq") <= st.seq),
+        "doc_id", "seq", horizon, st.tombs.n))
     }
-    val newT = ids.select(col("doc_id").as("del_doc_id"))
-      .withColumn("del_seq", lit(st.seq))
-    val horizon = preHorizon.fold(newT)(_.unionByName(newT))
-      .groupBy("del_doc_id").agg(max("del_seq").as("del_seq"))
-    // same mask-strategy switch as [[maskDeleted]]: past the ceiling
-    // the horizon shuffles instead of shipping to every task
-    val hintedHorizon =
-      if (st.nTombs <= tombBroadcastMax(spark)) broadcast(horizon) else horizon
-    val (n, dl) = docTotals(
-      spark.read.schema(DocStatsSchema).parquet(docStatsPath(path, st.gens.docs))
-        .filter(col("seq") <= st.seq)
-        .join(hintedHorizon,
-          col("doc_id") === col("del_doc_id") && col("seq") <= col("del_seq"),
-          "left_anti"))
-    val nNew = await(writeF)
-    val published = Commit.publishFiles(fs, tmp, new Path(s"$path/$TombstonesDir"), st.seq)
-    fs.delete(tmp, true)
-    commitState(fs, path, st.copy(nDocs = n, sumDl = dl,
-      nTombs = st.nTombs + nNew, tombs = st.tombs ++ published))
+    commitState(fs, path, st.copy(nDocs = n, sumDl = dl, tombs = tombs))
     }
   }
 
-  /** The per-doc tombstone horizon: `(doc_id, del_seq = max seq)` over
-    * the tombstone files state `st` lists — broadcast-sized (deleted
-    * ids), uniquely-named columns so the anti-join condition in
-    * [[maskDeleted]] resolves without ambiguity. The sidecar is read as
-    * one directory and filtered by file name: a list of file paths
-    * would open the store once per file.
-    */
-  private def tombstones(spark: SparkSession, path: String,
-      st: IndexState): Option[DataFrame] =
-    if (st.tombs.isEmpty) None
-    else Some(spark.read.schema(TombSchema).parquet(s"$path/$TombstonesDir")
-      .filter(col("_metadata.file_name").isin(st.tombs: _*))
-      .groupBy(col("doc_id").as("del_doc_id"))
-      .agg(max("seq").as("del_seq")))
-
-  /** Mask tombstoned rows out of a (doc_id, seq)-carrying frame — a
-    * hash ANTI join on doc_id with the seq horizon as the join's extra
-    * condition: a row survives unless some tombstone for its doc is AT
-    * OR ABOVE its ingest seq. Rows re-ingested after the delete carry
-    * a higher seq and pass — the whole point of seq-scoping. Identity
-    * when no deletes are pending.
-    *
-    * Join strategy comes off the MANIFEST's tombstone count: up to
-    * [[tombBroadcastMax]] rows the horizon broadcasts (deleted-id
-    * sets are normally tiny next to a posting scan); past it — an
-    * index whose deletes outrun its compaction cadence — the mask
-    * falls back to an unhinted anti-join, which Spark shuffles, so
-    * the horizon never has to fit on every executor at once.
+  /** Mask tombstoned rows out of a (doc_id, seq)-carrying frame under
+    * the deletes state `st` lists ([[Tombstones.masked]]): a row
+    * survives unless some tombstone for its doc is AT OR ABOVE its
+    * ingest seq. Rows re-ingested after the delete carry a higher seq
+    * and pass — the whole point of seq-scoping. Identity when no
+    * deletes are committed.
     */
   private def maskDeleted(spark: SparkSession, path: String,
       st: IndexState, df: DataFrame): DataFrame =
-    tombstones(spark, path, st).fold(df) { t =>
-      val horizon =
-        if (st.nTombs <= tombBroadcastMax(spark)) broadcast(t) else t
-      df.join(horizon,
-        col("doc_id") === col("del_doc_id") && col("seq") <= col("del_seq"),
-        "left_anti")
-    }
+    Tombstones.masked(spark, path, st.tombs, df, "doc_id", "seq")
 
   /** BM25 top-k served ENTIRELY from the index — the corpus is never
     * touched at query time, and neither is any doc-length table or

@@ -377,9 +377,6 @@ object LlmPipeline {
   private def duckSpaceWords(v: String = "t"): String =
     s"list_filter(string_split_regex(text, '\\s+'), $v -> len($v) > 0)"
 
-  /** DuckDB twin of Dedup.tokens: the word split, distinct. */
-  private val duckToks = s"list_distinct(${duckWords("x")})"
-
   /** One row's BM25 term weight (k1 = 1.2, b = 0.75, the engine's
     * scorer): `tf` rows carry (tf, dl), `df` rows df, `st` the corpus
     * (n_docs, avgdl).
@@ -1649,7 +1646,7 @@ object LlmPipeline {
         val reclaimed = s.read.parquet(IvfIndex.listsDir(s, vidx))
           .filter(col("doc_id") % 13 === 0).isEmpty &&
           !GraftSession.fsOf(s, vidx)
-            .exists(new org.apache.hadoop.fs.Path(s"$vidx/tombstones"))
+            .exists(new org.apache.hadoop.fs.Path(s"$vidx/_tombstones"))
         // deliverable: the pinned text search — the pin-time state,
         // recomputable corpus-side by the oracle
         TextIndex.searchAllAsOf(s, tidx, Seq("vector"), tPin)
@@ -2783,8 +2780,12 @@ object LlmPipeline {
     // the source: terms in ≥ 80% of the docs carry near-zero idf AND
     // quadratic join fan-out, so they are dropped before the join
     // (df·5 < N·4, exact integer predicate both engines replay). Final
-    // top-10 is a TakeOrdered, not a global sort.
+    // top-10 is a TakeOrdered, not a global sort. The dot products and
+    // norms sum their terms in ascending order, not in shuffle arrival
+    // order, so the doubles are the same bits at any partitioning.
     "q_text_tfidf_pairs" -> ((s, dir) => {
+      def orderedSum(c: Column) =
+        aggregate(array_sort(collect_list(c)), lit(0.0), (acc, x) => acc + x)
       val docs = t(s, dir, "documents")
         .filter(col("source") === "src0").select("doc_id", "text")
       val nDocs = docs.agg(count(lit(1)).as("nd"))
@@ -2801,11 +2802,11 @@ object LlmPipeline {
         .filter(col("dfreq") * 5 < col("nd") * 4)
         .withColumn("wt", col("tf") * log(col("nd").cast("double") / col("dfreq")))
         .select("doc_id", "term", "wt")
-      val norms = w.groupBy("doc_id").agg(sqrt(sum(col("wt") * col("wt"))).as("nrm"))
+      val norms = w.groupBy("doc_id").agg(sqrt(orderedSum(col("wt") * col("wt"))).as("nrm"))
       val a = w.select(col("doc_id").as("doc_a"), col("term"), col("wt").as("wa"))
       val b = w.select(col("doc_id").as("doc_b"), col("term"), col("wt").as("wb"))
       a.join(b, Seq("term")).filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b").agg(sum(col("wa") * col("wb")).as("dot"))
+        .groupBy("doc_a", "doc_b").agg(orderedSum(col("wa") * col("wb")).as("dot"))
         .join(norms.withColumnRenamed("doc_id", "doc_a")
           .withColumnRenamed("nrm", "norm_a"), Seq("doc_a"))
         .join(norms.withColumnRenamed("doc_id", "doc_b")

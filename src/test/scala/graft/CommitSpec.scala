@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IvfIndex, Snapshots, TextIndex}
+import graft.operators.{Commit, IvfIndex, PartitionedSnapshots, Snapshots, TextIndex, Tombstones}
 import graft.sources.GraftFileSystem
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
@@ -101,6 +101,16 @@ class CommitSpec extends SparkSuite {
     finally walk.close()
   }
 
+  /** Tombstone files under `name` that its live manifest does not
+    * list, read on the backing store. */
+  private def unlistedTombstones(name: String): Seq[String] = {
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val root = new java.io.File(mountRoot, name).getPath
+    val listed = Commit.latest(local, root).fold(Seq.empty[String])(m => Tombstones.parse(m._2).files)
+    Option(new java.io.File(root, Tombstones.Dir).list()).toSeq.flatten
+      .filterNot(n => n.startsWith(".") || listed.contains(n))
+  }
+
   private val sweeps = new AtomicInteger
 
   /** Run `verb` on a fresh copy of the fixture `base` with the Nth
@@ -110,7 +120,8 @@ class CommitSpec extends SparkSuite {
     * exactly the new content, and a fault on the writer-intent
     * release must fail the verb; a re-run (when it still sees the
     * old) plus `vacuum` must then reach the no-fault result and leave
-    * no stage file behind. Returns the number of calls the verb makes.
+    * no stage file and no tombstone file outside the live manifest's
+    * list behind. Returns the number of calls the verb makes.
     */
   private def sweep[T](base: String, renameFalse: Boolean = false)(
       verb: String => Unit)(read: String => T)(vacuum: String => Unit): Int = {
@@ -150,6 +161,8 @@ class CommitSpec extends SparkSuite {
       } finally spark.conf.unset("graft.index.writerLeaseMs")
       assert(read(root) == expected, s"N=$n ($fault): did not converge")
       assert(leftovers(s"${run}_$n").isEmpty, s"N=$n ($fault): stage files left")
+      assert(unlistedTombstones(s"${run}_$n").isEmpty,
+        s"N=$n ($fault): tombstone files outside the manifest's list")
     }
     n - 1
   }
@@ -163,6 +176,20 @@ class CommitSpec extends SparkSuite {
       sweep(base)(root => Snapshots.commitMerge(spark, root, updates, "k"): Unit)(
         root => Snapshots.read(spark, root).orderBy("k").as[(Long, String)].collect().toSeq)(
         root => Snapshots.vacuum(spark, root, olderThanMs = 0L): Unit)
+    }
+    assert(calls > 0)
+    info(s"swept $calls create/rename/delete calls")
+  }
+
+  test("fault sweep: PartitionedSnapshots.commitMerge is all-or-nothing and converges after a re-run") {
+    val base = "psnap"
+    PartitionedSnapshots.create(spark, graftPath(base),
+      Seq((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "x")).toDF("k", "v", "p").coalesce(1), "p")
+    val updates = Seq((1L, "A", "x"), (4L, "d", "x")).toDF("k", "v", "p")
+    val calls = withFaultyFs {
+      sweep(base)(root => PartitionedSnapshots.commitMerge(spark, root, updates, "k", "p"): Unit)(
+        root => PartitionedSnapshots.read(spark, root).orderBy("k")
+          .as[(Long, String, String)].collect().toSeq)(_ => ())
     }
     assert(calls > 0)
     info(s"swept $calls create/rename/delete calls")

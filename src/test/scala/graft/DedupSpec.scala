@@ -600,7 +600,7 @@ class DedupSpec extends SparkSuite {
     IvfIndex.compactLists(spark, path, "vec_id")
     val raw = IvfIndex.loadIndex(spark, path)._1
     assert(raw.filter(col("vec_id") % 3 === 0).count() === 0L, "purge incomplete")
-    assert(!new java.io.File(s"$path/tombstones").exists())
+    assert(!new java.io.File(s"$path/_tombstones").exists())
     assert(exhaustiveLive() === preFold, "compaction changed the answer")
     // delete EVERY row of one list: its directory is dropped at fold
     val c0 = raw.groupBy("cluster").count().orderBy(col("count").asc)
@@ -729,7 +729,7 @@ class DedupSpec extends SparkSuite {
       .filter(col("vec_id").isin(doomed: _*)).count()
     assert(residue === 0L,
       s"$residue deleted row(s) physically persist in on-disk lists")
-    assert(!new java.io.File(s"$path/tombstones").exists())
+    assert(!new java.io.File(s"$path/_tombstones").exists())
     // and the fold didn't disturb the live answer set
     assert(IvfIndex.listSizes(spark, path, "vec_id").map(_._2).sum === 97L)
   }
@@ -1892,7 +1892,7 @@ class DedupSpec extends SparkSuite {
       // every undeleted row survives on disk
       val fs = new org.apache.hadoop.fs.Path(p)
         .getFileSystem(spark.sessionState.newHadoopConf())
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/tombstones")),
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/_tombstones")),
         s"$p: tombstone sidecar not cleared")
       val physical = spark.read.parquet(IvfIndex.listsDir(spark, p))
       assert(physical.count() === 48L,

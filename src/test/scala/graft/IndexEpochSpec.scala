@@ -120,7 +120,7 @@ class IndexEpochSpec extends SparkSuite {
         s"expired pin's rows not reclaimed: $rawIds")
       val fs = new org.apache.hadoop.fs.Path(vidx)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$vidx/tombstones")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$vidx/_tombstones")))
       // text: compaction + vacuum now retire the pinned generation
       TextIndex.compactIndex(spark, tidx)
       TextIndex.vacuumIndex(spark, tidx, olderThanMs = 0L)

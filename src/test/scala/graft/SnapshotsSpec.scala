@@ -509,4 +509,34 @@ class SnapshotsSpec extends SparkSuite {
       vOpt.fold(spark.conf.unset(c))(spark.conf.set(c, _))
     }
   }
+
+  test("two threads committing to one table: each round ends with both updates visible or one Commit.Conflict") {
+    val root = freshRoot("snap_cas")
+    Snapshots.create(spark, root, Seq((0L, 0)).toDF("k", "v"))
+    (1 to 4).foreach { round =>
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val results = Seq(1L, 2L).map { k =>
+        val key = round * 10L + k
+        InFlight.inFlight {
+          start.await()
+          try Right(Snapshots.commitMerge(spark, root, Seq((key, round)).toDF("k", "v"), "k"))
+          catch { case e: Exception => Left(e) }
+        } -> key
+      }
+      start.countDown()
+      val outcomes = results.map { case (f, key) => (InFlight.await(f), key) }
+      val landed = outcomes.collect { case (Right(v), key) => (v, key) }
+      val failed = outcomes.collect { case (Left(e), _) => e }
+      failed.foreach(e => assert(e.isInstanceOf[graft.operators.Commit.Conflict],
+        s"round $round: a lost race must be a Commit.Conflict: $e"))
+      assert(failed.size <= 1, s"round $round: both commits failed: $failed")
+      // every commit that returned is in the head's history and visible
+      val head = Snapshots.read(spark, root).select("k").as[Long].collect().toSet
+      landed.foreach { case (v, key) =>
+        assert(Snapshots.versions(spark, root).contains(v),
+          s"round $round: v$v returned but dropped from history")
+        assert(head.contains(key), s"round $round: key $key committed but not visible")
+      }
+    }
+  }
 }

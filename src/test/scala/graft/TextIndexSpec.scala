@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, MaintenanceLock, TextIndex}
+import graft.operators.{Dedup, IvfIndex, MaintenanceLock, TextIndex}
 import org.apache.spark.sql.functions._
 
 /** Inverted-index contract: search equals a direct corpus computation,
@@ -689,6 +689,45 @@ class TextIndexSpec extends SparkSuite {
     TextIndex.appendDocs(maintDocs(100 until 110, "ok"), "doc_id", "text", out)
     assert(manifestTotals(out) === ((2L, 30L)))
     assert(liveDocCount(out) === 30L)
+  }
+
+  test("a held writer intent blocks every rebuild: buildIndex and mergeIndexes of both indexes throw and leave the marker") {
+    val out = Tables.scratch("rebuild_lock_block")
+    val (ta, tb) = (Tables.scratch("rebuild_lock_ta"), Tables.scratch("rebuild_lock_tb"))
+    val (va, vb) = (Tables.scratch("rebuild_lock_va"), Tables.scratch("rebuild_lock_vb"))
+    TextIndex.buildIndex(maintDocs(0 until 10, "a"), "doc_id", "text", ta, nBuckets = 4)
+    TextIndex.buildIndex(maintDocs(10 until 20, "b"), "doc_id", "text", tb, nBuckets = 4)
+    def vecs(ids: Range) = ids.map(i => (i.toLong, Array(i.toFloat, 1f))).toDF("doc_id", "embedding")
+    IvfIndex.buildIndex(vecs(0 until 6), "doc_id", "embedding", nCentroids = 2, path = va)
+    IvfIndex.buildIndex(vecs(6 until 12), "doc_id", "embedding", nCentroids = 2, path = vb)
+    val token = MaintenanceLock.acquire(spark, out)
+    try {
+      Seq[() => Unit](
+        () => TextIndex.buildIndex(maintDocs(0 until 5, "x"), "doc_id", "text", out),
+        () => TextIndex.mergeIndexes(spark, ta, tb, out, nBuckets = 4),
+        () => IvfIndex.buildIndex(vecs(0 until 6), "doc_id", "embedding", nCentroids = 2, path = out),
+        () => IvfIndex.mergeIndexes(spark, va, vb, out, "doc_id", "embedding")
+      ).foreach { verb =>
+        val e = intercept[IllegalStateException](verb())
+        assert(e.getMessage.contains("concurrent index maintenance"), e.getMessage)
+        assert(MaintenanceLock.isHeld(spark, out, token), "a rebuild removed the held marker")
+      }
+    } finally MaintenanceLock.release(spark, out, token)
+  }
+
+  test("q_text_tfidf_pairs gives bit-identical rows under 3 and 11 shuffle partitions") {
+    val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
+    def run(n: Int) = {
+      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+      SparkEntry.queries("q_text_tfidf_pairs")(spark, sf).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2))))
+    }
+    try {
+      val a = run(3)
+      assert(a.nonEmpty)
+      assert(run(11) === a)
+    } finally prev.fold(spark.conf.unset("spark.sql.shuffle.partitions"))(
+      spark.conf.set("spark.sql.shuffle.partitions", _))
   }
 
   test("intent acquisition is a true CAS: N racing acquirers, exactly one winner per round") {
